@@ -205,11 +205,13 @@ def skew_demo(spark, sf_dir: str, reps: int, min_reps: int = 3) -> dict:
         "spark.sql.adaptive.skewJoin.enabled": "false",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {}
-    for k, v in overrides.items():
-        prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    from contextlib import ExitStack
+
+    from dask_awkward_sandbox_spark.session import scoped_conf
+
+    with ExitStack() as stack:
+        for k, v in overrides.items():
+            stack.enter_context(scoped_conf(spark, k, v))
         # INTERLEAVED reps: box contention comes in bursts, so
         # back-to-back per-variant reps can land one variant entirely
         # inside a burst and invert the comparison; alternating gives
@@ -226,12 +228,6 @@ def skew_demo(spark, sf_dir: str, reps: int, min_reps: int = 3) -> dict:
                 dt = time.perf_counter() - t0
                 best[label] = min(best.get(label, dt), dt)
         out = {label: round(v, 3) for label, v in best.items()}
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return out
 
 

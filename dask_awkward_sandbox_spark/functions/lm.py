@@ -247,7 +247,7 @@ def lm_perplexity(
     result from the earlier call then silently recomputes (values
     stay correct; only the tokenize-once optimization is lost). The
     module-level cache is also unsynchronized — single-threaded
-    driver use is assumed (see plans/common.scoped_conf). Callers
+    driver use is assumed (see session.scoped_conf). Callers
     needing overlapping lifecycles should call lm_train/lm_score
     directly with their own persisted tokens frame. At 100 TB the cache is a
     serialized columnar spill ~ corpus-sized; the tokenizer is

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.session import scoped_conf
+
 BUCKET_COL = "_mbucket"
 
 
@@ -187,12 +189,8 @@ def merge_upsert(
             "schemas — recast the batch to the table's types"
         )
     out = existing.unionByName(upd.select(*existing.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         out.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def upsert_table(

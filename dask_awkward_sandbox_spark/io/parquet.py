@@ -15,6 +15,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dask_awkward_sandbox_spark.session import scoped_conf
+
 
 def from_parquet(
     spark: SparkSession,
@@ -89,16 +91,8 @@ def to_bucketed_table(
         # would silently split buckets into multiple files, and Spark
         # drops sort metadata for multi-file buckets — the advertised
         # Sort elision would quietly disappear. Clear it for this write.
-        spark = df.sparkSession
-        key = "spark.sql.files.maxRecordsPerFile"
-        prev = spark.conf.get(key, None)
-        try:
-            if prev not in (None, "0"):
-                spark.conf.set(key, "0")
+        with scoped_conf(df.sparkSession, "spark.sql.files.maxRecordsPerFile", "0"):
             w.saveAsTable(table)
-        finally:
-            if prev not in (None, "0"):
-                spark.conf.set(key, prev)
     else:
         w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_by)
         w.saveAsTable(table)

@@ -7,6 +7,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.session import scoped_conf
+
 ITEM_FIELDS = [
     "l_linenumber",
     "l_quantity",
@@ -59,16 +61,8 @@ def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # SCOPED: captured into the DataFrame at read time, then
         # restored so unrelated reads on the shared session are
         # untouched (verified: execution after restore stays correct).
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
             df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         from pyspark.sql.types import LongType, TimestampNTZType
 
         if isinstance(df.schema["ts"].dataType, LongType):
@@ -141,88 +135,13 @@ def shared_lineitem(
     return read(spark, sf_dir, "lineitem").select("l_orderkey", *fields).persist()
 
 
-def _raw_conf_get(spark: SparkSession, key: str) -> str | None:
-    """The EXPLICITLY-SET session value of ``key``, or None when the
-    key is unset (r15, advice fix): ``spark.conf.get(key, None)``
-    returns a registered SQL conf's entry DEFAULT instead of None
-    when the key is unset, so a restore path keyed on it would pin
-    the default as an explicit session value — value-equivalent
-    today, but masking any later default/entry change. The raw
-    settings map only holds explicit entries."""
-    try:
-        return spark._jsparkSession.sessionState().conf().settings().get(key)
-    except Exception:  # pragma: no cover — non-JVM session stand-ins
-        return spark.conf.get(key, None)
-
-
-class scoped_conf:
-    """Set one Spark SQL conf for the duration of a block and restore
-    the previous value (or unset) on exit — the generic form of the
-    scoped-conf pattern :class:`bucketed_sort_scan` and the streaming
-    slots' shuffle scoping already use (r14 optimization round). Only
-    sound for confs read at PLAN/EXECUTION time of work that both
-    happens inside the block; callers must run their eager actions
-    inside the ``with``.
-
-    Concurrency (r15, advice note): the conf is SESSION-GLOBAL — any
-    query planned concurrently on the same session while a block is
-    open also sees the scoped value. The bench/test harness runs
-    queries single-threaded per session, which is the assumption this
-    helper (and the module-level caches like lm._TOK_CACHE) rely on;
-    concurrent-driver deployments should scope confs per thread with
-    ``SparkSession.newSession()`` instead."""
-
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark = spark
-        self.key = key
-        self.value = value
-
-    def __enter__(self):
-        # raw read (not conf.get): an unset registered conf must be
-        # restored by unset(), not by pinning its current default
-        self.prev = _raw_conf_get(self.spark, self.key)
-        self.spark.conf.set(self.key, self.value)
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.prev)
-        return False
-
-
-class bucketed_sort_scan:
-    """Scope ``spark.sql.legacy.bucketedTableScan.outputOrdering=true``
-    around the reads that want a sorted bucketed table's write-time
-    sort advertised as the scan's outputOrdering (so Catalyst elides
-    the downstream Sort). Since Spark 3.0 the scan reports its bucket
-    sort only under this conf, because a sorted bucketed scan cannot
-    split files — parallelism drops to the bucket count for EVERY
-    bucketed-table read planned while it is set. That trade is right
-    for the window slots (the comparator Sort costs more than the lost
-    split) and wrong as a session-wide default (r13 shipped it sticky;
-    the r13 advice flagged the invisible cross-query side effect), so
-    callers scope it: plan AND execute the sorted-table reads inside
-    the ``with`` block. At 100 TB num_buckets is sized to the cluster
-    (e.g. 2048), so the parallelism cap is not a real constraint."""
-
-    KEY = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = _raw_conf_get(self.spark, self.KEY)
-        self.spark.conf.set(self.KEY, "true")
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
-        return False
+# Scope this conf around reads of a sorted bucketed table (see
+# sorted_lineitem) so the scan advertises the write-time sort as its
+# outputOrdering and Catalyst elides the downstream Sort. A sorted
+# bucketed scan cannot split files, so while it is set every bucketed
+# read runs at bucket-count parallelism: plan AND execute the reads
+# inside ``scoped_conf(spark, SORTED_SCAN_CONF, "true")``.
+SORTED_SCAN_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
 
 def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
@@ -235,10 +154,9 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
     comparator CPU, not spill). This is SURVEY §4's "pay the sort once
     at write" made real for the sort, not just the shuffle.
 
-    The Sort elision additionally needs
-    ``spark.sql.legacy.bucketedTableScan.outputOrdering=true`` AT READ
-    TIME — r14 (advice): no longer set sticky here; wrap the reads in
-    :class:`bucketed_sort_scan` (the probe scripts and plan test do).
+    The Sort elision additionally needs :data:`SORTED_SCAN_CONF` set
+    AT READ TIME: wrap the reads in ``scoped_conf(spark,
+    SORTED_SCAN_CONF, "true")`` (the probe scripts and plan test do).
     Builds once per (sf tag, num_buckets) and reuses the managed table
     across calls."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
@@ -254,9 +172,7 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
         # URI, not shutil — a hdfs:// or s3a:// warehouse would have
         # silently no-op'd under removeprefix("file:") + rmtree and
         # the saveAsTable below would hit the leftover files.
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "/root/repo/.scratch/warehouse"
-        )
+        wh = spark.conf.get("spark.sql.warehouse.dir")
         jvm = spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(wh + "/" + table)
         fs = p.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -21,6 +21,7 @@ from dask_awkward_sandbox_spark.plans.common import (
     staged_stream_dir,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
+from dask_awkward_sandbox_spark.session import SCRATCH, scoped_conf
 
 SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds — exact integer compare
 
@@ -180,47 +181,9 @@ def q_window_funcs(spark, sf_dir):
 WATERMARK_US = 3600 * 1_000_000  # sessionize_stateful's 1-hour watermark
 
 
+# one state-store task per shuffle partition per micro-batch: KB-scale replays want few
+STREAM_STATE_PARTITIONS = "16"
 
-class _scoped_stream_shuffle:
-    """Scope ``spark.sql.shuffle.partitions`` down for the streaming
-    gate slots (r13): every stateful streaming operator allocates one
-    state-store task PER shuffle partition PER micro-batch, and these
-    slots replay KB-scale demo streams (60k events / 500 docs split
-    into two files) where 32 state partitions are pure per-task
-    overhead — measured: q_stream_dedup 75.7s -> 64.3s (cold) and
-    86.9 -> 33.5s (warm) at 4 partitions, q_stream_sessionize
-    8.2 -> 5.5s. At 100 TB the state partition count is a per-workload
-    knob sized to STATE VOLUME (set it high for a billion-key dedup);
-    defaulting it to the batch shuffle size is wrong in both
-    directions, which is exactly what this scoping documents. The conf
-    is restored on exit, so the returned batch frame (memory/parquet
-    sink reads) plans under the session default.
-
-    r15 (verdict item 6): 4 -> 16. Per-batch progress attribution
-    (scripts/stream_floor_profile.py) showed the floor is addBatch
-    COMPUTE — the applyInPandasWithState pass over the buffered
-    groups (sessionize batch0 4.6s of a 5.5s trigger; walCommit
-    ~50ms, state commit ~200ms) — and 4 partitions means 4 Python
-    workers for a 32-core box. Interleaved warm min-of-3 at
-    4/8/16/32: q_stream_sessionize 5.11 / 4.17 / 3.74 / 3.61s
-    (16 chosen: 32's extra state-store tasks buy nothing further —
-    3.61 vs 3.74 is inside noise and doubles per-batch store count);
-    q_stream_dedup 13.56 (4) vs 13.08 (16), marginally better. The
-    r13 measurement that favored 4 predates the box's bistable-I/O
-    diagnosis; the addBatch breakdown is the durable evidence."""
-
-    N = "16"
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.N)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
 
 @query(
     "q_stream_sessionize",
@@ -250,11 +213,12 @@ class _scoped_stream_shuffle:
 def q_stream_sessionize(spark, sf_dir):
     """The ACTUAL structured-streaming path under the driver's value
     oracle: events are staged as a json file source, replayed through
-    ``sessionize_stateful`` (applyInPandasWithState, EventTimeTimeout,
-    1-hour watermark) with Trigger.AvailableNow into a memory sink,
-    and the emitted sessions are returned as a batch frame.
+    ``sessionize_stateful`` (Spark's native ``session_window``
+    aggregation, 1-hour watermark, append mode) with
+    Trigger.AvailableNow into a memory sink, and the emitted sessions
+    are returned as a batch frame. No Python worker runs.
 
-    Deterministic because the emission contract is watermark-final: a
+    Deterministic because append-mode emission is watermark-final: a
     session is emitted iff last_event + gap <= final_watermark
     (= ms-floored max event time - 1h — Spark truncates event times to
     milliseconds before subtracting the delay, and the oracle floors
@@ -266,11 +230,11 @@ def q_stream_sessionize(spark, sf_dir):
     except a deferred slice from the last (watermark - 10min) of the
     timeline, file 2 (older mtime ordering, one file per trigger)
     delivers that slice late. Every deferred event is admissible (its
-    time is >= final watermark + 10min), so the stateful operator must
-    merge them into already-buffered sessions — the driver oracle
+    time is >= final watermark + 10min), so the session operator must
+    merge them into sessions already held in state — the driver oracle
     itself exercises the late-merge path, and the final emitted set is
     unchanged because emission is watermark-final."""
-    with _scoped_stream_shuffle(spark):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS):
         import os
 
         from dask_awkward_sandbox_spark.streaming import sessionize_stateful
@@ -280,7 +244,7 @@ def q_stream_sessionize(spark, sf_dir):
         )
 
         tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        path = os.path.join("/root/repo/.scratch", tag, "stream_sessionize_json")
+        path = os.path.join(SCRATCH, tag, "stream_sessionize_json")
 
         def _stage() -> None:
             e = read(spark, sf_dir, "events")
@@ -451,7 +415,7 @@ def q_stream_dedup(spark, sf_dir):
     fresh checkpoint — dynamic partition overwrite must leave the
     sink row count unchanged (the exactly-once contract) or a poison
     breaks every curation row's hash."""
-    with _scoped_stream_shuffle(spark):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS):
         import os
         import shutil
 
@@ -463,7 +427,7 @@ def q_stream_dedup(spark, sf_dir):
         )
 
         tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        path = os.path.join("/root/repo/.scratch", tag, "stream_dedup_json")
+        path = os.path.join(SCRATCH, tag, "stream_dedup_json")
         n_events = parquet_row_count(sf_dir, "events")
 
         def _stage_events() -> None:
@@ -525,8 +489,8 @@ def q_stream_dedup(spark, sf_dir):
         # documents table — staged once OUTSIDE nd_base (r14); the
         # store/out/checkpoint dirs under nd_base rebuild from scratch
         # each call so the replay (and its store) stays deterministic
-        nd_base = os.path.join("/root/repo/.scratch", tag, "stream_neardup")
-        in_path = os.path.join("/root/repo/.scratch", tag, "stream_neardup_in")
+        nd_base = os.path.join(SCRATCH, tag, "stream_neardup")
+        in_path = os.path.join(SCRATCH, tag, "stream_neardup_in")
         n_docs = parquet_row_count(sf_dir, "documents")
 
         def _stage_docs() -> None:

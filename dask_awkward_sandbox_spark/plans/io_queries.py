@@ -35,7 +35,6 @@ from dask_awkward_sandbox_spark.plans.common import (
     fld_map,
     order_items,
     read,
-    scoped_conf,
 )
 from dask_awkward_sandbox_spark.plans.nested import (
     DC,
@@ -51,8 +50,7 @@ from dask_awkward_sandbox_spark.plans.nested import (
     q_sort_argsort_hof,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
-
-SCRATCH = "/root/repo/.scratch"
+from dask_awkward_sandbox_spark.session import SCRATCH, scoped_conf
 
 # at most one resident roundtrip cache per session (r13 advice: the
 # persist previously outlived the query with no unpersist)

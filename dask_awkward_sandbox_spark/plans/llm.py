@@ -27,6 +27,7 @@ from dask_awkward_sandbox_spark.plans.common import (
     staged_stream_dir,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
+from dask_awkward_sandbox_spark.session import SCRATCH
 
 # DuckDB fragments mirroring text_analysis definitions exactly.
 def _tokens_sql(col: str) -> str:
@@ -1501,11 +1502,11 @@ def q_knn_join(spark, sf_dir):
         e, "embedding", "vec_id", nlist=16, iters=0, X=X
     )
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    sbase = os.path.join("/root/repo/.scratch", tag, "stream_ivf")
+    sbase = os.path.join(SCRATCH, tag, "stream_ivf")
     # r14: the two-batch vector stream input is a pure function of the
     # embeddings table — staged once OUTSIDE the per-call-rebuilt sbase
     # (the q_stream_dedup treatment); index/checkpoints stay fresh
-    in_path = os.path.join("/root/repo/.scratch", tag, "stream_ivf_in")
+    in_path = os.path.join(SCRATCH, tag, "stream_ivf_in")
     shutil.rmtree(sbase, ignore_errors=True)
     spath = os.path.join(sbase, "index")
 

@@ -16,7 +16,10 @@ Scale design: these configs are chosen to survive a 1000-executor /
 from __future__ import annotations
 
 import os
+import warnings
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -33,6 +36,14 @@ TABLES = [
 ]
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+# The one scratch root (streaming inputs and checkpoints, lake tables,
+# the warehouse): ``.scratch`` next to the package. Build every path
+# under it with ``os.path.join(SCRATCH, ...)`` so a harness can move
+# the whole root by remapping that one prefix.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
 
 def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
@@ -55,7 +66,7 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir", "/root/repo/.scratch/warehouse")
+        .config("spark.sql.warehouse.dir", os.path.join(SCRATCH, "warehouse"))
         # local mode: the driver IS the executor — 16g for 32 task
         # threads forced shuffle spill on the 10x/100x probe legs
         # (q18's 23 GB sort-merge measured 6.1s at 16g vs 4.9s at
@@ -94,3 +105,50 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every testdata table as a DataFrame (lazy parquet scans)."""
     return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
+
+
+_warned_conf_fallback = False
+
+
+def _raw_conf_get(spark: SparkSession, key: str) -> str | None:
+    """The explicitly-set session value of ``key``, or None when it is
+    unset. ``spark.conf.get(key, None)`` returns a registered conf's
+    default instead, and restoring that would pin the default as an
+    explicit value; the raw settings map holds explicit entries only.
+    If that private JVM surface is unavailable the public getter is the
+    fallback, with a one-time warning because it can pin defaults."""
+    global _warned_conf_fallback
+    try:
+        return spark._jsparkSession.sessionState().conf().settings().get(key)
+    except (AttributeError, Py4JError) as exc:
+        if not _warned_conf_fallback:
+            _warned_conf_fallback = True
+            warnings.warn(
+                f"scoped_conf: cannot read raw session confs ({exc!r}); "
+                "falling back to spark.conf.get, which may pin defaults "
+                "on restore",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        return spark.conf.get(key, None)
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one Spark SQL conf for the block, then restore the previous
+    explicit value, or unset the key if it had none, on any exit.
+
+    Only sound for confs read while planning or executing work that
+    happens inside the block, so run eager actions inside the ``with``.
+    The conf is session-global: a query planned concurrently on the
+    same session sees the scoped value too. Concurrent drivers should
+    scope per thread with ``SparkSession.newSession()``."""
+    prev = _raw_conf_get(spark, key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

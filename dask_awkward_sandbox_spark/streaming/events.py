@@ -1,19 +1,19 @@
 """Structured Streaming over the events stream.
 
 The streaming surface of the engine: file-source readStream ->
-watermarked event-time windows -> sinks, plus an
-applyInPandasWithState custom sessionizer (the stateful operator the
-reference's users would hand-roll with map_partitions + carry-over
-state).
+watermarked event-time windows -> sinks, plus per-user gap
+sessionization on Spark's native ``session_window`` aggregation (the
+stateful operator the reference's users would hand-roll with
+map_partitions + carry-over state). Every operator here runs in the
+JVM; none starts a Python worker.
 
 The batch plans in plans/events.py run the SAME aggregations, so the
 DuckDB oracle checks these semantics; tests/test_streaming.py runs
 the streams to completion and asserts stream == batch.
 
 Scale notes: windowed aggs shuffle once on (key, window) with
-watermark-bounded state; the sessionizer keeps one small state row
-per user (timeout-driven eviction), which is the canonical
-applyInPandasWithState memory contract.
+watermark-bounded state; the sessionizer keeps each user's open
+sessions in the state store until the watermark passes their end.
 """
 
 from __future__ import annotations
@@ -74,98 +74,27 @@ def windowed_counts(stream: DataFrame, window: str = "15 minutes", watermark: st
 def sessionize_stateful(
     stream: DataFrame, gap_us: int = SESSION_GAP_US, watermark: str = "1 hour"
 ):
-    """Custom stateful operator: per-user gap sessionization with
-    applyInPandasWithState. Emits one row per CLOSED session
-    (user_id, session_start_us, n_events); open sessions stay in
-    state until the event-time gap timeout closes them.
+    """Per-user gap sessionization as Spark's native streaming
+    ``session_window`` aggregation. Emits one row per CLOSED session
+    (user_id, session_start_us, n_events).
 
-    Uses EventTimeTimeout (not ProcessingTimeTimeout): session close
-    is an event-time fact, the watermark makes eviction deterministic
-    under replay, and — operationally — processing-time timeouts force
-    the no-new-data micro-batch loop that never lets Trigger.AvailableNow
-    terminate.
-
-    Late-data correctness: state buffers the user's not-yet-emitted
-    event times (sorted), and every batch re-sessionizes the merged
-    buffer — an out-of-order event admitted by the watermark lands in
-    its time-order position, extending/bridging sessions exactly as a
-    batch computation would. A session is EMITTED only once the
-    watermark passes its last event + gap, at which point no admissible
-    event can extend or bridge it (any future event has ts >= watermark
-    > last + gap), so emissions are final. State is bounded by the
-    watermark horizon per user: emitted sessions' events are dropped,
-    and the watermark caps how far back an un-emittable event can sit.
+    Events at most ``gap_us`` apart share a session; a larger gap
+    starts a new one. In append mode a session is emitted once the
+    watermark reaches its end (last event + gap), so emissions are
+    final: any admissible later event has ts >= watermark >= that end
+    and cannot extend or bridge it. Late events the watermark still
+    admits merge into the sessions held in state, exactly as a batch
+    computation over the union would place them.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    output_schema = "user_id long, session_start_us long, n_events long"
-    state_schema = "times array<long>"
-
-    def fn(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000
-        buf: list[int] = []
-        if state.exists:
-            (times,) = state.get
-            buf.extend(times)
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                buf.extend((pdf["ts"].astype("int64") // 1000).tolist())
-        buf.sort()
-        if not buf:
-            state.remove()
-            return
-
-        # session boundaries over the merged, sorted buffer
-        sessions = []  # (start index, end index) half-open
-        s = 0
-        for i in range(1, len(buf)):
-            if buf[i] - buf[i - 1] > gap_us:
-                sessions.append((s, i))
-                s = i
-        sessions.append((s, len(buf)))
-
-        out = []
-        keep_from = len(buf)
-        first_kept_last = None
-        for a, b in sessions:
-            last = buf[b - 1]
-            if last + gap_us <= wm_us:
-                out.append((user_id, buf[a], b - a))
-            else:
-                keep_from = a
-                first_kept_last = last
-                break
-        kept = buf[keep_from:]
-        if kept:
-            state.update((kept,))
-            # wake when the earliest kept session becomes closeable;
-            # must be strictly beyond the current watermark
-            state.setTimeoutTimestamp(
-                max((first_kept_last + gap_us) // 1000, wm_ms + 1)
-            )
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [c[0] for c in out],
-                    "session_start_us": [c[1] for c in out],
-                    "n_events": [c[2] for c in out],
-                }
-            )
-
+    sw = F.session_window("ts", f"{gap_us} microseconds")
     return (
         stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=output_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        .groupBy("user_id", sw.alias("sw"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_micros(F.col("sw.start")).alias("session_start_us"),
+            "n_events",
         )
     )
 

@@ -203,9 +203,10 @@ def main() -> None:
     WINDOW_SLOTS = ("q_flatten_softmax", "q_pad_fill_none")
     from dask_awkward_sandbox_spark.plans import nested as N
     from dask_awkward_sandbox_spark.plans.common import (
-        bucketed_sort_scan,
+        SORTED_SCAN_CONF,
         sorted_lineitem,
     )
+    from dask_awkward_sandbox_spark.session import scoped_conf
 
     sorted_tables = {}
     table_build_s = {}
@@ -217,13 +218,13 @@ def main() -> None:
     window_plain: dict[str, dict] = {}
 
     def _run_sorted(name, d):
-        with bucketed_sort_scan(spark):
+        with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
             _noop(getattr(N, name)(spark, d, base=sorted_tables[d]))
 
     for name in REGISTERED:
         if name in WINDOW_SLOTS:
             # plan stability compared sorted-vs-sorted across the step
-            with bucketed_sort_scan(spark):
+            with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
                 sig1 = _plan_signature(
                     getattr(N, name)(spark, SF1_DIR, base=sorted_tables[SF1_DIR])
                 )

@@ -36,9 +36,10 @@ SLOTS = ("q_flatten_softmax", "q_pad_fill_none")
 def main() -> None:
     from dask_awkward_sandbox_spark.plans import nested as N
     from dask_awkward_sandbox_spark.plans.common import (
-        bucketed_sort_scan,
+        SORTED_SCAN_CONF,
         sorted_lineitem,
     )
+    from dask_awkward_sandbox_spark.session import scoped_conf
     from dask_awkward_sandbox_spark.session import get_spark
 
     dirs = sys.argv[1:] or [
@@ -70,7 +71,7 @@ def main() -> None:
                     t0 = time.perf_counter()
                     # r14 (advice): the ordering conf is scoped per
                     # read now, never session-sticky
-                    with bucketed_sort_scan(spark):
+                    with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
                         fn(spark, d, base=base).write.format("noop").mode(
                             "overwrite"
                         ).save()

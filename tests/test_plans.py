@@ -577,10 +577,13 @@ def test_runtime_bloom_filter_injects_on_selective_dim_join(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    from contextlib import ExitStack
+
+    from dask_awkward_sandbox_spark.session import scoped_conf
+
+    with ExitStack() as stack:
+        for k, v in confs.items():
+            stack.enter_context(scoped_conf(spark, k, v))
         li = spark.read.parquet(f"{sf}/lineitem.parquet")
         part = spark.read.parquet(f"{sf}/part.parquet").filter(
             F.col("p_type") == "PROMO"
@@ -592,12 +595,6 @@ def test_runtime_bloom_filter_injects_on_selective_dim_join(spark):
         )
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan.lower() or "bloom" in plan.lower(), plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_reduce_order_count_plan_is_join_free(spark):
@@ -701,9 +698,10 @@ def test_sorted_bucket_table_elides_window_sort(spark):
         q_pad_fill_none,
     )
 
-    from dask_awkward_sandbox_spark.plans.common import bucketed_sort_scan
+    from dask_awkward_sandbox_spark.plans.common import SORTED_SCAN_CONF
+    from dask_awkward_sandbox_spark.session import scoped_conf
 
-    with bucketed_sort_scan(spark):
+    with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
         t = sorted_lineitem(spark, SF, num_buckets=8)
         flat = q_flatten_softmax(spark, SF, base=t)
         plan = flat._jdf.queryExecution().executedPlan().toString()
@@ -722,10 +720,8 @@ def test_sorted_bucket_table_elides_window_sort(spark):
         assert sorted(map(tuple, pad.collect())) == sorted(
             map(tuple, q_pad_fill_none(spark, SF).collect())
         )
-    # r14 (advice): the conf is scoped by bucketed_sort_scan now —
-    # assert it did not leak into the session
-    key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    assert spark.conf.get(key, None) in (None, "false")
+    # the conf is scoped — assert it did not leak into the session
+    assert spark.conf.get(SORTED_SCAN_CONF, None) in (None, "false")
 
 
 def test_plans_broadcast_hint_sites_inventoried():

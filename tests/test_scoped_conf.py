@@ -1,11 +1,14 @@
-"""r14 optimization round: the generic scoped-conf helper used by the
-q_small_sources lake legs (shuffle partitions scoped to the gate
-table's bucket count) must restore the previous session value — set
-OR unset — on both clean exit and exception."""
+"""The one scoped-conf helper (session.scoped_conf) must restore the
+previous session value — set OR unset — on both clean exit and
+exception, and the package sites routed through it must never pin a
+conf's default as an explicit session value."""
+
+import warnings
 
 import pytest
 
-from dask_awkward_sandbox_spark.plans.common import scoped_conf
+from dask_awkward_sandbox_spark import session
+from dask_awkward_sandbox_spark.session import _raw_conf_get, scoped_conf
 
 KEY = "spark.sql.shuffle.partitions"
 
@@ -36,3 +39,58 @@ def test_scoped_conf_unsets_when_previously_unset(spark):
         assert spark.conf.get(key) == "true"
     # restored to the session default (the conf's default value)
     assert spark.conf.get(key) == "false"
+
+
+def _run_stream_sessionize(spark, sf, tmp_path):
+    from dask_awkward_sandbox_spark.plans.events import q_stream_sessionize
+
+    q_stream_sessionize(spark, sf).count()
+
+
+def _run_merge_upsert(spark, sf, tmp_path):
+    from dask_awkward_sandbox_spark.io import lakehouse as lh
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame([(i, i) for i in range(10)], "id long, n long")
+    lh.create_merge_table(base, path, ["id"], n_buckets=4)
+    upd = spark.createDataFrame([(3, 30), (20, 200)], "id long, n long")
+    lh.merge_upsert(spark, path, upd, ["id"], n_buckets=4)
+
+
+@pytest.mark.parametrize(
+    "key, run",
+    [
+        ("spark.sql.shuffle.partitions", _run_stream_sessionize),
+        ("spark.sql.sources.partitionOverwriteMode", _run_merge_upsert),
+    ],
+    ids=["q_stream_sessionize", "merge_upsert"],
+)
+def test_package_scopes_leave_unset_key_unset(spark, sf, tmp_path, key, run):
+    prev = _raw_conf_get(spark, key)
+    spark.conf.unset(key)
+    try:
+        run(spark, sf, tmp_path)
+        assert _raw_conf_get(spark, key) is None
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)  # the fixture's "8" for shuffle partitions
+
+
+class _PublicConfOnly:
+    """A session stand-in without the JVM-internal settings map."""
+
+    class conf:
+        @staticmethod
+        def get(key, default=None):
+            return "public"
+
+
+def test_raw_conf_get_fallback_warns_once(monkeypatch):
+    monkeypatch.setattr(session, "_warned_conf_fallback", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert _raw_conf_get(_PublicConfOnly, KEY) == "public"
+        assert _raw_conf_get(_PublicConfOnly, KEY) == "public"
+    assert len([w for w in caught if issubclass(w.category, RuntimeWarning)]) == 1

@@ -188,6 +188,55 @@ def test_sessionize_stateful_out_of_order(spark):
     assert got == want
 
 
+def test_sessionize_stateful_emission_boundaries(spark):
+    """Gap and watermark boundaries of the sessionizer, one user per
+    case, all in one micro-batch. The stream head sits at a sub-ms
+    time, so the final watermark is ms-floored(head) - 1h:
+    - user 1: events exactly ``gap`` apart merge, ``gap + 1`` splits;
+    - user 2: last + gap == watermark is emitted;
+    - user 3: last + gap == watermark + 1us is held;
+    - user 4: closes only under the unfloored watermark, so is held;
+    - user 5: the stream head, open."""
+    import shutil
+
+    from dask_awkward_sandbox_spark.streaming.events import (
+        JSON_TS_FORMAT,
+        SESSION_GAP_US,
+        stream_events_from_dir,
+    )
+
+    gap = SESSION_GAP_US
+    t0 = 1_700_000_000_000_000  # us
+    head = t0 + 10 * WATERMARK_US + 123_456
+    wm = (head // 1000) * 1000 - WATERMARK_US
+    rows = [
+        (t0, 1),
+        (t0 + gap, 1),
+        (t0 + 2 * gap + 1, 1),
+        (wm - gap, 2),
+        (wm - gap + 1, 3),
+        (wm - gap + 400, 4),
+        (head, 5),
+    ]
+    path = os.path.join(SCRATCH, "events_boundary_json")
+    shutil.rmtree(path, ignore_errors=True)
+    spark.createDataFrame(
+        [(i, us, user, "view", 1.0, "{}") for i, (us, user) in enumerate(rows)],
+        "event_id long, us long, user_id long, event_type string, value double, props string",
+    ).select(
+        "event_id",
+        F.timestamp_micros(F.col("us")).alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    ).repartition(1).write.option("timestampFormat", JSON_TS_FORMAT).json(path)
+
+    stream = stream_events_from_dir(spark, path)
+    got = _run_sessionizer(spark, stream, "sessions_boundary")
+    assert got == {(1, t0): 2, (1, t0 + 2 * gap + 1): 1, (2, wm - gap): 1}
+
+
 def test_stream_dedup_exact(spark):
     """Planted duplicates (the input written twice) must collapse to
     the distinct event set, matching batch dropDuplicates."""
