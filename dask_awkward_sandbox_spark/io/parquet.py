@@ -11,11 +11,63 @@ directory layout (``partition_by``).
 
 from __future__ import annotations
 
+import os
+import threading
+import weakref
 from collections.abc import Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dask_awkward_sandbox_spark.session import scoped_conf
+from dask_awkward_sandbox_spark.session import _raw_conf_get, scoped_conf
+
+# Session confs that change the schema Spark infers from parquet
+# footers: how physical types and annotations convert (binary, INT96,
+# timestamp NTZ and nanos, variant and UNKNOWN annotations, field ids),
+# whether the footers of all files merge, and how partition-directory
+# values are typed.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# session -> {path: ((disk signature, conf values), inferred schema)}.
+# Weak on the session, so a stopped and dropped session takes its
+# entries with it.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _disk_signature(path: str) -> tuple | None:
+    """Sorted ``(name, size, mtime_ns)`` of every file under ``path``
+    (or of the single file), or None when ``path`` is not a local file
+    or directory: another URI scheme, a glob, or nothing there."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    try:
+        if os.path.isfile(local):
+            st = os.stat(local)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(local):
+            return None
+        sig = []
+        for root, _, files in os.walk(local):
+            for name in files:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                sig.append((os.path.relpath(full, local), st.st_size, st.st_mtime_ns))
+    except FileNotFoundError:  # a file vanished mid-listing: a writer is busy here
+        return None
+    return tuple(sorted(sig))
 
 
 def from_parquet(
@@ -28,8 +80,33 @@ def from_parquet(
 
     ``columns`` projects eagerly so the pruned ReadSchema is visible
     even before downstream ops; Catalyst would also derive it lazily.
+
+    Reading parquet without a schema runs a Spark job that reads the
+    footers and infers one. The inferred schema of each local ``path``
+    is memoized per session, so a repeat read plans from metadata alone
+    (``spark.read.schema(memoized).parquet(path)``). An entry is used
+    only while the files under ``path`` (names, sizes, mtimes) and the
+    session confs that change inference (``_SCHEMA_CONFS``) are what
+    they were when it was inferred; otherwise the read infers again and
+    replaces it. Other URI schemes are not memoized. Only the schema is
+    kept, never a DataFrame: each read is a fresh relation with its own
+    file listing and attribute IDs, so two reads of one table still
+    self-join correctly.
     """
-    df = spark.read.parquet(path)
+    sig = _disk_signature(path)
+    if sig is None:
+        df = spark.read.parquet(path)
+    else:
+        stamp = (sig, tuple(_raw_conf_get(spark, k) for k in _SCHEMA_CONFS))
+        with _SCHEMAS_LOCK:
+            memo = _SCHEMAS.get(spark, {}).get(path)
+        if memo is not None and memo[0] == stamp:
+            df = spark.read.schema(memo[1]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            memo = (stamp, df.schema)
+            with _SCHEMAS_LOCK:
+                _SCHEMAS.setdefault(spark, {})[path] = memo
     if columns:
         df = df.select(*columns)
     return df

@@ -7,6 +7,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.io.parquet import from_parquet
 from dask_awkward_sandbox_spark.session import scoped_conf
 
 ITEM_FIELDS = [
@@ -51,6 +52,13 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
 
 
 def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``{sf_dir}/{name}.parquet`` source table, through
+    ``io.parquet.from_parquet``: the first read in a session infers the
+    schema (one Spark job), and later reads of unchanged files under
+    the same parquet confs reuse it and launch no job. Each call still
+    returns a fresh relation, so reading a table twice and joining the
+    two reads is sound. ``events`` gets its ``ts`` normalized to a
+    session-tz TIMESTAMP (below)."""
     if name == "events":
         # events.parquet's ``ts`` precision varies by generator run:
         # timestamp[ns] (Spark reads nanos only as long, legacy conf) or
@@ -62,7 +70,7 @@ def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # restored so unrelated reads on the shared session are
         # untouched (verified: execution after restore stays correct).
         with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            df = spark.read.parquet(f"{sf_dir}/events.parquet")
+            df = from_parquet(spark, f"{sf_dir}/events.parquet")
         from pyspark.sql.types import LongType, TimestampNTZType
 
         if isinstance(df.schema["ts"].dataType, LongType):
@@ -85,7 +93,7 @@ def read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "update the dispatch in plans/common.py:read"
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return from_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def cents(col: Column) -> Column:

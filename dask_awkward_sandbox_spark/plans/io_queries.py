@@ -34,6 +34,7 @@ from dask_awkward_sandbox_spark.plans.common import (
     cents,
     fld_map,
     order_items,
+    parquet_row_count,
     read,
 )
 from dask_awkward_sandbox_spark.plans.nested import (
@@ -898,9 +899,11 @@ def q_small_sources(spark, sf_dir):
 def q_unflatten(spark, sf_dir):
     """ak.unflatten: re-nest a flat ordered column into given counts.
     Range-partitioned rank assignment (per-partition offsets, no
-    global window) — see operators/structure.py:unflatten."""
+    global window) — see operators/structure.py:unflatten. The row
+    count comes from the parquet footers (no job); unflatten itself
+    raises if the counts do not sum to the rows it sees."""
     d = read(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    n = d.count()
+    n = parquet_row_count(sf_dir, "documents")
     counts = [100] * (n // 100) + ([n % 100] if n % 100 else [])
     out = st.unflatten(d, "n_chars", "doc_id", counts)
     from dask_awkward_sandbox_spark.operators import reducers as red

@@ -104,7 +104,9 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every testdata table as a DataFrame (lazy parquet scans)."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
+    from dask_awkward_sandbox_spark.io.parquet import from_parquet
+
+    return {t: from_parquet(spark, f"{sf_dir}/{t}.parquet") for t in TABLES}
 
 
 _warned_conf_fallback = False

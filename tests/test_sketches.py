@@ -106,6 +106,38 @@ def test_heavy_hitters_exact(spark):
     assert got == want
 
 
+def test_heavy_hitters_weight_col_matches_raw(spark):
+    """A count rollup re-aggregates losslessly: heavy_hitters over the
+    raw rows equals heavy_hitters over groupBy(key) -> n_rows with
+    weight_col="n_rows", null keys included as their own value."""
+    from pyspark.sql import functions as F
+
+    from dask_awkward_sandbox_spark.functions import sketches as sk
+
+    keys = ["a"] * 5 + ["b"] * 3 + [None] * 4 + ["c"]
+    raw = spark.createDataFrame([(k,) for k in keys], "k string")
+    rollup = raw.groupBy("k").agg(F.count(F.lit(1)).alias("n_rows"))
+    got_raw = [tuple(r) for r in sk.heavy_hitters(raw, "k", min_fraction=0.1).collect()]
+    got_rollup = [
+        tuple(r)
+        for r in sk.heavy_hitters(rollup, "k", min_fraction=0.1, weight_col="n_rows").collect()
+    ]
+    assert got_raw == [("a", 5, 5 / 13), (None, 4, 4 / 13), ("b", 3, 3 / 13)]
+    assert got_rollup == got_raw
+
+
+def test_heavy_hitters_all_null_weights_dropped(spark):
+    """F.sum over a group whose weights are all null is null, not 0, so
+    the threshold filter drops that group and the total ignores it."""
+    from dask_awkward_sandbox_spark.functions import sketches as sk
+
+    df = spark.createDataFrame(
+        [("a", 5), ("b", 3), ("z", None), ("z", None)], "k string, w long"
+    )
+    got = [tuple(r) for r in sk.heavy_hitters(df, "k", min_fraction=0.0, weight_col="w").collect()]
+    assert got == [("a", 5, 5 / 8), ("b", 3, 3 / 8)]
+
+
 def test_cms_point_query_long_and_string(spark):
     """cms_query decodes Spark's count_min_sketch binary (long + string
     hashing reverse-verified against planted exact counts): estimates
