@@ -106,43 +106,6 @@ def cents(col: Column) -> Column:
     return F.round(col * 100).cast("long")
 
 
-def shared_lineitem(
-    spark: SparkSession, sf_dir: str, fields: list[str]
-) -> DataFrame:
-    """ONE persisted narrow projection of lineitem feeding every
-    branch of a gate slot — BUILT, MEASURED, AND REJECTED for the
-    registered plans (r12, verdict item 5). Retained only as the
-    cache-form builder for the A/B probe (scripts/hof_form_ab.py).
-
-    The idea: the flat codegen legs and the sampled hof_* twin read
-    the same ``InMemoryRelation``, so the executed plan carries one
-    lineitem FileScan (``l_orderkey % 50`` prunes no row groups, so
-    the two-scan form re-reads the whole table). Persist rather than
-    ``repartition`` + ReusedExchange because per-branch column pruning
-    and filter pushdown rewrite the exchange subtrees differently and
-    canonicalized-plan reuse never fires (measured), while cache
-    substitution matches the analyzed plan and survives both
-    branches' rewrites.
-
-    The measurement (SCALE_SF10.json ``hof_form_ab``): ISOLATED
-    min-of-2 puts the two forms within ~10% of each other (the second
-    scan of a narrow parquet projection is near-free) — but inside
-    the 48-slot panel's long JVM session the cache form COLLAPSED
-    2-3x on every re-coupled slot (q_cartesian_combinations sf10
-    22.5s vs 10.2s two-scan; q_concatenate doubled at both scales):
-    materializing a 60M-row columnar cache inside aged executors
-    triggers eviction/GC churn the stateless scan form never pays.
-    The registered slots therefore keep two scans (robust under
-    session aging, parity when fresh); the order-grained
-    q_parquet_roundtrip frame (|orders| rows, five consumers of an
-    expensive nested scan) is the one place the persist measured
-    neutral-to-better and stays. At 100 TB the real fix is bucketing
-    lineitem by l_orderkey, which removes the rebuild shuffle
-    entirely and makes both forms moot.
-    """
-    return read(spark, sf_dir, "lineitem").select("l_orderkey", *fields).persist()
-
-
 # Scope this conf around reads of a sorted bucketed table (see
 # sorted_lineitem) so the scan advertises the write-time sort as its
 # outputOrdering and Catalyst elides the downstream Sort. A sorted
@@ -164,7 +127,8 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
 
     The Sort elision additionally needs :data:`SORTED_SCAN_CONF` set
     AT READ TIME: wrap the reads in ``scoped_conf(spark,
-    SORTED_SCAN_CONF, "true")`` (the probe scripts and plan test do).
+    SORTED_SCAN_CONF, "true")`` (scripts/scale_probe_sf10.py and
+    tests/test_plans.py do).
     Builds once per (sf tag, num_buckets) and reuses the managed table
     across calls."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
@@ -227,11 +191,10 @@ def order_items(
     subsample so the driver hash executes the operator code paths at
     ~0.5% of the full-build cost.
 
-    ``base`` (r12) supplies a pre-projected lineitem frame so a hof
-    twin can build off a provided scan — the hook
-    scripts/hof_form_ab.py uses to rebuild the measured-and-rejected
-    single-scan cache form (see :func:`shared_lineitem`); ``fields``
-    must be a subset of its columns.
+    ``base`` supplies the lineitem frame to build from instead of a
+    fresh parquet read, e.g. the sorted bucketed table from
+    :func:`sorted_lineitem`; ``fields`` must be a subset of its
+    columns.
     """
     fields = fields or ITEM_FIELDS
     assert fields[0] == "l_linenumber", "linenumber must lead for deterministic sort"

@@ -38,33 +38,11 @@ SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds — exact integer compa
     """,
 )
 def q_events_windowed(spark, sf_dir):
-    """15-minute tumbling-window aggregate per event type — BYTE-
-    EQUIVALENT to the r01 slot whose BENCH_r01 row (0.411s) is this
-    name's BASELINE_MAPPED entry (query + oracle resurrected from
-    commit b5be721^), so the mapped grading ratio compares like work
-    with like.
-
-    r5-r13 this slot additionally carried the hypertable rollup
-    cascade, exact heavy hitters, and the HLL merge contract —
-    strictly more work than its baseline row, a 3.04x mapped
-    multiplier the r13 verdict flagged (item 6). r14 first MEASURED
-    the excess (the r01-shape cell read 0.316-0.346s vs the 0.411s
-    row — the window itself beats baseline), then applied the
-    verdict's offered alternative and RELOCATED those legs to
-    q_events_funnel_retention (the non-headliner events gate host
-    sharing the same raw table, the r11/r13 relocation precedent):
-    they stay hash-verified there every round and their wall stays
-    visible in the bench's gate_nonheadliner block."""
-    return events_windowed_r01_shape(spark, sf_dir)
-
-
-def events_windowed_r01_shape(spark, sf_dir):
-    """The r01 q_events_windowed shape (one 15-minute tumbling-window
-    groupBy) — since the late-r14 leg relocation this IS the
-    registered slot's whole body again; the name is kept because
-    bench.py's r01-shape machinery and the streaming twin tests
-    referenced the shape while the slot still carried the rollup/hh/
-    hll legs (now hosted by q_events_funnel_retention)."""
+    """15-minute tumbling-window aggregate per event type: one
+    ``groupBy(event_type, window)`` over the events table. The
+    rollup-cascade, exact heavy-hitter and HLL-merge legs this slot
+    once carried live in q_events_funnel_retention, which reads the
+    same raw table and keeps them oracle-checked."""
     e = read(spark, sf_dir, "events")
     w = F.window("ts", "15 minutes")
     return (

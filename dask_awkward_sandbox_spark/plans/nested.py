@@ -126,11 +126,11 @@ def q_flatten_softmax(spark, sf_dir, base=None):
     ak.run_lengths + flatten, per order.
 
     ``base``: optional pre-read lineitem frame — the sorted-bucketed-
-    table path (r13, scripts/sorted_bucket_ab.py): a table bucketed on
-    l_orderkey and sortBy'd on the full ORD prefix feeds the first
-    window with its scan ordering, so the 7-column comparator Sort
-    (the measured sf10 bottleneck, SCALE_SF10 stage_profile) vanishes
-    from the plan; both legs read it.
+    table path (r13, recorded in SCALE_SF10.json sorted_bucket_ab): a
+    table bucketed on l_orderkey and sortBy'd on the full ORD prefix
+    feeds the first window with its scan ordering, so the 7-column
+    comparator Sort (the measured sf10 bottleneck, SCALE_SF10
+    stage_profile) vanishes from the plan; both legs read it.
 
     r11 (verdict item 3 — the codegen template applied to the last
     full-HOF slots): the registered form runs FLAT — ONE exchange on
@@ -156,8 +156,7 @@ def q_flatten_softmax(spark, sf_dir, base=None):
     cache form collapsed 2-3x (q_cartesian_combinations sf10 10.2s
     two-scan vs 22.5s cache-in-panel: cache materialization +
     eviction under accumulated heap pressure), so the robust two-scan
-    shape ships; the A/B is recorded in SCALE_SF10.json (hof_form_ab)
-    and reproducible via scripts/hof_form_ab.py."""
+    shape ships; the A/B is recorded in SCALE_SF10.json (hof_form_ab)."""
     from pyspark.sql import Window
 
     ord_cols = [

@@ -87,14 +87,13 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
         .config("spark.python.factory.idleWorkerMaxPoolSize", cpus)
         .config("spark.ui.enabled", "false")
     )
-    # r15: optional shuffle/scratch dir override (static conf, so it
-    # must land at builder time). The TEST harness points this at
-    # tmpfs — this sandbox's block device intermittently makes tiny
-    # shuffle-file writes cost seconds, and test correctness does not
-    # depend on where shuffle files live. Unset for the bench/driver
-    # (comparability with prior rounds) and wrong on a real cluster,
-    # where local dirs are provisioned NVMe and shuffle data exceeds
-    # RAM.
+    # Optional shuffle/spill dir override (static conf, so it must land
+    # at builder time). The tests, and bench runs that want walls free
+    # of block-device stalls, point it at tmpfs (/dev/shm/...): a slow
+    # device can make KB-scale shuffle-file writes cost seconds. Leave
+    # it unset on a real cluster, where local dirs are provisioned
+    # disks and shuffle data exceeds RAM. SPARK_LOCAL_DIRS, when set,
+    # overrides it.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)

@@ -51,7 +51,7 @@ def main() -> None:
         snapshot_upsert,
     )
     from dask_awkward_sandbox_spark.plans.common import read
-    from dask_awkward_sandbox_spark.session import get_spark
+    from dask_awkward_sandbox_spark.session import SCRATCH, get_spark
 
     n_writers = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     k_upserts = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -59,7 +59,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    path = "/root/repo/.scratch/cas_probe_table"
+    path = os.path.join(SCRATCH, "cas_probe_table")
     shutil.rmtree(path, ignore_errors=True)
     base = (
         read(spark, sf_dir, "events")

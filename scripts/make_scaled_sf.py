@@ -27,7 +27,7 @@ Fixed dims (region, nation) are copied as-is; all foreign keys shift
 by the same per-copy offset so join cardinalities scale linearly.
 
 Usage: python scripts/make_scaled_sf.py [SRC_DIR] [DST_DIR] [COPIES]
-Defaults: /root/testdata/sf0.1 -> /root/repo/.scaledata/sf1, 10 copies.
+Defaults: the sf0.1 testdata -> .scaledata/sf1 in the checkout, 10 copies.
 """
 
 from __future__ import annotations
@@ -37,7 +37,8 @@ import os
 import random
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 OFF = 10_000_000  # > every key in sf0.1 (max observed: 149_999)
 EMB_DIM = 64
@@ -194,7 +195,7 @@ def scale(
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scaledata/sf1"
+    dst = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".scaledata", "sf1")
     copies = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     os.makedirs(dst, exist_ok=True)
     scale(src, dst, copies)

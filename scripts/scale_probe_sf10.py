@@ -30,7 +30,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import _plan_signature, timed  # noqa: E402
 
 REGISTERED = [
     "q1_pricing_summary",
@@ -110,41 +113,25 @@ REGISTERED = [
 # treatment — its r12 cell swung 8.1x->18.8x with no code change
 EXTRA_REPS = {"q_knn_join": 3, "q_ann_bruteforce": 3}
 
-SF1_DIR = "/root/repo/.scaledata/sf1"
-SF10_DIR = "/root/repo/.scaledata/sf10"
+SF1_DIR = os.path.join(ROOT, ".scaledata", "sf1")
+SF10_DIR = os.path.join(ROOT, ".scaledata", "sf10")
 
 
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
+def _min(samples: dict[str, list[float]]) -> dict[str, float]:
+    return {k: round(min(v), 3) for k, v in samples.items()}
 
 
-def _timed(fn, reps=1, spark=None):
-    best = None
-    for _ in range(reps):
-        if spark is not None:
-            # r12: gate slots persist their shared scan — clear so
-            # every rep pays it (min-of-reps must stay cold-cache)
-            spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
-
-
-def _extra_queries(spark, d):
-    """The two non-registered probe legs, as (name -> thunk)."""
+def _ann_bruteforce_1k(spark, d):
+    """The non-registered probe leg: brute-force top-5 for a fixed
+    1000-query panel from the base copy (vec_id < OFF), spread across
+    the id space."""
     from pyspark.sql import functions as F
 
     from dask_awkward_sandbox_spark.functions.similarity import brute_force_topk
 
     emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    # fixed 1000-query panel from the base copy (vec_id < OFF), spread
-    # across the id space
     queries = emb.filter((F.col("vec_id") < 10_000_000) & (F.col("vec_id") % 50 == 0))
-    return {
-        "ann_bruteforce_1k": lambda: _noop(brute_force_topk(emb, queries, k=5)),
-    }
+    return brute_force_topk(emb, queries, k=5)
 
 
 def _minhash_pair_output(spark):
@@ -178,9 +165,6 @@ def _minhash_pair_output(spark):
 def main() -> None:
     from dask_awkward_sandbox_spark.plans import QUERIES
     from dask_awkward_sandbox_spark.session import get_spark
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from bench import _plan_signature
 
     spark = get_spark("sf10-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -217,10 +201,6 @@ def main() -> None:
     out["sorted_table_build_s"] = table_build_s
     window_plain: dict[str, dict] = {}
 
-    def _run_sorted(name, d):
-        with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
-            _noop(getattr(N, name)(spark, d, base=sorted_tables[d]))
-
     for name in REGISTERED:
         if name in WINDOW_SLOTS:
             # plan stability compared sorted-vs-sorted across the step
@@ -245,33 +225,23 @@ def main() -> None:
         # re-measurements steady-stated at ~5.5x; the committed
         # artifact must carry the steady-state number)
         reps = EXTRA_REPS.get(name, 2)
+        plain = {
+            "sf1": lambda: QUERIES[name](spark, SF1_DIR),
+            "sf10": lambda: QUERIES[name](spark, SF10_DIR),
+        }
         if name in WINDOW_SLOTS:
-            t_sf1[name] = _timed(
-                lambda: _run_sorted(name, SF1_DIR), reps=reps, spark=spark
-            )
-            t_sf10[name] = _timed(
-                lambda: _run_sorted(name, SF10_DIR), reps=reps, spark=spark
-            )
-            window_plain[name] = {
-                "sf1": _timed(
-                    lambda: _noop(QUERIES[name](spark, SF1_DIR)),
-                    reps=reps, spark=spark,
-                ),
-                "sf10": _timed(
-                    lambda: _noop(QUERIES[name](spark, SF10_DIR)),
-                    reps=reps, spark=spark,
-                ),
-            }
+            with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
+                cells = _min(timed(spark, {
+                    k: (lambda d=d: getattr(N, name)(spark, d, base=sorted_tables[d]))
+                    for k, d in (("sf1", SF1_DIR), ("sf10", SF10_DIR))
+                }, reps))
+            window_plain[name] = _min(timed(spark, plain, reps))
             window_plain[name]["growth"] = round(
                 window_plain[name]["sf10"] / window_plain[name]["sf1"], 2
             )
         else:
-            t_sf1[name] = _timed(
-                lambda: _noop(QUERIES[name](spark, SF1_DIR)), reps=reps, spark=spark
-            )
-            t_sf10[name] = _timed(
-                lambda: _noop(QUERIES[name](spark, SF10_DIR)), reps=reps, spark=spark
-            )
+            cells = _min(timed(spark, plain, reps))
+        t_sf1[name], t_sf10[name] = cells["sf1"], cells["sf10"]
         growth[name] = round(t_sf10[name] / t_sf1[name], 2)
         print(f"# {name}: sf1 {t_sf1[name]}s sf10 {t_sf10[name]}s "
               f"growth {growth[name]}x stable={stable[name]}", file=sys.stderr)
@@ -282,14 +252,15 @@ def main() -> None:
         "item 3); window_slots_plain carries the no-layout fallback"
     )
 
-    for name in ("ann_bruteforce_1k",):
-        e1 = _extra_queries(spark, SF1_DIR)
-        e10 = _extra_queries(spark, SF10_DIR)
-        t_sf1[name] = _timed(e1[name], reps=2)
-        t_sf10[name] = _timed(e10[name], reps=2)
-        growth[name] = round(t_sf10[name] / t_sf1[name], 2)
-        print(f"# {name}: sf1 {t_sf1[name]}s sf10 {t_sf10[name]}s "
-              f"growth {growth[name]}x", file=sys.stderr)
+    name = "ann_bruteforce_1k"
+    cells = _min(timed(spark, {
+        "sf1": lambda: _ann_bruteforce_1k(spark, SF1_DIR),
+        "sf10": lambda: _ann_bruteforce_1k(spark, SF10_DIR),
+    }, 2))
+    t_sf1[name], t_sf10[name] = cells["sf1"], cells["sf10"]
+    growth[name] = round(t_sf10[name] / t_sf1[name], 2)
+    print(f"# {name}: sf1 {t_sf1[name]}s sf10 {t_sf10[name]}s "
+          f"growth {growth[name]}x", file=sys.stderr)
 
     out.update(
         {
@@ -303,11 +274,10 @@ def main() -> None:
     )
     if delta:
         out["plan_delta"] = delta
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SCALE_SF10.json")
-    # preserve aux blocks other scripts merged into the record
-    # (hof_form_ab, sorted_bucket_ab, remeasure attributions, ...) —
-    # a probe refresh must not clobber them (it did once, r13)
+    path = os.path.join(ROOT, "SCALE_SF10.json")
+    # preserve aux blocks other runs merged into the record
+    # (hof_form_ab, sorted_bucket_ab, stage_profile, ...) — a probe
+    # refresh must not clobber them (it did once, r13)
     if os.path.isfile(path):
         try:
             prev = json.load(open(path))

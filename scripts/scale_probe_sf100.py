@@ -22,8 +22,9 @@ key offset 1e9 (sf10 keys reach ~1e9) and CUMULATIVE file factor 100
 split within a row group; see make_scaled_sf.py).
 
 Writes one JSON line to stdout and SCALE_SF100.json at the repo root.
-Cluster ops run ONE rep at sf100 (10+ min each; the iteration trace,
-not the wall, is the signal) and min-of-2 below it.
+Cluster ops run one rep per scale (10+ min each at sf100; the
+iteration trace, not the wall, is the signal). Every wall goes through
+bench.timed, so the cache is cleared before each timed call.
 """
 
 from __future__ import annotations
@@ -33,25 +34,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF1_DIR = "/root/repo/.scaledata/sf1"
-SF10_DIR = "/root/repo/.scaledata/sf10"
-SF100_DIR = "/root/repo/.scaledata/sf100"
+from bench import noop, timed  # noqa: E402
 
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed(fn, reps=1):
-    best = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
+SF1_DIR = os.path.join(ROOT, ".scaledata", "sf1")
+SF10_DIR = os.path.join(ROOT, ".scaledata", "sf10")
+SF100_DIR = os.path.join(ROOT, ".scaledata", "sf100")
 
 
 def _ensure_datasets(spark) -> None:
@@ -103,14 +93,12 @@ def main() -> None:
         # should measure plan execution, not first-call codegen/JIT —
         # and, r10, first-ever Python-worker spawn for the Arrow
         # bucket kernel, which read as +4s of fake sf1 wall)
-        _noop(build("/root/testdata/sf0.1", {}))
+        noop(build("/root/testdata/sf0.1", {}))
         per_scale = {}
         for sf_name, d in (("sf1", SF1_DIR), ("sf10", SF10_DIR),
                            ("sf100", SF100_DIR)):
             stats: dict = {}
-            t0 = time.perf_counter()
-            _noop(build(d, stats))
-            wall = round(time.perf_counter() - t0, 3)
+            wall = round(timed(spark, {sf_name: lambda: build(d, stats)}, 1)[sf_name][0], 3)
             per_scale[sf_name] = {
                 "wall": wall,
                 "iterations": stats.get("iterations"),
@@ -143,12 +131,11 @@ def main() -> None:
                        ("sf100", SF100_DIR)):
         prof: dict = {}
         stats: dict = {}
-        t0 = time.perf_counter()
-        _noop(similarity.embedding_neardup_clusters(
+        wall = timed(spark, {sf_name: lambda: similarity.embedding_neardup_clusters(
             _emb(spark, d), dim=EMB_DIM, threshold=0.4, tables=LSH_TABLES,
             stats=stats, profile=prof,
-        ))
-        prof["wall_profiled"] = round(time.perf_counter() - t0, 3)
+        )}, 1)[sf_name][0]
+        prof["wall_profiled"] = round(wall, 3)
         prof["iterations"] = stats.get("iterations")
         stage_prof[sf_name] = prof
         print(f"# embedding stages @ {sf_name}: {prof}", file=sys.stderr)
@@ -189,15 +176,14 @@ def main() -> None:
               f"wall={cap_wall}s diffs={diff}", file=sys.stderr)
 
     # --- scan/shuffle controls at sf100, min-of-2 ---
-    controls = {}
-    for name in ("q1_pricing_summary", "q18_large_orders"):
-        controls[name] = _timed(
-            lambda: _noop(QUERIES[name](spark, SF100_DIR)), reps=2
-        )
-        print(f"# {name} @ sf100: {controls[name]}s", file=sys.stderr)
+    samples = timed(spark, {
+        name: (lambda q=QUERIES[name]: q(spark, SF100_DIR))
+        for name in ("q1_pricing_summary", "q18_large_orders")
+    }, 2)
+    controls = {name: round(min(s), 3) for name, s in samples.items()}
+    print(f"# controls @ sf100: {controls}", file=sys.stderr)
     out["controls_sf100"] = controls
-    sf10_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SCALE_SF10.json")
+    sf10_path = os.path.join(ROOT, "SCALE_SF10.json")
     if os.path.exists(sf10_path):
         with open(sf10_path) as f:
             sf10 = json.load(f).get("sf10", {})
@@ -205,8 +191,7 @@ def main() -> None:
             k: round(v / sf10[k], 2) for k, v in controls.items() if k in sf10
         }
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "SCALE_SF100.json"), "w") as f:
+    with open(os.path.join(ROOT, "SCALE_SF100.json"), "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
 

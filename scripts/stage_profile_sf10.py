@@ -3,14 +3,15 @@
 q_flatten_softmax, q_pad_fill_none, q_parquet_roundtrip).
 
 Each slot's pipeline is re-timed stage by stage at sf1 and sf10
-(min-of-2, cold cache) so the growth constant gets ATTRIBUTED to a
-stage instead of hand-waved:
+(bench.timed: interleaved min-of-2, cold cache) so the growth constant
+gets ATTRIBUTED to a stage instead of hand-waved:
 
 - scan           the narrow projection read (pure IO + decode)
 - window_rank    the okey-clustered row_number window — the slot's
                  distribution-defining shuffle + sort (flatten/pad)
 - hof_twin       the ~2% sampled HOF build end-to-end
-- write / back / explode stages for the parquet roundtrip
+- nested build / read-back / explode stages for the parquet roundtrip
+  (the nested frame is written once, untimed, before the read-back)
 - full           the registered slot
 
 Writes a ``stage_profile`` block into SCALE_SF10.json.
@@ -21,34 +22,21 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-SF1 = "/root/repo/.scaledata/sf1"
-SF10 = "/root/repo/.scaledata/sf10"
+from bench import timed  # noqa: E402
+
+SF1 = os.path.join(ROOT, ".scaledata", "sf1")
+SF10 = os.path.join(ROOT, ".scaledata", "sf10")
 ORD_COLS = [
     "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
     "l_tax", "l_returnflag", "l_linestatus",
 ]
-
-
-def _timed(spark, fn, reps=2):
-    best = None
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _stages_flatten(spark, d):
@@ -65,15 +53,10 @@ def _stages_flatten(spark, d):
         "l_orderkey", (F.row_number().over(w) - 1).alias("idx"), "l_quantity"
     )
     return {
-        "scan": _timed(spark, lambda: _noop(li)),
-        "window_rank": _timed(spark, lambda: _noop(ranked)),
-        "hof_twin": _timed(
-            spark,
-            lambda: _noop(q_flatten_softmax_hof(spark, d, where=_HOF_SAMPLE())),
-        ),
-        "full": _timed(
-            spark, lambda: _noop(QUERIES["q_flatten_softmax"](spark, d))
-        ),
+        "scan": lambda: li,
+        "window_rank": lambda: ranked,
+        "hof_twin": lambda: q_flatten_softmax_hof(spark, d, where=_HOF_SAMPLE()),
+        "full": lambda: QUERIES["q_flatten_softmax"](spark, d),
     }
 
 
@@ -93,15 +76,10 @@ def _stages_pad(spark, d):
         "l_orderkey", (F.row_number().over(w) - 1).alias("idx"), "l_quantity"
     )
     return {
-        "scan": _timed(spark, lambda: _noop(li)),
-        "window_rank": _timed(spark, lambda: _noop(ranked)),
-        "hof_twin": _timed(
-            spark,
-            lambda: _noop(q_pad_fill_none_hof(spark, d, where=_HOF_SAMPLE())),
-        ),
-        "full": _timed(
-            spark, lambda: _noop(QUERIES["q_pad_fill_none"](spark, d))
-        ),
+        "scan": lambda: li,
+        "window_rank": lambda: ranked,
+        "hof_twin": lambda: q_pad_fill_none_hof(spark, d, where=_HOF_SAMPLE()),
+        "full": lambda: QUERIES["q_pad_fill_none"](spark, d),
     }
 
 
@@ -112,24 +90,16 @@ def _stages_roundtrip(spark, d):
     from dask_awkward_sandbox_spark.plans.io_queries import _scratch
 
     path = _scratch(d, "nested_items_profile")
-
-    def build_write():
-        to_parquet(
-            order_items(spark, d, fields=["l_linenumber", "l_quantity"]),
-            path, max_records_per_file=100_000,
-        )
-
-    def read_back():
-        _noop(from_parquet(spark, path, columns=["l_orderkey", "items"]))
+    nested = order_items(spark, d, fields=["l_linenumber", "l_quantity"])
+    # written once, untimed: the read-back stages below scan it
+    to_parquet(nested, path, max_records_per_file=100_000)
 
     def explode_agg():
         back = from_parquet(spark, path, columns=["l_orderkey", "items"])
         flat = to_dataframe(back, explode_col="items")
-        _noop(
-            flat.groupBy("l_orderkey").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("items_l_linenumber").cast("long")).alias("s"),
-            )
+        return flat.groupBy("l_orderkey").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("items_l_linenumber").cast("long")).alias("s"),
         )
 
     def mp_legs():
@@ -149,19 +119,17 @@ def _stages_roundtrip(spark, d):
                     names=["l_orderkey", "l_linenumber"],
                 )
 
-        _noop(
+        return (
             li.mapInArrow(fn, "l_orderkey long, l_linenumber long")
             .groupBy("l_orderkey").agg(F.sum("l_linenumber").alias("s"))
         )
 
     return {
-        "nested_build_write": _timed(spark, build_write),
-        "read_back_scan": _timed(spark, read_back),
-        "explode_reagg": _timed(spark, explode_agg),
-        "map_in_arrow_legs": _timed(spark, mp_legs),
-        "full": _timed(
-            spark, lambda: _noop(QUERIES["q_parquet_roundtrip"](spark, d))
-        ),
+        "nested_build": lambda: nested,
+        "read_back_scan": lambda: from_parquet(spark, path, columns=["l_orderkey", "items"]),
+        "explode_reagg": explode_agg,
+        "map_in_arrow_legs": mp_legs,
+        "full": lambda: QUERIES["q_parquet_roundtrip"](spark, d),
     }
 
 
@@ -178,7 +146,8 @@ def main() -> None:
     ):
         out[name] = {}
         for tag, d in (("sf1", SF1), ("sf10", SF10)):
-            out[name][tag] = fn(spark, d)
+            samples = timed(spark, fn(spark, d), 2)
+            out[name][tag] = {k: round(min(v), 3) for k, v in samples.items()}
             print(f"# {name} {tag}: {out[name][tag]}", file=sys.stderr)
         g = {
             k: round(out[name]["sf10"][k] / out[name]["sf1"][k], 2)
@@ -187,10 +156,7 @@ def main() -> None:
         }
         out[name]["stage_growth"] = g
         print(f"# {name} growth: {g}", file=sys.stderr)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_SF10.json",
-    )
+    path = os.path.join(ROOT, "SCALE_SF10.json")
     rec = json.load(open(path))
     rec["stage_profile"] = out
     json.dump(rec, open(path, "w"), indent=2)

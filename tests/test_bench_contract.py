@@ -1,9 +1,21 @@
-"""The bench harness's contract with the registry: every headliner
-must be a registered query (a rename that misses bench.py would crash
-the driver's per-round bench run), and the probe scripts' slots must
-resolve too."""
+"""The bench harness's contract with the registry and the driver:
+every headliner must be a registered query (a rename that misses
+bench.py would crash the bench run), the final line must fit the
+driver's tail capture, the one timer must interleave and clear the
+cache, and every script must still import what it uses from bench."""
 
 from __future__ import annotations
+
+import importlib
+import os
+
+import pytest
+
+SCRIPTS = sorted(
+    f[:-3]
+    for f in os.listdir(os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    if f.endswith(".py")
+)
 
 
 def test_headliners_are_registered():
@@ -33,14 +45,13 @@ def test_final_line_fits_driver_tail_capture():
     """The driver captures only the last ~2000 chars of stdout and
     parses the FINAL line as the headline JSON. BENCH_r05 and r06 both
     recorded parsed:null because the final line outgrew that window.
-    Build the line bench.main() prints for the CURRENT headliner count
-    with worst-case float widths (xxx.xxx after round(,3)) and assert
-    it stays safely under the capture, leaving slack for the sf token
-    and a few extra-long future slot names."""
+    Build the line bench.main() prints for the CURRENT slot counts
+    with worst-case float widths and assert it stays safely under the
+    capture, leaving slack for the sf token and a few extra-long
+    future slot names."""
     import json
 
     import bench
-
     from dask_awkward_sandbox_spark.plans import QUERIES
 
     worst = {name: 999.99 for name in bench.HEADLINERS}
@@ -52,82 +63,16 @@ def test_final_line_fits_driver_tail_capture():
             "unit": "sec",
             "queries": worst,
             "sf": 0.001,
-            # r15: only the grading ratio rides the final line —
-            # baseline_total is a source constant and mapped_total is
-            # derivable (ratio x constant, or summing the mapped
-            # slots' in-panel cells); both moved to the aux line
-            "baseline_mapped": {"ratio": 999.999},
-            # r14: isolated min-of-3 per-slot cells as an ARRAY in
-            # sorted(BASELINE_MAPPED) order — the full named dict
-            # (~550 chars) would blow the tail budget; it rides aux.
-            # r15: total and box moved to aux (derivable from vals)
-            "baseline_mapped_isolated": {
-                "vals": [999.99] * len(bench.BASELINE_MAPPED),
-                "norm": 999.999,
-            },
-            # r15 (verdict items 1+7): isolated cells for the flagged
-            # non-mapped slots, array in ISO_EXTRA order
-            "iso_extra": [999.99] * len(bench.ISO_EXTRA),
-            "box_factor": 999.999,
-            # r13: non-headliner walls ride the final line so the
-            # driver's tail capture keeps them in the record
             "gate_nonheadliner": {"total": 99999.99, "queries": non},
-            # late r14: comparable-work totals (per-shape cells +
-            # ratio on aux)
-            "r01_shapes": {"wall": 999.99},
         }
     )
     assert len(line) <= 1960, (len(line), "final bench line nearing the driver's ~2000-char tail capture")
 
 
-def test_iso_extra_slots_resolve():
-    """Every ISO_EXTRA slot must be registered (the isolated
-    subprocess would die on an unknown name) and must NOT be
-    baseline-mapped (those already ride the mapped isolated block —
-    double-timing would waste bench wall)."""
-    import bench
-    from dask_awkward_sandbox_spark.plans import QUERIES
-
-    missing = [n for n in bench.ISO_EXTRA if n not in QUERIES]
-    assert not missing, missing
-    overlap = [n for n in bench.ISO_EXTRA if n in bench.BASELINE_MAPPED]
-    assert not overlap, overlap
-    assert bench.ISO_EXTRA == sorted(bench.ISO_EXTRA)
-
-
-def test_r01_shapes_table_consistent():
-    """plans/r01_shapes.py: every shaped slot must be a
-    BASELINE_MAPPED headliner, its per-shape rows must sum to the
-    slot's BASELINE_MAPPED row (same numbers, decomposed), and each
-    shape must build a plan against the tiny SF."""
-    import bench
-    from dask_awkward_sandbox_spark.plans.r01_shapes import R01_SHAPES
-
-    for slot, lst in R01_SHAPES.items():
-        assert slot in bench.BASELINE_MAPPED, slot
-        assert slot in bench.HEADLINERS, slot
-        rows = round(sum(r for _, r, _ in lst), 3)
-        assert rows == bench.BASELINE_MAPPED[slot], (slot, rows)
-
-
-def test_r01_shapes_build_plans(spark):
-    from dask_awkward_sandbox_spark.plans.r01_shapes import R01_SHAPES
-
-    for lst in R01_SHAPES.values():
-        for _, _, fn in lst:
-            # schema resolution = full analysis; no execution needed
-            assert fn(spark, "/root/testdata/sf0.001").schema is not None
-
-
 def test_gate_nonheadliner_covers_registry_complement():
-    """r12 (verdict item 3): the aux line's gate_nonheadliner block
-    must time exactly the registered slots bench does not headline, so
-    cost relocations between hosts stay visible round-over-round. The
-    box_factor control divides by the r01 record's q1 wall — pin it to
-    the committed BENCH_r01.json value."""
-    import json
-    import os
-
+    """The final line's gate_nonheadliner block must time exactly the
+    registered slots bench does not headline, so cost moved between
+    slots stays visible run over run."""
     import bench
     from dask_awkward_sandbox_spark.plans import QUERIES
 
@@ -135,28 +80,41 @@ def test_gate_nonheadliner_covers_registry_complement():
     assert complement, "every slot headlined — drop the block instead"
     # the function iterates the same complement (source-level contract)
     assert callable(bench.gate_nonheadliner)
-    r01 = json.load(
-        open(os.path.join(os.path.dirname(bench.__file__), "BENCH_r01.json"))
-    )
-    assert bench.Q1_CONTROL_R01 == r01["parsed"]["queries"]["q1_pricing_summary"]
-    # r14: the median box control's four rows must each match the r01
-    # record, and each control must be a BASELINE_MAPPED headliner so
-    # the in-panel timings dict always carries it
-    for name, row in bench.BOX_CONTROLS_R01.items():
-        assert row == r01["parsed"]["queries"][name], name
-        assert name in bench.BASELINE_MAPPED and name in bench.HEADLINERS, name
 
 
-def test_baseline_mapped_slots_are_headliners():
-    """Every BASELINE_MAPPED key must be a timed headliner, and the
-    baseline sum must stay the 21.376s the r8/r9 verdicts graded
-    against (BASELINE.md total 22.65 minus the folded q_with_field
-    row's 1.274)."""
+def test_timed_interleaves_and_clears_cache(spark, sf, monkeypatch):
+    """bench.timed runs the thunks round-robin (a, b, a, b), clears
+    the cache before every call, and returns one sample per rep."""
     import bench
+    from dask_awkward_sandbox_spark.plans.common import read
 
-    missing = [n for n in bench.BASELINE_MAPPED if n not in bench.HEADLINERS]
-    assert not missing, missing
-    assert round(sum(bench.BASELINE_MAPPED.values()), 3) == 21.376
+    calls: list[str] = []
+    clear = spark.catalog.clearCache
+
+    def logged_clear():
+        calls.append("clear")
+        clear()
+
+    monkeypatch.setattr(spark.catalog, "clearCache", logged_clear)
+
+    def thunk(name):
+        def build():
+            calls.append(name)
+            return read(spark, sf, "region")
+
+        return build
+
+    samples = bench.timed(spark, {"a": thunk("a"), "b": thunk("b")}, 2)
+    assert calls == ["clear", "a", "clear", "b"] * 2
+    assert {k: len(v) for k, v in samples.items()} == {"a": 2, "b": 2}
+    assert all(s > 0 for v in samples.values() for s in v)
+
+
+@pytest.mark.parametrize("name", SCRIPTS)
+def test_script_imports(name):
+    """Every script imports cleanly (all run under a ``__main__``
+    guard), so one still importing a deleted bench name fails here."""
+    importlib.import_module(f"scripts.{name}")
 
 
 def test_sf10_probe_slots_resolve():

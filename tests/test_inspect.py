@@ -52,8 +52,9 @@ def test_report_necessary_columns_nested_pruned(spark):
 
     from dask_awkward_sandbox_spark import inspect as ins
     from dask_awkward_sandbox_spark.plans.common import fld, order_items
+    from dask_awkward_sandbox_spark.session import SCRATCH
 
-    path = "/root/repo/.scratch/plans/nested_items"
+    path = os.path.join(SCRATCH, "plans", "nested_items")
     if not os.path.exists(path):
         order_items(spark, SF).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
@@ -77,8 +78,9 @@ def test_report_necessary_buffers_shape_vs_data(spark):
 
     from dask_awkward_sandbox_spark import inspect as ins
     from dask_awkward_sandbox_spark.plans.common import fld, order_items
+    from dask_awkward_sandbox_spark.session import SCRATCH
 
-    path = "/root/repo/.scratch/plans/nested_items"
+    path = os.path.join(SCRATCH, "plans", "nested_items")
     if not os.path.exists(path):
         order_items(spark, SF).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)

@@ -7,7 +7,9 @@ from __future__ import annotations
 import json
 import os
 
-SCRATCH = "/root/repo/.scratch/iotest"
+from dask_awkward_sandbox_spark import session
+
+SCRATCH = os.path.join(session.SCRATCH, "iotest")
 
 
 def test_from_json_infers_schema(spark):

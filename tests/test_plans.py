@@ -39,8 +39,9 @@ def _nested_parquet(spark):
     import os
 
     from dask_awkward_sandbox_spark.plans.common import order_items
+    from dask_awkward_sandbox_spark.session import SCRATCH
 
-    path = "/root/repo/.scratch/plans/nested_items"
+    path = os.path.join(SCRATCH, "plans", "nested_items")
     if not os.path.exists(path):
         order_items(spark, SF).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
@@ -333,8 +334,9 @@ def test_partitioned_write_prunes_partitions(spark):
 
     from dask_awkward_sandbox_spark.io import from_parquet, to_parquet
     from dask_awkward_sandbox_spark.plans.common import read
+    from dask_awkward_sandbox_spark.session import SCRATCH
 
-    path = "/root/repo/.scratch/plans/events_by_type"
+    path = os.path.join(SCRATCH, "plans", "events_by_type")
     if not os.path.exists(path):
         to_parquet(read(spark, SF, "events"), path, partition_by=["event_type"])
     back = from_parquet(spark, path).filter(F.col("event_type") == "click")

@@ -24,7 +24,10 @@ pytestmark = pytest.mark.skipif(
     reason="sf1 smoke is opt-in: set SPARK_GRAFT_SF1_TESTS=1",
 )
 
-SF1_DIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/root/repo/.scaledata/sf1")
+SF1_DIR = os.environ.get(
+    "SPARK_GRAFT_SCALE_DIR",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scaledata", "sf1"),
+)
 
 SUBSET = [
     "q1_pricing_summary",

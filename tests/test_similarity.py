@@ -76,10 +76,11 @@ def test_ivf_indexed_probe_matches_and_prunes(spark):
 
     from dask_awkward_sandbox_spark.functions import similarity
     from dask_awkward_sandbox_spark.plans.common import read
+    from dask_awkward_sandbox_spark.session import SCRATCH
 
     e = read(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    path = os.path.join("/root/repo/.scratch", "ivf_index_test")
+    path = os.path.join(SCRATCH, "ivf_index_test")
     cents = similarity.ivf_write_index(e, path, nlist=16, iters=3)
 
     probe = similarity.ivf_probe_indexed(spark, path, q, cents, k=5, nprobe=4)

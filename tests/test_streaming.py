@@ -8,8 +8,10 @@ import os
 
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark import session
+
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/streamtest"
+SCRATCH = os.path.join(session.SCRATCH, "streamtest")
 
 
 def _write_stream_input(spark):
