@@ -54,6 +54,25 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
+def _dense_rows(arr, dim: int, who: str):
+    """An Arrow list column of length-``dim`` vectors as an (n, dim)
+    float64 matrix, read straight from its offsets and values buffers
+    (no per-row Python lists). Null or ragged vectors raise
+    ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        raise ValueError(f"{who}: null vectors unsupported")
+    offs = arr.offsets.to_numpy(zero_copy_only=False)
+    if ((offs[1:] - offs[:-1]) != dim).any():
+        raise ValueError(f"{who}: vectors must be dense length-{dim}")
+    vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    return vals[offs[0] : offs[-1]].reshape(len(arr), dim)
+
+
 def dot(a: Column, b: Column) -> Column:
     """Dot product via zip_with + left fold (deterministic order)."""
     return F.aggregate(
@@ -106,18 +125,8 @@ def cosine_pairs_arrow(joined: DataFrame, dim: int, round_digits: int) -> DataFr
             n = len(b)
             if n == 0:
                 continue
-
-            def mat(col_i):
-                arr = b.column(col_i)
-                offs = arr.offsets.to_numpy(zero_copy_only=False)
-                if ((offs[1:] - offs[:-1]) != dim).any():
-                    raise ValueError(
-                        f"cosine_pairs_arrow: vectors must be dense length-{dim}"
-                    )
-                vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
-                return vals[offs[0] : offs[-1]].reshape(n, dim)
-
-            va, vb = mat(2), mat(3)
+            va = _dense_rows(b.column(2), dim, "cosine_pairs_arrow")
+            vb = _dense_rows(b.column(3), dim, "cosine_pairs_arrow")
             na = b.column(4).to_numpy(zero_copy_only=False)
             nb_ = b.column(5).to_numpy(zero_copy_only=False)
             dots = np.einsum("ij,ij->i", va, vb)
@@ -467,24 +476,10 @@ def with_lsh_buckets(
     def kernel(batches):
         for b in batches:
             ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
             nb = len(b)
             if nb == 0:
                 continue
-            if vecs.null_count:
-                raise ValueError("with_lsh_buckets: null vectors unsupported")
-            offs = vecs.offsets.to_numpy(zero_copy_only=False)
-            if ((offs[1:] - offs[:-1]) != dim).any():
-                raise ValueError(
-                    f"with_lsh_buckets: vectors must be dense length-{dim}"
-                )
-            V = (
-                vecs.values.to_numpy(zero_copy_only=False)
-                .astype(np.float64)[offs[0] : offs[-1]]
-                .reshape(nb, dim)
-            )
+            V = _dense_rows(b.column(1), dim, "with_lsh_buckets")
             # exact left folds: cumsum is sequential prefix addition,
             # so [:, -1] is bit-identical to the HOF aggregate
             projs = np.empty((nb, nplanes), dtype=np.float64)
@@ -1996,9 +1991,9 @@ def kmeans_train_distributed(
     (batch x nlist matmul, centroids ride in the task closure) into a
     map-side-combined groupBy over ``nlist`` keys collecting per-dim
     means; only nlist x dim doubles ever reach the driver (that IS
-    the model, so it must fit regardless). The source projection is
-    cached across iterations. This is the shape MLlib's KMeans runs —
-    re-derived here so the quantizer stack stays dependency-free and
+    the model, so it must fit regardless). With more than one
+    iteration the source projection is cached across them. This is
+    the shape MLlib's KMeans runs — re-derived here so the quantizer stack stays dependency-free and
     its tie/init rules stay oracle-replayable.
     """
     import numpy as np
@@ -2010,17 +2005,19 @@ def kmeans_train_distributed(
     seed = src.orderBy("_id").limit(nlist).collect()  # TakeOrdered
     C = np.array([r["_v"] for r in seed], dtype=np.float64)
     dim = C.shape[1]
-    if iters > 0:
-        src = src.select("_v").persist()
+    src = src.select("_v")
+    if iters > 1:
+        src = src.persist()
     try:
         for _ in range(iters):
             Cit = C.copy()
 
             def assign(it, _C=Cit):
                 for b in it:
-                    V = np.array(b.to_pydict()["_v"], dtype=np.float64)
-                    if V.size == 0:
+                    if b.num_rows == 0:
                         continue
+                    vecs = b.column(0)
+                    V = _dense_rows(vecs, dim, "kmeans_train_distributed")
                     S = V @ _C.T
                     if round_digits is not None:
                         # round-before-argmax makes the assignment a
@@ -2030,12 +2027,8 @@ def kmeans_train_distributed(
                         # keeps the kmeans_train-pinned contract
                         S = _round_half_away(S, round_digits)
                     cells = np.argmax(S, axis=1).astype(np.int32)
-                    yield pa.RecordBatch.from_pydict(
-                        {"_cell": cells, "_v": [v.tolist() for v in V]},
-                        schema=pa.schema(
-                            [("_cell", pa.int32()),
-                             ("_v", pa.list_(pa.float64()))]
-                        ),
+                    yield pa.record_batch(
+                        [pa.array(cells), vecs], names=["_cell", "_v"]
                     )
 
             stats = (
@@ -2050,6 +2043,6 @@ def kmeans_train_distributed(
             for r in stats:
                 C[r["_cell"]] = [r[f"_m{d}"] for d in range(dim)]
     finally:
-        if iters > 0:
+        if iters > 1:
             src.unpersist()
     return [[float(x) for x in c] for c in C]

@@ -679,9 +679,9 @@ def unflatten(df: DataFrame, value_col: str, order_col: str, counts: Sequence[in
             ).alias("_p")
         )
         # left join from the full group table: zero-count groups emit []
-        gdf = spark.createDataFrame([(g,) for g in range(len(counts))], "gid long")
         out = (
-            gdf.join(grouped, "gid", "left")
+            spark.range(len(counts)).toDF("gid")
+            .join(grouped, "gid", "left")
             .select(
                 "gid",
                 F.coalesce(
