@@ -348,32 +348,6 @@ def brute_force_topk_hof(
     )
 
 
-def neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    round_digits: int = 6,
-) -> DataFrame:
-    """All (a < b) pairs with cosine >= threshold — EXACT but
-    all-pairs: the ``id_a < id_b`` join is non-equi, so it physically
-    becomes a nested-loop cross product. Test-oracle / tiny-corpus
-    use only; the production operator is ``neardup_pairs_blocked``
-    (LSH-bucket equi-join, linear in bucket sizes)."""
-    a = df.select(
-        F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("va")
-    ).withColumn("na", norm(F.col("va")))
-    b = df.select(
-        F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("vb")
-    ).withColumn("nb", norm(F.col("vb")))
-    j = a.join(b, F.col("id_a") < F.col("id_b"))
-    sim = round_half_away(
-        cosine_from_norms(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
-        round_digits,
-    )
-    return j.select("id_a", "id_b", sim.alias("sim")).filter(F.col("sim") >= threshold)
-
-
 def adaptive_planes(
     n: int, target_occupancy: int = 250, min_planes: int = 3
 ) -> int:

@@ -159,8 +159,24 @@ def q_window_funcs(spark, sf_dir):
 WATERMARK_US = 3600 * 1_000_000  # sessionize_stateful's 1-hour watermark
 
 
-# one state-store task per shuffle partition per micro-batch: KB-scale replays want few
-STREAM_STATE_PARTITIONS = "16"
+# The state-store cap for the streaming slots. A stateful micro-batch
+# runs one task per shuffle partition (stateful plans get no AQE
+# coalescing), and every task commits its own state-store instance at a
+# fixed ~75-150 ms per micro-batch, whatever the KB of state it holds
+# (measured on a 4-CPU box). So never run more instances than the
+# session has task slots: each micro-batch's stateful stage is then one
+# wave, and extra instances would only add waves of commits.
+STREAM_STATE_PARTITIONS = 16
+
+
+def stream_state_scope(spark):
+    """Scope the shuffle partitions, and with them the state-store
+    instances per micro-batch, to ``min(STREAM_STATE_PARTITIONS,
+    defaultParallelism)`` for the streams a block starts. Results do not
+    depend on the count: both slots replay from fresh checkpoints, and a
+    persistent checkpoint keeps the count recorded in its offset log."""
+    n = min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
 @query(
@@ -196,6 +212,11 @@ def q_stream_sessionize(spark, sf_dir):
     Trigger.AvailableNow into a memory sink, and the emitted sessions
     are returned as a batch frame. No Python worker runs.
 
+    Nearly all of the wall is the two micro-batches' stateful stages,
+    and there each state-store instance pays a fixed ~75-150 ms commit
+    per micro-batch. ``stream_state_scope`` caps the instances at the
+    session's task slots, so each micro-batch commits in one wave.
+
     Deterministic because append-mode emission is watermark-final: a
     session is emitted iff last_event + gap <= final_watermark
     (= ms-floored max event time - 1h — Spark truncates event times to
@@ -212,7 +233,7 @@ def q_stream_sessionize(spark, sf_dir):
     merge them into sessions already held in state — the driver oracle
     itself exercises the late-merge path, and the final emitted set is
     unchanged because emission is watermark-final."""
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS):
+    with stream_state_scope(spark):
         import os
 
         from dask_awkward_sandbox_spark.streaming import sessionize_stateful
@@ -393,7 +414,7 @@ def q_stream_dedup(spark, sf_dir):
     fresh checkpoint — dynamic partition overwrite must leave the
     sink row count unchanged (the exactly-once contract) or a poison
     breaks every curation row's hash."""
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", STREAM_STATE_PARTITIONS):
+    with stream_state_scope(spark):
         import os
         import shutil
 

@@ -100,6 +100,15 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
         # identity mapInArrow job fell from 0.42-0.58 s to 0.20-0.28 s
         # on a 4-CPU box.
         .config("spark.python.daemon.module", "dask_awkward_sandbox_spark._pydaemon")
+        # PySpark wraps every F.*/Column/DataFrame call to record its
+        # Python call site. With this on (the default) each wrapped call
+        # makes several py4j round trips (the active session, a JVM class
+        # lookup, a conf read, an origin set and clear) and walks the
+        # stack: a warm q_reduce_order_count build made 2,910 py4j calls
+        # with it and 630 without. The trade: errors raised at execution
+        # time lose their "== DataFrame ==" call-site block. Analysis
+        # errors still raise eagerly at the calling line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     # Optional shuffle/spill dir override (static conf, so it must land

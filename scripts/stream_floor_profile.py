@@ -1,11 +1,14 @@
 """Per-batch floor attribution for the streaming gate slots (r15,
 verdict item 6): run q_stream_sessionize / q_stream_dedup and dump each
 micro-batch's StreamingQueryProgress durationMs breakdown plus the
-state-operator commit times, so the artifact carries WHERE the
-structured-streaming wall goes (addBatch compute vs offset-log/commit
-fixed cost) instead of a prose claim.
+state operators' instance counts, update and commit times, so the
+artifact carries WHERE the structured-streaming wall goes (addBatch
+compute vs offset-log/commit fixed cost) instead of a prose claim.
 
 Usage: python scripts/stream_floor_profile.py [SF_DIR] [OUT_JSON]
+
+OUT_JSON defaults to ``stream_floor.json`` under the package's scratch
+root (``session.SCRATCH``).
 
 The queries are run exactly as registered (the slot functions
 themselves); progress is harvested from every active/finished stream
@@ -23,10 +26,13 @@ import time
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/stream_floor.json"
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from dask_awkward_sandbox_spark.plans import QUERIES
-    from dask_awkward_sandbox_spark.session import get_spark
+    from dask_awkward_sandbox_spark.session import SCRATCH, get_spark
+
+    out_path = (
+        sys.argv[2] if len(sys.argv) > 2 else os.path.join(SCRATCH, "stream_floor.json")
+    )
 
     spark = get_spark("dwax-stream-floor")
     spark.sparkContext.setLogLevel("ERROR")
@@ -40,37 +46,41 @@ def main() -> None:
         from pyspark.sql.streaming import StreamingQueryListener
 
         batches: list[dict] = []
+        started: set = set()
+        ended: set = set()
 
         class _L(StreamingQueryListener):
             def onQueryStarted(self, event):
-                pass
+                started.add(event.id)
 
             def onQueryProgress(self, event):
                 p = event.progress
-                row = {
-                    "name": p.name,
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "durationMs": dict(p.durationMs),
-                }
-                try:
-                    row["stateOperators"] = [
-                        {
-                            "operatorName": getattr(s, "operatorName", None),
-                            "commitTimeMs": getattr(s, "commitTimeMs", None),
-                            "numRowsTotal": getattr(s, "numRowsTotal", None),
-                        }
-                        for s in p.stateOperators
-                    ]
-                except Exception:
-                    pass
-                batches.append(row)
+                batches.append(
+                    {
+                        "name": p.name,
+                        "batchId": p.batchId,
+                        "numInputRows": p.numInputRows,
+                        "durationMs": dict(p.durationMs),
+                        "stateOperators": [
+                            {
+                                "operatorName": s.operatorName,
+                                "numStateStoreInstances": s.numStateStoreInstances,
+                                "numShufflePartitions": s.numShufflePartitions,
+                                "allUpdatesTimeMs": s.allUpdatesTimeMs,
+                                "commitTimeMs": s.commitTimeMs,
+                                "numRowsTotal": s.numRowsTotal,
+                                "memoryUsedBytes": s.memoryUsedBytes,
+                            }
+                            for s in p.stateOperators
+                        ],
+                    }
+                )
 
             def onQueryIdle(self, event):
                 pass
 
             def onQueryTerminated(self, event):
-                pass
+                ended.add(event.id)
 
         listener = _L()
         spark.streams.addListener(listener)
@@ -80,8 +90,11 @@ def main() -> None:
                 "overwrite"
             ).save()
             wall = round(time.perf_counter() - t0, 3)
-            # listener delivery is async — give the bus a moment
-            time.sleep(2.0)
+            # listener delivery is async: wait until every started
+            # stream's termination (posted after its last progress) landed
+            deadline = time.monotonic() + 60
+            while (not started or started - ended) and time.monotonic() < deadline:
+                time.sleep(0.1)
         finally:
             spark.streams.removeListener(listener)
         tot_batches = len(batches)
@@ -107,8 +120,11 @@ def main() -> None:
             tot_trigger,
             "addBatch_ms",
             tot_addbatch,
+            "state_instances",
+            [[s["numStateStoreInstances"] for s in b["stateOperators"]] for b in batches],
             flush=True,
         )
+    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1, default=str)
     print("written", out_path, flush=True)

@@ -748,3 +748,56 @@ def test_stream_curation_scores_idempotent_replay(spark, tmp_path):
         == (got[k]["n_ws"], got[k]["fp"], got[k]["batch_id"])
         for k in got
     )
+
+
+def test_stream_state_instances_fit_task_slots(spark):
+    """Each state-store instance commits at a fixed cost per
+    micro-batch, so the streaming slots never run more instances than
+    the session has task slots (and at most 16)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from dask_awkward_sandbox_spark.plans.events import (
+        STREAM_STATE_PARTITIONS,
+        q_stream_sessionize,
+    )
+
+    progress, ended = [], []
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.append(event.id)
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        q_stream_sessionize(spark, SF).count()
+        # listener delivery is asynchronous: wait for the termination
+        # event, which the bus posts after the query's last progress
+        deadline = time.monotonic() + 60
+        while not ended and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert ended, "no termination event within 60 s"
+    slots = spark.sparkContext.defaultParallelism
+    ops = [
+        op
+        for p in progress
+        if p.name == "q_stream_sessionize_sink"
+        for op in p.stateOperators
+    ]
+    assert ops, "the sessionize stream reported no state operator"
+    for op in ops:
+        assert op.numStateStoreInstances <= slots
+        assert op.numShufflePartitions == min(STREAM_STATE_PARTITIONS, slots)
