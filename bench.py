@@ -5,14 +5,20 @@ Every wall goes through one timer, :func:`timed`: named thunks run
 round-robin for N reps, the cache is cleared before each call, and the
 built frame is forced through the noop sink (full compute, no driver
 collect). A wall covers the slot's build, eager jobs included, and its
-execution. A warmup pass on sf0.001 compiles codegen first.
+execution. A warmup pass on sf0.001 first loads classes, warms the
+JIT and compiles the generated classes whose plans do not change with
+data size; they stay cached because ``get_spark`` sizes the codegen
+cache above the headliners' working set (at Spark's default of 100
+entries, 28 interleaved headliners evict them all before they recur).
 
 The FINAL printed line is the headline record {metric, value, unit,
 queries, sf, gate_nonheadliner}: per-headliner min-of-reps, their sum,
 and one-rep walls of every other registered slot. The line before it
-is the aux record: per-headliner min/max, the salted-join skew demo,
-the local dirs in effect, and the sf1 scale probe (headliners + skew
-demo at 10x, from scripts/make_scaled_sf.py under .scaledata/).
+is the aux record: per-headliner min/max, the generated classes the
+timed reps still compiled (``codegen_compiles``, total and per
+headliner), the salted-join skew demo, the local dirs in effect, and
+the sf1 scale probe (headliners + skew demo at 10x, from
+scripts/make_scaled_sf.py under .scaledata/).
 
 Env: SPARK_GRAFT_BENCH_REPS (3), SPARK_GRAFT_SCALE_REPS (2),
 SPARK_GRAFT_SKIP_SCALE=1, SPARK_GRAFT_SCALE_DIR. Put shuffle files on
@@ -48,7 +54,17 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def timed(spark, thunks: dict[str, Callable], reps: int) -> dict[str, list[float]]:
+def compile_count(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far
+    (cache misses; in local mode the executors share the driver's
+    cache and counter)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def timed(
+    spark, thunks: dict[str, Callable], reps: int, compiles: dict[str, int] | None = None
+) -> dict[str, list[float]]:
     """Wall seconds of each named thunk, ``reps`` samples per name.
 
     Each thunk builds a DataFrame; a sample is the thunk call plus
@@ -56,14 +72,20 @@ def timed(spark, thunks: dict[str, Callable], reps: int) -> dict[str, list[float
     (a, b, a, b, ...) so a burst of machine contention spreads over
     every name instead of landing on one name's reps, and the cache is
     cleared before each call so a slot that persists its shared scan
-    pays that scan in every sample."""
+    pays that scan in every sample. With ``compiles``, each name's
+    :func:`compile_count` delta over its samples (read outside the
+    timed span) is added to it, so a wall that swings can be checked
+    against code generation."""
     samples: dict[str, list[float]] = {name: [] for name in thunks}
     for _ in range(reps):
         for name, thunk in thunks.items():
             spark.catalog.clearCache()
+            c0 = compile_count(spark) if compiles is not None else 0
             t0 = time.perf_counter()
             noop(thunk())
             samples[name].append(time.perf_counter() - t0)
+            if compiles is not None:
+                compiles[name] = compiles.get(name, 0) + compile_count(spark) - c0
     return samples
 
 
@@ -211,8 +233,11 @@ def main() -> None:
     spark = get_spark("dwax-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    timed(spark, _slots(spark, HEADLINERS, DEFAULT_SF_DIR), 1)  # codegen warmup at sf0.001
-    samples = timed(spark, _slots(spark, HEADLINERS, sf_dir), reps)
+    # warmup at sf0.001: loads classes, warms the JIT and leaves the
+    # size-independent generated classes in the codegen cache
+    timed(spark, _slots(spark, HEADLINERS, DEFAULT_SF_DIR), 1)
+    compiles: dict[str, int] = {}
+    samples = timed(spark, _slots(spark, HEADLINERS, sf_dir), reps, compiles)
     # 2dp keeps the final line inside the driver's ~2000-char tail
     # capture (tests/test_bench_contract.py pins the worst-case width)
     timings = {name: round(min(s), 2) for name, s in samples.items()}
@@ -234,6 +259,7 @@ def main() -> None:
     aux = {
         "metric": "bench_aux",
         "spread_min_max": spread,
+        "codegen_compiles": {"total": sum(compiles.values()), "queries": compiles},
         "skew_demo": skew_demo(spark, sf_dir, reps),
         "spark.local.dir": local_dirs(spark),
     }

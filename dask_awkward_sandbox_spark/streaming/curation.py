@@ -22,6 +22,8 @@ uses, so batch and stream can never drift.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,6 +74,7 @@ def stream_curation_scores(
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
+        .queryName(f"stream_curation_scores_{os.path.basename(os.path.normpath(checkpoint))}")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -18,6 +18,8 @@ sessions in the state store until the watermark passes their end.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -155,6 +157,7 @@ def run_stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
 
     q = (
         stream_df.writeStream.foreachBatch(write_batch)
+        .queryName(f"run_stream_to_parquet_{os.path.basename(os.path.normpath(checkpoint))}")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

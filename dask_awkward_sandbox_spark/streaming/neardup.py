@@ -35,6 +35,8 @@ never added to the store.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -124,9 +126,7 @@ def stream_neardup_dedup(
             bkts = st.select(
                 "doc", "sig", F.explode("bks").alias("bk")
             ).select("doc", "sig", "bk.band", "bk.key")
-            import os as _os
-
-            if _os.path.isdir(store_path):
+            if os.path.isdir(store_path):
                 # explicit schema (r7 ADVICE): an early batch that
                 # keeps no bucketed docs writes a store dir holding
                 # only _SUCCESS, and schema INFERENCE over it throws
@@ -231,6 +231,7 @@ def stream_neardup_dedup(
 
     q = (
         stream.writeStream.foreachBatch(process)
+        .queryName(f"stream_neardup_dedup_{os.path.basename(os.path.normpath(checkpoint))}")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

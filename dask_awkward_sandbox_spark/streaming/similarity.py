@@ -20,6 +20,8 @@ production pattern is periodic batch re-trains that rewrite the index
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,6 +68,7 @@ def stream_ivf_append(
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
+        .queryName(f"stream_ivf_append_{os.path.basename(os.path.normpath(checkpoint))}")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

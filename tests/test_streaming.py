@@ -750,46 +750,63 @@ def test_stream_curation_scores_idempotent_replay(spark, tmp_path):
     )
 
 
-def test_stream_state_instances_fit_task_slots(spark):
-    """Each state-store instance commits at a fixed cost per
-    micro-batch, so the streaming slots never run more instances than
-    the session has task slots (and at most 16)."""
+def _stream_progress(spark, run) -> list:
+    """Progress events of the streams that ``run()`` starts, after
+    every one of them has reported its termination."""
+    import threading
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from dask_awkward_sandbox_spark.plans.events import (
-        STREAM_STATE_PARTITIONS,
-        q_stream_sessionize,
-    )
-
-    progress, ended = [], []
+    lock = threading.Lock()
+    started, progress, ended = set(), [], set()
 
     class _Listener(StreamingQueryListener):
         def onQueryStarted(self, event):
-            pass
+            with lock:
+                started.add(event.runId)
 
         def onQueryProgress(self, event):
-            progress.append(event.progress)
+            with lock:
+                progress.append(event.progress)
 
         def onQueryIdle(self, event):
             pass
 
         def onQueryTerminated(self, event):
-            ended.append(event.id)
+            with lock:
+                ended.add(event.runId)
+
+    def all_ended() -> bool:
+        with lock:
+            return bool(started) and started <= ended
 
     listener = _Listener()
     spark.streams.addListener(listener)
     try:
-        q_stream_sessionize(spark, SF).count()
+        run()
         # listener delivery is asynchronous: wait for the termination
-        # event, which the bus posts after the query's last progress
+        # events, which the bus posts after each query's last progress
         deadline = time.monotonic() + 60
-        while not ended and time.monotonic() < deadline:
+        while not all_ended() and time.monotonic() < deadline:
             time.sleep(0.1)
     finally:
         spark.streams.removeListener(listener)
-    assert ended, "no termination event within 60 s"
+    assert all_ended(), "no termination event within 60 s"
+    with lock:
+        return [p for p in progress if p.runId in started]
+
+
+def test_stream_state_instances_fit_task_slots(spark):
+    """Each state-store instance commits at a fixed cost per
+    micro-batch, so the streaming slots never run more instances than
+    the session has task slots (and at most 16)."""
+    from dask_awkward_sandbox_spark.plans.events import (
+        STREAM_STATE_PARTITIONS,
+        q_stream_sessionize,
+    )
+
+    progress = _stream_progress(spark, lambda: q_stream_sessionize(spark, SF).count())
     slots = spark.sparkContext.defaultParallelism
     ops = [
         op
@@ -801,3 +818,18 @@ def test_stream_state_instances_fit_task_slots(spark):
     for op in ops:
         assert op.numStateStoreInstances <= slots
         assert op.numShufflePartitions == min(STREAM_STATE_PARTITIONS, slots)
+
+
+def test_stream_dedup_streams_are_named(spark):
+    """Every stream of q_stream_dedup carries a name, so a per-stream
+    profile can tell the near-dup leg's batches from the curation
+    leg's without relying on arrival order."""
+    from dask_awkward_sandbox_spark.plans.events import q_stream_dedup
+
+    progress = _stream_progress(spark, lambda: q_stream_dedup(spark, SF).count())
+    names = [p.name for p in progress]
+    assert names and all(names), names
+    neardup = {n for n in names if n.startswith("stream_neardup_dedup_")}
+    curation = {n for n in names if n.startswith("stream_curation_scores_")}
+    assert neardup and curation
+    assert neardup.isdisjoint(curation)
