@@ -227,7 +227,9 @@ def partitions(df: DataFrame, start: int, stop: int | None = None) -> DataFrame:
     if files is not None:
         sel = files[lo:hi]
         if not sel:
-            return df.sparkSession.createDataFrame([], df.schema)
+            from dask_awkward_sandbox_spark.io.io import from_lists
+
+            return from_lists(df.sparkSession, [], df.schema)
         # basePath = the dataset root (common dir of ALL files, not
         # just the slice): without it a partitionBy-layout read would
         # silently null every partition-column value

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions import text_analysis as ta
+from dask_awkward_sandbox_spark.io.io import from_lists
 
 UNK = "<unk>"
 
@@ -129,9 +130,7 @@ def lm_train(
     vocab_rows = [r for r in rows if r["_t"]]
     total = next(r["c"] for r in rows if not r["_t"]) or 0
     in_vocab = sum(r["c"] for r in vocab_rows)
-    vocab = spark.createDataFrame(
-        [(r["w"],) for r in vocab_rows], "w string"
-    )
+    vocab = from_lists(spark, [(r["w"],) for r in vocab_rows], "w string")
     # merge (don't append) the OOV mass: a corpus containing the
     # LITERAL token '<unk>' in-vocabulary would otherwise produce two
     # '<unk>' unigram rows, fanning out the scoring join and
@@ -139,9 +138,7 @@ def lm_train(
     # oracle's coalesce+group by) collapse them into one row
     uni_counts = {r["w"]: r["c"] for r in vocab_rows}
     uni_counts[UNK] = uni_counts.get(UNK, 0) + (total - in_vocab)
-    uni = spark.createDataFrame(
-        sorted(uni_counts.items()), "w string, c long"
-    )
+    uni = from_lists(spark, sorted(uni_counts.items()), "w string, c long")
     pairs = docs.select(F.explode(_pair_array(ts)).alias("p")).select(
         F.col("p.pw").alias("_rpw"), F.col("p.cw").alias("_rcw")
     )

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dask_awkward_sandbox_spark.io.io import from_lists
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -63,7 +65,7 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
                  30 if kind == "video" else None),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_image(payload: bytes) -> "object":
@@ -640,7 +642,7 @@ def synthetic_jpeg_media(
             (i, bytearray(jpeg_encode(px, quality=50)),
              ("image", w, h, None, None))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def resize_jpeg(
@@ -695,7 +697,7 @@ def synthetic_png_media(spark, n: int = 32, width: int = 20, height: int = 14) -
         rows.append(
             (i, bytearray(_encode_png_py(px)), ("image", width, height, None, None))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -826,7 +828,7 @@ def synthetic_wav_media(spark, n: int = 48, sample_rate: int = 8000) -> DataFram
             (i, bytearray(_encode_wav_py(sample_rate, tone)),
              ("audio", None, None, sample_rate, None))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -977,7 +979,7 @@ def synthetic_video_media(
             (i, bytearray(_encode_video_py(fr)),
              ("video", width, height, None, frames))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def extract_frames(

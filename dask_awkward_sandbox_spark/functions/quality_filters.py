@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io.io import from_lists
 from ..operators.structure import let
 from . import text_analysis as ta
 
@@ -536,7 +537,8 @@ def plan_mixture(
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = from_lists(
+        spark,
         [(d, float(w)) for d, w in sorted(weights.items())],
         f"{domain_col} string, weight double",
     )

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions.text_analysis import MOD
+from dask_awkward_sandbox_spark.io.io import from_lists
 
 
 def _round_half_away(a, digits: int):
@@ -186,8 +187,7 @@ def brute_force_topk(
         .collect()
     )
     if not q_rows:
-        empty = "q_id long, nb_id long, sim double"
-        return spark.createDataFrame([], empty)
+        return from_lists(spark, [], "q_id long, nb_id long, sim double")
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([r[1] for r in q_rows], dtype=np.float64)
     q_norms = np.sqrt((Q * Q).sum(axis=1))

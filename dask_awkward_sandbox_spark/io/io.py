@@ -2,8 +2,9 @@
 
 Parity: /root/reference/src/dask_awkward/lib/io/io.py (from_lists,
 from_map, to_dataframe, from_awkward/to_dask_bag analogues). The
-Spark-native equivalents: createDataFrame for materialized python
-data, flattening selects for to_dataframe.
+Spark-native equivalents: an Arrow table handed to the JVM for
+materialized python data (``from_lists``, the package's one
+``createDataFrame`` call), flattening selects for to_dataframe.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 
 def from_lists(
@@ -25,9 +26,34 @@ def from_lists(
 
     Parity: io.py:from_lists. Explicit schema (like the reference's
     behavior-typed from_lists) — inference over nested python data is
-    both slow and lossy.
+    both slow and lossy. ``schema`` is a DDL string or a StructType;
+    each row is a tuple in field order (structs nested as tuples too)
+    or a dict keyed by field name.
+
+    The rows become one ``pyarrow.Table`` typed by the schema's Arrow
+    form, and the JVM converts it: the plan leaf is a
+    ``LocalTableScan`` (``LocalTableScan <empty>`` for no rows), or
+    ``Scan ExistingRDD arrow[...]`` once the table outgrows Spark's
+    local-relation threshold. No Python worker starts at any size.
+    Handing ``createDataFrame`` the rows themselves would ship them as
+    a pickled Python RDD instead, whose worker environment differs
+    from the SQL UDFs', so Spark forks a second PySpark daemon and
+    keeps its worker pool for the rest of the session. The Spark
+    schema is ``schema`` exactly, nullability included; a null in a
+    non-nullable top-level field raises ValueError. Naive datetimes
+    are read as UTC.
     """
-    df = spark.createDataFrame(rows, schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    aschema = to_arrow_schema(schema)
+    table = pa.Table.from_struct_array(pa.array(list(rows), type=pa.struct(aschema)))
+    for field, col in zip(aschema, table.columns):
+        if not field.nullable and col.null_count:
+            raise ValueError(f"field {field.name}: null in a non-nullable field")
+    df = spark.createDataFrame(table, schema)
     if num_partitions:
         df = df.repartition(num_partitions)
     return df

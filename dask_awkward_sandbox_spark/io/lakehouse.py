@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.io.io import from_lists
 from dask_awkward_sandbox_spark.session import scoped_conf
 
 BUCKET_COL = "_mbucket"
@@ -453,7 +454,7 @@ def read_snapshot_table(
     if not by_dir:
         # empty table (created from an empty frame / empty first
         # batch): the manifest carries the schema so reads still work
-        return spark.createDataFrame([], schema).drop(BUCKET_COL)
+        return from_lists(spark, [], schema).drop(BUCKET_COL)
     parts = []
     for vdir, buckets in sorted(by_dir.items()):
         part = spark.read.parquet(_os.path.join(path, vdir)).filter(

@@ -45,6 +45,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from dask_awkward_sandbox_spark.functions.multimodal import DecodeUnavailable
+from dask_awkward_sandbox_spark.io.io import from_lists
 
 
 class RootBackend(Protocol):
@@ -414,9 +415,9 @@ def from_root(
     # round-robin repartition → exactly one (file, start, stop) task
     # per partition; the slice descriptors are the only rows that
     # shuffle, never event data
-    tdf = spark.createDataFrame(
-        tasks, "path string, start long, stop long"
-    ).repartition(len(tasks))
+    tdf = from_lists(spark, tasks, "path string, start long, stop long").repartition(
+        len(tasks)
+    )
 
     br = branches  # bind locally: the closure ships (backend, tree, br) only
 
@@ -454,7 +455,7 @@ def necessary_branches(spark: SparkSession, schema, downstream) -> list[str]:
 
     d = tempfile.mkdtemp(prefix="dwax_root_probe_")
     path = _os.path.join(d, "probe.parquet")
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
+    from_lists(spark, [], schema).write.mode("overwrite").parquet(path)
     out = downstream(spark.read.parquet(path))
     tops: set[str] = set()
     for loc, leaves in report_necessary_columns(out).items():

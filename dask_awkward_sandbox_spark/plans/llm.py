@@ -20,6 +20,7 @@ from dask_awkward_sandbox_spark.functions import (
     similarity,
     text_analysis as ta,
 )
+from dask_awkward_sandbox_spark.io.io import from_lists
 from dask_awkward_sandbox_spark.plans.common import (
     backdate_files,
     parquet_row_count,
@@ -1646,4 +1647,4 @@ def q_kmeans(spark, sf_dir):
         for i, c in enumerate(cents)
         for d, v in enumerate(c)
     ]
-    return spark.createDataFrame(rows, "list_id long, d int, val double")
+    return from_lists(spark, rows, "list_id long, d int, val double")

@@ -102,7 +102,11 @@ def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
         # per task before the UDF ran. The daemon in _pydaemon re-reads
         # an archive only when its mtime or size changed: a warm 4-task
         # identity mapInArrow job fell from 0.42-0.58 s to 0.20-0.28 s
-        # on a 4-CPU box.
+        # on a 4-CPU box. Spark keeps one daemon per worker environment,
+        # and a pickled-RDD createDataFrame carries a different one from
+        # the SQL UDFs', so the package builds driver-side rows only
+        # through io.from_lists (Arrow, converted on the JVM) and a
+        # session forks this daemon once.
         .config("spark.python.daemon.module", "dask_awkward_sandbox_spark._pydaemon")
         # PySpark wraps every F.*/Column/DataFrame call to record its
         # Python call site. With this on (the default) each wrapped call
