@@ -2,8 +2,7 @@
 
 The last multimodal gate (reference: tests/test-image fixtures ride
 PIL/libjpeg): this module implements the PUBLIC baseline-sequential
-JPEG spec the way io/lz4block.py and io/zstdframe.py implement their
-formats — from the published document, no external codec.
+JPEG spec from the published document, with no external codec.
 
 Encoder (:func:`jpeg_encode`): grayscale or RGB input; JFIF YCbCr
 color transform; optional 4:2:0 chroma subsampling; Annex K quant

@@ -15,9 +15,11 @@ pluggable backend:
 - ``UprootBackend`` — the production path; uproot is NOT in this
   container, so it raises ``DecodeUnavailable`` with a clear message
   (same gate as functions/multimodal.py's PIL/ffmpeg decode).
-- ``RawRootBackend`` (r8) — REAL byte decode for flat-branch files:
-  TFile header + TKey chain + uncompressed/zlib baskets per the
-  public format (io/rootfile.py); jagged + LZ4/ZSTD stay gated.
+- ``RawRootBackend`` (r8) — REAL byte decode per the public format
+  (io/rootfile.py): TFile header + TKey chain; flat, leaf-counter
+  jagged, fixed-size, simple-container and basic user-class
+  branches; raw or ZL/L4/ZS/XZ-compressed baskets. Other streamer
+  shapes stay gated.
 - ``SyntheticNanoBackend`` — a deterministic nanoAOD-shaped fake
   (content is a pure function of (path, entry index)) with the same
   contract, so the planning/pruning/Arrow plumbing runs end-to-end
@@ -453,14 +455,16 @@ def necessary_branches(spark: SparkSession, schema, downstream) -> list[str]:
 
     from dask_awkward_sandbox_spark.inspect import report_necessary_columns
 
-    d = tempfile.mkdtemp(prefix="dwax_root_probe_")
-    path = _os.path.join(d, "probe.parquet")
-    from_lists(spark, [], schema).write.mode("overwrite").parquet(path)
-    out = downstream(spark.read.parquet(path))
     tops: set[str] = set()
-    for loc, leaves in report_necessary_columns(out).items():
-        if _os.path.normpath(path) in _os.path.normpath(loc.replace("file:", "")):
-            tops |= {leaf.split(".")[0] for leaf in leaves}
+    with tempfile.TemporaryDirectory(prefix="dwax_root_probe_") as d:
+        path = _os.path.join(d, "probe.parquet")
+        from_lists(spark, [], schema).write.mode("overwrite").parquet(path)
+        out = downstream(spark.read.parquet(path))
+        for loc, leaves in report_necessary_columns(out).items():
+            if _os.path.normpath(path) in _os.path.normpath(
+                loc.replace("file:", "")
+            ):
+                tops |= {leaf.split(".")[0] for leaf in leaves}
     return [f.name for f in schema.fields if f.name in tops]
 
 

@@ -13,17 +13,15 @@ describe:
   freed-slot gap records (negative fNbytes),
 - TBasket payloads for flat (one value per entry) branches: raw
   big-endian arrays, either uncompressed (fObjlen == fNbytes-fKeylen)
-  or compressed blocks with the 9-byte header — zlib (``ZL``), r10
-  LZ4 (``L4``: canonical XXH64 + LZ4 block, ROOT's default
-  compression since 6.14; io/lz4block.py implements both public
-  formats pure-Python), and r11 ZSTD (``ZS``: a standard RFC 8878
-  frame, decoded by io/zstdframe.py's pure-Python decoder; the
-  writer encodes via pyarrow's bundled reference libzstd, so every
-  round-trip is a cross-implementation check), and r11 LZMA
-  (``XZ``: ROOT's kLZMA envelope wraps a standard ``.xz`` container
-  stream — decoded/encoded by the stdlib ``lzma`` module, which is
-  liblzma itself, so this too is a reference-implementation
-  round-trip),
+  or compressed blocks with the 9-byte header — zlib (``ZL``), LZ4
+  (``L4``: canonical XXH64 + LZ4 block, ROOT's default compression
+  since 6.14), ZSTD (``ZS``: one standard RFC 8878 frame) and LZMA
+  (``XZ``: ROOT's kLZMA envelope around a standard ``.xz`` stream).
+  All four decode and encode through the reference C libraries the
+  process already loads: zlib and liblzma via the stdlib, liblz4
+  (``lz4_raw``) and libzstd via pyarrow's bundled codecs. Only the
+  XXH64 that ROOT stores ahead of each LZ4 block is computed here,
+  since pyarrow does not expose it,
 - the public TTree leaflist type letters (``B b S s I i L l F D O``)
   for element decode.
 
@@ -74,12 +72,14 @@ embedded layout.
 
 from __future__ import annotations
 
+import lzma
 import os
 import struct
 import zlib
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 from dask_awkward_sandbox_spark.functions.multimodal import DecodeUnavailable
 
@@ -550,70 +550,194 @@ def _r_tree_payload(b: bytes) -> tuple[str, int, dict[str, str]]:
     return tree, int(entries), out
 
 
-def _decompress(payload: bytes, objlen: int) -> bytes:
-    """Decode ROOT compressed-block framing: each block is a 9-byte
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, inp: int) -> int:
+    acc = (acc + inp * _P2) & _M64
+    return (_rotl(acc, 31) * _P1) & _M64
+
+
+def xxh64(data: bytes, seed: int = 0) -> int:
+    """XXH64 of ``data`` (per the public xxHash spec) — the checksum
+    ROOT stores ahead of each LZ4 block, in canonical big-endian form."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (seed + _P1 + _P2) & _M64
+        v2 = (seed + _P2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _P1) & _M64
+        while i + 32 <= n:
+            (a, b, c, d) = struct.unpack_from("<QQQQ", data, i)
+            v1, v2, v3, v4 = (
+                _xxh_round(v1, a),
+                _xxh_round(v2, b),
+                _xxh_round(v3, c),
+                _xxh_round(v4, d),
+            )
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _xxh_round(0, v)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _xxh_round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _P2) & _M64
+    h ^= h >> 29
+    h = (h * _P3) & _M64
+    h ^= h >> 32
+    return h
+
+
+_LZ4 = pa.Codec("lz4_raw")
+_ZSTD = pa.Codec("zstd")
+_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
+
+
+def _compress_block(raw: bytes, compress: bool | str) -> bytes:
+    """One basket payload in ROOT's compressed-block framing: a 9-byte
     header (2-byte algo tag, 1 method byte, 3-byte LE compressed size,
-    3-byte LE uncompressed size) + the stream. zlib (``ZL``) and LZ4
-    (``L4`` — ROOT's default since 6.14; 8-byte canonical XXH64 of the
-    compressed block, verified, then the LZ4 block; r10), ZSTD
-    (``ZS`` — RFC 8878 frame via io/zstdframe.py; r11) and LZMA
-    (``XZ`` — a standard ``.xz`` container stream via the stdlib
-    ``lzma`` module; r11) all decode."""
-    from dask_awkward_sandbox_spark.io.lz4block import (
-        lz4_block_decompress,
-        xxh64,
+    3-byte LE uncompressed size) + the stream. ``True``/``"zlib"``
+    writes ``ZL``, ``"lz4"`` ``L4`` (canonical XXH64 of the LZ4 block,
+    then the block; the size counts both), ``"zstd"`` ``ZS`` and
+    ``"lzma"`` ``XZ`` (a standard ``.xz`` stream).
+
+    Real ROOT's rule: store RAW when compression does not shrink.
+    This also keeps the reader's size test sound — a framed payload
+    that coincidentally matched the raw length (9 + len(stream) ==
+    len(raw) happens on mildly compressible data; a 64-double witness
+    exists) would otherwise be misread as uncompressed and decoded as
+    garbage."""
+    if not compress:
+        return raw
+    if compress == "lz4":
+        block = _LZ4.compress(raw, asbytes=True)
+        tag, method, stream = b"L4", 1, xxh64(block).to_bytes(8, "big") + block
+    elif compress == "zstd":
+        tag, method, stream = b"ZS", 1, _ZSTD.compress(raw, asbytes=True)
+    elif compress == "lzma":
+        tag, method = b"XZ", 1
+        stream = lzma.compress(raw, format=lzma.FORMAT_XZ, preset=6)
+    else:
+        tag, method, stream = b"ZL", 8, zlib.compress(raw, 6)
+    if 9 + len(stream) >= len(raw):
+        return raw
+    return (
+        tag
+        + bytes([method])
+        + len(stream).to_bytes(3, "little")
+        + len(raw).to_bytes(3, "little")
+        + stream
     )
 
+
+def _native_decode(codec: pa.Codec, tag: str, block: bytes, size: int) -> bytes:
+    try:
+        return codec.decompress(block, decompressed_size=size, asbytes=True)
+    except OSError as exc:  # Arrow's error for corrupt or mis-sized data
+        raise ValueError(f"{tag} block: corrupt {codec.name} data ({exc})") from None
+
+
+def _decode_block(tag: bytes, block: bytes, u_size: int) -> bytes:
+    """Decode one compressed block (``block`` excludes the 9-byte
+    header) to exactly the header's ``u_size`` bytes. A corrupt or
+    mistagged stream, a failed checksum and a size that disagrees with
+    the header all raise a directed ``ValueError`` — never garbage."""
+    name = tag.decode("latin-1")
+    if tag == b"ZL":
+        try:
+            piece = zlib.decompress(block)
+        except zlib.error as exc:
+            raise ValueError(f"ZL block: invalid zlib stream ({exc})") from None
+    elif tag == b"L4":
+        # ROOT's kLZ4 frame: the canonical (big-endian) XXH64 of the
+        # LZ4 block precedes it
+        if len(block) < 8:
+            raise ValueError("L4 block: size smaller than its checksum")
+        want, lz4 = int.from_bytes(block[:8], "big"), block[8:]
+        if xxh64(lz4) != want:
+            raise ValueError(
+                "L4 block: XXH64 checksum mismatch (corrupt basket)"
+            )
+        piece = _native_decode(_LZ4, name, lz4, u_size)
+        # lz4_raw pads a short decode out to the capacity it is given,
+        # so a block that also fits one byte less is short of its header
+        if u_size:
+            try:
+                _LZ4.decompress(lz4, decompressed_size=u_size - 1)
+            except OSError:
+                pass
+            else:
+                raise ValueError(
+                    f"L4 block: decodes to fewer than its header's {u_size} bytes"
+                )
+    elif tag == b"ZS":
+        # ROOT's kZSTD envelope wraps one standard zstd frame. libzstd
+        # verifies the frame's content checksum when it carries one,
+        # and Arrow refuses a frame that decodes to any other size
+        # than the capacity given
+        if block[:4] != _ZSTD_MAGIC:
+            raise ValueError(f"ZS block: bad zstd frame magic {block[:4]!r}")
+        piece = _native_decode(_ZSTD, name, block, u_size)
+    elif tag == b"XZ":
+        # non-xz bytes fail the stream magic / CRC checks
+        try:
+            piece = lzma.decompress(block)
+        except lzma.LZMAError as exc:
+            raise ValueError(f"XZ block: invalid xz stream ({exc})") from None
+    else:
+        raise ValueError(f"unknown ROOT compression tag {tag!r}")
+    if len(piece) != u_size:
+        raise ValueError(
+            f"{name} block: decoded {len(piece)} bytes, header says {u_size}"
+        )
+    return piece
+
+
+def _decompress(payload: bytes, objlen: int) -> bytes:
+    """Decode a compressed basket: a run of blocks in ROOT's framing
+    (see :func:`_compress_block`) that together decode to the key's
+    ``objlen`` bytes."""
     out = bytearray()
     off = 0
     while len(out) < objlen:
         if off + 9 > len(payload):
             raise ValueError("compressed basket: truncated block header")
-        tag = payload[off : off + 2]
         c_size = int.from_bytes(payload[off + 3 : off + 6], "little")
         u_size = int.from_bytes(payload[off + 6 : off + 9], "little")
-        off += 9
-        if tag == b"ZL":
-            out += zlib.decompress(payload[off : off + c_size])
-        elif tag == b"L4":
-            # ROOT's kLZ4 frame: 8-byte canonical (big-endian) XXH64 of
-            # the compressed block precedes it; c_size counts both
-            if c_size < 8:
-                raise ValueError("L4 block: size smaller than its checksum")
-            want = int.from_bytes(payload[off : off + 8], "big")
-            block = payload[off + 8 : off + c_size]
-            if xxh64(block) != want:
-                raise ValueError(
-                    "L4 block: XXH64 checksum mismatch (corrupt basket)"
-                )
-            out += lz4_block_decompress(block, u_size)
-        elif tag == b"ZS":
-            # ROOT's kZSTD envelope wraps a standard zstd frame
-            # (RFC 8878); decoded by the pure-Python frame decoder
-            # (r11), content checksum verified when the frame has one
-            from dask_awkward_sandbox_spark.io.zstdframe import decompress
-
-            out += decompress(payload[off : off + c_size], u_size)
-        elif tag == b"XZ":
-            # ROOT's kLZMA envelope wraps a standard .xz container
-            # stream; the stdlib lzma module IS liblzma, so this is a
-            # reference decode. Non-xz bytes fail the 6-byte stream
-            # magic / CRC checks loudly — never decode garbage.
-            import lzma
-
-            try:
-                piece = lzma.decompress(payload[off : off + c_size])
-            except lzma.LZMAError as exc:
-                raise ValueError(f"XZ block: invalid xz stream ({exc})")
-            if len(piece) != u_size:
-                raise ValueError(
-                    "XZ block: decompressed size mismatch "
-                    f"({len(piece)} != header {u_size})"
-                )
-            out += piece
-        else:
-            raise ValueError(f"unknown ROOT compression tag {tag!r}")
-        off += c_size
+        if off + 9 + c_size > len(payload):
+            raise ValueError("compressed basket: truncated block")
+        out += _decode_block(
+            payload[off : off + 2], payload[off + 9 : off + 9 + c_size], u_size
+        )
+        off += 9 + c_size
+    if len(out) != objlen:
+        raise ValueError(
+            f"compressed basket: blocks decode to {len(out)} bytes, "
+            f"key says {objlen}"
+        )
     return bytes(out)
 
 
@@ -1058,8 +1182,7 @@ class RootFlatFile:
         is a data-dependent sequential scan, so this is a per-entry
         loop — container branches are a per-file read path, and a
         production 100 TB read of deeply nested HEP data should ride
-        a native uproot wheel anyway (same honesty note as
-        io/lz4block.py)."""
+        a native uproot wheel anyway."""
         dt = np.dtype(LEAF_DTYPES[self.branches[name]])
         isz = dt.itemsize
         vals: list[np.ndarray] = []
@@ -1401,10 +1524,10 @@ def write_root_flat(
     """Write a minimal flat/counter-jagged ROOT file: TFile header +
     branch metadata + TBasket keys holding big-endian value arrays,
     ``basket_entries`` per basket, optionally compressed with the real
-    block framing: ``compress=True``/``"zlib"`` writes ``ZL`` blocks,
-    ``"lz4"`` (r10) writes ``L4`` blocks — 9-byte header + canonical
-    XXH64 of the compressed block + the LZ4 block, the frame real ROOT
-    has written by default since 6.14.
+    block framing (:func:`_compress_block`): ``compress=True``/
+    ``"zlib"`` writes ``ZL`` blocks, ``"lz4"`` ``L4`` (the frame real
+    ROOT has written by default since 6.14), ``"zstd"`` ``ZS`` and
+    ``"lzma"`` ``XZ``.
 
     ``embed_tree`` (r9) selects the branch-metadata layout:
     False — one standalone ``TBranch`` key per branch (title =
@@ -1593,77 +1716,6 @@ def write_root_flat(
                 f"{name}[{counter}]/{leaf}" if counter else f"{name}/{leaf}"
             )
 
-    def compress_payload(raw: bytes) -> bytes:
-        if compress == "zstd":
-            # kZSTD: the envelope wraps a standard RFC 8878 frame.
-            # Encoding rides pyarrow's bundled reference libzstd (the
-            # container has no zstd wheel), which also makes every
-            # round-trip test a REAL cross-implementation check:
-            # reference C encoder -> this repo's pure-Python frame
-            # decoder (io/zstdframe.py).
-            import pyarrow as pa
-
-            frame = pa.Codec("zstd").compress(raw, asbytes=True)
-            if 9 + len(frame) < len(raw):
-                return (
-                    b"ZS"
-                    + bytes([1])
-                    + len(frame).to_bytes(3, "little")
-                    + len(raw).to_bytes(3, "little")
-                    + frame
-                )
-            return raw
-        if compress == "lzma":
-            # kLZMA: the envelope wraps a standard .xz container
-            # stream (stdlib lzma == liblzma, the reference encoder).
-            import lzma
-
-            stream = lzma.compress(raw, format=lzma.FORMAT_XZ, preset=6)
-            if 9 + len(stream) < len(raw):
-                return (
-                    b"XZ"
-                    + bytes([1])
-                    + len(stream).to_bytes(3, "little")
-                    + len(raw).to_bytes(3, "little")
-                    + stream
-                )
-            return raw
-        if compress == "lz4":
-            from dask_awkward_sandbox_spark.io.lz4block import (
-                lz4_block_compress,
-                xxh64,
-            )
-
-            block = lz4_block_compress(raw)
-            framed = xxh64(block).to_bytes(8, "big") + block
-            # real ROOT's rule (both algos): store RAW when compression
-            # does not shrink — see the ZL note below
-            if 9 + len(framed) < len(raw):
-                return (
-                    b"L4"
-                    + bytes([1])
-                    + len(framed).to_bytes(3, "little")
-                    + len(raw).to_bytes(3, "little")
-                    + framed
-                )
-        elif compress:
-            c = zlib.compress(raw, 6)
-            # real ROOT's rule: store RAW when compression does not
-            # shrink. This also keeps the reader's size test sound —
-            # a framed payload that coincidentally matched the raw
-            # length (9 + len(c) == len(raw) happens on mildly
-            # compressible data; r8 review found a 64-double
-            # witness) would otherwise be misread as uncompressed
-            # and decoded as garbage.
-            if 9 + len(c) < len(raw):
-                return (
-                    b"ZL"
-                    + bytes([8])
-                    + len(c).to_bytes(3, "little")
-                    + len(raw).to_bytes(3, "little")
-                    + c
-                )
-        return raw
     if embed_tree:
         n_entries = next(iter(lens.values()), 0)
         payload = _w_tree_payload(tree, titles, n_entries)
@@ -1740,7 +1792,7 @@ def write_root_flat(
                     ">HIIII", 3, len(raw), 4, len(ents), flast
                 ) + bytes([0])
                 rec = key_record(
-                    "TBasket", name, tree, compress_payload(raw), len(raw),
+                    "TBasket", name, tree, _compress_block(raw, compress), len(raw),
                     seek, trailer=trailer,
                 )
                 records.append(rec)
@@ -1825,7 +1877,7 @@ def write_root_flat(
                     ">HIIII", 3, len(raw), 4, len(ents), flast
                 ) + bytes([0])
                 rec = key_record(
-                    "TBasket", name, tree, compress_payload(raw), len(raw),
+                    "TBasket", name, tree, _compress_block(raw, compress), len(raw),
                     seek, trailer=trailer,
                 )
                 records.append(rec)
@@ -1839,7 +1891,10 @@ def write_root_flat(
             if len(chunk) == 0:
                 continue
             raw = chunk.tobytes()
-            rec = key_record("TBasket", name, tree, compress_payload(raw), len(raw), seek)
+            rec = key_record(
+                "TBasket", name, tree, _compress_block(raw, compress),
+                len(raw), seek,
+            )
             records.append(rec)
             seek += len(rec)
 
@@ -1854,7 +1909,7 @@ def write_root_flat(
         payload = _w_streamerinfo_list(classes)
         rec = key_record(
             "TList", "StreamerInfo", "Doubly linked list",
-            compress_payload(payload), len(payload), seek,
+            _compress_block(payload, compress), len(payload), seek,
         )
         records.append(rec)
         seek += len(rec)

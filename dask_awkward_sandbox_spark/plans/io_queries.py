@@ -661,8 +661,8 @@ def q_small_sources(spark, sf_dir):
         F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias("root_dot"),
     )
     # root_lz4_* legs (r10): the SAME data written with L4 baskets
-    # (pure-Python LZ4 block + XXH64 framing — ROOT's default algo
-    # since 6.14, io/lz4block.py) must decode to the same closed-form
+    # (XXH64 + LZ4 block framing — ROOT's default algo since 6.14,
+    # decoded by the bundled liblz4) must decode to the same closed-form
     # values through its own file and reader pass; the nMuon (0..3
     # repeating) and event (arithmetic int64) baskets always shrink,
     # so the L4 decode path genuinely executes under the gate
@@ -689,10 +689,9 @@ def q_small_sources(spark, sf_dir):
         ),
     )
     root_stats = root_stats.crossJoin(F.broadcast(root_lz4_stats))
-    # root_zstd_* legs (r11): the SAME data with ZS baskets — written
-    # by the reference libzstd encoder (pyarrow), decoded by the
-    # pure-Python RFC 8878 frame decoder (io/zstdframe.py), so the
-    # gate hash covers a real cross-implementation zstd read
+    # root_zstd_* legs (r11): the SAME data with ZS baskets (one
+    # RFC 8878 frame per block, encoded and decoded by pyarrow's
+    # bundled libzstd), so the gate hash covers the ZS framing read
     rpathz = os.path.join(_scratch(sf_dir, "root_gate"), "events_zstd.root")
     write_root_flat(
         rpathz,

@@ -1,12 +1,12 @@
-"""Pure-Python ZSTD frame decoder (io/zstdframe.py, RFC 8878).
+"""ROOT ``ZS`` blocks: the zstd frame framing in io/rootfile.py over
+pyarrow's bundled libzstd.
 
-The oracle is the reference C encoder: pyarrow bundles libzstd, so
-every case here is a true cross-implementation check — reference
-encoder bytes in, this repo's decoder out, exact payload equality.
-Level sweep drives the mode space (raw/RLE/compressed blocks,
-1-stream and 4-stream Huffman, direct and FSE-compressed weight
-descriptions, predefined/FSE/RLE/repeat sequence modes, multi-block
-frames, repeat-offset history).
+A level sweep and randomized payloads drive the writer's framing and
+the reader's block decode end to end; hand-built RFC 8878 frames
+(content checksum, RLE block, 2-byte content-size field, reserved
+block type) stand in for other conformant encoders. Every failure
+surfaces as a directed ``ValueError``, never a library error or
+garbage.
 """
 
 from __future__ import annotations
@@ -15,13 +15,27 @@ import random
 
 import pytest
 
-from dask_awkward_sandbox_spark.io.zstdframe import ZstdError, decompress
+from dask_awkward_sandbox_spark.io.rootfile import (
+    _compress_block,
+    _decode_block,
+    _decompress,
+    xxh64,
+)
 
 pa = pytest.importorskip("pyarrow")
 
+_MAGIC = (0xFD2FB528).to_bytes(4, "little")
 
-def _codec(level):
-    return pa.Codec("zstd", compression_level=level)
+
+def _basket(payload: bytes, level: int) -> bytes:
+    """A ZS basket at a chosen level (the writer uses the default)."""
+    frame = pa.Codec("zstd", compression_level=level).compress(payload, asbytes=True)
+    return (
+        b"ZS\x01"
+        + len(frame).to_bytes(3, "little")
+        + len(payload).to_bytes(3, "little")
+        + frame
+    )
 
 
 def _payloads():
@@ -51,12 +65,14 @@ def _payloads():
 
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
 def test_reference_encoder_roundtrip(level):
-    codec = _codec(level)
     for payload in _payloads():
-        frame = codec.compress(payload, asbytes=True)
-        assert decompress(frame) == payload
-        # content-size contract: the frame header promises the size
-        assert decompress(frame, expected_size=len(payload)) == payload
+        assert _decompress(_basket(payload, level), len(payload)) == payload
+    # the writer's own framing (default level) decodes the same way
+    for payload in _payloads():
+        basket = _compress_block(payload, "zstd")
+        if len(basket) < len(payload):
+            assert basket[:2] == b"ZS"
+            assert _decompress(basket, len(payload)) == payload
 
 
 def test_random_structured_sweep():
@@ -64,7 +80,6 @@ def test_random_structured_sweep():
     the sequence machinery through repeat offsets and overlapping
     matches."""
     rng = random.Random(7)
-    codec = _codec(6)
     for _ in range(25):
         parts = []
         for _ in range(rng.randrange(1, 12)):
@@ -81,59 +96,54 @@ def test_random_structured_sweep():
             else:
                 parts.append(b"spark" * rng.randrange(1, 60))
         payload = b"".join(parts)
-        frame = codec.compress(payload, asbytes=True)
-        assert decompress(frame) == payload
+        assert _decompress(_basket(payload, 6), len(payload)) == payload
 
 
 def test_checksum_verified():
     """Hand-built frame with a Content_Checksum (XXH64 low 32 bits):
-    correct passes, corrupted raises the directed error."""
-    from dask_awkward_sandbox_spark.io.lz4block import xxh64
-
+    correct passes, corrupted raises a directed error."""
     payload = b"checksummed payload bytes"
     # single-segment frame, checksum flag set, 1-byte FCS, raw block
     desc = 0x20 | 0x04
-    header = (0xFD2FB528).to_bytes(4, "little") + bytes([desc, len(payload)])
+    header = _MAGIC + bytes([desc, len(payload)])
     block_header = (1 | (0 << 1) | (len(payload) << 3)).to_bytes(3, "little")
     check = (xxh64(payload) & 0xFFFFFFFF).to_bytes(4, "little")
     frame = header + block_header + payload + check
-    assert decompress(frame) == payload
+    assert _decode_block(b"ZS", frame, len(payload)) == payload
     bad = bytearray(frame)
     bad[-1] ^= 0xFF
-    with pytest.raises(ZstdError, match="checksum"):
-        decompress(bytes(bad))
+    with pytest.raises(ValueError, match="ZS block: corrupt zstd data.*checksum"):
+        _decode_block(b"ZS", bytes(bad), len(payload))
 
 
 def test_rle_block_and_frame_header_variants():
     """Hand-built RLE block; 2-byte FCS field carries size-256."""
     payload = bytes([0x41]) * 300
     desc = 0x20 | 0x40  # single segment + 2-byte FCS
-    header = (0xFD2FB528).to_bytes(4, "little") + bytes([desc]) + (300 - 256).to_bytes(2, "little")
+    header = _MAGIC + bytes([desc]) + (300 - 256).to_bytes(2, "little")
     block_header = (1 | (1 << 1) | (300 << 3)).to_bytes(3, "little")
     frame = header + block_header + b"\x41"
-    assert decompress(frame) == payload
+    assert _decode_block(b"ZS", frame, 300) == payload
 
 
 def test_directed_errors():
-    with pytest.raises(ZstdError, match="magic"):
-        decompress(b"\x00\x01\x02\x03\x04\x05")
-    codec = _codec(3)
-    frame = codec.compress(b"hello hello hello hello", asbytes=True)
-    with pytest.raises(ZstdError):
-        decompress(frame[: len(frame) - 3])  # truncated
-    with pytest.raises(ZstdError, match="expected"):
-        decompress(frame, expected_size=999)
+    with pytest.raises(ValueError, match="magic"):
+        _decode_block(b"ZS", b"\x00\x01\x02\x03\x04\x05", 6)
+    frame = _basket(b"hello hello hello hello", 3)[9:]
+    with pytest.raises(ValueError, match="ZS block"):
+        _decode_block(b"ZS", frame[: len(frame) - 3], 23)  # truncated
+    with pytest.raises(ValueError, match="ZS block"):
+        _decode_block(b"ZS", frame, 999)
     # reserved block type
     desc = 0x20
-    hdr = (0xFD2FB528).to_bytes(4, "little") + bytes([desc, 1])
+    hdr = _MAGIC + bytes([desc, 1])
     bad_block = (1 | (3 << 1) | (1 << 3)).to_bytes(3, "little") + b"x"
-    with pytest.raises(ZstdError, match="reserved"):
-        decompress(hdr + bad_block)
+    with pytest.raises(ValueError, match="ZS block: corrupt zstd data"):
+        _decode_block(b"ZS", hdr + bad_block, 1)
 
 
 def test_window_descriptor_frame():
     """Non-single-segment frames carry a window descriptor byte; the
     reference encoder emits them for large inputs — decode one."""
     payload = bytes(random.Random(3).randrange(256) for _ in range(300000))
-    frame = _codec(1).compress(payload, asbytes=True)
-    assert decompress(frame) == payload
+    assert _decompress(_basket(payload, 1), len(payload)) == payload
