@@ -20,9 +20,10 @@ Scale design (100 TB of documents):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dask_awkward_sandbox_spark.functions.similarity import connected_components
 from dask_awkward_sandbox_spark.functions.text_analysis import (
     MOD,
     tokens,
@@ -225,119 +226,24 @@ def minhash_dedup_clusters(
     THE scale path for minhash dedup. ``minhash_lsh_candidates``
     materializes every within-bucket pair — O(sum b_i^2), which
     explodes on real corpora where template/boilerplate text forms
-    thousand-doc buckets. Here a bucket of size n contributes n rows
-    (star edges to the bucket min), and min-label propagation runs
-    one groupBy-pair per iteration, converging in O(log diameter)
-    rounds. 100 TB: each iteration is two key-shuffles of |docs|*bands
-    rows; skewed buckets are irrelevant (partial min aggregation).
+    thousand-doc buckets. Here a bucket of size n contributes n star
+    edges (bucket min -> member, one window pass), which have the same
+    components as the bucket hypergraph, and
+    :func:`similarity.connected_components` collapses them: |docs| *
+    bands edges, contracted each round. Every doc id is a node, so
+    token-less docs (no bucket) come back as their own singleton
+    clusters — the same totality the SQL oracle computes. ``stats``
+    and ``max_iter`` pass through to the components loop.
     """
-    # eager localCheckpoint, not cache: the loop below rebinds labels
-    # each round, and a cache chain whose parent is unpersisted (the
-    # old shape here) silently recomputes the WHOLE upstream minhash
-    # pipeline every iteration — the same defect measured at 57s->16.8s
-    # in similarity.connected_components. Checkpointing materializes
-    # |docs|*bands rows once to executor-local storage and every round
-    # reads partitions, never lineage.
-    # buckets stays EAGER: every round re-reads it, and the first
-    # reader would otherwise pay the whole minhash pipeline inside
-    # its own job. The per-round frames below are LAZY checkpoints —
-    # the convergence count materializes each in the same job
-    # (lineage truncation is identical; eager=True is one extra job
-    # per round, and at small scale the loop's wall is job count).
-    buckets = minhash_band_buckets(df, text_col, id_col, num_perms, bands).localCheckpoint(
-        eager=True
+    buckets = minhash_band_buckets(df, text_col, id_col, num_perms, bands)
+    star = buckets.select(
+        F.min("doc").over(Window.partitionBy("band", "key")).alias("a"),
+        F.col("doc").alias("b"),
     )
-    # iteration 0 specialized: labels == doc, so bucket mins need no
-    # label join and the initial distinct-docs frame never materializes
-    first_bucket_min = buckets.groupBy("band", "key").agg(F.min("doc").alias("bmin"))
-    labels = (
-        buckets.join(first_bucket_min, ["band", "key"])
-        .groupBy("doc")
-        .agg(F.min("bmin").alias("label"))
-        .localCheckpoint(eager=False)
+    ids = df.select(F.col(id_col).alias("id"))
+    return connected_components(star, ids, max_iter=max_iter, stats=stats).select(
+        F.col("id").alias("doc"), "cluster"
     )
-    if stats is not None:
-        stats["iterations"], stats["changed"] = 0, []
-        stats["converged"] = True
-    for _it in range(max_iter):
-        bucket_min = (
-            buckets.join(labels, "doc")
-            .groupBy("band", "key")
-            .agg(F.min("label").alias("bmin"))
-        )
-        doc_min = (
-            buckets.join(bucket_min, ["band", "key"])
-            .groupBy("doc")
-            .agg(F.min("bmin").alias("cand"))
-        )
-        # carry the old label so convergence is a filter over the
-        # checkpointed frame — one action materializes AND checks
-        prop = labels.join(doc_min, "doc", "left").select(
-            F.col("doc"),
-            F.col("label").alias("old"),
-            F.least(F.col("label"), F.coalesce(F.col("cand"), F.col("label"))).alias(
-                "label"
-            ),
-        )
-        # pointer jumping (path doubling): label <- label(label).
-        # Bucket propagation alone drags a long convergence tail
-        # (measured at sf0.1: changed = 2439, 135, 9, 1, 0 — five
-        # rounds, the last three moving <=10 labels); shortcutting
-        # through the label's own label collapses chains a round
-        # early (3 rounds measured). The self-join is |docs| rows —
-        # cheap next to the |docs|*bands bucket joins — and every
-        # saved round saves two full shuffles at corpus scale.
-        # Labels stay component members (a min over component ids),
-        # so the fixpoint — and the oracle's transitive closure —
-        # is unchanged.
-        # two hops per round (r6, same rationale as
-        # similarity.connected_components): an extra hop is a cheap
-        # |docs|-row self-join; an extra ROUND is two full
-        # |docs|*bands shuffles plus a checkpoint+count barrier.
-        merged = prop
-        for _hop in range(2):
-            jump = merged.select(
-                F.col("doc").alias("pdoc"), F.col("label").alias("plabel")
-            )
-            merged = merged.join(
-                jump, merged["label"] == jump["pdoc"], "left"
-            ).select(
-                "doc",
-                "old",
-                F.least(F.col("label"), F.coalesce("plabel", "label")).alias("label"),
-            )
-        # eager checkpoint per round: O(1) lineage, and the next
-        # round's joins read materialized partitions (see the note on
-        # `buckets` above for why cache chains are wrong here)
-        merged = merged.localCheckpoint(eager=False)
-        changed = merged.filter(F.col("label") != F.col("old")).count()
-        labels = merged.select("doc", "label")
-        if stats is not None:
-            stats["iterations"] = _it + 1
-            stats["changed"].append(changed)
-        if changed == 0:
-            break
-    else:
-        if stats is not None:
-            stats["converged"] = False
-        import warnings
-
-        warnings.warn(
-            f"minhash_dedup_clusters: max_iter={max_iter} reached before "
-            "convergence; labels are a refinement of the true components. "
-            "Raise max_iter.",
-            stacklevel=2,
-        )
-    clustered = labels.select("doc", F.col("label").alias("cluster"))
-    # token-less docs carry no LSH signal (excluded from buckets);
-    # they are their own singleton clusters, so every input doc
-    # appears in the output — same totality the SQL oracle computes
-    singletons = (
-        df.select(F.col(id_col).alias("doc"))
-        .join(clustered, "doc", "left_anti")
-        .withColumn("cluster", F.col("doc"))
-    )
-    return clustered.unionByName(singletons)
 
 
 def simhash(df: DataFrame, text_col: str, bits: int = 56) -> DataFrame:

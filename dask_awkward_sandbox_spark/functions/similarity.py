@@ -630,25 +630,22 @@ def neardup_pairs_blocked(
 
 def connected_components(
     edges: DataFrame, ids: DataFrame, max_iter: int = 20,
-    stats: dict | None = None, jumps: int = 2,
-    init_from_edges: bool = False,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list: min-label
-    propagation with pointer jumping (the same loop shape as
-    dedup.minhash_dedup_clusters, generalized to explicit edges).
+    propagation with pointer jumping and edge contraction — the one
+    components loop in the package (dedup.minhash_dedup_clusters and
+    embedding_neardup_clusters both feed it star/pair edges).
 
     ``edges``: (a, b) id pairs; ``ids``: one column ``id`` listing
     EVERY node (isolated nodes become their own singleton component).
     Returns (id, cluster) where cluster = min id of the component.
 
-    ``init_from_edges=True`` CONTRACT (r10 advice): every edge
-    endpoint must appear in ``ids`` — the seed assigns label(v) =
-    min(v, min neighbor of v) straight from the edge list, so a
-    foreign endpoint would surface as a final cluster label that is
-    not a vertex. Both in-repo callers satisfy it by construction
-    (their edges derive from the same frame as ids); pass edge lists
-    from elsewhere through a semi-join against ``ids`` first, or use
-    the identity init, which never reads neighbor ids into labels.
+    CONTRACT: every edge endpoint must appear in ``ids``. Labels seed
+    as min(v, min neighbor of v) straight from the edge list, so a
+    foreign endpoint would surface as a cluster label that is not a
+    vertex; pass edges from elsewhere through a semi-join against
+    ``ids`` first.
 
     100 TB shape: each iteration is two groupBy-min shuffles of the
     CURRENT edge set plus |V|-row self-joins for the pointer jumps,
@@ -661,54 +658,44 @@ def connected_components(
     components irrelevant. Exits with a warning (and
     stats["converged"]=False) if max_iter is still insufficient.
 
-    Every round EAGERLY localCheckpoints its result (the GraphX
-    pattern): lineage stays O(1), and each iteration's joins read the
-    previous round's materialized partitions. The cache()-chain +
+    Every round localCheckpoints its result (the GraphX pattern):
+    lineage stays O(1), and each iteration's joins read the previous
+    round's materialized partitions. The cache()-chain +
     unpersist-parent form this replaced looks equivalent but is NOT —
     unpersisting the parent of a cached child invalidates the child's
     reuse, so every round silently recomputed the whole upstream edge
-    pipeline (measured 57s -> 16.8s on the sf0.1 embedding graph,
-    iterations 10-27s -> ~1s flat).
+    pipeline (measured 57s -> 16.8s on the sf0.1 embedding graph).
     """
-    # LAZY localCheckpoints throughout (r6 perf): lineage is truncated
-    # either way, but eager=True is a dedicated job per checkpoint —
-    # at small/medium scale the loop's wall is JOB COUNT, not data.
-    # Lazy checkpoints materialize inside the next action that reads
-    # them (the convergence count / the next round's propagation), so
-    # each round runs ~2 jobs instead of ~4. The anti-pattern warned
-    # about below is cache()-chains, not laziness: a lazy checkpoint
-    # still materializes exactly once and never recomputes upstream.
+    # LAZY checkpoints (r6 perf): eager=True is a dedicated job per
+    # checkpoint, and at small/medium scale the loop's wall is JOB
+    # COUNT, not data. A lazy checkpoint materializes once, inside the
+    # next action that reads it (the convergence count / the next
+    # round's propagation), so each round runs ~2 jobs instead of ~4.
     und = edges.selectExpr("a", "b").union(edges.selectExpr("b as a", "a as b"))
     und = und.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=False)
-    if init_from_edges:
-        # Seeded init (r9, the r8 verdict's item 4): label(v) starts at
-        # min(v, min neighbor of v) instead of v — one groupBy-min over
-        # the checkpointed edge set plus a |V| left join, ~40% of a
-        # full round (no jumps, no contraction, no count barrier), and
-        # round 1's neighbor propagation then reaches TWO hops (the
-        # neighbor's label is already its own neighborhood min), so
-        # convergence lands one round earlier. Sound for min-label
-        # propagation: any init with label(v) <= v and label(v) in v's
-        # component preserves the invariant the fixpoint argument
-        # rests on (see the empty-edge-exit comment below); a direct
-        # verified neighbor is in v's component by construction.
-        # PRECONDITION (r10 advice): the seed is a raw neighbor id from
-        # `edges` — see the docstring's init_from_edges contract.
-        seed = und.groupBy("a").agg(F.min("b").alias("_nb")).withColumnRenamed(
-            "a", "id"
+    # Seeded init (r9): label(v) starts at min(v, min neighbor of v)
+    # instead of v — one groupBy-min over the checkpointed edge set
+    # plus a |V| left join, ~40% of a full round (no jumps, no
+    # contraction, no count barrier), and round 1's neighbor
+    # propagation then reaches TWO hops (the neighbor's label is
+    # already its own neighborhood min), so convergence lands one
+    # round earlier. Sound for min-label propagation: any init with
+    # label(v) <= v and label(v) in v's component preserves the
+    # invariant the fixpoint argument rests on (see the empty-edge-exit
+    # comment below); a direct neighbor is in v's component by
+    # construction. The seed is a raw neighbor id from `edges` — hence
+    # the docstring's endpoint contract.
+    seed = und.groupBy("a").agg(F.min("b").alias("_nb")).withColumnRenamed(
+        "a", "id"
+    )
+    labels = (
+        ids.join(seed, "id", "left")
+        .select(
+            "id",
+            F.least(F.col("id"), F.coalesce("_nb", "id")).alias("label"),
         )
-        labels = (
-            ids.join(seed, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("id"), F.coalesce("_nb", "id")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    else:
-        labels = ids.select(F.col("id"), F.col("id").alias("label")).localCheckpoint(
-            eager=False
-        )
+        .localCheckpoint(eager=False)
+    )
     if stats is not None:
         stats["iterations"], stats["changed"] = 0, []
         stats["converged"] = True
@@ -725,7 +712,7 @@ def connected_components(
             F.col("label").alias("old"),
             F.least(F.col("label"), F.coalesce("cand", "label")).alias("label"),
         )
-        # pointer jumping, ``jumps`` hops per round (r6): the sf10
+        # pointer jumping, two hops per round (r6): the sf10
         # probe's changed-label trace showed a long chain-collapse
         # tail ([19490, 3307, 891, 212, 68, 15, 2, 0] — 8 rounds,
         # the last five moving <1k labels each) where every extra
@@ -734,7 +721,7 @@ def connected_components(
         # |V|-row self-join. Two hops collapse pointer chains 4x per
         # round instead of 2x; measured sf10: 8 rounds -> 5.
         merged = prop
-        for _hop in range(max(1, jumps)):
+        for _hop in range(2):
             jump = merged.select(
                 F.col("id").alias("jid"), F.col("label").alias("jlabel")
             )
@@ -779,7 +766,7 @@ def connected_components(
         # pointer CHAIN — but NOT yet that every chain is collapsed:
         # a node contracted away in an early round whose
         # representative's label dropped later can still hold a stale
-        # label deeper than this round's `jumps` hops reached (a
+        # label deeper than this round's two hops reached (a
         # round-8 review simulation found a 27-node witness). So on
         # empty edges, run jump-ONLY collapse rounds (|V|-row
         # self-joins, no edge propagation — chains halve per hop, so
@@ -1005,9 +992,7 @@ def embedding_neardup_clusters(
         _mark("verify", _t)
         _t = _time.perf_counter()
     ids = df.select(F.col(id_col).alias("id"))
-    out = connected_components(
-        verified, ids, max_iter=max_iter, stats=stats, init_from_edges=True
-    )
+    out = connected_components(verified, ids, max_iter=max_iter, stats=stats)
     if profile is not None:
         out = out.localCheckpoint(eager=True)
         out.count()

@@ -616,41 +616,52 @@ _ZSTD = pa.Codec("zstd")
 _ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 
 
+# ROOT's kMAXZIPBUF: a block header's 3-byte size fields cap each
+# block at 0xFFFFFF uncompressed bytes, so bigger baskets split
+_MAX_BLOCK = 0xFFFFFF
+
+
 def _compress_block(raw: bytes, compress: bool | str) -> bytes:
-    """One basket payload in ROOT's compressed-block framing: a 9-byte
+    """One basket payload in ROOT's compressed-block framing: a run of
+    blocks of at most 0xFFFFFF uncompressed bytes, each a 9-byte
     header (2-byte algo tag, 1 method byte, 3-byte LE compressed size,
     3-byte LE uncompressed size) + the stream. ``True``/``"zlib"``
     writes ``ZL``, ``"lz4"`` ``L4`` (canonical XXH64 of the LZ4 block,
     then the block; the size counts both), ``"zstd"`` ``ZS`` and
     ``"lzma"`` ``XZ`` (a standard ``.xz`` stream).
 
-    Real ROOT's rule: store RAW when compression does not shrink.
-    This also keeps the reader's size test sound — a framed payload
-    that coincidentally matched the raw length (9 + len(stream) ==
-    len(raw) happens on mildly compressible data; a 64-double witness
-    exists) would otherwise be misread as uncompressed and decoded as
-    garbage."""
+    Real ROOT's rule: store RAW when compression does not shrink —
+    any block that fails to shrink stores the whole basket raw, as
+    TBasket does. This also keeps the reader's size test sound — a
+    framed payload that coincidentally matched the raw length (9 +
+    len(stream) == len(raw) happens on mildly compressible data; a
+    64-double witness exists) would otherwise be misread as
+    uncompressed and decoded as garbage."""
     if not compress:
         return raw
-    if compress == "lz4":
-        block = _LZ4.compress(raw, asbytes=True)
-        tag, method, stream = b"L4", 1, xxh64(block).to_bytes(8, "big") + block
-    elif compress == "zstd":
-        tag, method, stream = b"ZS", 1, _ZSTD.compress(raw, asbytes=True)
-    elif compress == "lzma":
-        tag, method = b"XZ", 1
-        stream = lzma.compress(raw, format=lzma.FORMAT_XZ, preset=6)
-    else:
-        tag, method, stream = b"ZL", 8, zlib.compress(raw, 6)
-    if 9 + len(stream) >= len(raw):
-        return raw
-    return (
-        tag
-        + bytes([method])
-        + len(stream).to_bytes(3, "little")
-        + len(raw).to_bytes(3, "little")
-        + stream
-    )
+    out = bytearray()
+    for off in range(0, len(raw), _MAX_BLOCK):
+        chunk = raw[off : off + _MAX_BLOCK]
+        if compress == "lz4":
+            block = _LZ4.compress(chunk, asbytes=True)
+            tag, method, stream = b"L4", 1, xxh64(block).to_bytes(8, "big") + block
+        elif compress == "zstd":
+            tag, method, stream = b"ZS", 1, _ZSTD.compress(chunk, asbytes=True)
+        elif compress == "lzma":
+            tag, method = b"XZ", 1
+            stream = lzma.compress(chunk, format=lzma.FORMAT_XZ, preset=6)
+        else:
+            tag, method, stream = b"ZL", 8, zlib.compress(chunk, 6)
+        if 9 + len(stream) >= len(chunk):
+            return raw
+        out += (
+            tag
+            + bytes([method])
+            + len(stream).to_bytes(3, "little")
+            + len(chunk).to_bytes(3, "little")
+            + stream
+        )
+    return bytes(out)
 
 
 def _native_decode(codec: pa.Codec, tag: str, block: bytes, size: int) -> bytes:

@@ -6,9 +6,13 @@ were never measured past sf10. This probe derives sf100 (~21 GB, 1000
 decorrelated copies of the driver's sf0.1) and records, at sf1 / sf10
 / sf100:
 
-- WALL and ITERATION COUNT and the per-round changed-label trace for
-  the two registered cluster collapses (same parameters as the gate
-  slots q_dedup_minhash_clusters / q_embedding_neardup). Components
+- WALL and ITERATION COUNT, the per-round changed-label and
+  contracted-edge traces and the jump-only collapse rounds for the two
+  registered cluster collapses (same parameters as the gate slots
+  q_dedup_minhash_clusters / q_embedding_neardup). Both run the one
+  loop in similarity.connected_components and report the same stats
+  keys; minhash ``iterations`` no longer counts a final zero-change
+  round (SCALE_SF100.json predates this and still does). Components
   are within-copy by construction (cross-copy shingles are disjoint,
   cross-copy cosines ~0), so component DIAMETER must not grow with
   corpus size and rounds should stay flat — that flatness is the
@@ -103,10 +107,14 @@ def main() -> None:
                 "wall": wall,
                 "iterations": stats.get("iterations"),
                 "changed_per_round": stats.get("changed"),
+                "edges_per_round": stats.get("edges_per_round"),
+                "post_collapse_rounds": stats.get("post_collapse_rounds"),
             }
             print(f"# {op_name} @ {sf_name}: {wall}s, "
                   f"iters={stats.get('iterations')}, "
-                  f"changed={stats.get('changed')}", file=sys.stderr)
+                  f"changed={stats.get('changed')}, "
+                  f"edges={stats.get('edges_per_round')}, "
+                  f"collapse={stats.get('post_collapse_rounds')}", file=sys.stderr)
         g10 = round(per_scale["sf10"]["wall"] / per_scale["sf1"]["wall"], 2)
         g100 = round(per_scale["sf100"]["wall"] / per_scale["sf10"]["wall"], 2)
         clusters[op_name] = {

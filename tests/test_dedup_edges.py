@@ -2,7 +2,9 @@
 documents (empty/whitespace text). Cluster dedup must emit them as
 singleton clusters (totality — every input doc gets a cluster) and
 simhash blocking must not pair them (a degenerate simhash of 0 would
-otherwise pair every empty doc with every other at hamming 0)."""
+otherwise pair every empty doc with every other at hamming 0). The
+minhash cluster path is also value-checked on the gate corpus against
+a driver-side union-find."""
 
 from __future__ import annotations
 
@@ -31,6 +33,54 @@ def test_clusters_include_tokenless_singletons(spark):
     assert got[0] == got[1] == 0, "exact dups share the min-id cluster"
     assert got[2] == 2 and got[3] == 3 and got[5] == 5, "token-less are singletons"
     assert got[4] == 4
+
+
+def _union_find_clusters(ids, groups):
+    """{id: min id of its component} over the "shares a group" graph."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for members in groups:
+        for m in members[1:]:
+            ra, rb = find(members[0]), find(m)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
+def test_minhash_clusters_match_union_find(spark, sf):
+    """Value check of the registered cluster path on the gate corpus
+    (sf0.001), outside the env-gated oracle sweep: clusters must equal
+    a driver-side union-find over the collected LSH buckets of ALL
+    bands. Roots are min ids by construction (the larger root always
+    links under the smaller), and token-less docs, which sit in no
+    bucket, stay singletons."""
+    from collections import defaultdict
+
+    from dask_awkward_sandbox_spark.functions import dedup
+    from dask_awkward_sandbox_spark.plans.llm import NUM_PERMS, _docs
+
+    docs = _docs(spark, sf)
+    got = {
+        r["doc"]: r["cluster"]
+        for r in dedup.minhash_dedup_clusters(
+            docs, "text", "doc_id", num_perms=NUM_PERMS, bands=4
+        ).collect()
+    }
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    buckets = defaultdict(list)
+    for r in dedup.minhash_band_buckets(docs, "text", "doc_id", NUM_PERMS, 4).collect():
+        buckets[(r["band"], r["key"])].append(r["doc"])
+    want = _union_find_clusters(ids, list(buckets.values()))
+    assert got == want, {v: (got.get(v), want[v]) for v in want if got.get(v) != want[v]}
+    # the corpus exercises cross-band merges: one band alone is not enough
+    band0 = _union_find_clusters(ids, [m for (b, _), m in buckets.items() if b == 0])
+    assert band0 != want
 
 
 def test_simhash_neardups_exclude_tokenless(spark):

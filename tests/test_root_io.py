@@ -477,6 +477,30 @@ def test_rawroot_compression_coincidence_stores_raw(tmp_path):
     np.testing.assert_array_equal(f.branch_array("x"), vals)
 
 
+@pytest.mark.parametrize("compress", [False, True, "lz4", "zstd", "lzma"])
+def test_rawroot_basket_over_16mib_roundtrip(tmp_path, compress):
+    """A block header's size fields are 3 bytes, so a basket of 16 MiB
+    or more must split into blocks of at most 0xFFFFFF uncompressed
+    bytes (ROOT's kMAXZIPBUF); one oversized block raised OverflowError
+    in the writer. 17 MiB of runs of equal doubles keeps every codec
+    cheap and the compressed file far under the raw size."""
+    import os
+
+    import numpy as np
+
+    from dask_awkward_sandbox_spark.io.rootfile import RootFlatFile, write_root_flat
+
+    n = 17 * 2**20 // 8
+    vals = (np.arange(n) // 4096).astype(np.float64)
+    path = str(tmp_path / "big.root")
+    write_root_flat(
+        path, "Events", {"x": ("D", vals)}, basket_entries=n, compress=compress
+    )
+    if compress:
+        assert os.path.getsize(path) < n * 8 // 10
+    np.testing.assert_array_equal(RootFlatFile(path).branch_array("x"), vals)
+
+
 def test_rawroot_all_empty_jagged_reads(spark, tmp_path):
     """A valid file where a jagged branch is empty in EVERY entry has
     zero value baskets; the decoder's empty fallback must hand pyarrow

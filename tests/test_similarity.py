@@ -473,8 +473,9 @@ def test_connected_components_random_graphs_match_union_find(spark):
     than the final round's pointer jumps, kept a non-min label while
     stats claimed converged. Random graphs vs driver-side union-find
     catch that whole failure family; seeds 34 and 51 REPRODUCE the
-    stale-label failure under the pre-fix exit (verified by
-    driver-side simulation of the loop semantics)."""
+    stale-label failure under the pre-fix exit with the identity init
+    the loop no longer has (verified by driver-side simulation of the
+    loop semantics) — the seeded-init witness is the tree test below."""
     import random
 
     from pyspark.sql import functions as F
@@ -516,21 +517,42 @@ def test_connected_components_random_graphs_match_union_find(spark):
 
         ids = spark.range(n).select(F.col("id"))
         edf = spark.createDataFrame(edges, "a long, b long")
-        # both init modes must agree with union-find: identity labels
-        # and the r9 seeded init (label = min neighbor), which must be
-        # a pure convergence accelerator, never a semantics change
-        for init in (False, True):
-            stats: dict = {}
-            got = {
-                r["id"]: r["cluster"]
-                for r in connected_components(
-                    edf, ids, stats=stats, init_from_edges=init
-                ).collect()
-            }
-            assert got == want, (seed, init, stats, {
-                v: (got[v], want[v]) for v in got if got[v] != want[v]
-            })
-            assert stats["converged"]
+        # the seeded init (label = min neighbor) must be a pure
+        # convergence accelerator, never a semantics change
+        stats: dict = {}
+        got = {
+            r["id"]: r["cluster"]
+            for r in connected_components(edf, ids, stats=stats).collect()
+        }
+        assert got == want, (seed, stats, {
+            v: (got[v], want[v]) for v in got if got[v] != want[v]
+        })
+        assert stats["converged"]
+
+
+def test_connected_components_collapse_tail_seeded_witness(spark):
+    """The empty-edge-set exit can leave a pointer chain deeper than
+    the last round's jumps; only the jump-only collapse tail resolves
+    it. Seeds 34 and 51 above witness that failure under an identity
+    init only, and the loop now always seeds labels from the edges.
+    This 13-node tree (found by driver-side simulation of the loop)
+    witnesses it under the seeded init: without the tail, node 8
+    keeps the stale label 1."""
+    from pyspark.sql import functions as F
+
+    from dask_awkward_sandbox_spark.functions.similarity import (
+        connected_components,
+    )
+
+    tree = [(0, 3), (1, 9), (2, 7), (3, 5), (4, 11), (5, 7), (6, 8),
+            (6, 12), (7, 9), (7, 11), (9, 10), (11, 12)]
+    ids = spark.range(13).select(F.col("id"))
+    edf = spark.createDataFrame(tree, "a long, b long")
+    stats: dict = {}
+    got = {r["id"]: r["cluster"]
+           for r in connected_components(edf, ids, stats=stats).collect()}
+    assert got == {v: 0 for v in range(13)}, (stats, got)
+    assert stats["converged"]
 
 
 def test_with_lsh_buckets_arrow_matches_hof(spark):
