@@ -22,7 +22,7 @@ batch, not per row; memory is bounded by
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from enum import IntEnum
 
 from pyspark.sql import DataFrame
@@ -289,19 +289,6 @@ def visualize(df: DataFrame, extended: bool = False) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "extended" if extended else "formatted"
     )
-
-
-def map_batches_pandas(
-    df: DataFrame, fn: Callable[[object], object], schema: str
-) -> DataFrame:
-    """Convenience: per-batch pandas function lifted to the iterator
-    protocol mapInPandas expects."""
-
-    def gen(it: Iterator):
-        for pdf in it:
-            yield fn(pdf)
-
-    return df.mapInPandas(gen, schema)
 
 
 def copy(df: DataFrame) -> DataFrame:

@@ -1,5 +1,4 @@
 from dask_awkward_sandbox_spark.functions import (
-    bpe,
     dedup,
     jpegcodec,
     lm,
@@ -12,7 +11,6 @@ from dask_awkward_sandbox_spark.functions import (
 )
 
 __all__ = [
-    "bpe",
     "dedup",
     "jpegcodec",
     "lm",

@@ -20,24 +20,10 @@ nearest-neighbor chroma upsampling; JFIF YCbCr->RGB. Output is
 always (H, W, 3) uint8 RGB (grayscale replicated), matching the
 PNG/BMP decoders.
 
-PROGRESSIVE (SOF2) streams decode too (late r11): the full T.81
-Annex G scan protocol — spectral selection, successive approximation
-for DC (arithmetic-shift point transform, one raw refinement bit per
-block) and AC (the G.2.2 correction-bit protocol), cross-block EOBn
-runs, non-interleaved single-component scan geometry, per-scan
-restart resets — with coefficients accumulated across scans and one
-batched IDCT at EOI. :func:`jpeg_encode_progressive` writes
-spec-legal progressive streams (libjpeg-style default scan script or
-a caller script) over the SAME quantized coefficients as the
-baseline encoder, so tests pin progressive decode PIXEL-IDENTICAL to
-the baseline stream; progressive scans ship an EOBn-capable custom
-AC Huffman table in DHT (the Annex K typical tables lack EOBn
-symbols — real progressive encoders ship custom tables as well).
-
-What stays gated with directed errors: lossless/hierarchical scans,
-arithmetic entropy coding (SOF9-11, 13-15), and 12-bit sample
-precision — each raises DecodeUnavailable naming the feature, never
-decodes garbage.
+What stays gated with directed errors: progressive (SOF2) and
+lossless/hierarchical scans, arithmetic entropy coding (SOF9-11,
+13-15), and 12-bit sample precision — each raises DecodeUnavailable
+naming the feature, never decodes garbage.
 
 Exactness contract the gate legs ride on: a grayscale image whose
 8x8 blocks are CONSTANT with (value-128) even round-trips EXACTLY at
@@ -373,7 +359,7 @@ def _encode_component(
 
 
 def _prepare_components(pixels, quality: int, subsample: bool):
-    """Shared encoder front half: color transform, padding, FDCT,
+    """Encoder front half: color transform, padding, FDCT,
     quantization, zigzag. Returns (gray, samps, qtabs, comp_zz,
     comp_dims, h, w)."""
     px = np.asarray(pixels)
@@ -447,8 +433,8 @@ def _prepare_components(pixels, quality: int, subsample: bool):
     return gray, samps, qtabs, comp_zz, comp_dims, h, w
 
 
-def _marker_head(gray, samps, qtabs, h, w, sof_marker, restart_interval):
-    """SOI/APP0/DQT/SOFn/DHT[/DRI] prefix shared by both encoders."""
+def _marker_head(gray, samps, qtabs, h, w, restart_interval):
+    """SOI/APP0/DQT/SOF0/DHT[/DRI] prefix."""
     qy = qtabs[0]
     qc = qtabs[1] if len(qtabs) > 1 else None
     out = bytearray(b"\xff\xd8")  # SOI
@@ -457,7 +443,7 @@ def _marker_head(gray, samps, qtabs, h, w, sof_marker, restart_interval):
         out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid])
         out += bytes(int(v) for v in q[ZIGZAG])
     ncomp = 1 if gray else 3
-    out += sof_marker + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
+    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
     for ci in range(ncomp):
         sh, sv = samps[ci]
         out += bytes([ci + 1, (sh << 4) | sv, 0 if ci == 0 else 1])
@@ -522,7 +508,7 @@ def jpeg_encode(
             mcu_count += 1
     writer.flush()
 
-    out = _marker_head(gray, samps, qtabs, h, w, b"\xff\xc0", restart_interval)
+    out = _marker_head(gray, samps, qtabs, h, w, restart_interval)
     ncomp = 1 if gray else 3
     out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
     for ci in range(ncomp):
@@ -533,251 +519,8 @@ def jpeg_encode(
     return bytes(out)
 
 
-class _ProgWriter(_BitWriter):
-    """Bit writer with the progressive encoder's deferred-EOB state:
-    EOBRUN counts whole end-of-band blocks, BR buffers the refinement
-    correction bits that must follow the next emitted symbol
-    (T.81 G.1.2.2-3; the same bookkeeping libjpeg's phuff encoder
-    documents)."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.eobrun = 0
-        self.br: list[int] = []
-
-    def emit_buffered(self) -> None:
-        for b in self.br:
-            self.write(b, 1)
-        self.br = []
-
-    def emit_eobrun(self, ac_codes) -> None:
-        if self.eobrun > 0:
-            r = self.eobrun.bit_length() - 1
-            code, length = ac_codes[r << 4]
-            self.write(code, length)
-            if r:
-                self.write(self.eobrun - (1 << r), r)
-            self.eobrun = 0
-        self.emit_buffered()
-
-
-def _enc_dc_first(writer, zz0, pred, dc_codes, al):
-    v = int(zz0) >> al  # arithmetic shift: the DC point transform
-    size, bits = _magnitude(v - pred)
-    code, length = dc_codes[size]
-    writer.write(code, length)
-    if size:
-        writer.write(bits, size)
-    return v
-
-
-def _enc_ac_first(writer, zz, ss, se, al, ac_codes):
-    """One block of an AC first scan (Ah=0): run-length over the
-    point-transformed band with cross-block EOB runs."""
-    r = 0
-    wrote = False
-    for k in range(ss, se + 1):
-        v = int(zz[k])
-        t = (abs(v) >> al)
-        if t == 0:
-            r += 1
-            continue
-        if not wrote and writer.eobrun:
-            writer.emit_eobrun(ac_codes)
-        wrote = True
-        while r > 15:
-            code, length = ac_codes[0xF0]
-            writer.write(code, length)
-            r -= 16
-        sv = t if v > 0 else -t
-        size, bits = _magnitude(sv)
-        code, length = ac_codes[(r << 4) | size]
-        writer.write(code, length)
-        writer.write(bits, size)
-        r = 0
-    if r > 0:  # band ends in zeros: join/extend the EOB run
-        writer.eobrun += 1
-        if writer.eobrun == 0x7FFF:
-            writer.emit_eobrun(ac_codes)
-
-
-def _enc_ac_refine(writer, zz, ss, se, al, ac_codes):
-    """One block of an AC refinement scan (Ah=Al+1): newly-significant
-    coefficients carry (run, 1) symbols + a sign bit; already-
-    significant ones append buffered correction bits (G.1.2.3)."""
-    absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
-    eob = 0  # index AFTER the last newly-significant coefficient
-    for i, t in enumerate(absv):
-        if t == 1:
-            eob = i + 1
-    r = 0
-    br: list[int] = []
-    emitted = False
-    for i, t in enumerate(absv):
-        if t == 0:
-            r += 1
-            continue
-        if t > 1:
-            # already significant: buffer its correction bit; the run
-            # of zeros is NOT reset
-            br.append(t & 1)
-            continue
-        # newly significant (t == 1)
-        while r > 15 and i < eob:
-            if not emitted and writer.eobrun:
-                writer.emit_eobrun(ac_codes)
-                emitted = True
-            code, length = ac_codes[0xF0]
-            writer.write(code, length)
-            r -= 16
-            for b in br:
-                writer.write(b, 1)
-            br = []
-        if not emitted and writer.eobrun:
-            writer.emit_eobrun(ac_codes)
-            emitted = True
-        code, length = ac_codes[(r << 4) | 1]
-        writer.write(code, length)
-        writer.write(0 if int(zz[ss + i]) < 0 else 1, 1)
-        for b in br:
-            writer.write(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        writer.eobrun += 1
-        writer.br.extend(br)
-        if writer.eobrun == 0x7FFF or len(writer.br) > 900:
-            writer.emit_eobrun(ac_codes)
-
-
-# Progressive scans need EOBn symbols (0x10..0xE0) the Annex K
-# "typical" AC tables do not contain — real encoders ship custom
-# tables for progressive files (libjpeg always builds optimized ones).
-# This flat near-9-bit table covers every possible AC rs symbol; the
-# decoder reads it from the stream's DHT like any other table.
-HUFF_AC_PROG = (
-    [0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0],
-    list(range(255)) + [255],
-)
-
-
-def jpeg_encode_progressive(
-    pixels,
-    quality: int = 75,
-    subsample: bool = False,
-    scans=None,
-) -> bytes:
-    """Progressive (SOF2) JFIF bytes — spectral selection + successive
-    approximation, T.81 Annex G. The default scan script mirrors
-    libjpeg's: a DC scan at Al=1 + DC refinement, and per-component
-    AC bands at Al=1 with refinement passes. ``scans`` overrides it
-    with a list of (comp_indices, Ss, Se, Ah, Al).
-
-    The quantized coefficients are IDENTICAL to :func:`jpeg_encode`'s
-    at the same quality, so a correct progressive decode must produce
-    pixel-identical output to the baseline stream — the equivalence
-    the tests pin."""
-    gray, samps, qtabs, comp_zz, comp_dims, h, w = _prepare_components(
-        pixels, quality, subsample
-    )
-    ncomp = 1 if gray else 3
-    if scans is None:
-        scans = [(list(range(ncomp)), 0, 0, 0, 1)]
-        for ci in range(ncomp):
-            scans += [([ci], 1, 5, 0, 1), ([ci], 6, 63, 0, 1)]
-        for ci in range(ncomp):
-            scans += [([ci], 1, 63, 1, 0)]
-        scans += [(list(range(ncomp)), 0, 0, 1, 0)]
-    max_h = max(s[0] for s in samps)
-    max_v = max(s[1] for s in samps)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-
-    dc_codes = [
-        _canonical_codes(*(HUFF_DC_LUMA if ci == 0 else HUFF_DC_CHROMA))
-        for ci in range(ncomp)
-    ]
-    prog_ac = _canonical_codes(*HUFF_AC_PROG)
-    ac_codes = [prog_ac for _ci in range(ncomp)]
-
-    out = _marker_head(gray, samps, qtabs, h, w, b"\xff\xc2", 0)
-    # redefine AC tables 0/1 with the EOBn-capable progressive table
-    bits, values = HUFF_AC_PROG
-    for th in ((0,) if gray else (0, 1)):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(values))
-        out += bytes([0x10 | th]) + bytes(bits) + bytes(values)
-    for comp_ids, ss, se, ah, al in scans:
-        if ss == 0 and se != 0:
-            raise ValueError("progressive scan cannot mix DC and AC")
-        if ss > 0 and len(comp_ids) != 1:
-            raise ValueError("progressive AC scans take one component")
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
-        for ci in comp_ids:
-            # table ids: luma tables for component 0, chroma otherwise
-            t = 0 if ci == 0 else 1
-            out += bytes([ci + 1, (t << 4) | t])
-        out += bytes([ss, se, (ah << 4) | al])
-
-        writer = _ProgWriter()
-        if ss == 0:
-            # DC scan, interleaved over the listed components
-            if len(comp_ids) not in (1, ncomp):
-                raise ValueError("DC scan components must be all or one")
-            preds = {ci: 0 for ci in comp_ids}
-            if len(comp_ids) == 1 or ncomp == 1:
-                ci = comp_ids[0]
-                sh, sv = samps[ci]
-                bh, bw = comp_dims[ci]
-                bw_c = -(-(-(-w * sh // max_h)) // 8)
-                bh_c = -(-(-(-h * sv // max_v)) // 8)
-                for row in range(bh_c):
-                    for col in range(bw_c):
-                        zz = comp_zz[ci][min(row, bh - 1) * bw + min(col, bw - 1)]
-                        if ah == 0:
-                            preds[ci] = _enc_dc_first(
-                                writer, zz[0], preds[ci], dc_codes[ci], al
-                            )
-                        else:
-                            writer.write((int(zz[0]) >> al) & 1, 1)
-            else:
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        for ci in comp_ids:
-                            sh, sv = samps[ci]
-                            bh, bw = comp_dims[ci]
-                            for by in range(sv):
-                                for bx in range(sh):
-                                    row = min(my * sv + by, bh - 1)
-                                    col = min(mx * sh + bx, bw - 1)
-                                    zz = comp_zz[ci][row * bw + col]
-                                    if ah == 0:
-                                        preds[ci] = _enc_dc_first(
-                                            writer, zz[0], preds[ci],
-                                            dc_codes[ci], al,
-                                        )
-                                    else:
-                                        writer.write((int(zz[0]) >> al) & 1, 1)
-        else:
-            ci = comp_ids[0]
-            sh, sv = samps[ci]
-            bh, bw = comp_dims[ci]
-            bw_c = -(-(-(-w * sh // max_h)) // 8)
-            bh_c = -(-(-(-h * sv // max_v)) // 8)
-            for row in range(bh_c):
-                for col in range(bw_c):
-                    zz = comp_zz[ci][min(row, bh - 1) * bw + min(col, bw - 1)]
-                    if ah == 0:
-                        _enc_ac_first(writer, zz, ss, se, al, ac_codes[ci])
-                    else:
-                        _enc_ac_refine(writer, zz, ss, se, al, ac_codes[ci])
-            writer.emit_eobrun(ac_codes[ci])
-        writer.flush()
-        out += writer.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 _GATED_SOF = {
+    0xC2: "progressive (SOF2)",
     0xC3: "lossless sequential (SOF3)",
     0xC5: "differential sequential (SOF5)",
     0xC6: "differential progressive (SOF6)",
@@ -792,14 +535,10 @@ _GATED_SOF = {
 
 
 def jpeg_decode(buf: bytes):
-    """Decode baseline (SOF0/SOF1) or progressive (SOF2) JPEG bytes ->
-    (width, height, (H, W, 3) uint8 RGB). Progressive streams decode
-    through the full T.81 Annex G scan protocol — spectral selection,
-    successive approximation (DC and AC refinement), cross-block EOB
-    runs, restart markers — accumulating coefficients across scans
-    and finishing with one batched IDCT at EOI. Raises
-    DecodeUnavailable for the gated scan types and ValueError for
-    malformed streams."""
+    """Decode baseline (SOF0/SOF1) JPEG bytes -> (width, height,
+    (H, W, 3) uint8 RGB). Raises DecodeUnavailable for the gated frame
+    types (progressive SOF2 among them) and ValueError for malformed
+    streams."""
     from dask_awkward_sandbox_spark.functions.multimodal import DecodeUnavailable
 
     if len(buf) < 4 or buf[0:2] != b"\xff\xd8":
@@ -826,8 +565,8 @@ def jpeg_decode(buf: bytes):
         if marker in _GATED_SOF:
             raise DecodeUnavailable(
                 f"JPEG {_GATED_SOF[marker]} scans are gated — this decoder "
-                "implements baseline sequential and progressive Huffman "
-                "(SOF0/SOF1/SOF2); re-encode or ship libjpeg"
+                "implements baseline sequential Huffman (SOF0/SOF1); "
+                "re-encode or ship libjpeg"
             )
         if pos + 2 > len(buf):
             raise ValueError("JPEG: truncated marker stream")
@@ -856,7 +595,7 @@ def jpeg_decode(buf: bytes):
                 values = list(seg[o + 17 : o + 17 + n])
                 htables[(tc, th)] = _decode_table(bits, values)
                 o += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
+        elif marker in (0xC0, 0xC1):  # baseline / extended sequential
             if frame is not None:
                 raise ValueError("JPEG: multiple frames")
             precision = seg[0]
@@ -872,7 +611,7 @@ def jpeg_decode(buf: bytes):
                 cid, hv, tq = seg[6 + 3 * ci : 9 + 3 * ci]
                 comps.append((cid, hv >> 4, hv & 0xF, tq))
             frame = (fw, fh, comps)
-            st = _FrameState(fw, fh, comps, progressive=(marker == 0xC2))
+            st = _FrameState(fw, fh, comps)
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack(">H", seg[:2])[0]
         elif marker == 0xDA:  # SOS
@@ -897,14 +636,12 @@ def jpeg_decode(buf: bytes):
 
 
 class _FrameState:
-    """Coefficient accumulator across scans (one scan for baseline,
-    many for progressive)."""
+    """The frame's geometry and its quantized coefficient blocks."""
 
-    def __init__(self, fw, fh, comps, progressive):
+    def __init__(self, fw, fh, comps):
         if fw == 0 or fh == 0:
             raise ValueError("JPEG: zero image dimension")
         self.fw, self.fh, self.comps = fw, fh, comps
-        self.progressive = progressive
         self.max_h = max(c[1] for c in comps)
         self.max_v = max(c[2] for c in comps)
         if not (1 <= self.max_h <= 4 and 1 <= self.max_v <= 4):
@@ -922,16 +659,6 @@ class _FrameState:
             if c[0] == cid:
                 return i
         raise ValueError(f"JPEG: scan names unknown component {cid}")
-
-    def comp_grid(self, ci):
-        """(bw_store, bw_used, bh_used): the storage stride is the
-        MCU-padded width; non-interleaved scans cover only the
-        component's own ceil dims."""
-        cid, sh, sv, tq = self.comps[ci]
-        bw_store = self.mcus_x * sh
-        bw_used = -(-(-(-self.fw * sh // self.max_h)) // 8)
-        bh_used = -(-(-(-self.fh * sv // self.max_v)) // 8)
-        return bw_store, bw_used, bh_used
 
 
 def _scan_end(buf, pos):
@@ -952,55 +679,25 @@ def _scan_end(buf, pos):
     raise ValueError("JPEG: entropy data ran past end of stream")
 
 
-def _refine_nonzero(reader, zz, k, p1):
-    """One AC-refinement correction bit on an already-nonzero coeff."""
-    if reader.read_bit():
-        v = int(zz[k])
-        if (v & p1) == 0:
-            zz[k] = v + (p1 if v >= 0 else -p1)
-
-
 def _decode_scan_data(buf, pos, st, scan_sel, htables, ri, ss, se, ah, al):
     """Decode one scan's entropy data into st.blocks; returns the
     stream position of the marker that follows the scan."""
     reader = _BitReader(buf, pos)
-    if not st.progressive:
-        if (ss, se, ah, al) != (0, 63, 0, 0):
-            raise ValueError("JPEG: baseline scan must cover 0..63 at Ah=Al=0")
-        if [s[0] for s in scan_sel] != [c[0] for c in st.comps]:
-            raise ValueError("JPEG: scan component order differs from frame")
-        _decode_seq_scan(reader, st, scan_sel, ri, htables)
-        return _scan_end(buf, reader.pos)
-
-    # --- progressive scan dispatch ---
-    if ss == 0 and se == 0:
-        if ah == 0:
-            _decode_dc_first(reader, st, scan_sel, ri, al, htables)
-        else:
-            _decode_dc_refine(reader, st, scan_sel, ri, al)
-    else:
-        if ss == 0 or se < ss or se > 63:
-            raise ValueError("JPEG: bad progressive spectral band")
-        if len(scan_sel) != 1:
-            raise ValueError("JPEG: progressive AC scans take one component")
-        ci = st.comp_index(scan_sel[0][0])
-        ac_tab = htables.get((1, scan_sel[0][2]))
-        if ac_tab is None:
-            raise ValueError("JPEG: scan references undefined Huffman table")
-        if ah == 0:
-            _decode_ac_first(reader, st, ci, ac_tab, ri, ss, se, al)
-        else:
-            _decode_ac_refine(reader, st, ci, ac_tab, ri, ss, se, al)
+    if (ss, se, ah, al) != (0, 63, 0, 0):
+        raise ValueError("JPEG: baseline scan must cover 0..63 at Ah=Al=0")
+    if [s[0] for s in scan_sel] != [c[0] for c in st.comps]:
+        raise ValueError("JPEG: scan component order differs from frame")
+    _decode_seq_scan(reader, st, scan_sel, ri, htables)
     return _scan_end(buf, reader.pos)
 
 
-def _mcu_members(st, scan_sel, htables, need_dc=True, need_ac=True):
+def _mcu_members(st, scan_sel, htables):
     out = []
     for cs, td, ta in scan_sel:
         ci = st.comp_index(cs)
-        dc_tab = htables.get((0, td)) if need_dc else None
-        ac_tab = htables.get((1, ta)) if need_ac else None
-        if (need_dc and dc_tab is None) or (need_ac and ac_tab is None):
+        dc_tab = htables.get((0, td))
+        ac_tab = htables.get((1, ta))
+        if dc_tab is None or ac_tab is None:
             raise ValueError("JPEG: scan references undefined Huffman table")
         out.append((ci, dc_tab, ac_tab))
     return out
@@ -1051,163 +748,6 @@ def _decode_seq_scan(reader, st, scan_sel, ri, htables):
                             zz[k] = _extend(reader.read_bits(s), s)
                             k += 1
             mcu_count += 1
-
-
-def _dc_units(st, scan_sel):
-    """Yield (ci, zz, at_restart_boundary_counter) in the scan's unit
-    order: interleaved MCU order for multi-component scans, the
-    component's own block raster for single-component ones."""
-    if len(scan_sel) == 1:
-        # single-component scans are non-interleaved (T.81 A.2.2):
-        # unit order is the component's own block raster
-        ci = st.comp_index(scan_sel[0][0])
-        bw_store, bw_used, bh_used = st.comp_grid(ci)
-        for row in range(bh_used):
-            for col in range(bw_used):
-                yield ci, st.blocks[ci][row * bw_store + col]
-    else:
-        if [s[0] for s in scan_sel] != [c[0] for c in st.comps]:
-            raise ValueError(
-                "JPEG: progressive DC scan components must be all (in "
-                "frame order) or one"
-            )
-        for my in range(st.mcus_y):
-            for mx in range(st.mcus_x):
-                for cs, td, ta in scan_sel:
-                    ci = st.comp_index(cs)
-                    cid, sh, sv, tq = st.comps[ci]
-                    bw = st.mcus_x * sh
-                    for by in range(sv):
-                        for bx in range(sh):
-                            yield ci, st.blocks[ci][
-                                (my * sv + by) * bw + (mx * sh + bx)
-                            ]
-
-
-def _dc_mcu_spans(st, scan_sel):
-    """Number of units per restart-counted MCU for the DC unit
-    stream."""
-    if len(scan_sel) == 1:
-        return 1
-    return sum(
-        st.comps[st.comp_index(cs)][1] * st.comps[st.comp_index(cs)][2]
-        for cs, _td, _ta in scan_sel
-    )
-
-
-def _decode_dc_first(reader, st, scan_sel, ri, al, htables):
-    tabs = {}
-    for cs, td, ta in scan_sel:
-        tab = htables.get((0, td))
-        if tab is None:
-            raise ValueError("JPEG: scan references undefined Huffman table")
-        tabs[st.comp_index(cs)] = tab
-    preds = {st.comp_index(cs): 0 for cs, _t, _a in scan_sel}
-    span = _dc_mcu_spans(st, scan_sel)
-    expect_rst = 0
-    for i, (ci, zz) in enumerate(_dc_units(st, scan_sel)):
-        if ri and i and i % (span * ri) == 0:
-            expect_rst = _restart(reader, expect_rst)
-            preds = {k: 0 for k in preds}
-        size = reader.read_symbol(tabs[ci])
-        diff = _extend(reader.read_bits(size), size)
-        preds[ci] += diff
-        zz[0] = preds[ci] << al
-    return
-
-
-def _decode_dc_refine(reader, st, scan_sel, ri, al):
-    span = _dc_mcu_spans(st, scan_sel)
-    expect_rst = 0
-    for i, (ci, zz) in enumerate(_dc_units(st, scan_sel)):
-        if ri and i and i % (span * ri) == 0:
-            expect_rst = _restart(reader, expect_rst)
-        if reader.read_bit():
-            zz[0] = int(zz[0]) | (1 << al)
-
-
-def _ac_blocks(st, ci):
-    bw_store, bw_used, bh_used = st.comp_grid(ci)
-    for row in range(bh_used):
-        for col in range(bw_used):
-            yield st.blocks[ci][row * bw_store + col]
-
-
-def _decode_ac_first(reader, st, ci, ac_tab, ri, ss, se, al):
-    eobrun = 0
-    expect_rst = 0
-    for i, zz in enumerate(_ac_blocks(st, ci)):
-        if ri and i and i % ri == 0:
-            expect_rst = _restart(reader, expect_rst)
-            eobrun = 0
-        if eobrun > 0:
-            eobrun -= 1
-            continue
-        k = ss
-        while k <= se:
-            rs = reader.read_symbol(ac_tab)
-            r, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if r == 15:  # ZRL
-                    k += 16
-                    continue
-                eobrun = (1 << r) - 1
-                if r:
-                    eobrun += reader.read_bits(r)
-                break
-            k += r
-            if k > se:
-                raise ValueError("JPEG: AC run past band end")
-            zz[k] = _extend(reader.read_bits(s), s) << al
-            k += 1
-
-
-def _decode_ac_refine(reader, st, ci, ac_tab, ri, ss, se, al):
-    """T.81 G.2.2 AC successive-approximation refinement."""
-    p1 = 1 << al
-    eobrun = 0
-    expect_rst = 0
-    for i, zz in enumerate(_ac_blocks(st, ci)):
-        if ri and i and i % ri == 0:
-            expect_rst = _restart(reader, expect_rst)
-            eobrun = 0
-        k = ss
-        if eobrun == 0:
-            while k <= se:
-                rs = reader.read_symbol(ac_tab)
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
-                    if r != 15:
-                        eobrun = 1 << r
-                        if r:
-                            eobrun += reader.read_bits(r)
-                        break
-                    newval = 0  # ZRL: pass 16 zero-history coeffs
-                else:
-                    if s != 1:
-                        raise ValueError(
-                            "JPEG: invalid AC refinement magnitude"
-                        )
-                    newval = p1 if reader.read_bit() else -p1
-                # advance over r zero-history coeffs, correcting the
-                # nonzero ones passed on the way
-                while k <= se:
-                    if zz[k] != 0:
-                        _refine_nonzero(reader, zz, k, p1)
-                    else:
-                        if r == 0:
-                            break
-                        r -= 1
-                    k += 1
-                if newval and k <= se:
-                    zz[k] = newval
-                k += 1
-        if eobrun > 0:
-            while k <= se:
-                if zz[k] != 0:
-                    _refine_nonzero(reader, zz, k, p1)
-                k += 1
-            eobrun -= 1
 
 
 def _finish_frame(st, qtables):

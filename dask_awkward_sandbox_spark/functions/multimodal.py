@@ -1,10 +1,13 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads decoded to
+per-image stats.
 
-Images/audio/video are carried as ``binary`` columns beside a typed
-metadata struct. The Spark-side machinery here — schemas, Arrow-batch
-UDF signatures, partition sizing — is real and tested; the actual
-codec calls are stubbed (decode libraries are not in this container)
-behind ``DecodeUnavailable`` or a deterministic fake.
+Images are carried as ``binary`` columns. Three REAL image codecs,
+none needing an external library: BMP (JVM-side header assembly in
+:func:`bmp_column`, header parse in :func:`decode_bmp`), PNG (zlib +
+filters + CRC chunks, every spec-legal color type and depth) and
+baseline JPEG (functions/jpegcodec.py). Each decode is a
+``mapInArrow`` kernel, so payload bytes never reach the driver.
+Formats without a codec here raise ``DecodeUnavailable``.
 
 Scale notes: binary payloads dominate row size, so ops that don't
 need bytes must prune them (nested-schema pruning handles struct
@@ -18,61 +21,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from dask_awkward_sandbox_spark.io.io import from_lists
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("kind", T.StringType(), True),  # image|audio|video
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, feature array<float>"
 
 
 class DecodeUnavailable(NotImplementedError):
-    """Raised where a real codec (PIL/ffmpeg/torchaudio) would be
-    called; this container has none, so the decode step is stubbed."""
+    """Raised for a payload whose format or coding mode has no decoder
+    here (progressive/arithmetic/lossless JPEG, gated ROOT layouts);
+    the message names what is missing."""
 
 
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for plumbing tests."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = bytes([(i * 7 + j * 13) % 256 for j in range(128 + (i % 5) * 32)])
-        rows.append(
-            (
-                i,
-                payload,
-                (kind, 64 + i % 4, 48, 16000 if kind == "audio" else None,
-                 30 if kind == "video" else None),
-            )
-        )
-    return from_lists(spark, rows, MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes) -> "object":
-    raise DecodeUnavailable("image decode requires PIL/opencv; not in container")
-
-
-# -- BMP: the one REAL codec (pure-python header parse, no external libs) --
+# -- BMP: pure-python header parse, no external libs --
 
 BMP_HEADER_LEN = 54  # 14-byte file header + 40-byte BITMAPINFOHEADER
 
@@ -150,151 +107,11 @@ def decode_bmp(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInArrow(fn, "media_id long, width long, height long, n_bytes long")
 
 
-def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a real feature extractor: byte
-    histogram folded to ``dim`` floats. Same shape/contract as a real
-    embedding UDF, so the pipeline around it is fully exercised."""
-    acc = [0] * dim
-    for j, byte in enumerate(payload):
-        acc[j % dim] = (acc[j % dim] + byte) % 997
-    return [a / 997.0 for a in acc]
-
-
-def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
-    """mapInArrow feature extraction over binary payloads — the real
-    multimodal hot path shape: Arrow batches in, Arrow batches out,
-    payload column pruned from the output."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            kinds = [m["kind"] for m in b.column("meta").to_pylist()]
-            payloads = b.column("payload").to_pylist()
-            feats = [fake_feature(p or b"", dim) for p in payloads]
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(kinds, pa.string()),
-                    pa.array([len(p or b"") for p in payloads], pa.int64()),
-                    pa.array(feats, pa.list_(pa.float32())),
-                ],
-                names=["media_id", "kind", "n_bytes", "feature"],
-            )
-
-    return df.mapInArrow(fn, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling *plan* for video rows: emits (media_id, frame_idx)
-    pairs scan-side; the decode of each sampled frame is the stubbed
-    step. Demonstrates generator-based fan-out without Python."""
-    n = F.col("meta")["n_frames"]
-    idxs = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(every_n))
-    return (
-        df.filter(F.col("meta")["kind"] == "video")
-        .select("media_id", F.explode(idxs).alias("frame_idx"))
-    )
-
-
-def _encode_bmp_py(width: int, height: int, pixels) -> bytes:
-    """BMP bytes from an (H, W, 3) uint8 array — the Python mirror of
-    :func:`bmp_column`'s JVM construction (24bpp, BI_RGB, bottom-up
-    rows padded to 4 bytes)."""
-    import struct
-
-    import numpy as np
-
-    stride = ((3 * width + 3) // 4) * 4
-    rows = np.zeros((height, stride), dtype=np.uint8)
-    rows[:, : 3 * width] = pixels.reshape(height, 3 * width)
-    payload = rows.tobytes()
-    header = (
-        b"BM"
-        + struct.pack("<I", len(payload) + BMP_HEADER_LEN)
-        + b"\x00\x00\x00\x00"
-        + struct.pack("<I", BMP_HEADER_LEN)
-        + struct.pack("<I", 40)
-        + struct.pack("<ii", width, height)
-        + b"\x01\x00"
-        + b"\x18\x00"
-        + struct.pack("<I", 0)
-        + struct.pack("<I", len(payload))
-        + struct.pack("<II", 2835, 2835)
-        + struct.pack("<II", 0, 0)
-    )
-    return header + payload
-
-
-def _decode_bmp_pixels(buf: bytes):
-    """(width, height, (H, W, 3) uint8) from 24bpp BMP bytes —
-    honors the 4-byte row padding the format requires."""
-    import struct
-
-    import numpy as np
-
-    if buf[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (offset,) = struct.unpack_from("<I", buf, 10)
-    width, height = struct.unpack_from("<ii", buf, 18)
-    stride = ((3 * width + 3) // 4) * 4
-    rows = np.frombuffer(buf, dtype=np.uint8, count=height * stride, offset=offset)
-    px = rows.reshape(height, stride)[:, : 3 * width].reshape(height, width, 3)
-    return width, height, px
-
-
-def _nn_resize(px, out_w: int, out_h: int):
-    """Nearest-neighbor resize of an (H, W, C) array via numpy index
-    maps — the shared kernel behind resize_bmp and resize_png."""
-    import numpy as np
-
-    h, w = px.shape[0], px.shape[1]
-    xs = (np.arange(out_w) * w) // out_w
-    ys = (np.arange(out_h) * h) // out_h
-    return px[ys][:, xs]
-
-
-def resize_bmp(
-    df: DataFrame, out_w: int, out_h: int, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL image resize with no imaging library: nearest-neighbor
-    over decoded 24bpp BMP pixels (numpy index maps), re-encoded as
-    BMP — the canonical multimodal transform (decode -> resize ->
-    re-encode) with every byte real, upgrading what the module
-    docstring stubs for PIL-format codecs.
-
-    Arrow-batched mapInArrow: payload bytes never hit the driver, the
-    per-image work is vectorized numpy, and the output schema carries
-    the new dimensions alongside the rebuilt payload."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            outs = []
-            for buf in b.column(payload_col).to_pylist():
-                _w, _h, px = _decode_bmp_pixels(buf)
-                outs.append(_encode_bmp_py(out_w, out_h, _nn_resize(px, out_w, out_h)))
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([out_w] * len(ids), pa.int64()),
-                    pa.array([out_h] * len(ids), pa.int64()),
-                    pa.array(outs, pa.binary()),
-                ],
-                names=["media_id", "width", "height", "payload"],
-            )
-
-    return df.mapInArrow(
-        fn, "media_id long, width long, height long, payload binary"
-    )
-
-
 # ---------------------------------------------------------------------------
 # PNG: a second REAL image codec (r9) — the format training corpora
 # actually contain. PNG is zlib (already a dependency of the ROOT byte
 # layer) + per-row filters + CRC-framed chunks: fully implementable
-# under the same no-PIL constraint as BMP/WAV. The DECODER handles all
+# under the same no-PIL constraint as BMP. The DECODER handles all
 # five standard filter types (None/Sub/Up/Average/Paeth), so it reads
 # 8-bit RGB files real encoders wrote, not just this writer's output;
 # the ENCODER emits filter-0 rows (always valid PNG). r10: every
@@ -303,10 +120,9 @@ def resize_bmp(
 # decodes via the standard high-byte fold, and Adam7 interlacing
 # decodes via the pass-grid reassembly; r11 adds sub-byte depths
 # (1/2/4 gray + palette, MSB-first packed scanlines, incl. Adam7) —
-# every spec-legal PNG decodes. JPEG decodes too (r11, late):
-# functions/jpegcodec.py implements baseline sequential AND
-# progressive T.81 (Huffman + DCT + Annex G successive
-# approximation) pure-Python; only arithmetic/lossless/12-bit scans
+# every spec-legal PNG decodes. JPEG decodes too (r11):
+# functions/jpegcodec.py implements baseline sequential T.81 (Huffman
+# + DCT) pure-Python; progressive/arithmetic/lossless/12-bit scans
 # stay gated there with directed errors.
 # ---------------------------------------------------------------------------
 
@@ -582,10 +398,9 @@ def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     shape as :func:`decode_png`: (media_id, width, height,
     mean_pixel). r11: REAL decode via the pure-Python ITU T.81 codec
     (functions/jpegcodec.py — marker walk, canonical Huffman entropy
-    decode, batched numpy IDCT, 4:2:0 upsampling; late r11 adds full
-    progressive/SOF2 decode incl. successive approximation);
-    arithmetic/lossless/12-bit scans stay gated inside the codec
-    with directed DecodeUnavailable errors."""
+    decode, batched numpy IDCT, 4:2:0 upsampling);
+    progressive/arithmetic/lossless/12-bit scans stay gated inside
+    the codec with directed DecodeUnavailable errors."""
     import numpy as np
     import pyarrow as pa
 
@@ -613,91 +428,6 @@ def decode_jpeg(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInArrow(
         fn, "media_id long, width long, height long, mean_pixel double"
     )
-
-
-def synthetic_jpeg_media(
-    spark, n: int = 32, blocks_x: int = 2, blocks_y: int = 2
-) -> DataFrame:
-    """Deterministic REAL-JPEG media table: row i is a grayscale image
-    of constant 8x8 blocks (block b's value = 128 + 2*(((i+b)*13) %
-    50 - 25)), which round-trips EXACTLY at quality 50 (DC-only
-    blocks, even level-shifted values — see jpegcodec's exactness
-    contract), so tests and oracles can predict decoded pixels in
-    closed form despite JPEG being lossy in general."""
-    import numpy as np
-
-    from dask_awkward_sandbox_spark.functions.jpegcodec import jpeg_encode
-
-    w, h = blocks_x * 8, blocks_y * 8
-    rows = []
-    for i in range(n):
-        px = np.zeros((h, w), dtype=np.uint8)
-        for by in range(blocks_y):
-            for bx in range(blocks_x):
-                b = by * blocks_x + bx
-                px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    128 + 2 * (((i + b) * 13) % 50 - 25)
-                )
-        rows.append(
-            (i, bytearray(jpeg_encode(px, quality=50)),
-             ("image", w, h, None, None))
-        )
-    return from_lists(spark, rows, MEDIA_SCHEMA)
-
-
-def resize_jpeg(
-    df: DataFrame, out_w: int, out_h: int, payload_col: str = "payload",
-    quality: int = 90,
-) -> DataFrame:
-    """decode -> nearest-neighbor resize (the shared :func:`_nn_resize`
-    kernel) -> re-encode, JPEG edition."""
-    import pyarrow as pa
-
-    from dask_awkward_sandbox_spark.functions.jpegcodec import (
-        jpeg_decode,
-        jpeg_encode,
-    )
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            outs = []
-            for buf in b.column(payload_col).to_pylist():
-                _w, _h, px = jpeg_decode(bytes(buf))
-                outs.append(
-                    jpeg_encode(_nn_resize(px, out_w, out_h), quality=quality)
-                )
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([out_w] * len(ids), pa.int64()),
-                    pa.array([out_h] * len(ids), pa.int64()),
-                    pa.array(outs, pa.binary()),
-                ],
-                names=["media_id", "width", "height", "payload"],
-            )
-
-    return df.mapInArrow(
-        fn, "media_id long, width long, height long, payload binary"
-    )
-
-
-def synthetic_png_media(spark, n: int = 32, width: int = 20, height: int = 14) -> DataFrame:
-    """Deterministic REAL-PNG media table: row i's pixels are a pure
-    function of (i, y, x) — every byte a valid PNG file."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        y, x = np.mgrid[0:height, 0:width]
-        px = np.stack(
-            [(x * 7 + i) % 256, (y * 11 + 2 * i) % 256, (x + y + 3 * i) % 256],
-            axis=-1,
-        ).astype(np.uint8)
-        rows.append(
-            (i, bytearray(_encode_png_py(px)), ("image", width, height, None, None))
-        )
-    return from_lists(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -730,298 +460,3 @@ def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         fn, "media_id long, width long, height long, mean_pixel double"
     )
 
-
-def resize_png(
-    df: DataFrame, out_w: int, out_h: int, payload_col: str = "payload"
-) -> DataFrame:
-    """decode -> nearest-neighbor resize (the shared :func:`_nn_resize`
-    kernel) -> re-encode, PNG edition."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            outs = []
-            for buf in b.column(payload_col).to_pylist():
-                _w, _h, px = _decode_png_pixels(bytes(buf))
-                outs.append(_encode_png_py(_nn_resize(px, out_w, out_h)))
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([out_w] * len(ids), pa.int64()),
-                    pa.array([out_h] * len(ids), pa.int64()),
-                    pa.array(outs, pa.binary()),
-                ],
-                names=["media_id", "width", "height", "payload"],
-            )
-
-    return df.mapInArrow(
-        fn, "media_id long, width long, height long, payload binary"
-    )
-
-
-# ---------------------------------------------------------------------------
-# audio: real WAV/PCM codec (no audio library needed — RIFF headers and
-# PCM16 samples are plain structs + numpy, same spirit as the BMP path)
-# ---------------------------------------------------------------------------
-
-WAV_HEADER_LEN = 44
-
-
-def _encode_wav_py(sample_rate: int, samples) -> bytes:
-    """Canonical 44-byte RIFF/WAVE header + PCM16 mono samples from an
-    int16 numpy array."""
-    import struct
-
-    data = samples.astype("<i2").tobytes()
-    byte_rate = sample_rate * 2
-    return (
-        b"RIFF"
-        + struct.pack("<I", 36 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, byte_rate, 2, 16)
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
-
-def _decode_wav_samples(buf: bytes):
-    """(sample_rate, int16 numpy samples) from PCM16 mono WAV bytes.
-    Walks the RIFF chunk list (fmt / data may be preceded by LIST or
-    fact chunks in real files) instead of assuming the 44-byte
-    layout."""
-    import struct
-
-    import numpy as np
-
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos, rate, data = 12, None, None
-    while pos + 8 <= len(buf):
-        cid, size = buf[pos : pos + 4], struct.unpack_from("<I", buf, pos + 4)[0]
-        body = pos + 8
-        if cid == b"fmt ":
-            fmt, channels, rate = struct.unpack_from("<HHI", buf, body)
-            bits = struct.unpack_from("<H", buf, body + 14)[0]
-            if fmt != 1 or channels != 1 or bits != 16:
-                raise ValueError("only PCM16 mono supported")
-        elif cid == b"data":
-            data = np.frombuffer(buf, dtype="<i2", count=size // 2, offset=body)
-        pos = body + size + (size & 1)  # RIFF chunks are word-aligned
-    if rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    return rate, data
-
-
-def synthetic_wav_media(spark, n: int = 48, sample_rate: int = 8000) -> DataFrame:
-    """Deterministic REAL-WAV media table: row i carries a PCM16 tone
-    at (100 + 50*i) Hz, 0.05s long — every byte a valid WAV file."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        t = np.arange(int(sample_rate * 0.05)) / sample_rate
-        tone = (np.sin(2 * np.pi * (100 + 50 * i) * t) * 20000).astype(np.int16)
-        rows.append(
-            (i, bytearray(_encode_wav_py(sample_rate, tone)),
-             ("audio", None, None, sample_rate, None))
-        )
-    return from_lists(spark, rows, MEDIA_SCHEMA)
-
-
-def decode_wav(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL audio decode with no audio library: RIFF chunk walk +
-    PCM16 samples, emitting per-clip stats (rate, n_samples, duration,
-    rms, peak). Arrow-batched; payload bytes never hit the driver."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            rates, ns, durs, rms, peak = [], [], [], [], []
-            for buf in b.column(payload_col).to_pylist():
-                rate, s = _decode_wav_samples(bytes(buf))
-                x = s.astype(np.float64)
-                rates.append(rate)
-                ns.append(len(s))
-                durs.append(len(s) / rate)
-                rms.append(float(np.sqrt(np.mean(x * x))) if len(s) else 0.0)
-                peak.append(int(np.max(np.abs(s))) if len(s) else 0)
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(rates, pa.int64()),
-                    pa.array(ns, pa.int64()),
-                    pa.array(durs, pa.float64()),
-                    pa.array(rms, pa.float64()),
-                    pa.array(peak, pa.int64()),
-                ],
-                names=["media_id", "sample_rate", "n_samples", "duration_s",
-                       "rms", "peak"],
-            )
-
-    return df.mapInArrow(
-        fn,
-        "media_id long, sample_rate long, n_samples long, duration_s double, "
-        "rms double, peak long",
-    )
-
-
-def resample_wav(
-    df: DataFrame, target_rate: int, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL audio resample (nearest-sample index map, the audio twin
-    of resize_bmp's nearest-neighbor), re-encoded as PCM16 WAV."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            outs, ns = [], []
-            for buf in b.column(payload_col).to_pylist():
-                rate, s = _decode_wav_samples(bytes(buf))
-                n_out = max(1, int(round(len(s) * target_rate / rate)))
-                idx = np.minimum(
-                    (np.arange(n_out) * rate) // target_rate, max(len(s) - 1, 0)
-                )
-                res = s[idx] if len(s) else np.zeros(1, dtype=np.int16)
-                outs.append(_encode_wav_py(target_rate, res))
-                ns.append(len(res))
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([target_rate] * len(ids), pa.int64()),
-                    pa.array(ns, pa.int64()),
-                    pa.array(outs, pa.binary()),
-                ],
-                names=["media_id", "sample_rate", "n_samples", "payload"],
-            )
-
-    return df.mapInArrow(
-        fn, "media_id long, sample_rate long, n_samples long, payload binary"
-    )
-
-
-def audio_band_features(
-    df: DataFrame, n_bands: int = 8, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL spectral features with numpy only: log power in ``n_bands``
-    equal slices of the rfft magnitude spectrum — a deterministic
-    mel-filterbank stand-in with the same Spark shape (binary in,
-    array<float> out) a learned audio embedder would have."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            feats = []
-            for buf in b.column(payload_col).to_pylist():
-                _, s = _decode_wav_samples(bytes(buf))
-                spec = np.abs(np.fft.rfft(s.astype(np.float64)))
-                bands = np.array_split(spec, n_bands)
-                feats.append(
-                    [float(np.log1p(np.mean(p * p))) for p in bands]
-                )
-            yield pa.record_batch(
-                [pa.array(ids, pa.int64()),
-                 pa.array(feats, pa.list_(pa.float32()))],
-                names=["media_id", "feature"],
-            )
-
-    return df.mapInArrow(fn, "media_id long, feature array<float>")
-
-
-# ---------------------------------------------------------------------------
-# video: real frame container (fixed-size BMP frames behind an index
-# header — an uncompressed MJPEG-style stack, so frame extraction is
-# true byte-offset slicing, not a stub)
-# ---------------------------------------------------------------------------
-
-VIDEO_MAGIC = b"BMPV"
-
-
-def _encode_video_py(frames) -> bytes:
-    """Container bytes from a list of equal-size BMP frame payloads:
-    magic + u32 frame count + u32 frame size, then the frames."""
-    import struct
-
-    sizes = {len(f) for f in frames}
-    if len(sizes) != 1:
-        raise ValueError("all frames must be the same encoded size")
-    return (
-        VIDEO_MAGIC
-        + struct.pack("<II", len(frames), sizes.pop())
-        + b"".join(frames)
-    )
-
-
-def synthetic_video_media(
-    spark, n: int = 8, frames: int = 24, width: int = 16, height: int = 12
-) -> DataFrame:
-    """Deterministic real-container video table: clip i's frame f is a
-    true BMP whose red channel encodes f (a counter the tests can read
-    back) — every byte decodable."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        fr = []
-        for f in range(frames):
-            px = np.zeros((height, width, 3), dtype=np.uint8)
-            px[:, :, 2] = (i * 10 + f) % 256  # BMP stores BGR: red plane
-            fr.append(_encode_bmp_py(width, height, px))
-        rows.append(
-            (i, bytearray(_encode_video_py(fr)),
-             ("video", width, height, None, frames))
-        )
-    return from_lists(spark, rows, MEDIA_SCHEMA)
-
-
-def extract_frames(
-    df: DataFrame, every_n: int = 10, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL frame sampling: byte-offset slice of every n-th frame out
-    of the container (the executed form of :func:`frame_sample_plan`,
-    which only emits the index list), decoded to per-frame stats plus
-    the standalone BMP payload. Arrow-batched; a clip's bytes are
-    touched once and only the sampled frames are materialized — the
-    contract a 100 TB video corpus needs (seek, don't transcode)."""
-    import struct
-
-    import numpy as np
-    import pyarrow as pa
-
-    def fn(batches):
-        for b in batches:
-            ids = b.column("media_id").to_pylist()
-            out_id, out_idx, out_mean, out_frame = [], [], [], []
-            for mid, buf in zip(ids, b.column(payload_col).to_pylist()):
-                buf = bytes(buf)
-                if buf[:4] != VIDEO_MAGIC:
-                    raise ValueError("not a BMPV payload")
-                n_frames, fsize = struct.unpack_from("<II", buf, 4)
-                for f in range(0, n_frames, every_n):
-                    frame = buf[12 + f * fsize : 12 + (f + 1) * fsize]
-                    _, _, px = _decode_bmp_pixels(frame)
-                    out_id.append(mid)
-                    out_idx.append(f)
-                    out_mean.append(float(np.mean(px)))
-                    out_frame.append(frame)
-            yield pa.record_batch(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array(out_idx, pa.int64()),
-                    pa.array(out_mean, pa.float64()),
-                    pa.array(out_frame, pa.binary()),
-                ],
-                names=["media_id", "frame_idx", "mean_pixel", "frame"],
-            )
-
-    return df.mapInArrow(
-        fn, "media_id long, frame_idx long, mean_pixel double, frame binary"
-    )

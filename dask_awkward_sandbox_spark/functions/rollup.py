@@ -84,9 +84,10 @@ def rollup_step(
 ) -> DataFrame:
     """ONE cascade step: re-aggregate a finer rollup (as produced by
     :func:`rollup_once` / a previous step) to the coarser ``grain``,
-    never touching raw data. Extracted from :func:`rollup_cascade`
-    (r15) so callers can materialize/share an intermediate grain
-    between consumers and still derive the next grain from it."""
+    never touching raw data, so callers can materialize/share an
+    intermediate grain between consumers and still derive the next
+    grain from it. Calendar weeks straddle month/quarter/year
+    boundaries, so a week rollup must not feed a coarser step."""
     keys = [time_bucket(F.col("bucket"), grain).alias("bucket"), *(group_by or [])]
     value_cols = [
         c for c in prev.columns if c != "bucket" and c not in (group_by or [])
@@ -94,54 +95,3 @@ def rollup_step(
     return prev.groupBy(*keys).agg(*[_reagg_column(c) for c in value_cols])
 
 
-def rollup_cascade(
-    df: DataFrame,
-    ts_col: str,
-    grains: list[str],
-    measures: dict[str, Column],
-    group_by: list[str] | None = None,
-    distinct_cols: list[str] | None = None,
-    lg_k: int = 12,
-) -> dict[str, DataFrame]:
-    """The hypertable cascade: raw -> grains[0] (one raw scan), then
-    grains[i] -> grains[i+1] by re-aggregating the finer ROLLUP.
-    ``grains`` must go finest -> coarsest; measure names carry their
-    merge rule in the prefix (sum_/min_/max_/n_). Returns
-    {grain: rollup DataFrame}; read estimates off a sketch column
-    with :func:`sketch_estimate`."""
-    order = [GRAINS.index(g) for g in grains]
-    if order != sorted(order):
-        raise ValueError(f"grains must be finest->coarsest, got {grains}")
-    # calendar weeks straddle month/quarter/year boundaries, so a
-    # coarser grain derived FROM a week rollup would assign whole
-    # cross-boundary weeks to the month of their Monday — silently
-    # breaking the lossless re-aggregation contract. 'week' may only
-    # terminate a cascade; branch it off the day rollup separately.
-    if "week" in grains[:-1]:
-        raise ValueError(
-            "'week' does not nest into coarser calendar grains (weeks "
-            "straddle month/quarter/year boundaries); it may only be "
-            "the FINAL grain of a cascade — build a separate cascade "
-            "(e.g. ['day', 'week']) for weekly buckets"
-        )
-    for name in measures:
-        _reagg_column(name)  # validate prefixes before scanning anything
-    out: dict[str, DataFrame] = {}
-    finest = rollup_once(
-        df, ts_col, grains[0], measures, group_by, distinct_cols, lg_k
-    )
-    out[grains[0]] = finest
-    prev = finest
-    for g in grains[1:]:
-        prev = rollup_step(prev, g, group_by)
-        out[g] = prev
-    return out
-
-
-def sketch_estimate(rollup: DataFrame, col: str) -> DataFrame:
-    """Replace a carried sketch column ``hll_<col>`` with its distinct
-    estimate ``approx_distinct_<col>``."""
-    name = f"hll_{col}"
-    return rollup.withColumn(
-        f"approx_distinct_{col}", F.hll_sketch_estimate(F.col(name))
-    ).drop(name)

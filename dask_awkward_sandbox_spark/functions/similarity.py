@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline; two approximate scale
-paths: multi-table random-hyperplane LSH, and an IVF index (k-means
-coarse quantizer + posting-list probes). All per-row vector math is
-JVM-side (``zip_with`` + ``aggregate`` folds) — no Python in the row
-path; only quantizer training touches the driver, on a bounded sample.
+Brute-force cosine top-k as the exact baseline; the approximate
+building blocks: multi-table random-hyperplane LSH buckets, an IVF
+index (k-means coarse quantizer + list_id-partitioned index),
+product and int8 scalar quantization, the corpus x corpus
+``knn_join`` and embedding near-dup clustering. Quantizer training
+touches the driver only on a bounded sample.
 
 Scale design (1e9+ vectors): broadcast the (small) query set and
 stream the corpus through a single narrow stage for brute force; for
@@ -303,51 +304,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_hof(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """The all-JVM form of :func:`brute_force_topk` (broadcast join +
-    per-pair ``aggregate`` fold). Kept as the no-Python-workers
-    fallback and as the independent derivation the GEMM path is
-    tested against; same total order, same output contract.
-    """
-    # norms computed once per row, NOT per pair: the join evaluates
-    # its expressions per (query, neighbor) pair, so an inline
-    # cosine() would fold over each vector |queries| more times
-    # spread the corpus before the broadcast join: a single-file scan
-    # is ONE partition, and a broadcast join inherits the streamed
-    # side's partitioning — the per-pair cosine work would run on one
-    # task regardless of cores
-    nparts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    c = (
-        corpus.repartition(nparts)
-        .select(F.col(id_col).alias("nb_id"), as_double(F.col(vec_col)).alias("nb_vec"))
-        .withColumn("nb_norm", norm(F.col("nb_vec")))
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"), as_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("q_norm", norm(F.col("q_vec")))
-    j = c.join(F.broadcast(q), F.col("nb_id") != F.col("q_id"))
-    sim = round_half_away(
-        cosine_from_norms(
-            F.col("q_vec"), F.col("nb_vec"), F.col("q_norm"), F.col("nb_norm"),
-        ),
-        round_digits,
-    )
-    scored = j.select("q_id", "nb_id", sim.alias("sim"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("nb_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def adaptive_planes(
     n: int, target_occupancy: int = 250, min_planes: int = 3
 ) -> int:
@@ -389,32 +345,6 @@ def hyperplane(dim: int, plane: int) -> list[float]:
     return comps
 
 
-def _projections(vec: Column, dim: int, n_planes: int) -> Column:
-    """array<double> of the vector's projection onto each of the
-    ``n_planes`` deterministic hyperplanes. The plane components ride
-    along as ONE flat (n_planes*dim) literal array and the per-plane
-    loop is a ``transform`` lambda — codegen compiles one small loop
-    body regardless of plane count, where unrolled per-plane
-    aggregates made expression-tree size (and runtime) scale with
-    planes*tables. Each projection is the identical left-fold sum the
-    SQL oracle computes."""
-    flat = F.expr(
-        "array("
-        + ",".join(
-            repr(float(c)) + "D" for p in range(n_planes) for c in hyperplane(dim, p)
-        )
-        + ")"
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_planes - 1)),
-        lambda p: F.aggregate(
-            F.zip_with(vec, F.slice(flat, p * dim + 1, dim), lambda x, c: x * c),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-    )
-
-
 def with_lsh_buckets(
     df: DataFrame,
     id_col: str,
@@ -435,9 +365,8 @@ def with_lsh_buckets(
     ``np.cumsum`` (strictly sequential prefix adds — bit-identical to
     the ``F.aggregate`` fold and to the SQL oracle's list_sum, so the
     sign bits, and therefore every bucket id, cannot drift; the
-    :func:`with_lsh_buckets_hof` pin in tests/test_similarity.py holds
-    both forms equal). The HOF form stays below for callers that must
-    avoid Python workers."""
+    all-Catalyst twin in tests/similarity_twins.py is pinned equal to
+    this kernel by tests/test_similarity.py)."""
     import numpy as np
     import pyarrow as pa
 
@@ -484,147 +413,6 @@ def with_lsh_buckets(
     return df.select(id_col, vec_col).mapInArrow(
         kernel,
         f"{id_col} {id_type}, _vec array<double>, _norm double, t int, bucket int",
-    )
-
-
-def with_lsh_buckets_hof(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    planes: int = 3,
-    tables: int = 4,
-) -> DataFrame:
-    """The all-Catalyst form of :func:`with_lsh_buckets` (scan-side
-    expressions, zero Python): all planes*tables projections in ONE
-    pass per row (_projections), sign bits packed into per-table
-    buckets. Retained as the reference implementation after the r10
-    Arrow-kernel rewrite; the pin test holds both bit-identical."""
-    v = as_double(F.col(vec_col))
-    base = df.select(
-        F.col(id_col),
-        v.alias("_vec"),
-        norm(v).alias("_norm"),
-        _projections(v, dim, planes * tables).alias("_projs"),
-    )
-
-    def bucket(t: int) -> Column:
-        out = F.lit(0)
-        for p in range(planes):
-            out = out + F.when(
-                F.get(F.col("_projs"), t * planes + p) >= 0, F.lit(1 << p)
-            ).otherwise(F.lit(0))
-        return out
-
-    tb = F.array(
-        *[F.struct(F.lit(t).alias("t"), bucket(t).alias("bucket")) for t in range(tables)]
-    )
-    return base.select(
-        id_col,
-        "_vec",
-        "_norm",
-        F.explode(tb).alias("tb"),
-    ).select(
-        id_col,
-        "_vec",
-        "_norm",
-        F.col("tb.t").alias("t"),
-        F.col("tb.bucket").alias("bucket"),
-    )
-
-
-def neardup_pairs_blocked(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.4,
-    planes: int = 3,
-    tables: int = 4,
-    round_digits: int = 6,
-    small_corpus: bool = False,
-) -> DataFrame:
-    """Near-duplicate pairs via hyperplane-LSH blocking: candidates are
-    pairs sharing a (table, bucket); exact cosine verifies each
-    candidate; distinct collapses multi-table hits.
-
-    THE scale path for corpus-vs-corpus near-dup (the all-pairs form
-    is O(n^2) regardless of output size). The bucket join is equi on
-    (t, bucket) — each side shuffles once; a bucket of b vectors costs
-    b^2/2 candidate rows within that bucket only. Recall is the
-    OR-construction compound over ``tables`` independent hash tables;
-    both the Spark plan and the SQL oracle enumerate the same
-    deterministic planes, so the blocked semantics are exactly
-    value-checkable.
-
-    Execution shape (the part that matters under load): the bucket
-    self-join carries ONLY ids — candidate pairs are deduped FIRST
-    (`distinct` hash-partitions by pair, which both collapses the
-    multi-table duplicates before any vector math and spreads the
-    per-pair verification uniformly across cores, immune to the
-    quadratic per-bucket key skew) — and the exact cosine then runs
-    once per distinct pair via two slim joins back to the
-    norm-precomputed vector table.
-
-    Broadcast policy: every joined table here is CORPUS-derived
-    (bucket membership = |corpus| x tables rows; the vector table =
-    |corpus| rows of dim doubles), so hard broadcast hints would be an
-    executor OOM at 1e9 vectors — a hint overrides AQE's size logic.
-    The default plans plain equi-joins and lets AQE pick broadcast
-    from the RUNTIME size when a side is genuinely small, degrading to
-    linear shuffle joins at scale. ``small_corpus=True`` is the
-    explicit opt-in that pins the r2-era broadcast plan for corpora
-    the caller KNOWS fit in an executor (skips three exchanges)."""
-    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    b = with_lsh_buckets(df, id_col, vec_col, dim, planes, tables).select(
-        id_col, "t", "bucket"
-    )
-    if small_corpus:
-        # spread the streamed side across bucket keys (a single-file
-        # scan is one partition, and a broadcast join inherits the
-        # streamed side's partitioning — every candidate would
-        # enumerate on one task); the build side broadcasts
-        a = b.repartition(nparts, "t", "bucket").alias("a")
-        bb = F.broadcast(b.alias("b"))
-    else:
-        # both sides exchange on the equi keys — Catalyst spreads the
-        # scan, AQE upgrades to broadcast only if runtime stats allow
-        a, bb = b.alias("a"), b.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    vt = df.select(
-        F.col(id_col).alias("_vid"), as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", norm(F.col("_v")))
-    va, vb = vt.alias("va"), vt.alias("vb")
-    if small_corpus:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    j = (
-        cand.join(va, F.col("id_a") == F.col("va._vid"))
-        .join(vb, F.col("id_b") == F.col("vb._vid"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col("va._v").alias("_va"),
-            F.col("vb._v").alias("_vb"),
-            F.col("va._n").alias("_na"),
-            F.col("vb._n").alias("_nb"),
-        )
-    )
-    # per-pair cosine via the Arrow einsum kernel (r10; see
-    # cosine_pairs_arrow — rounding makes the set order-independent)
-    return cosine_pairs_arrow(j, dim, round_digits).filter(
-        F.col("sim") >= threshold
     )
 
 
@@ -834,12 +622,12 @@ def embedding_neardup_clusters(
     profile: dict | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate CLUSTERS — the collapse form that
-    stays linear where :func:`neardup_pairs_blocked` is
-    output-quadratic. r6: THE registered gate form (the r5 verdict's
+    stays linear where a blocked pair lister is output-quadratic.
+    r6: THE registered gate form (the r5 verdict's
     item 2 — the pair lister measured 15.7x wall at 10x data for 66x
     output pairs and would be the job that never finishes at 100x;
     this grows ~2.6x). ``round_digits`` rounds each verification
-    cosine (like the pair form) so the SQL oracle's
+    cosine so the SQL oracle's
     ``list_cosine_similarity`` agrees at the threshold boundary —
     a last-ulp fold difference must not flip an edge.
 
@@ -1097,58 +885,6 @@ def kmeans_train(
     return [list(map(float, c)) for c in C]
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nlist: int = 16,
-    nprobe: int = 4,
-    iters: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Approximate top-k via an IVF (inverted-file) index: k-means
-    coarse quantizer, corpus partitioned into nlist posting lists,
-    each query scans only its nprobe nearest lists.
-
-    Scale path vs brute force: cost drops ~nlist/nprobe, the probe
-    join is equi on list_id (corpus shuffles once on list assignment,
-    reusable across query batches), and recall is tunable via nprobe.
-    """
-    centroids = kmeans_train(corpus, vec_col, id_col, nlist=nlist, iters=iters)
-    c = (
-        corpus.select(
-            F.col(id_col).alias("nb_id"), as_double(F.col(vec_col)).alias("nb_vec")
-        )
-        .withColumn("list_id", assign_nearest_centroid(F.col("nb_vec"), centroids))
-        .withColumn("nb_norm", norm(F.col("nb_vec")))
-    )
-    sims_desc = F.reverse(F.array_sort(_centroid_sims(F.col("q_vec"), centroids)))
-    probes = F.transform(F.slice(sims_desc, 1, nprobe), lambda s: s["i"])
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"), as_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_norm", norm(F.col("q_vec")))
-        .withColumn("list_id", F.explode(probes))
-    )
-    j = c.join(F.broadcast(q), (F.col("nb_id") != F.col("q_id")) & (c["list_id"] == q["list_id"]))
-    sim = round_half_away(
-        cosine_from_norms(
-            F.col("q_vec"), F.col("nb_vec"), F.col("q_norm"), F.col("nb_norm"),
-        ),
-        round_digits,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("nb_id"))
-    return (
-        j.select("q_id", "nb_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def ivf_write_index(
     corpus: DataFrame,
     path: str,
@@ -1198,96 +934,8 @@ def ivf_write_index(
     return centroids
 
 
-def ivf_probe_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 4,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Top-k probe against a materialized IVF index (ivf_write_index).
-
-    The query batch is small by construction, so its probe lists are
-    collected driver-side and pushed as a STATIC ``list_id IN (...)``
-    filter — the scan partition-prunes to the probed directories
-    (PartitionFilters in the plan), the corpus side never shuffles
-    (queries broadcast), and nb assignment is read, not recomputed."""
-    sims_desc = F.reverse(F.array_sort(_centroid_sims(F.col("q_vec"), centroids)))
-    probes = F.transform(F.slice(sims_desc, 1, nprobe), lambda s: s["i"])
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"), as_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_norm", norm(F.col("q_vec")))
-        .withColumn("list_id", F.explode(probes))
-    )
-    probe_lists = sorted({r["list_id"] for r in q.select("list_id").distinct().collect()})
-    c = spark.read.parquet(path).filter(F.col("list_id").isin(probe_lists))
-    j = c.join(F.broadcast(q), (F.col("nb_id") != F.col("q_id")) & (c["list_id"] == q["list_id"]))
-    sim = round_half_away(
-        cosine_from_norms(
-            F.col("q_vec"), F.col("nb_vec"), F.col("q_norm"), F.col("nb_norm"),
-        ),
-        round_digits,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("nb_id"))
-    return (
-        j.select("q_id", "nb_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    planes: int = 4,
-    tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane signature buckets, exact
-    rank over the union of the query's buckets across ``tables``
-    independent hash tables (OR-construction — per-table misses are
-    uncorrelated, so recall compounds while cost stays ~tables/
-    2**planes of brute force). The probe join is equi on
-    (table, bucket); candidate pairs dedupe before ranking."""
-    c = with_lsh_buckets(
-        corpus.select(F.col(id_col).alias("nb_id"), F.col(vec_col)),
-        "nb_id", vec_col, dim, planes, tables,
-    ).withColumnsRenamed({"_vec": "nb_vec", "_norm": "nb_norm"})
-    q = with_lsh_buckets(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col)),
-        "q_id", vec_col, dim, planes, tables,
-    ).withColumnsRenamed({"_vec": "q_vec", "_norm": "q_norm"})
-    j = c.join(
-        F.broadcast(q),
-        (F.col("nb_id") != F.col("q_id")) & (c["t"] == q["t"]) & (c["bucket"] == q["bucket"]),
-    )
-    sim = round_half_away(
-        cosine_from_norms(
-            F.col("q_vec"), F.col("nb_vec"), F.col("q_norm"), F.col("nb_norm"),
-        ),
-        6,
-    )
-    cand = j.select("q_id", "nb_id", sim.alias("sim")).distinct()
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("nb_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 # ---------------------------------------------------------------------------
-# product quantization (IVF-PQ)
+# product quantization (PQ)
 # ---------------------------------------------------------------------------
 
 
@@ -1372,184 +1020,6 @@ def pq_encode(vec: Column, codebooks: list[list[list[float]]]) -> Column:
     return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), code_for)
 
 
-def pq_decode(codes: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Reconstruction: concatenate each subspace's chosen centroid —
-    the vector PQ actually 'sees'; ADC scores against a query equal
-    exact dot products against this reconstruction."""
-    m, ksub, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    flat = _flat_codebook(codebooks)
-    return F.flatten(
-        F.transform(
-            codes,
-            lambda code, mi: F.slice(flat, (mi * ksub + code) * dsub + 1, dsub),
-        )
-    )
-
-
-def pq_adc_lut(qvec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Per-query asymmetric-distance lookup table:
-    ``lut[m][j] = <q_sub_m, c_{m,j}>`` (``array<array<double>>``,
-    m x ksub). Computed ONCE per query row; scoring a candidate then
-    costs m array reads instead of dim multiplies."""
-    m, ksub, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    flat = _flat_codebook(codebooks)
-
-    def row(mi: Column) -> Column:
-        sub = F.slice(qvec, mi * dsub + 1, dsub)
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)),
-            lambda j: F.aggregate(
-                F.zip_with(
-                    sub,
-                    F.slice(flat, (mi * ksub + j) * dsub + 1, dsub),
-                    lambda x, c: x * c,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-        )
-
-    return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), row)
-
-
-def pq_score(codes: Column, lut: Column) -> Column:
-    """ADC inner product: ``sum_m lut[m][codes[m]]`` — m lookups per
-    candidate, the whole point of PQ."""
-    return F.aggregate(
-        F.zip_with(codes, lut, lambda code, row: F.get(row, code)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nlist: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
-    rerank: int = 32,
-    iters: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """IVF-PQ approximate top-k: IVF posting lists bound WHICH
-    candidates are scored (nprobe/nlist of the corpus), PQ-ADC bounds
-    WHAT each scoring costs (m lookups), and the top-``rerank`` ADC
-    shortlist is re-ranked with exact cosine for the final k.
-
-    Simplification vs canonical IVF-PQ: codes quantize the raw
-    vectors, not the per-list residuals — one shared codebook, and the
-    re-rank step absorbs the accuracy gap.
-
-    100 TB shape: corpus carries (list_id, codes, vec) — probes join
-    equi on list_id with the query batch broadcast; the ADC stage
-    never touches raw corpus vectors (codes are ~dim*8/m x smaller, so
-    the shortlist stage is the only one reading vector bytes)."""
-    X = _sample_matrix(corpus, vec_col, id_col, 4096)
-    centroids = kmeans_train(corpus, vec_col, id_col, nlist=nlist, iters=iters, X=X)
-    codebooks = pq_train(corpus, vec_col, id_col, m=m, ksub=ksub, iters=iters, X=X)
-    c = (
-        corpus.select(
-            F.col(id_col).alias("nb_id"), as_double(F.col(vec_col)).alias("nb_vec")
-        )
-        .withColumn("list_id", assign_nearest_centroid(F.col("nb_vec"), centroids))
-        .withColumn("codes", pq_encode(F.col("nb_vec"), codebooks))
-        .withColumn("nb_norm", norm(F.col("nb_vec")))
-    )
-    sims_desc = F.reverse(F.array_sort(_centroid_sims(F.col("q_vec"), centroids)))
-    probes = F.transform(F.slice(sims_desc, 1, nprobe), lambda s: s["i"])
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"), as_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_norm", norm(F.col("q_vec")))
-        .withColumn("lut", pq_adc_lut(F.col("q_vec"), codebooks))
-        .withColumn("list_id", F.explode(probes))
-    )
-    j = c.join(
-        F.broadcast(q),
-        (F.col("nb_id") != F.col("q_id")) & (c["list_id"] == q["list_id"]),
-    )
-    adc = pq_score(F.col("codes"), F.col("lut"))
-    w_adc = Window.partitionBy("q_id").orderBy(F.desc("adc"), F.asc("nb_id"))
-    shortlist = (
-        j.select(
-            "q_id", "nb_id", "q_vec", "q_norm", "nb_vec", "nb_norm", adc.alias("adc")
-        )
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= rerank)
-    )
-    sim = round_half_away(
-        cosine_from_norms(
-            F.col("q_vec"), F.col("nb_vec"), F.col("q_norm"), F.col("nb_norm")
-        ),
-        round_digits,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("nb_id"))
-    return (
-        shortlist.select("q_id", "nb_id", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def _knn_sides(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    left_vec: str,
-    right_id: str,
-    right_vec: str,
-    centroids: list[list[float]],
-    nprobe: int,
-    round_digits: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared cell-blocking prep for both knn_join forms: right rows
-    in their nearest cell, left rows exploded to their nprobe probe
-    cells, norms precomputed per row."""
-    r = right.select(
-        F.col(right_id).alias("_rid"),
-        as_double(F.col(right_vec)).alias("_rv"),
-        assign_nearest_centroid(
-            as_double(F.col(right_vec)), centroids, round_digits
-        ).alias("_cell"),
-    ).withColumn("_rnorm", norm(F.col("_rv")))
-    if left is right and nprobe == 1 and (left_id, left_vec) == (right_id, right_vec):
-        # self-join fast path: with one probe, the left cell IS the
-        # right cell — assignment (the O(n*nlist) term) runs once for
-        # both sides instead of twice
-        l = r.select(
-            F.col("_rid").alias("_lid"),
-            F.col("_rv").alias("_lv"),
-            F.col("_rnorm").alias("_lnorm"),
-            "_cell",
-        )
-    else:
-        sims = _centroid_sims(as_double(F.col(left_vec)), centroids, round_digits)
-        if nprobe == 1:
-            # argmax, not a full sort: same (sim, id) struct order
-            probe = F.array(F.array_max(sims)["i"])
-        else:
-            probe = F.transform(
-                F.slice(F.reverse(F.array_sort(sims)), 1, nprobe), lambda s: s["i"]
-            )
-        l = (
-            left.select(
-                F.col(left_id).alias("_lid"),
-                as_double(F.col(left_vec)).alias("_lv"),
-                probe.alias("_cells"),
-            )
-            .withColumn("_lnorm", norm(F.col("_lv")))
-            .select("_lid", "_lv", "_lnorm", F.explode("_cells").alias("_cell"))
-        )
-    return l, r
-
-
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -1565,7 +1035,7 @@ def knn_join(
     exclude_self: bool = False,
 ) -> DataFrame:
     """k-NN similarity JOIN — both sides large (corpus x corpus), the
-    shape ivf_topk's broadcast-panel path cannot take.
+    shape a broadcast query panel cannot take.
 
     IVF-cell blocking: every right vector lives in exactly its
     nearest cell; every left vector probes its ``nprobe`` nearest
@@ -1574,7 +1044,8 @@ def knn_join(
     brute_force_topk — the per-pair interpreted-fold constant is
     ~100x the BLAS constant, measured on the sf1 probe) and only each
     left row's top-k leave the worker. The pure-expression derivation
-    is :func:`knn_join_hof`, pinned row-equal in tests.
+    (``knn_join_hof`` in tests/similarity_twins.py) is pinned
+    row-equal in tests/test_knn_join.py.
 
     Returns (left_id, nn_id, rank, cos_sim), rank 1-based by
     (cos_sim desc, nn_id desc) — ``round_digits`` rounds the cosine
@@ -1735,61 +1206,6 @@ def knn_join(
     return out
 
 
-def knn_join_hof(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 10,
-    left_id: str = "vec_id",
-    left_vec: str = "embedding",
-    right_id: str = "vec_id",
-    right_vec: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    nlist: int = 16,
-    nprobe: int = 2,
-    round_digits: int | None = None,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """The all-JVM expression form of :func:`knn_join` (cell equi-join
-    + per-pair fold + rank()<=k window, whose WindowGroupLimit does
-    map-side per-key top-k before the shuffle — plan-asserted). Kept
-    as the no-Python-workers fallback and the independent derivation
-    the GEMM path is pinned against; same total order, same output
-    contract INCLUDING zero-norm vectors — null cosines (undefined)
-    are filtered before ranking, exactly as the GEMM form's -inf mask
-    drops them, so the two stay row-equal on degenerate inputs."""
-    from pyspark.sql import Window
-
-    if centroids is None:
-        centroids = kmeans_train(right, right_vec, right_id, nlist=nlist)
-    l, r = _knn_sides(
-        left, right, left_id, left_vec, right_id, right_vec,
-        centroids, nprobe, round_digits,
-    )
-    cos = cosine_from_norms(
-        F.col("_lv"), F.col("_rv"), F.col("_lnorm"), F.col("_rnorm")
-    )
-    if round_digits is not None:
-        cos = round_half_away(cos, round_digits)
-    cand = l.join(r, "_cell")
-    if exclude_self:
-        cand = cand.filter(F.col("_lid") != F.col("_rid"))
-    w = Window.partitionBy("_lid").orderBy(
-        F.col("_s").desc(), F.col("_rid").desc()
-    )
-    return (
-        cand.select("_lid", "_rid", cos.alias("_s"))
-        .filter(F.col("_s").isNotNull())
-        .withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= k)
-        .select(
-            F.col("_lid").alias(left_id),
-            F.col("_rid").alias("nn_id"),
-            F.col("_rank").cast("int").alias("rank"),
-            F.col("_s").alias("cos_sim"),
-        )
-    )
-
-
 def sq_train(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1856,65 +1272,6 @@ def sq_decode(codes: Column, lo: list[float], hi: list[float]) -> Column:
         F.sequence(F.lit(0), F.lit(len(lo) - 1)),
         lambda c, d: F.element_at(lo_a, d + 1)
         + c.cast("double") * F.element_at(iv_a, d + 1),
-    )
-
-
-def sq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    lo: list[float] | None = None,
-    hi: list[float] | None = None,
-    rerank: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k over the QUANTIZED corpus: scores come from
-    sq-decoded vectors (reading 1/4 the bytes at scale); optional
-    exact re-rank of the top ``rerank`` candidates against the true
-    vectors recovers brute-force ordering. Shares brute_force_topk's
-    panel-broadcast shape — corpus never shuffles."""
-    if lo is None or hi is None:
-        lo, hi = sq_train(corpus, vec_col, id_col)
-    enc = corpus.select(
-        F.col(id_col), F.col(vec_col),
-        sq_encode(as_double(F.col(vec_col)), lo, hi).alias("_codes"),
-    )
-    approx_corpus = enc.select(
-        F.col(id_col), sq_decode(F.col("_codes"), lo, hi).alias(vec_col)
-    )
-    if not rerank:
-        return brute_force_topk(
-            approx_corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-        )
-    shortlist = brute_force_topk(
-        approx_corpus, queries, k=max(rerank, k), id_col=id_col, vec_col=vec_col,
-    ).select("q_id", "nb_id")
-    exact = shortlist.join(
-        corpus.select(F.col(id_col).alias("nb_id"), F.col(vec_col).alias("_cv")),
-        "nb_id",
-    ).join(
-        queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("_qv")
-        ),
-        "q_id",
-    )
-    scored = exact.select(
-        "q_id", "nb_id",
-        round_half_away(
-            cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), 6
-        ).alias("sim"),
-    )
-    from pyspark.sql import Window
-
-    # the FULL brute_force_topk contract both branches share: one
-    # fixed (q_id, nb_id, sim) shape, round-before-rank, ties to the
-    # LOWEST nb_id
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("nb_id").asc())
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select("q_id", "nb_id", "sim")
     )
 
 

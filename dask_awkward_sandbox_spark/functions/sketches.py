@@ -1,95 +1,17 @@
-"""Mergeable sketches for 100 TB rollups: HyperLogLog distinct
-counts, approximate quantiles, count-min frequency, heavy hitters.
+"""Exact heavy hitters, the one sketch-family operator the
+event slots use.
 
-These are the operators that make petabyte analytics cheap: a sketch
-is a small, MERGEABLE summary, so a 1000-executor cluster computes
-per-partition sketches map-side, shuffles kilobytes instead of keys,
-and pre-aggregated sketch tables (e.g. daily) roll up to any coarser
-grain (monthly, all-time) WITHOUT rescanning the raw data — the
-pattern :func:`hll_rollup` + :func:`hll_merge` implements end-to-end.
-
-All JVM-native (Spark's datasketches HLL, Tungsten percentile_approx,
-count_min_sketch) — no Python in the row path; error bounds are the
-library's published guarantees (HLL rsd ~= 1.04/sqrt(2^lgK), KLL-style
-quantile accuracy via the ``accuracy`` knob, CMS eps/confidence).
+A mergeable summary is what makes petabyte analytics cheap: map-side
+partial counts shuffle one row per distinct value, and pre-aggregated
+count tables (e.g. a rollup's ``n_rows``) re-aggregate losslessly.
+The HLL distinct-count sketches live in functions/rollup.py, carried
+as ``hll_*`` columns of a time-bucket rollup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_distinct(
-    df: DataFrame, col: str, group_by: list[str] | None = None, rsd: float = 0.05
-) -> DataFrame:
-    """Approximate COUNT(DISTINCT col) (HyperLogLog++), optionally per
-    group. One map-side-combining shuffle of fixed-size registers —
-    the exact count's two-level distinct shuffles every key."""
-    agg = F.approx_count_distinct(col, rsd=rsd).alias("approx_distinct")
-    if group_by:
-        return df.groupBy(*group_by).agg(agg)
-    return df.agg(agg)
-
-
-def hll_rollup(
-    df: DataFrame, col: str, group_by: list[str], lg_k: int = 12
-) -> DataFrame:
-    """Per-group HLL sketches as a BINARY column (``hll``) — the
-    materializable form: write this table once, then answer distinct
-    counts at ANY coarser grouping with :func:`hll_merge`, never
-    touching the raw data again."""
-    return df.groupBy(*group_by).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias("hll")
-    )
-
-
-def hll_merge(sketches: DataFrame, group_by: list[str] | None = None) -> DataFrame:
-    """Merge a sketch table (from :func:`hll_rollup`) to a coarser
-    grain; returns the merged estimate as ``approx_distinct``."""
-    agg = F.hll_sketch_estimate(F.hll_union_agg(F.col("hll"))).alias(
-        "approx_distinct"
-    )
-    if group_by:
-        return sketches.groupBy(*group_by).agg(agg)
-    return sketches.agg(agg)
-
-
-def hll_estimate(sketch: Column) -> Column:
-    """Point estimate from one sketch value."""
-    return F.hll_sketch_estimate(sketch)
-
-
-def approx_quantiles(
-    df: DataFrame,
-    col: str,
-    probabilities: list[float],
-    group_by: list[str] | None = None,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Approximate quantiles (Greenwald-Khanna style): rank error
-    <= 1/accuracy. Returns one array column ``quantiles`` aligned
-    with ``probabilities``."""
-    agg = F.percentile_approx(
-        F.col(col), F.array(*[F.lit(p) for p in probabilities]), F.lit(accuracy)
-    ).alias("quantiles")
-    if group_by:
-        return df.groupBy(*group_by).agg(agg)
-    return df.agg(agg)
-
-
-def count_min(
-    df: DataFrame, col: str, eps: float = 0.001, confidence: float = 0.99, seed: int = 42
-) -> DataFrame:
-    """Count-min sketch of a column as one binary value: frequency
-    estimates within eps*N with the given confidence, in
-    O(1/eps * log(1/(1-confidence))) space. Mergeable across
-    partitions by construction (Spark aggregates it map-side)."""
-    return df.agg(
-        F.count_min_sketch(
-            F.col(col), F.lit(eps), F.lit(confidence), F.lit(seed)
-        ).alias("cms")
-    )
 
 
 def heavy_hitters(
@@ -120,72 +42,3 @@ def heavy_hitters(
     return out.orderBy(F.col("n").desc(), "value")
 
 
-class CountMinSketch:
-    """Decoded form of Spark's ``count_min_sketch`` binary (the SQL
-    function is write-only — no ``cms_query`` exists engine-side), so
-    a driver/service can answer point frequency queries from the tiny
-    sketch without touching the data again.
-
-    Wire format (big-endian, from Spark's CountMinSketchImpl /
-    stream-lib): int version=1, long totalCount, int depth, int width,
-    long hashA[depth], long table[depth][width]. Long items hash with
-    the stream-lib scheme (hashA[i]*item folded mod 2^31-1); string
-    items double-hash with Murmur3 (h1 + i*h2, Guava style).
-    """
-
-    PRIME_MODULUS = (1 << 31) - 1
-
-    def __init__(self, raw: bytes):
-        import struct
-
-        raw = bytes(raw)
-        (version,) = struct.unpack_from(">i", raw, 0)
-        if version != 1:
-            raise ValueError(f"unsupported CMS serialization version {version}")
-        (self.total_count,) = struct.unpack_from(">q", raw, 4)
-        self.depth, self.width = struct.unpack_from(">2i", raw, 12)
-        off = 20
-        self.hash_a = list(struct.unpack_from(f">{self.depth}q", raw, off))
-        off += 8 * self.depth
-        self.table = []
-        for _ in range(self.depth):
-            self.table.append(list(struct.unpack_from(f">{self.width}q", raw, off)))
-            off += 8 * self.width
-
-    def _bucket_long(self, item: int, i: int) -> int:
-        h = (self.hash_a[i] * item) & 0xFFFFFFFFFFFFFFFF
-        h = (h + (h >> 32)) & self.PRIME_MODULUS
-        return int(h % self.width)
-
-    def estimate_long(self, item: int) -> int:
-        return min(
-            self.table[i][self._bucket_long(item, i)] for i in range(self.depth)
-        )
-
-    def estimate_string(self, item: str) -> int:
-        from dask_awkward_sandbox_spark.utils import murmur3_x86_32
-
-        data = item.encode("utf-8")
-        h1 = murmur3_x86_32(data, 0)
-        h2 = murmur3_x86_32(data, h1)
-        best = None
-        for i in range(self.depth):
-            combined = (h1 + i * h2) & 0xFFFFFFFF
-            if combined >= 1 << 31:
-                combined -= 1 << 32
-            # Java %: truncated toward zero, sign of the dividend; then
-            # Math.abs — replicate exactly
-            rem = abs(combined) % self.width
-            v = self.table[i][rem]
-            best = v if best is None else min(best, v)
-        return best
-
-
-def cms_query(sketch_bytes: bytes, item) -> int:
-    """Point frequency estimate from a :func:`count_min` sketch value:
-    estimate >= true count always; <= true + eps*N with the sketch's
-    confidence."""
-    cms = CountMinSketch(sketch_bytes)
-    if isinstance(item, str):
-        return cms.estimate_string(item)
-    return cms.estimate_long(int(item))

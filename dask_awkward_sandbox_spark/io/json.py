@@ -9,8 +9,7 @@ schema string replaces the reference's jsonschema path, and
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def from_json(
@@ -35,18 +34,6 @@ def to_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write line-delimited JSON (one object per row, nested values
     as JSON structures) — the reference's to_json layout."""
     df.write.mode(mode).json(path)
-
-
-def parse_json_column(col: Column, schema: str) -> Column:
-    """Parse a JSON-string column into a typed struct (the streaming /
-    semi-structured path: events.props)."""
-    return F.from_json(col, schema)
-
-
-def json_schema_of(spark: SparkSession, sample: str) -> str:
-    """Infer a DDL schema from a sample JSON string (meta inference)."""
-    row = spark.range(1).select(F.schema_of_json(F.lit(sample)).alias("s")).head()
-    return row["s"]
 
 
 def _json_type(t: str, add_null: bool) -> str | list[str]:

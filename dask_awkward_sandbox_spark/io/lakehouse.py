@@ -1,41 +1,26 @@
-"""Lakehouse-style mutable-table operations on plain parquet.
+"""Lakehouse-style snapshot tables on plain parquet.
 
 The r5 verdict's item 5 asked for a Delta/Iceberg sink with
 MERGE-based upsert dedup — the production shape of streaming exact
 dedup at 100 TB. This container has NO lakehouse jars (pyspark 4.1.2
-ships 287 jars; `grep -iE 'delta|iceberg|hudi'` over them matches
-nothing but avro, `import delta` raises ModuleNotFoundError, and the
-environment is offline — `probe_lakehouse()` records the exact
-failures). So this module implements the OPERATIONAL CONTRACT those
-formats provide for upsert — "a MERGE touches only the files holding
-matched keys, and replaying the same batch is a no-op" — on plain
-parquet, via the one mutation primitive vanilla Spark does have:
-dynamic partition overwrite.
+ships 287 jars; none is delta, iceberg or hudi, and `import delta`
+raises ModuleNotFoundError). So this module implements the
+OPERATIONAL CONTRACT those formats provide for upsert — "a MERGE
+touches only the files holding matched keys, and replaying the same
+batch is a no-op" — on plain parquet.
 
-Layout: the table is partitioned by ``_mbucket = pmod(xxhash64(key),
+Layout: rows are hash-partitioned by ``_mbucket = pmod(xxhash64(key),
 n_buckets)``. An upsert batch computes the bucket set its keys touch,
 reads ONLY those partitions back (directory pruning — the read never
 scans the untouched 100 TB), anti-joins the old rows whose key is
-being replaced, unions the new rows, and dynamic-overwrites exactly
-the touched partition directories. Cost per merge is O(batch +
+being replaced, unions the new rows, and writes exactly the touched
+buckets into a new version dir. Cost per merge is O(batch +
 touched-bucket bytes), not O(table) — the same asymptotics as a
 Delta MERGE over a key-clustered table (file-level skipping there,
 directory-level here; a real deployment sizes n_buckets so a bucket
-is a few GB).
-
-Idempotence: replaying a batch rewrites the same buckets with the
-same contents — exactly-once results from at-least-once delivery,
-which is what `merge_sink` (the foreachBatch streaming face) needs.
-
-The plain merge table deliberately survives beside the snapshot
-table (r9, one upsert front door: :func:`upsert_table`): a
-single-writer, no-history pipeline gets the same O(touched buckets)
-merge with ZERO metadata machinery — no manifest writes, no version
-dirs, no vacuum to schedule — at the documented cost of no time
-travel, no crash window protection, no concurrency, and a strict
-schema. Anything needing those contracts uses ``snapshot=True``
-(time travel, exactly-once by batch id, CAS-serialized concurrent
-writers, add-column schema evolution — all on plain parquet).
+is a few GB). A manifest log over the version dirs gives time
+travel, exactly-once application by batch id, CAS-serialized
+concurrent writers and add-column schema evolution.
 """
 
 from __future__ import annotations
@@ -44,31 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.io.io import from_lists
-from dask_awkward_sandbox_spark.session import scoped_conf
 
 BUCKET_COL = "_mbucket"
-
-
-def probe_lakehouse() -> dict[str, str]:
-    """Record exactly why the real formats are unavailable here —
-    {format: error}. Empty dict would mean a real sink is possible."""
-    out: dict[str, str] = {}
-    try:
-        import delta  # noqa: F401
-    except Exception as e:  # pragma: no cover - environment-dependent
-        out["delta"] = f"{type(e).__name__}: {e}"
-    try:
-        import os
-
-        import pyspark
-
-        jars = os.listdir(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
-        hits = [j for j in jars if any(k in j.lower() for k in ("iceberg", "hudi"))]
-        if not hits:
-            out["iceberg"] = f"no iceberg/hudi jar among {len(jars)} bundled jars"
-    except Exception as e:  # pragma: no cover
-        out["iceberg"] = f"{type(e).__name__}: {e}"
-    return out
 
 
 def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
@@ -81,8 +43,8 @@ def _require_local(path: str) -> None:
     """This module's existence checks and manifest IO go through the
     local filesystem while the data writes go through Spark's Hadoop
     FS. On a URI path (hdfs://, s3a://) the two disagree — e.g. the
-    sink's os.path.isdir() would always be False, re-CREATING the
-    table every batch — so refuse loudly instead of clobbering."""
+    manifest dir would never be found, re-CREATING the table every
+    batch — so refuse loudly instead of clobbering."""
     if "://" in path:
         raise NotImplementedError(
             f"lakehouse tables require a local filesystem path, got {path!r}: "
@@ -95,8 +57,8 @@ def _collapse_batch(upd: DataFrame, keys: list[str]) -> DataFrame:
     """Deterministic within-batch collapse: ONE whole row per
     (key, bucket) — the struct-min picks the lexicographically
     smallest full row, so columns never mix across duplicate rows and
-    replay order cannot change the outcome. Shared by both table
-    flavors and both sinks' first-batch paths."""
+    replay order cannot change the outcome. Shared by table creation
+    and every upsert."""
     others = [c for c in upd.columns if c not in keys and c != BUCKET_COL]
     return (
         upd.groupBy(*keys, BUCKET_COL)
@@ -105,168 +67,8 @@ def _collapse_batch(upd: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def create_merge_table(
-    df: DataFrame, path: str, keys: list[str], n_buckets: int = 64
-) -> None:
-    """Materialize the initial table, hash-partitioned on the merge
-    key so later upserts prune to touched buckets. ``n_buckets`` is a
-    physical-layout choice: size it so one bucket's bytes are a
-    comfortable task unit at the target scale (64 here for testdata;
-    thousands at 100 TB). Duplicate keys in ``df`` collapse exactly
-    like a merge batch would, so a sink's FIRST batch honors the
-    same one-row-per-key contract as every later one."""
-    _require_local(path)
-    _collapse_batch(_with_bucket(df, keys, n_buckets), keys).write.partitionBy(
-        BUCKET_COL
-    ).mode("overwrite").parquet(path)
-
-
-def read_merge_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read back without the layout column."""
-    return spark.read.parquet(path).drop(BUCKET_COL)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    n_buckets: int = 64,
-) -> None:
-    """MERGE (upsert): rows in ``updates`` replace same-key rows in
-    the table; new keys insert. Duplicate keys WITHIN the batch are
-    collapsed deterministically (min over the full remaining row, so
-    replay order cannot change the outcome).
-
-    Only the partitions whose bucket appears in the batch are read
-    and rewritten: ``spark.sql.sources.partitionOverwriteMode=dynamic``
-    scoped to this write. The untouched table is never scanned.
-
-    CRASH WINDOW (honest limitation): this reads and dynamic-
-    overwrites the SAME path with no log, so a crash inside the write
-    commit can leave a touched bucket partial, and a later replay
-    would read that partial state as "existing". Replay idempotence
-    holds for fully-committed writes only. The snapshot-table API
-    below removes the window entirely (new version dirs + atomic
-    manifest publish) — prefer it when history or crash safety
-    matters."""
-    _require_local(path)
-    upd = _collapse_batch(_with_bucket(updates, keys, n_buckets), keys)
-    touched = [r[BUCKET_COL] for r in upd.select(BUCKET_COL).distinct().collect()]
-    if not touched:
-        return
-    existing = (
-        spark.read.parquet(path)
-        .filter(F.col(BUCKET_COL).isin(touched))
-        .join(upd.select(*keys), keys, "left_anti")
-    )
-    # the plain table has no manifest to version a schema, so a batch
-    # whose columns differ from the table's is a DIRECTED error — the
-    # old select(*existing.columns) silently DROPPED new columns and
-    # crashed opaquely on missing ones (r9 self-review)
-    if set(upd.columns) != set(existing.columns):
-        extra = sorted(set(upd.columns) - set(existing.columns))
-        missing = sorted(set(existing.columns) - set(upd.columns))
-        raise ValueError(
-            f"merge_upsert: batch schema differs from the table's "
-            f"(extra columns {extra}, missing {missing}); the plain table "
-            "cannot evolve schemas — use the snapshot flavor "
-            "(upsert_table(snapshot=True)) for add-column evolution"
-        )
-    # ... and same-name/different-TYPE drift must be directed too (r9
-    # advice): a name-only check let a retyped column pass here and
-    # then fail opaquely (or silently coerce) inside unionByName/write
-    upd_types = {f.name: f.dataType for f in upd.schema.fields}
-    drift = sorted(
-        f"{f.name}: table {f.dataType.simpleString()} vs batch "
-        f"{upd_types[f.name].simpleString()}"
-        for f in existing.schema.fields
-        if f.name != BUCKET_COL and upd_types[f.name] != f.dataType
-    )
-    if drift:
-        raise ValueError(
-            f"merge_upsert: batch column types differ from the table's "
-            f"({'; '.join(drift)}); the plain table cannot evolve "
-            "schemas — recast the batch to the table's types"
-        )
-    out = existing.unionByName(upd.select(*existing.columns))
-    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        out.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-
-
-def upsert_table(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    n_buckets: int = 64,
-    snapshot: bool = True,
-    batch_id: str | int | None = None,
-) -> bool:
-    """ONE upsert front door over both table flavors (r9, the r8
-    verdict's unification item): creates the table on first call,
-    merges after. Returns True if the batch changed the table.
-
-    ``snapshot=True`` (default) — the manifest-logged table: time
-    travel, exactly-once by ``batch_id``, CAS-serialized concurrent
-    writers, add-column schema evolution, vacuum-able history.
-    ``snapshot=False`` — the plain dynamic-partition-overwrite table:
-    same O(touched buckets) merge with zero metadata machinery, for
-    single-writer no-history pipelines that want the lightest path
-    (documented trade-offs at :func:`merge_upsert`; ``batch_id``
-    dedup needs the manifest, so it is rejected here)."""
-    import os
-
-    if snapshot:
-        if not list_snapshot_versions(path):
-            create_snapshot_table(updates, path, keys, n_buckets,
-                                  batch_id=batch_id)
-            return True
-        return snapshot_upsert(spark, path, updates, batch_id=batch_id)
-    if batch_id is not None:
-        raise ValueError(
-            "batch_id dedup needs the manifest log — use snapshot=True "
-            "(the plain table cannot tell a replay from a new batch)"
-        )
-    if not os.path.isdir(path):
-        create_merge_table(updates, path, keys, n_buckets)
-    else:
-        merge_upsert(spark, path, updates, keys, n_buckets)
-    return True
-
-
-def merge_dedup_sink(
-    stream_df: DataFrame,
-    path: str,
-    keys: list[str],
-    checkpoint: str,
-    n_buckets: int = 64,
-):
-    """The streaming face: foreachBatch MERGE — the production shape
-    of streaming exact dedup. dropDuplicatesWithinWatermark bounds
-    state by TIME; this bounds it by KEY SPACE for keys that can
-    recur beyond any watermark (document ids in a curation pipeline):
-    every micro-batch upserts, so the TABLE is the dedup state, with
-    no executor-memory growth. Replayed batches (at-least-once
-    sources) rewrite the same buckets with the same bytes —
-    exactly-once table contents."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_table(
-            batch_df.sparkSession, path, batch_df, keys, n_buckets,
-            snapshot=False,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Snapshot tables (r6): a manifest log on top of the bucket layout —
-# the two contracts dynamic-partition-overwrite alone cannot give:
 # TIME TRAVEL (pin any past version for reads) and EXACTLY-ONCE batch
 # application by id (a replayed micro-batch is a metadata no-op, not
 # a byte-identical rewrite). This is the single-writer core of what
@@ -281,9 +83,9 @@ def merge_dedup_sink(
 #                                        batch ids
 # A merge writes ONLY its touched buckets into a NEW version dir and
 # publishes a manifest pointing the untouched buckets at their old
-# dirs — old versions stay readable until vacuum() drops dirs no kept
-# manifest references. Publishing is a single atomic rename, so a
-# reader always sees a complete version or the previous one.
+# dirs — old versions stay readable. Publishing is a single atomic
+# rename, so a reader always sees a complete version or the previous
+# one.
 # ---------------------------------------------------------------------------
 
 import json as _json
@@ -312,7 +114,7 @@ def _read_manifest(path: str, version: int | None = None) -> dict:
         raise FileNotFoundError(f"no snapshot manifests under {path}")
     v = versions[-1] if version is None else version
     if v not in versions:
-        raise ValueError(f"version {v} not in {versions} (vacuumed or never written)")
+        raise ValueError(f"version {v} not in {versions}")
     with open(_manifest_file(path, v)) as f:
         return _json.load(f)
 
@@ -553,7 +355,7 @@ def snapshot_upsert(
         new_version = m["version"] + 1
         # writer-unique data dir: two racing writers must never target
         # the same directory — the manifest, not the name, assigns
-        # ownership, and vacuum drops unreferenced dirs (lost races)
+        # ownership
         dname = f"v{new_version}_{uuid.uuid4().hex[:8]}"
         vdir = _os.path.join(path, dname)
         if existing is not None:
@@ -628,65 +430,3 @@ def snapshot_upsert(
     raise last if last is not None else RuntimeError("unreachable")
 
 
-def vacuum_snapshots(
-    path: str, keep_last: int = 1, min_age_seconds: float = 3600.0
-) -> list[str]:
-    """Drop version DIRS no kept manifest references (and the dropped
-    manifests themselves). A dir stays as long as ANY kept manifest
-    points a bucket at it — current data is never deleted no matter
-    how old its dir is. Returns the removed dir names.
-
-    ``min_age_seconds`` is the retention window for UNREFERENCED dirs
-    (r8 review — the Delta VACUUM retention rule): with concurrent
-    writers supported, an in-flight upsert's freshly-written data dir
-    is unreferenced until its CAS publish, so vacuuming it would let
-    the subsequent successful publish commit a manifest pointing at a
-    deleted directory. Only unreferenced dirs older than the window
-    (mtime) are removed; run vacuum with 0 only when no writer can be
-    in flight."""
-    import shutil
-    import time
-
-    versions = list_snapshot_versions(path)
-    kept = versions[-keep_last:]
-    referenced = set()
-    for v in kept:
-        referenced.update(_read_manifest(path, v)["buckets"].values())
-    removed = []
-    for v in versions:
-        if v in kept:
-            continue
-        _os.remove(_manifest_file(path, v))
-    cutoff = time.time() - min_age_seconds
-    for d in _os.listdir(path):
-        if d.startswith("v") and d != MANIFEST_DIR and d not in referenced:
-            full = _os.path.join(path, d)
-            if _os.path.isdir(full) and _os.path.getmtime(full) <= cutoff:
-                shutil.rmtree(full)
-                removed.append(d)
-    return sorted(removed)
-
-
-def snapshot_dedup_sink(
-    stream_df: DataFrame,
-    path: str,
-    keys: list[str],
-    checkpoint: str,
-    n_buckets: int = 64,
-):
-    """Streaming dedup on a snapshot table: each micro-batch is
-    applied with its Structured-Streaming batch_id, so a restarted
-    query re-delivering a batch is a metadata no-op — exactly-once
-    table contents AND a time-travelable history of every batch."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_table(
-            batch_df.sparkSession, path, batch_df, keys, n_buckets,
-            snapshot=True, batch_id=f"stream-{batch_id}",
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )

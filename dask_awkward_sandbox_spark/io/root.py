@@ -14,7 +14,7 @@ pluggable backend:
 
 - ``UprootBackend`` — the production path; uproot is NOT in this
   container, so it raises ``DecodeUnavailable`` with a clear message
-  (same gate as functions/multimodal.py's PIL/ffmpeg decode).
+  (the same DecodeUnavailable gate as jpegcodec's unsupported modes).
 - ``RawRootBackend`` (r8) — REAL byte decode per the public format
   (io/rootfile.py): TFile header + TKey chain; flat, leaf-counter
   jagged, fixed-size, simple-container and basic user-class
@@ -113,7 +113,7 @@ class UprootBackend:
 class RawRootBackend:
     """REAL byte-level decode for flat-branch ROOT files (r8; the
     r6/r7 verdicts' "minimal uncompressed-basket reader" — the
-    BMP/WAV-codec precedent applied to TTrees). io/rootfile.py holds
+    BMP-codec precedent applied to TTrees). io/rootfile.py holds
     the format layer: TFile header walk, TKey chain, big-endian basket
     arrays, all four compression framings (ZL/L4/ZS/XZ), embedded
     TTree streamer walk, leaf-counter jagged branches, simple
@@ -303,7 +303,7 @@ class RawRootBackend:
 
 class SyntheticNanoBackend:
     """Deterministic nanoAOD-shaped decode fake — the testable stand-in
-    the container allows (same policy as multimodal's BMP/WAV codecs:
+    the container allows (same policy as multimodal's BMP/PNG codecs:
     plumbing real, external-lib decode replaced by a pure function).
 
     Branches mirror a nanoAOD Events tree slice: scalar ``event`` /

@@ -58,7 +58,7 @@ after fLowerBound with the member-wise bit on the element-class
 Version_t, so genuine clones branches misalign (failing loudly on the
 span checks) — production clones reads ride uproot.
 
-What stays GATED (DecodeUnavailable, like multimodal's PIL/ffmpeg):
+What stays GATED (DecodeUnavailable, like jpegcodec's unsupported modes):
 variable-length branches WITHOUT a counter leaf (their per-entry
 offsets live in TBasket/TTree streamer metadata this module does not
 parse), classes whose streamer declares object/array/base members
@@ -66,7 +66,7 @@ parse), classes whose streamer declares object/array/base members
 and class/object back-reference tags inside object arrays. All four
 ROOT compression algorithms (ZL/L4/ZS/XZ) decode. The writer exists
 so tests can round-trip real bytes without uproot in the container
-(the BMP/WAV codec precedent); ``embed_tree=True`` writes the
+(the BMP codec precedent); ``embed_tree=True`` writes the
 embedded layout.
 """
 

@@ -145,16 +145,6 @@ def list_slice(arr: Column, sl: slice) -> Column:
     return let(arr, body=build)
 
 
-def _ndim_of(dtype) -> int:
-    from pyspark.sql import types as T
-
-    d = 0
-    while isinstance(dtype, T.ArrayType):
-        d += 1
-        dtype = dtype.elementType
-    return d
-
-
 def _apply_at_depth(expr: Column, depth: int, fn) -> Column:
     """Apply ``fn`` to the value ``depth`` list-levels below ``expr``."""
     if depth <= 0:
@@ -185,7 +175,7 @@ def getitem(arr: Column, index, ndim: int | None = None) -> Column:
     ValueError ("...sliced axes is greater than...").
 
     ``ndim`` (count of list levels) is only needed for the
-    Ellipsis-in-tuple form; pass ``_ndim_of(field.dataType)`` or let
+    Ellipsis-in-tuple form; pass the field's list depth or let
     :class:`~..operators.elementwise.NestedArray` carry it.
     """
     if isinstance(index, tuple):

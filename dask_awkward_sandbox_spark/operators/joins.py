@@ -106,7 +106,7 @@ def asof_join(
 
     Null ``on`` rows: pandas refuses null keys; here they stay inert
     — a null-ts right row never matches anything (filtered before the
-    union, same as asof_join_skew), a null-ts left row stays in the
+    union), a null-ts left row stays in the
     output with null match columns in EVERY direction (r7: forward/
     nearest previously let the null-ts left row — which sorts first
     under asc — see every right row in its following frame).
@@ -145,7 +145,7 @@ def asof_join(
         .withColumn("_side", F.lit(0))
         # a null-`on` right row can never be evidence for a match —
         # drop it before the union so its payload cannot attach to
-        # any carry (r7 ADVICE; asof_join_skew already did this)
+        # any carry (r7 ADVICE)
         .filter(F.col(on).isNotNull())
     )
     allc = l_tag.unionByName(r_tag, allowMissingColumns=True)
@@ -223,151 +223,6 @@ def asof_join(
         pick(on).alias(on + suffix),
         *[pick(c).alias(c) for c in carried],
     )
-
-
-def asof_join_skew(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str | list[str] | None = None,
-    tolerance=None,
-    suffix: str = "_r",
-    slice_width: int = 3600,
-) -> DataFrame:
-    """:func:`asof_join` for HOT by-keys — the two-phase segmented
-    scan.
-
-    The union-trick asof is ONE keyed window, so a single dominant
-    key (one instrument with 40% of the quotes) pins one reducer: a
-    window partition cannot be split by AQE. This variant slices TIME
-    into fixed-width buckets (``_slice = floor(trunc(on) /
-    slice_width)`` — the timestamp is first truncated TOWARD ZERO by
-    ``cast('long')``, so ``on=-0.5`` lands in slice 0, not -1; the
-    assignment is monotone and used consistently on both sides, so
-    only the slice-boundary positions shift, never correctness) so
-    the hot key's rows spread across its time slices:
-
-    1. **local**: the carry-forward window runs per ``(by, _slice)``
-       — the hot key now occupies many partitions, one per slice;
-    2. **boundary**: per ``(by, _slice)`` the last right-side row is
-       a struct-max aggregate; a window over the tiny boundary table
-       (one row per key x slice, ordered by slice, rows up to -1)
-       computes the carry ENTERING each slice — the classic parallel
-       prefix-sum boundary pass, driver-free;
-    3. **stitch**: join the entering carry back on ``(by, _slice)``
-       (the window's partitioning is reused — only the boundary
-       table shuffles) and ``coalesce(local, entering)``.
-
-    Same output contract as :func:`asof_join` (backward, right rows
-    visible at equal timestamps, ``tolerance`` staleness nulling);
-    equal-timestamp right rows resolve by struct-max on (on, payload)
-    at slice boundaries, which is a DETERMINISTIC refinement of the
-    base version's unspecified tie order. ``on`` must be numeric
-    (epoch seconds/micros); pick ``slice_width`` so one key's rows
-    per slice fit a task (e.g. an hour of ticks). Cost: the same
-    one big shuffle, plus a key x slice-sized boundary pass.
-    """
-    from pyspark.sql import Window
-
-    _check_reserved(
-        "asof_join_skew",
-        {"_side", "_k", "_slice", "_l", "_b", "_cin"},
-        left.columns,
-        right.columns,
-    )
-    by_cols = [by] if isinstance(by, str) else list(by or [])
-    payload = [c for c in right.columns if c not in {*by_cols, on}]
-    overlap = set(payload) & set(left.columns)
-
-    def rname(c: str) -> str:
-        return c + suffix if c in overlap or c == on else c
-
-    carried = [rname(c) for c in payload]
-    l_tag = left.withColumn("_side", F.lit(1))
-    r_tag = right.select(
-        *by_cols, F.col(on), *[F.col(c).alias(rname(c)) for c in payload]
-    ).withColumn("_side", F.lit(0))
-    # null-timestamp rows (base contract, pandas-aligned: merge_asof
-    # refuses null keys outright, we keep the rows inert): a null-ts
-    # RIGHT row can never be a match — drop it here so its payload
-    # cannot leak through the boundary cascade; a null-ts LEFT row
-    # stays in the output with null match columns — it rides a
-    # sentinel slice that sorts before every real timestamp (an
-    # un-slicied null would fall out of the inner stitch join and
-    # silently DROP the row).
-    r_tag = r_tag.filter(F.col(on).isNotNull())
-    _SENT = -(2**62)
-    k = F.coalesce(F.col(on).cast("long"), F.lit(_SENT))
-    allc = l_tag.unionByName(r_tag, allowMissingColumns=True).withColumn(
-        "_k", k
-    ).withColumn("_slice", F.floor(F.col("_k") / F.lit(slice_width)))
-
-    # 1. local carry, per (by, slice) — the hot key is split by time.
-    # Ordered by the EXACT `on` (r7 ADVICE: ordering by the truncated
-    # _k let a left row at ts=1.2 see a right row at ts=1.7 when both
-    # share a truncated second); _k is only the slice assignment.
-    # Nulls-first under asc parks the sentinel slice's null-ts left
-    # rows together (no right rows there — they were filtered).
-    # The carry is ONE struct so all matched columns come from the
-    # same right row (r7 ADVICE; shape matches the boundary struct
-    # below so the stitch can coalesce whole rows).
-    w_local = (
-        Window.partitionBy(*by_cols, "_slice")
-        .orderBy(F.col(on).asc(), F.col("_side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r_row = F.when(
-        F.col("_side") == 0,
-        F.struct(F.col("_k"), F.col(on), *[F.col(c) for c in carried]),
-    )
-    filled = allc.select(
-        "*",
-        F.last(r_row, ignorenulls=True).over(w_local).alias("_l"),
-    ).filter(F.col("_side") == 1)
-
-    # 2. boundary pass: last right row per (by, slice) -> carry
-    # entering each slice. Slices with left-but-no-right rows must
-    # appear (null boundary) so the entering carry still reaches them.
-    slices = allc.select(*by_cols, "_slice").distinct()
-    bnd = (
-        allc.filter(F.col("_side") == 0)
-        .groupBy(*by_cols, "_slice")
-        .agg(
-            F.max(
-                F.struct(F.col("_k"), F.col(on), *[F.col(c) for c in carried])
-            ).alias("_b")
-        )
-    )
-    w_b = (
-        Window.partitionBy(*by_cols)
-        .orderBy("_slice")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    entering = slices.join(bnd, [*by_cols, "_slice"], "left").select(
-        *by_cols,
-        "_slice",
-        F.last("_b", ignorenulls=True).over(w_b).alias("_cin"),
-    )
-
-    # 3. stitch: local carry wins; else the carry entering the slice.
-    # Whole-STRUCT coalesce (r7): per-column coalesce could mix a
-    # local right row's null payload cell with the boundary row's
-    # value — the chosen match must be one right row, atomically.
-    chosen = F.coalesce(F.col("_l"), F.col("_cin"))
-    out = filled.join(entering, [*by_cols, "_slice"]).select(
-        *[
-            c
-            for c in filled.columns
-            if c not in ("_l", "_side", "_slice", "_k", *carried)
-        ],
-        chosen.getField(on).alias(on + suffix),
-        *[chosen.getField(c).alias(c) for c in carried],
-    ).drop("_cin")
-    if tolerance is not None:
-        stale = F.col(on) - F.col(on + suffix) > F.lit(tolerance)
-        for c in [on + suffix, *carried]:
-            out = out.withColumn(c, F.when(~F.coalesce(stale, F.lit(True)), F.col(c)))
-    return out
 
 
 def range_join(
@@ -470,25 +325,3 @@ def interval_join(
     return out.drop("_bin")
 
 
-def suggest_bin_width(
-    intervals: DataFrame,
-    lo: str = "lo",
-    hi: str = "hi",
-    floor: int = 1,
-) -> int:
-    """Data-driven ``bin_width`` for :func:`range_join` /
-    :func:`interval_join`: the median interval length (one
-    ``percentile_approx`` aggregate — a mergeable sketch, one
-    map-side-combined pass, driver gets a single number).
-
-    The candidate-volume term is sum(len/bin_width) bins per side and
-    the per-bin occupancy term grows as bin_width does; the median
-    length balances the two for mixed workloads — intervals near the
-    median touch ~2 bins. Skewed length distributions (a few huge
-    intervals) keep the p50 small so the bulk stays cheap; the huge
-    intervals pay proportional bins, which is the correct linear
-    cost."""
-    med = intervals.select(
-        F.percentile_approx(F.col(hi) - F.col(lo), 0.5).alias("m")
-    ).collect()[0]["m"]
-    return max(floor, int(med or floor))

@@ -72,11 +72,3 @@ def ntile(n: int, w: WindowSpec) -> Column:
     return F.ntile(n).over(w)
 
 
-def percent_rank(w: WindowSpec) -> Column:
-    """(rank - 1) / (rows - 1); 0.0 for a single-row partition."""
-    return F.percent_rank().over(w)
-
-
-def cume_dist(w: WindowSpec) -> Column:
-    """Fraction of partition rows ordered at or before the current."""
-    return F.cume_dist().over(w)

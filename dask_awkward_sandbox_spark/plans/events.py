@@ -3,9 +3,8 @@
 These are the batch equivalents of the streaming/ module's structured
 streaming pipelines — identical transformations, so the oracle checks
 the streaming logic's semantics too (tests/test_streaming.py pins each
-stream to its batch twin; q_events_windowed grew into the hypertable
-rollup + heavy-hitters slot in late r5, its hour leg being the batch
-face of streaming_rollup).
+stream to its batch twin; the hypertable rollup + heavy-hitters legs
+live in q_events_funnel_retention).
 """
 
 from __future__ import annotations
@@ -581,7 +580,7 @@ def _rollup_hh_hll_legs(e):
     - 'hour': functions.rollup.rollup_once — the time-bucketed
       continuous aggregate from raw events;
     - 'day': the CASCADE — derived by re-aggregating the HOUR ROLLUP
-      (rollup_cascade), never re-reading raw events, while the oracle
+      (rollup_step), never re-reading raw events, while the oracle
       computes day directly from the raw table: the driver's hash
       proves the lossless re-aggregation contract every round;
     - 'hh': functions.sketches.heavy_hitters over event_type (exact

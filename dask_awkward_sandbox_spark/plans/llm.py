@@ -878,8 +878,8 @@ def q_ann_bruteforce(spark, sf_dir):
     """Exact cosine top-5 for every 50th vector. Arrow-batched GEMM:
     queries broadcast as a dense matrix, each corpus batch computes
     its pair block as one BLAS matmul and emits only per-batch top-k
-    candidates (similarity.brute_force_topk; the all-JVM HOF fold is
-    kept as brute_force_topk_hof and pinned equal by
+    candidates (similarity.brute_force_topk; an all-JVM HOF-fold twin
+    in tests/similarity_twins.py is pinned equal by
     tests/test_similarity.py — at sf1 the GEMM path measures ~2x
     faster and its per-pair constant is ~40x lower, which is what
     survives the n·q growth of an exact baseline).
@@ -988,9 +988,7 @@ def q_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate CLUSTERS (r6: the gate slot is
     the scale-safe cluster-collapse form — the r5 verdict's item 2;
     the pair LISTER it replaces is output-quadratic on clustered
-    embeddings, 15.7x wall at 10x data for 66x output pairs, and
-    stays available as `similarity.neardup_pairs_blocked` under its
-    pytest value checks in tests/test_similarity.py).
+    embeddings, 15.7x wall at 10x data for 66x output pairs).
 
     Shape: adaptive fine buckets (occupancy target 8 — planes =
     ceil(log2(n/8))) from the same deterministic hash-mixed
@@ -1022,9 +1020,7 @@ def q_embedding_neardup(spark, sf_dir):
 def q_ann_lsh_buckets(spark, sf_dir):
     """The deterministic half of hyperplane-LSH top-k under a full
     value oracle: every vector's (table, bucket) membership — sign
-    bits of projections onto the shared deterministic planes. The
-    end-to-end approximate top-k built on these buckets
-    (similarity.lsh_bucket_topk) keeps its recall floor in pytest."""
+    bits of projections onto the shared deterministic planes."""
     b = similarity.with_lsh_buckets(
         _emb(spark, sf_dir), "vec_id", "embedding", EMB_DIM,
         planes=LSH_PLANES, tables=LSH_TABLES,
@@ -1086,9 +1082,7 @@ def q_ann_ivf_assign(spark, sf_dir):
     what the oracle checks — a write/read/partition-layout bug
     breaks the match. Similarities are rounded to 6 digits on both
     sides so a last-ulp fold difference cannot flip the argmax; ties
-    break to the higher list id in both engines. The partition-pruned
-    probe (similarity.ivf_probe_indexed) keeps its plan-asserted
-    PartitionFilters + recall bounds in pytest.
+    break to the higher list id in both engines.
 
     r5: the slot also value-checks the PQ ENCODER (similarity.
     pq_encode) on the read-back vectors — iters=0 makes the codebook

@@ -101,26 +101,6 @@ def sessionize_stateful(
     )
 
 
-def run_stream_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"):
-    """Drive a streaming DF to a memory sink until all input is
-    consumed; returns the in-memory table name.
-
-    Uses Trigger.AvailableNow: the query processes everything the
-    source currently has and then terminates itself. This matters for
-    stateful operators with ProcessingTimeTimeout, where the default
-    trigger schedules empty micro-batches forever to poll for timed-out
-    state, so ``processAllAvailable()`` never observes an idle query."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name
-
-
 def stream_dedup_exact(stream: DataFrame, keys: list[str] | None = None, watermark: str = "1 hour"):
     """Streaming exact dedup: keep the first arrival per key within
     the watermark horizon (the streaming face of
@@ -165,99 +145,3 @@ def run_stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
     q.awaitTermination()
 
 
-def stream_stream_attribution_join(
-    stream: DataFrame,
-    first_type: str = "view",
-    then_type: str = "purchase",
-    within: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream INTERVAL join: attribute each ``then_type`` event
-    to every ``first_type`` event by the same user in the preceding
-    ``within`` window — the canonical attribution shape (view ->
-    purchase), expressed as two watermarked streams over the same
-    source.
-
-    Scale/state contract: both sides carry a watermark and the join
-    condition bounds event-time distance, so Spark evicts buffered
-    rows once the watermark passes their join horizon — state is
-    O(rate x within), never unbounded. The equi-part of the condition
-    (user_id) is the shuffle key; the range part prunes in-state.
-    Inner joins under AvailableNow are exactly the batch interval
-    join, which is the pytest oracle."""
-    v = (
-        stream.filter(F.col("event_type") == first_type)
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("v_event"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    p = (
-        stream.filter(F.col("event_type") == then_type)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("p_event"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    return v.join(
-        p,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {within}")),
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "v_event",
-        "p_event",
-        F.unix_micros("v_ts").alias("v_us"),
-        F.unix_micros("p_ts").alias("p_us"),
-    )
-
-
-def streaming_rollup(
-    stream: DataFrame,
-    ts_col: str,
-    grain: str,
-    measures: dict,
-    group_by: list[str] | None = None,
-    distinct_cols: list[str] | None = None,
-    watermark: str = "1 hour",
-    lg_k: int = 12,
-):
-    """Continuous-aggregate maintenance: the streaming face of
-    functions.rollup.rollup_once. Incoming events fold into
-    time-bucketed rollup rows as they arrive; the watermark bounds
-    both late-data admission and per-bucket state lifetime (a bucket
-    finalizes once the watermark passes its end, exactly the window
-    state contract). Distinct counts are carried as HLL sketches, so
-    the emitted rollup table cascades upward with
-    functions.rollup-style re-aggregation — write the finest grain
-    from the stream, derive day/month/year in batch without touching
-    raw events again.
-
-    Measures use rollup.py's prefix contract (sum_/min_/max_/n_) so
-    the emitted table is cascade-ready; validated before the stream
-    starts, not at runtime.
-    """
-    from dask_awkward_sandbox_spark.functions.rollup import (
-        _reagg_column,
-        time_bucket,
-    )
-
-    for name in measures:
-        _reagg_column(name)  # fail before the query launches
-    aggs = [expr.alias(name) for name, expr in measures.items()]
-    aggs.append(F.count(F.lit(1)).alias("n_rows"))
-    for c in distinct_cols or []:
-        aggs.append(F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"hll_{c}"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            time_bucket(F.col(ts_col), grain).alias("bucket"),
-            *(group_by or []),
-        )
-        .agg(*aggs)
-    )

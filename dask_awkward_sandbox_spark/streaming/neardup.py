@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions.dedup import minhash_signature

@@ -61,44 +61,3 @@ def assert_compatible_partitions(name: str, *dfs: DataFrame) -> None:
         raise IncompatiblePartitions(name, *dfs)
 
 
-def murmur3_x86_32(data: bytes, seed: int = 0) -> int:
-    """Spark's Murmur3_x86_32.hashUnsafeBytes variant (public
-    algorithm + Spark's documented tail handling: trailing bytes are
-    each mixed as a FULL block of their signed-byte value, unlike
-    Appleby's packed tail). Returns a SIGNED 32-bit int like the JVM.
-    Used to decode string entries of Spark's count_min_sketch binary
-    (functions/sketches.py:CountMinSketch)."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    mask = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & mask
-
-    def mix_k1(k):
-        k = (k * c1) & mask
-        k = rotl(k, 15)
-        return (k * c2) & mask
-
-    def mix_h1(h, k):
-        h ^= k
-        h = rotl(h, 13)
-        return (h * 5 + 0xE6546B64) & mask
-
-    h = seed & mask
-    n = len(data)
-    nblocks = n // 4
-    for b in range(nblocks):
-        k = int.from_bytes(data[b * 4 : b * 4 + 4], "little")
-        h = mix_h1(h, mix_k1(k))
-    for i in range(nblocks * 4, n):
-        byte = data[i]
-        if byte >= 128:  # Java byte is signed
-            byte -= 256
-        h = mix_h1(h, mix_k1(byte & mask))
-    h ^= n
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & mask
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & mask
-    h ^= h >> 16
-    return h - (1 << 32) if h >= 1 << 31 else h

@@ -30,7 +30,12 @@ def test_map_partitions_pandas(spark):
     from dask_awkward_sandbox_spark import core
 
     df = spark.createDataFrame([(i,) for i in range(10)], "id long")
-    out = core.map_batches_pandas(df, lambda pdf: pdf.assign(y=pdf["id"] + 1), "id long, y long")
+
+    def fn(pdfs):
+        for pdf in pdfs:
+            yield pdf.assign(y=pdf["id"] + 1)
+
+    out = core.map_partitions(df, fn, "id long, y long", arrow=False)
     assert {r["y"] for r in out.collect()} == set(range(1, 11))
 
 

@@ -17,11 +17,31 @@ import re
 import pytest
 from pyspark.sql import types as T
 
-from dask_awkward_sandbox_spark.functions.multimodal import MEDIA_SCHEMA
 from dask_awkward_sandbox_spark.io.io import from_lists
 from dask_awkward_sandbox_spark.plans.io_queries import _LISTS_ROWS
 from dask_awkward_sandbox_spark.session import DEFAULT_SF_DIR, ROOT, scoped_conf
 
+# a binary payload beside a nullable metadata struct, under a
+# non-nullable key
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("kind", T.StringType(), True),
+                    T.StructField("width", T.IntegerType(), True),
+                    T.StructField("height", T.IntegerType(), True),
+                    T.StructField("sample_rate", T.IntegerType(), True),
+                    T.StructField("n_frames", T.IntegerType(), True),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
 MEDIA_ROWS = [
     (0, bytes(range(16)), ("image", 64, 48, None, None)),
     (1, bytearray(b"\x00\xff"), ("audio", None, None, 16000, None)),

@@ -36,19 +36,6 @@ def test_from_json_multiline(spark):
     assert sorted(r["id"] for r in back.collect()) == [1, 2]
 
 
-def test_parse_json_column_and_schema_of(spark):
-    from pyspark.sql import functions as F
-
-    from dask_awkward_sandbox_spark.io.json import json_schema_of, parse_json_column
-
-    sample = '{"k": 1, "tags": ["a"]}'
-    ddl = json_schema_of(spark, sample)
-    assert "k" in ddl and "tags" in ddl
-    df = spark.createDataFrame([(sample,), ('{"k": 7, "tags": []}',)], "js string")
-    out = df.select(parse_json_column(F.col("js"), ddl).alias("p")).select("p.k")
-    assert sorted(r["k"] for r in out.collect()) == [1, 7]
-
-
 def test_from_text_custom_delimiter(spark):
     from dask_awkward_sandbox_spark.io.text import from_text
 

@@ -131,92 +131,6 @@ def test_range_join_matches_brute_force(spark, pts, ivs, bin_width):
     assert got == exp
 
 
-_ts_nullable = st.one_of(st.none(), _ts)
-_left_rows_n = st.lists(st.tuples(_key, _ts_nullable), min_size=0, max_size=25)
-_right_rows_n = st.lists(st.tuples(_key, _ts_nullable, st.integers(0, 1000)),
-                         min_size=0, max_size=25)
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(left=_left_rows_n, right=_right_rows_n,
-       tol=st.one_of(st.none(), st.integers(0, 30)),
-       slice_width=st.sampled_from([1, 7, 13, 1000]))
-def test_asof_join_skew_matches_base(spark, left, right, tol, slice_width):
-    """The two-phase segmented-scan asof must equal the single-window
-    asof row-for-row — including slice_width=1 (every row its own
-    slice: the boundary pass does ALL the work) and 1000 (one slice:
-    the local pass does all the work), empty sides, tolerance, and
-    NULL timestamps on either side (contract: null-ts right rows are
-    inert, null-ts left rows survive with null matches — the skew
-    form drops null rights pre-slice and parks null lefts on a
-    sentinel slice so the stitch join cannot drop them)."""
-    from dask_awkward_sandbox_spark.operators.joins import asof_join, asof_join_skew
-
-    # one right row per (key, ts) incl. ts=None: payload ties at the
-    # same timestamp are resolved differently by the two forms (base:
-    # window order; skew: struct-max), deliberately out of contract
-    right = _dedupe_right([(k, ts, v) for k, ts, v in right])
-    ldf = spark.createDataFrame(
-        [(k, ts, i) for i, (k, ts) in enumerate(left)] or [("_x", -1, -1)],
-        "k string, ts long, lid long",
-    )
-    rdf = spark.createDataFrame(
-        right or [("_x", -1, -1)], "k string, ts long, v long"
-    )
-    base = asof_join(ldf, rdf, on="ts", by="k", tolerance=tol)
-    skew = asof_join_skew(ldf, rdf, on="ts", by="k", tolerance=tol,
-                          slice_width=slice_width)
-    assert sorted(base.columns) == sorted(skew.columns)
-    cols = sorted(base.columns)
-    b = sorted(map(tuple, base.select(*cols).collect()))
-    s = sorted(map(tuple, skew.select(*cols).collect()))
-    assert b == s
-
-
-def test_asof_join_skew_hot_key_scatters(spark):
-    """A planted hot key (90% of both sides on one instrument) must
-    run its carry window partitioned by (key, slice) — the plan's
-    window Exchange includes _slice, so no single reducer holds the
-    hot key — and still return the exact backward-asof answer."""
-    from pyspark.sql import functions as F
-
-    from dask_awkward_sandbox_spark.operators.joins import asof_join_skew
-
-    n = 20_000
-    base = spark.range(n)
-    ldf = base.select(
-        F.when(F.col("id") % 10 < 9, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("c"), (F.col("id") % 7).cast("string")))
-        .alias("k"),
-        (F.col("id") * 3 + 1).alias("ts"),
-        F.col("id").alias("lid"),
-    )
-    rdf = base.select(
-        F.when(F.col("id") % 10 < 9, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("c"), (F.col("id") % 7).cast("string")))
-        .alias("k"),
-        (F.col("id") * 3).alias("ts"),
-        (F.col("id") * 2).alias("v"),
-    )
-    out = asof_join_skew(ldf, rdf, on="ts", by="k", slice_width=500)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the hot key's carry window partitions on (k, _slice)
-    assert "_slice" in plan
-    # exact answer: right row at id*3 is the latest <= left ts id*3+1
-    # for the SAME id (keys align because id%10 and id%7 classes repeat
-    # every 70 ids... instead just spot-check against the base impl on
-    # a 1/40 sample of lids)
-    from dask_awkward_sandbox_spark.operators.joins import asof_join
-
-    sample = out.filter(F.col("lid") % 40 == 0)
-    base_out = asof_join(ldf, rdf, on="ts", by="k").filter(F.col("lid") % 40 == 0)
-    cols = sorted(sample.columns)
-    assert sorted(map(tuple, sample.select(*cols).collect())) == sorted(
-        map(tuple, base_out.select(*cols).collect())
-    )
-
-
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(left=_left_rows, right=_right_rows,
@@ -427,7 +341,7 @@ def test_asof_join_null_payload_carried_atomically(spark):
     payload cell, the output must carry that null — not substitute
     the cell from an older (backward) / later (forward) right row.
     merge_asof semantics: the match is one whole row."""
-    from dask_awkward_sandbox_spark.operators.joins import asof_join, asof_join_skew
+    from dask_awkward_sandbox_spark.operators.joins import asof_join
 
     ldf = spark.createDataFrame([("a", 2, 0)], "k string, ts long, lid long")
     rdf = spark.createDataFrame(
@@ -438,43 +352,20 @@ def test_asof_join_null_payload_carried_atomically(spark):
     assert (back["ts_r"], back["v"], back["w"]) == (1, None, 71)
     fwd = asof_join(ldf, rdf, on="ts", by="k", direction="forward").collect()[0]
     assert (fwd["ts_r"], fwd["v"], fwd["w"]) == (3, None, 73)
-    sk = asof_join_skew(ldf, rdf, on="ts", by="k", slice_width=7).collect()[0]
-    assert (sk["ts_r"], sk["v"], sk["w"]) == (1, None, 71)
 
 
 def test_asof_join_skew_fractional_ts_orders_by_exact_on(spark):
     """r7 ADVICE regression: with fractional timestamps, two rows in
     the same truncated second must still order by the EXACT `on` —
     a left row at ts=1.2 may not pick up a right row at ts=1.7."""
-    from dask_awkward_sandbox_spark.operators.joins import asof_join, asof_join_skew
+    from dask_awkward_sandbox_spark.operators.joins import asof_join
 
     ldf = spark.createDataFrame([("a", 1.2, 0)], "k string, ts double, lid long")
     rdf = spark.createDataFrame(
         [("a", 0.5, 5), ("a", 1.7, 17)], "k string, ts double, v long"
     )
-    for fn, kw in ((asof_join, {}), (asof_join_skew, {"slice_width": 10})):
-        row = fn(ldf, rdf, on="ts", by="k", **kw).collect()[0]
-        assert (row["ts_r"], row["v"]) == (0.5, 5), fn.__name__
-
-
-def test_suggest_bin_width(spark):
-    from pyspark.sql import functions as F
-
-    from dask_awkward_sandbox_spark.operators.joins import (
-        interval_join,
-        suggest_bin_width,
-    )
-
-    ivs = spark.range(1000).select(
-        F.col("id").alias("iid"),
-        (F.col("id") * 3).alias("lo"),
-        (F.col("id") * 3 + F.when(F.col("id") % 100 == 0, 5000).otherwise(20)).alias("hi"),
-    )
-    w = suggest_bin_width(ivs)
-    assert w == 20  # p50 length, not dragged up by the 1% huge ones
-    # and it plugs straight into the joins
-    out = interval_join(ivs, ivs, by=None, bin_width=w)
-    assert out.count() >= 1000  # every interval overlaps itself
+    row = asof_join(ldf, rdf, on="ts", by="k").collect()[0]
+    assert (row["ts_r"], row["v"]) == (0.5, 5)
 
 
 def test_asof_join_reserved_column_names_refused(spark):
@@ -484,7 +375,7 @@ def test_asof_join_reserved_column_names_refused(spark):
     a left column named _b vanished through the keep filter)."""
     import pytest
 
-    from dask_awkward_sandbox_spark.operators.joins import asof_join, asof_join_skew
+    from dask_awkward_sandbox_spark.operators.joins import asof_join
 
     ldf = spark.createDataFrame([("a", 1.0, 1)], "k string, ts double, _b long")
     rdf = spark.createDataFrame([("a", 0.5, 2)], "k string, ts double, v long")
@@ -496,6 +387,3 @@ def test_asof_join_reserved_column_names_refused(spark):
     ldf2 = spark.createDataFrame([("a", 1.0, 1)], "k string, ts double, lid long")
     with pytest.raises(ValueError, match="_asof_on"):
         asof_join(ldf2, rdf2, on="ts", by="k")
-    ldf3 = spark.createDataFrame([("a", 1.0, 1)], "k string, ts double, _slice long")
-    with pytest.raises(ValueError, match="_slice"):
-        asof_join_skew(ldf3, rdf, on="ts", by="k")

@@ -12,6 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from similarity_twins import knn_join_hof
 
 from dask_awkward_sandbox_spark.functions import similarity as sim
 
@@ -89,7 +90,7 @@ def test_gemm_equals_hof(spark, emb):
         a = sorted(map(tuple, sim.knn_join(
             emb, emb, k=4, centroids=cents, nprobe=nprobe,
             round_digits=6, exclude_self=True).collect()))
-        b = sorted(map(tuple, sim.knn_join_hof(
+        b = sorted(map(tuple, knn_join_hof(
             emb, emb, k=4, centroids=cents, nprobe=nprobe,
             round_digits=6, exclude_self=True).collect()))
         assert a == b
@@ -107,7 +108,7 @@ def test_shapes_and_plan(spark, emb):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the expression form keeps its map-side top-k pushdown
-    hof_plan = sim.knn_join_hof(
+    hof_plan = knn_join_hof(
         emb, emb, k=3, centroids=cents, nprobe=1,
         round_digits=6, exclude_self=True,
     )._jdf.queryExecution().executedPlan().toString()
@@ -153,7 +154,7 @@ def test_boundary_tie_breaks_to_higher_id(spark):
         exclude_self=True,
     ).filter("vec_id = 0").orderBy("rank").collect()
     assert [(r["nn_id"], r["rank"]) for r in out] == [(4, 1), (3, 2)]
-    hof = sim.knn_join_hof(
+    hof = knn_join_hof(
         df, df, k=2, centroids=cents, nprobe=1, round_digits=6,
         exclude_self=True,
     ).filter("vec_id = 0").orderBy("rank").collect()
@@ -169,7 +170,7 @@ def test_nprobe_exceeding_cells_clamps(spark, emb):
     a = sorted(map(tuple, sim.knn_join(
         emb, emb, k=3, centroids=cents, nprobe=8, round_digits=6,
         exclude_self=True).collect()))
-    b = sorted(map(tuple, sim.knn_join_hof(
+    b = sorted(map(tuple, knn_join_hof(
         emb, emb, k=3, centroids=cents, nprobe=8, round_digits=6,
         exclude_self=True).collect()))
     assert a == b and len(a) > 0
@@ -186,7 +187,7 @@ def test_zero_norm_vectors_same_contract(spark):
     a = sorted(map(tuple, sim.knn_join(
         df, df, k=3, centroids=cents, nprobe=1, round_digits=6,
         exclude_self=True).collect()))
-    b = sorted(map(tuple, sim.knn_join_hof(
+    b = sorted(map(tuple, knn_join_hof(
         df, df, k=3, centroids=cents, nprobe=1, round_digits=6,
         exclude_self=True).collect()))
     assert a == b

@@ -1,15 +1,15 @@
-"""MERGE-upsert contract on plain parquet (io/lakehouse.py — the r5
-verdict's item 5; Delta/Iceberg jars are absent from the container,
-recorded by probe_lakehouse, so the operational contract is proven on
-the hash-bucket dynamic-partition-overwrite implementation)."""
+"""Snapshot-table MERGE-upsert contract on plain parquet
+(io/lakehouse.py — the r5 verdict's item 5; Delta/Iceberg jars are
+absent from the container, so the operational contract is proven on
+the hash-bucket version-dir + manifest-log implementation): time
+travel, exactly-once by batch id, CAS-serialized concurrent writers
+and add-column schema evolution."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.io import lakehouse as lh
 
@@ -22,100 +22,6 @@ def _base(spark):
 
 def _table(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_probe_records_missing_jars():
-    probe = lh.probe_lakehouse()
-    # in THIS container both formats must be reported absent with the
-    # exact failure; an empty dict means a real sink became possible
-    # and this module should be retired for it
-    assert "delta" in probe and "ModuleNotFoundError" in probe["delta"]
-    assert "iceberg" in probe
-
-
-def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    path = str(tmp_path / "t")
-    lh.create_merge_table(_base(spark), path, ["id"], n_buckets=8)
-    updates = spark.createDataFrame(
-        [(5, "NEW", 555), (200, "ins", 2000)], "id long, s string, n long"
-    )
-    lh.merge_upsert(spark, path, updates, ["id"], n_buckets=8)
-    got = lh.read_merge_table(spark, path)
-    assert got.count() == 101
-    assert got.filter("id = 5").collect()[0]["s"] == "NEW"
-    assert got.filter("id = 200").collect()[0]["n"] == 2000
-    assert got.filter("id = 6").collect()[0]["s"] == "v6"  # untouched
-
-
-def test_merge_upsert_idempotent_replay(spark, tmp_path):
-    path = str(tmp_path / "t")
-    lh.create_merge_table(_base(spark), path, ["id"], n_buckets=8)
-    updates = spark.createDataFrame(
-        [(7, "x", 1), (7, "a", 1), (300, "y", 2)], "id long, s string, n long"
-    )
-    lh.merge_upsert(spark, path, updates, ["id"], n_buckets=8)
-    once = _table(lh.read_merge_table(spark, path))
-    lh.merge_upsert(spark, path, updates, ["id"], n_buckets=8)
-    twice = _table(lh.read_merge_table(spark, path))
-    assert once == twice
-    # within-batch duplicate key collapsed deterministically to the
-    # struct-min WHOLE row
-    row = [r for r in once if r[0] == 7]
-    assert row == [(7, "a", 1)]
-
-
-def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    path = str(tmp_path / "t")
-    lh.create_merge_table(_base(spark), path, ["id"], n_buckets=8)
-    before = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(lh.BUCKET_COL)
-    }
-    assert len(before) == 8
-    updates = spark.createDataFrame([(5, "NEW", 555)], "id long, s string, n long")
-    touched = updates.withColumn(
-        "b", F.pmod(F.xxhash64("id"), F.lit(8))
-    ).collect()[0]["b"]
-    lh.merge_upsert(spark, path, updates, ["id"], n_buckets=8)
-    after = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(lh.BUCKET_COL)
-    }
-    changed = {d for d in before if after[d] != before[d]}
-    assert changed == {f"{lh.BUCKET_COL}={touched}"}
-
-
-def test_streaming_merge_dedup_sink(spark, tmp_path):
-    """The production shape of streaming exact dedup: a key replayed
-    across micro-batches (beyond any watermark) still yields ONE row —
-    the table is the dedup state."""
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, s string"
-    ).write.json(os.path.join(src, "batch0"))
-
-    stream = spark.readStream.schema("id long, s string").json(src + "/*")
-    q = lh.merge_dedup_sink(stream, table, ["id"], ckpt).start()
-    q.awaitTermination(120)
-
-    # second delivery: one duplicate key (different payload — LATER
-    # redelivery must not clobber nondeterministically; the struct-min
-    # collapse applies within a batch, cross-batch the upsert wins),
-    # one new key
-    spark.createDataFrame(
-        [(2, "b"), (3, "c")], "id long, s string"
-    ).write.json(os.path.join(src, "batch1"))
-    q = lh.merge_dedup_sink(
-        spark.readStream.schema("id long, s string").json(src + "/*"), table, ["id"], ckpt
-    ).start()
-    q.awaitTermination(120)
-
-    got = _table(lh.read_merge_table(spark, table))
-    assert got == [(1, "a"), (2, "b"), (3, "c")]
 
 
 # ---------------------------------------------------------------------------
@@ -176,65 +82,6 @@ def test_snapshot_merge_touches_only_owned_dirs(spark, tmp_path):
     v1_buckets = [d for d in os.listdir(os.path.join(path, v1[0]))
                   if d.startswith(lh.BUCKET_COL)]
     assert len(v1_buckets) == 1
-
-
-def test_snapshot_vacuum_keeps_current_data(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "snap")
-    lh.create_snapshot_table(_base(spark), path, ["id"], n_buckets=4)
-    # same key every time: v1 and v2's dirs end up superseded by v3
-    # and must be vacuumable; untouched buckets keep v0 alive
-    for i in range(3):
-        lh.snapshot_upsert(
-            spark, path,
-            spark.createDataFrame([(0, f"u{i}", i)], "id long, s string, n long"),
-        )
-    before = _table(lh.read_snapshot_table(spark, path))
-    # min_age_seconds=0: no writer is in flight in this test; the
-    # default 1h retention would (correctly) keep the young dirs
-    removed = lh.vacuum_snapshots(path, keep_last=1, min_age_seconds=0)
-    # older manifests gone, latest intact, data identical
-    assert lh.list_snapshot_versions(path) == [3]
-    assert _table(lh.read_snapshot_table(spark, path)) == before
-    # every dir still on disk is referenced by the kept manifest
-    import json
-    with open(os.path.join(path, "_manifests", "v00000003.json")) as f:
-        referenced = set(json.load(f)["buckets"].values())
-    on_disk = {d for d in os.listdir(path)
-               if d.startswith("v") and d != "_manifests"}
-    assert on_disk == referenced
-    # something must actually have been vacuumed in 4 versions
-    assert removed
-
-
-def test_snapshot_streaming_sink_exactly_once(spark, tmp_path):
-    import os
-
-    src = str(tmp_path / "src")
-    table = str(tmp_path / "snaptable")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string").write.json(
-        os.path.join(src, "batch0")
-    )
-    q = lh.snapshot_dedup_sink(
-        spark.readStream.schema("id long, s string").json(src + "/*"),
-        table, ["id"], ckpt,
-    ).start()
-    q.awaitTermination(120)
-    spark.createDataFrame([(2, "b2"), (3, "c")], "id long, s string").write.json(
-        os.path.join(src, "batch1")
-    )
-    q = lh.snapshot_dedup_sink(
-        spark.readStream.schema("id long, s string").json(src + "/*"),
-        table, ["id"], ckpt,
-    ).start()
-    q.awaitTermination(120)
-    got = _table(lh.read_snapshot_table(spark, table))
-    assert got == [(1, "a"), (2, "b2"), (3, "c")]
-    # history is time-travelable: version 0 has only the first batch
-    v0 = _table(lh.read_snapshot_table(spark, table, version=0))
-    assert v0 == [(1, "a"), (2, "b")]
 
 
 def test_snapshot_publish_is_cas(tmp_path):
@@ -380,32 +227,8 @@ def test_snapshot_disjoint_conflict_rebases_without_rewrite(spark, tmp_path, mon
     assert on_disk <= referenced, (on_disk, referenced)
 
 
-def test_snapshot_vacuum_retention_protects_inflight_dirs(spark, tmp_path):
-    """With concurrent writers, an in-flight upsert's data dir is
-    unreferenced until its CAS publish — vacuum must not remove
-    unreferenced dirs younger than the retention window (r8 review:
-    vacuuming one lets the subsequent publish commit a manifest
-    pointing at a deleted directory)."""
-    import os
-
-    path = str(tmp_path / "snap")
-    lh.create_snapshot_table(_base(spark), path, ["id"], n_buckets=4)
-    # simulate writer A mid-flight: data dir written, manifest not yet
-    inflight = os.path.join(path, "v1_deadbeef")
-    os.makedirs(inflight)
-    with open(os.path.join(inflight, "part-0.parquet"), "wb") as f:
-        f.write(b"x")
-    removed = lh.vacuum_snapshots(path, keep_last=1)  # default retention
-    assert removed == []
-    assert os.path.isdir(inflight)
-    # past the window it is a lost race and goes
-    removed = lh.vacuum_snapshots(path, keep_last=1, min_age_seconds=0)
-    assert removed == ["v1_deadbeef"]
-    assert not os.path.isdir(inflight)
-
-
 # ---------------------------------------------------------------------------
-# Schema evolution (r9) + the unified upsert front door
+# Schema evolution (r9)
 # ---------------------------------------------------------------------------
 
 
@@ -500,93 +323,3 @@ def test_snapshot_concurrent_evolution_rebases_or_conflicts(spark, tmp_path, mon
     upd_d = spark.createDataFrame([(403, "D", 4, 7)], "id long, s string, n long, c long")
     with pytest.raises(lh.SchemaEvolutionError, match="column 'c'"):
         lh.snapshot_upsert(spark, path, upd_d, batch_id="D")
-
-
-def test_upsert_table_unified_front_door(spark, tmp_path):
-    """ONE path for both flavors: creates on first call, merges after,
-    exactly-once by batch_id on the snapshot flavor (including a
-    replay of the CREATING batch), directed error for batch_id on the
-    plain flavor."""
-    snap = str(tmp_path / "snap")
-    plain = str(tmp_path / "plain")
-
-    # snapshot flavor: create records the batch id
-    assert lh.upsert_table(spark, snap, _base(spark), ["id"], n_buckets=8,
-                           snapshot=True, batch_id="b0")
-    # replaying the creating batch is a metadata no-op
-    assert lh.upsert_table(spark, snap, _base(spark), ["id"], n_buckets=8,
-                           snapshot=True, batch_id="b0") is False
-    upd = spark.createDataFrame([(1, "one", 11)], "id long, s string, n long")
-    assert lh.upsert_table(spark, snap, upd, ["id"], snapshot=True, batch_id="b1")
-    assert lh.upsert_table(spark, snap, upd, ["id"], snapshot=True, batch_id="b1") is False
-    got = {r["id"]: r["s"] for r in lh.read_snapshot_table(spark, snap).collect()}
-    assert got[1] == "one" and len(got) == 100
-
-    # plain flavor: same front door, content-idempotent replay
-    assert lh.upsert_table(spark, plain, _base(spark), ["id"], n_buckets=8,
-                           snapshot=False)
-    assert lh.upsert_table(spark, plain, upd, ["id"], n_buckets=8, snapshot=False)
-    assert lh.upsert_table(spark, plain, upd, ["id"], n_buckets=8, snapshot=False)
-    got = {r["id"]: r["s"] for r in lh.read_merge_table(spark, plain).collect()}
-    assert got[1] == "one" and len(got) == 100
-    with pytest.raises(ValueError, match="batch_id dedup needs the manifest"):
-        lh.upsert_table(spark, plain, upd, ["id"], snapshot=False, batch_id="x")
-
-
-def test_snapshot_streaming_sink_evolves_schema_across_batches(spark, tmp_path):
-    """Schema evolution composed with the streaming sink: batch 0
-    creates the table, a later upsert ADDS a column mid-stream (the
-    foreachBatch path routes through upsert_table -> snapshot_upsert,
-    so evolution applies), and time travel still reads v0 under its
-    own narrower schema."""
-    import os
-
-    path = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, s string"
-    ).write.json(os.path.join(src, "batch0"))
-    stream = spark.readStream.schema("id long, s string").json(
-        os.path.join(src, "*")
-    )
-    q = lh.snapshot_dedup_sink(stream, path, ["id"], ckpt).start()
-    q.awaitTermination(60)
-    assert {r["id"] for r in lh.read_snapshot_table(spark, path).collect()} == {1, 2}
-
-    # evolve OUT of band (a wider producer joins the pipeline)
-    wide = spark.createDataFrame([(3, "c", 9.5)], "id long, s string, score double")
-    assert lh.upsert_table(spark, path, wide, ["id"], batch_id="wide-1")
-    out = lh.read_snapshot_table(spark, path)
-    assert out.columns == ["id", "s", "score"]
-    by_id = {r["id"]: r for r in out.collect()}
-    assert by_id[3]["score"] == 9.5 and by_id[1]["score"] is None
-    v0 = lh.read_snapshot_table(spark, path, version=0)
-    assert v0.columns == ["id", "s"]
-
-
-def test_plain_merge_rejects_schema_change(spark, tmp_path):
-    """The plain flavor has no manifest to version schemas: an
-    evolving batch must be a directed error pointing at the snapshot
-    flavor, never a silent column drop (r9 self-review — the old path
-    select()ed the batch down to the table's columns)."""
-    path = str(tmp_path / "plain")
-    lh.create_merge_table(_base(spark), path, ["id"], n_buckets=8)
-    wide = spark.createDataFrame([(1, "x", 5, "u")], "id long, s string, n long, src string")
-    with pytest.raises(ValueError, match="snapshot"):
-        lh.merge_upsert(spark, path, wide, ["id"], n_buckets=8)
-    narrow = spark.createDataFrame([(1, "x")], "id long, s string")
-    with pytest.raises(ValueError, match="missing"):
-        lh.merge_upsert(spark, path, narrow, ["id"], n_buckets=8)
-
-
-def test_plain_merge_rejects_type_drift(spark, tmp_path):
-    """Same-name/different-TYPE batches must be directed too (r10
-    advice): a name-only check let a retyped column pass and then fail
-    opaquely (or silently coerce) inside unionByName/write."""
-    path = str(tmp_path / "plain_t")
-    lh.create_merge_table(_base(spark), path, ["id"], n_buckets=8)
-    retyped = spark.createDataFrame([(1, "x", 5.0)], "id long, s string, n double")
-    with pytest.raises(ValueError, match="types differ"):
-        lh.merge_upsert(spark, path, retyped, ["id"], n_buckets=8)

@@ -203,36 +203,6 @@ def test_unflatten_has_no_single_partition_exchange(spark):
         pass
 
 
-def test_neardup_blocked_is_equi_join(spark):
-    """The registered embedding near-dup must block through LSH
-    buckets: an equi join, never a nested-loop cross product over the
-    corpus (the all-pairs form is test-oracle-only) — in BOTH
-    configurations. The default must additionally carry no broadcast
-    HINT on corpus-derived tables (hints override AQE's size logic:
-    at 1e9 vectors they are an executor OOM); small_corpus=True is the
-    explicit opt-in that pins the broadcast plan."""
-    from dask_awkward_sandbox_spark.functions.similarity import neardup_pairs_blocked
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for small in (False, True):
-        out = neardup_pairs_blocked(e, dim=64, threshold=0.4, small_corpus=small)
-        plan = _physical(out)
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        analyzed = out._jdf.queryExecution().analyzed().toString()
-        if small:
-            assert "BroadcastHashJoin" in plan, plan
-        else:
-            assert "ResolvedHint" not in analyzed, analyzed
-        # both configurations compute the same pairs
-        rows = {(r["id_a"], r["id_b"]) for r in out.collect()}
-        if small:
-            assert rows == base_rows
-        else:
-            base_rows = rows
-            assert rows
-
-
 def test_window_funcs_partitioned_no_global_exchange(spark):
     """q_window_funcs must hash-partition on user_id — never an
     Exchange SinglePartition (the global-window one-task funnel) — and

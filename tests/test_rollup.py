@@ -1,7 +1,9 @@
-"""Hypertable rollup cascade: every coarser grain derived from the
-finer ROLLUP must equal the same grain computed directly from raw
-data — lossless re-aggregation is the whole contract — and the raw
-table must be scanned exactly once per cascade."""
+"""Hypertable rollup cascade (rollup_once, then one rollup_step per
+coarser grain — the composition q_events_funnel_retention runs):
+every coarser grain derived from the finer ROLLUP must equal the same
+grain computed directly from raw data — lossless re-aggregation is
+the whole contract — and the raw table must be scanned exactly once
+per cascade."""
 
 from __future__ import annotations
 
@@ -26,6 +28,26 @@ def _measures():
     }
 
 
+def _cascade(df, grains, measures, group_by=None, distinct_cols=None, lg_k=12):
+    from dask_awkward_sandbox_spark.functions import rollup as ru
+
+    out = {grains[0]: ru.rollup_once(
+        df, "ts", grains[0], measures, group_by, distinct_cols, lg_k
+    )}
+    for prev, g in zip(grains, grains[1:]):
+        out[g] = ru.rollup_step(out[prev], g, group_by)
+    return out
+
+
+def _estimate(rollup):
+    return {
+        r["bucket"]: r["est"]
+        for r in rollup.select(
+            "bucket", F.hll_sketch_estimate("hll_user_id").alias("est")
+        ).collect()
+    }
+
+
 def _canon(df):
     rows = [tuple(r) for r in df.select(sorted(df.columns)).collect()]
     return sorted(rows, key=repr)
@@ -35,8 +57,8 @@ def test_cascade_equals_direct_at_every_grain(spark):
     from dask_awkward_sandbox_spark.functions import rollup as ru
 
     ev = _events(spark)
-    cascade = ru.rollup_cascade(
-        ev, "ts", ["hour", "day", "month"], _measures(), group_by=["event_type"]
+    cascade = _cascade(
+        ev, ["hour", "day", "month"], _measures(), group_by=["event_type"]
     )
     for grain in ("hour", "day", "month"):
         direct = ru.rollup_once(ev, "ts", grain, _measures(), group_by=["event_type"])
@@ -50,20 +72,13 @@ def test_cascade_hll_distinct_matches_direct_sketch(spark):
     from dask_awkward_sandbox_spark.functions import rollup as ru
 
     ev = _events(spark)
-    cascade = ru.rollup_cascade(
-        ev, "ts", ["day", "month"], _measures(), distinct_cols=["user_id"], lg_k=14
+    cascade = _cascade(
+        ev, ["day", "month"], _measures(), distinct_cols=["user_id"], lg_k=14
     )
-    merged = {
-        r["bucket"]: r["approx_distinct_user_id"]
-        for r in ru.sketch_estimate(cascade["month"], "user_id").collect()
-    }
-    direct_sketch = ru.rollup_once(
+    merged = _estimate(cascade["month"])
+    direct = _estimate(ru.rollup_once(
         ev, "ts", "month", _measures(), distinct_cols=["user_id"], lg_k=14
-    )
-    direct = {
-        r["bucket"]: r["approx_distinct_user_id"]
-        for r in ru.sketch_estimate(direct_sketch, "user_id").collect()
-    }
+    ))
     assert merged == direct
     exact = {
         r["bucket"]: r["n"]
@@ -76,10 +91,8 @@ def test_cascade_hll_distinct_matches_direct_sketch(spark):
 
 
 def test_cascade_scans_raw_once(spark):
-    from dask_awkward_sandbox_spark.functions import rollup as ru
-
     ev = _events(spark)
-    cascade = ru.rollup_cascade(ev, "ts", ["hour", "day", "month"], _measures())
+    cascade = _cascade(ev, ["hour", "day", "month"], _measures())
     plan = cascade["month"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
 
@@ -89,28 +102,11 @@ def test_bad_measure_name_rejected_before_scan(spark):
 
     from dask_awkward_sandbox_spark.functions import rollup as ru
 
+    hour = ru.rollup_once(
+        _events(spark), "ts", "hour", {"avg_value": F.avg("value")}
+    )
     with pytest.raises(ValueError, match="re-aggregation rule"):
-        ru.rollup_cascade(
-            _events(spark), "ts", ["day", "month"],
-            {"avg_value": F.avg("value")},
-        )
-
-
-def test_week_rejected_as_intermediate_grain(spark):
-    """Calendar weeks straddle month/quarter/year boundaries, so a
-    cascade deriving a coarser grain FROM a week rollup would assign
-    whole cross-boundary weeks to their Monday's month — rejected
-    before any scan (r6, ADVICE). Week as the FINAL grain is fine."""
-    import pytest
-
-    from dask_awkward_sandbox_spark.functions import rollup as ru
-
-    with pytest.raises(ValueError, match="FINAL grain"):
-        ru.rollup_cascade(
-            _events(spark), "ts", ["day", "week", "month"], _measures()
-        )
-    out = ru.rollup_cascade(_events(spark), "ts", ["day", "week"], _measures())
-    assert set(out) == {"day", "week"}
+        ru.rollup_step(hour, "day")
 
 
 def test_week_final_grain_equals_direct(spark):
@@ -118,6 +114,6 @@ def test_week_final_grain_equals_direct(spark):
     from raw — day buckets DO nest losslessly into ISO weeks."""
     from dask_awkward_sandbox_spark.functions import rollup as ru
 
-    cascade = ru.rollup_cascade(_events(spark), "ts", ["day", "week"], _measures())
+    cascade = _cascade(_events(spark), ["day", "week"], _measures())
     direct = ru.rollup_once(_events(spark), "ts", "week", _measures())
     assert _canon(cascade["week"]) == _canon(direct)

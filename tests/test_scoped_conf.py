@@ -47,23 +47,12 @@ def _run_stream_sessionize(spark, sf, tmp_path):
     q_stream_sessionize(spark, sf).count()
 
 
-def _run_merge_upsert(spark, sf, tmp_path):
-    from dask_awkward_sandbox_spark.io import lakehouse as lh
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame([(i, i) for i in range(10)], "id long, n long")
-    lh.create_merge_table(base, path, ["id"], n_buckets=4)
-    upd = spark.createDataFrame([(3, 30), (20, 200)], "id long, n long")
-    lh.merge_upsert(spark, path, upd, ["id"], n_buckets=4)
-
-
 @pytest.mark.parametrize(
     "key, run",
     [
         ("spark.sql.shuffle.partitions", _run_stream_sessionize),
-        ("spark.sql.sources.partitionOverwriteMode", _run_merge_upsert),
     ],
-    ids=["q_stream_sessionize", "merge_upsert"],
+    ids=["q_stream_sessionize"],
 )
 def test_package_scopes_leave_unset_key_unset(spark, sf, tmp_path, key, run):
     prev = _raw_conf_get(spark, key)

@@ -1,11 +1,10 @@
 """int8 scalar quantization (functions/similarity.py sq_*): the 4x
 memory lever beside PQ's dim*8/m — per-dim affine codes with a hard
-reconstruction error bound, plus quantized top-k with exact re-rank.
+reconstruction error bound.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions import similarity as sim
@@ -55,25 +54,3 @@ def test_codes_range_and_degenerate_dim(spark):
         [(9, [-100.0, 999.0])], "vec_id long, embedding array<double>"
     ).select(sim.sq_encode(F.col("embedding"), lo, hi).alias("c")).collect()[0]["c"]
     assert probe[0] == 0 and probe[1] == 255
-
-
-def test_sq_topk_rerank_recovers_exact(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = {
-        (r["q_id"], r["nb_id"])
-        for r in sim.brute_force_topk(emb, queries, k=5).collect()
-    }
-    rr = {
-        (r["q_id"], r["nb_id"])
-        for r in sim.sq_topk(emb, queries, k=5, rerank=64).collect()
-    }
-    # with a 64-candidate exact re-rank the quantized shortlist
-    # recovers the exact top-5 on this corpus
-    assert len(rr & exact) / len(exact) >= 0.95
-    # quantized-only still lands most of the true neighbors
-    q = {
-        (r["q_id"], r["nb_id"])
-        for r in sim.sq_topk(emb, queries, k=5).collect()
-    }
-    assert len(q & exact) / len(exact) >= 0.8
