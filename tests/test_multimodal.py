@@ -590,6 +590,57 @@ def test_jpeg_gates_and_error_surfaces():
         jpeg_decode(bytes(base[:-8]))
 
 
+def test_jpeg_progressive_error_surfaces():
+    """A progressive frame is refused at its SOF2 header, before any
+    scan is read: however its scan headers or entropy data are mangled,
+    the error is the directed DecodeUnavailable naming "progressive",
+    never a scan-level ValueError or decoded garbage."""
+    from dask_awkward_sandbox_spark.functions.jpegcodec import (
+        jpeg_decode,
+        jpeg_encode,
+    )
+    from dask_awkward_sandbox_spark.functions.multimodal import (
+        DecodeUnavailable,
+    )
+
+    base = bytearray(jpeg_encode(_const_block_gray(16, 16), quality=50))
+    i = base.find(b"\xff\xc0")
+    j = base.rfind(b"\xff\xda")
+    assert 0 < i < j
+    progressive = bytearray(base)
+    progressive[i + 1] = 0xC2
+
+    # SOS layout: FFDA len(2) Ns(1) [cid tdta] Ss Se AhAl
+    bad_band = bytearray(progressive)
+    bad_band[j + 7], bad_band[j + 8], bad_band[j + 9] = 63, 0, 0xFF
+    truncated = bytes(progressive[: j + 10])
+    no_scan = bytes(progressive[:j]) + b"\xff\xd9"
+    for buf in (bytes(progressive), bytes(bad_band), truncated, no_scan):
+        with pytest.raises(DecodeUnavailable, match="progressive"):
+            jpeg_decode(buf)
+
+
+def test_decode_stub_raises(spark):
+    """The gate holds on the DataFrame surface too: decode_jpeg's
+    worker-side kernel raises DecodeUnavailable for a progressive
+    payload among baseline ones, and the job fails with that message."""
+    from pyspark.errors import PythonException
+
+    from dask_awkward_sandbox_spark.functions import multimodal as mm
+    from dask_awkward_sandbox_spark.functions.jpegcodec import jpeg_encode
+
+    frames = [bytearray(jpeg_encode(_const_block_gray(16, 16, s), quality=50))
+              for s in range(3)]
+    sof = frames[1].find(b"\xff\xc0")
+    assert sof > 0
+    frames[1][sof + 1] = 0xC2
+    df = spark.createDataFrame(
+        list(enumerate(frames)), "media_id long, payload binary"
+    )
+    with pytest.raises(PythonException, match=r"DecodeUnavailable[\s\S]*progressive"):
+        mm.decode_jpeg(df).collect()
+
+
 def test_jpeg_spark_decode_and_resize(spark):
     """The DataFrame surface: decode_jpeg means over constant-block
     images (exact at quality 50) match the closed-form generator."""

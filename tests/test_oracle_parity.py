@@ -9,10 +9,8 @@ Floats are compared EXACTLY (bit-for-bit) — the determinism contract
 hold; a tolerance here would hide contract violations the driver's
 value-hash would catch.
 
-One slot per family (relational, nested, window, text, streaming) is
-built twice on the one shared session, so its second build reads its
-sources through memoized parquet schemas and a warm-build regression
-shows up as a value mismatch.
+The warm-rebuild check (one slot per family built twice on one
+session) is test_oracle_smoke.py, which reuses this module's helpers.
 """
 
 from __future__ import annotations
@@ -67,14 +65,6 @@ def _canon(df_pandas):
 
 NAMES = sorted(QUERIES)
 
-BUILD_TWICE = {
-    "q1_pricing_summary",
-    "q_reduce_order_count",
-    "q_window_funcs",
-    "q_tf_idf",
-    "q_stream_sessionize",
-}
-
 
 @pytest.fixture(scope="module")
 def duck():
@@ -97,7 +87,5 @@ def _assert_same(name, sdf, want):
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(spark, duck, name):
     want = _canon(duck.execute(ORACLES[name]).df())
-    builds = 2 if name in BUILD_TWICE else 1
-    for build in range(builds):
-        sdf = QUERIES[name](spark, SF_DIR).toPandas()
-        _assert_same(f"{name} (build {build + 1})", sdf, want)
+    sdf = QUERIES[name](spark, SF_DIR).toPandas()
+    _assert_same(name, sdf, want)
