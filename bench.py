@@ -17,8 +17,9 @@ and one-rep walls of every other registered slot. The line before it
 is the aux record: per-headliner min/max, the generated classes the
 timed reps still compiled (``codegen_compiles``, total and per
 headliner), the salted-join skew demo, the local dirs in effect, and
-the sf1 scale probe (headliners + skew demo at 10x, from
-scripts/make_scaled_sf.py under .scaledata/).
+the scale probe (headliners + skew demo at SPARK_GRAFT_SCALE_DIR,
+by default sf1 = 10x from scripts/make_scaled_sf.py under
+.scaledata/).
 
 Env: SPARK_GRAFT_BENCH_REPS (3), SPARK_GRAFT_SCALE_REPS (2),
 SPARK_GRAFT_SKIP_SCALE=1, SPARK_GRAFT_SCALE_DIR. Put shuffle files on
@@ -158,22 +159,37 @@ def _plan_signature(df) -> dict[str, int]:
     return dict(Counter(ops))
 
 
+def sf_of(sf_dir: str) -> float | str:
+    """The scale factor a dataset directory names (``.../sf0.1`` ->
+    0.1), or the text after its last "sf" when that is no number."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
 def scale_probe(spark, base_dir: str, base_timings: dict[str, float], reps: int) -> dict | None:
-    """10x scale block: every headliner + the skew demo at sf1, with
-    per-query growth vs the ``base_dir`` cells and whether the
-    physical plan kept the same operator multiset across the step."""
+    """Scale block: every headliner + the skew demo at the scale dir
+    (sf1 by default), with per-query growth vs the ``base_dir`` cells
+    and whether the physical plan kept the same operator multiset
+    across the step. Labels name the two dirs' scale factors."""
     import subprocess
 
     if os.environ.get("SPARK_GRAFT_SKIP_SCALE") == "1":
         return None
     scale_dir = os.environ.get("SPARK_GRAFT_SCALE_DIR", os.path.join(ROOT, ".scaledata", "sf1"))
+    lo, hi = (
+        f"sf{sf:g}" if isinstance(sf, float) else f"sf{sf}"
+        for sf in (sf_of(base_dir), sf_of(scale_dir))
+    )
     if not os.path.isdir(os.path.join(scale_dir, "lineitem.parquet")):
         script = os.path.join(ROOT, "scripts", "make_scaled_sf.py")
         rc = subprocess.run(
             [sys.executable, script, base_dir, scale_dir], capture_output=True, timeout=1200
         ).returncode
         if rc != 0 or not os.path.isdir(os.path.join(scale_dir, "lineitem.parquet")):
-            return {"error": "sf1 generation failed"}
+            return {"error": f"{hi} generation failed"}
 
     from dask_awkward_sandbox_spark.plans import QUERIES
 
@@ -185,17 +201,17 @@ def scale_probe(spark, base_dir: str, base_timings: dict[str, float], reps: int)
         plan_stable[name] = sig0 == sig1
         if sig0 != sig1:
             plan_delta[name] = {
-                "only_sf0.1": {k: v for k, v in sig0.items() if sig1.get(k) != v},
-                "only_sf1": {k: v for k, v in sig1.items() if sig0.get(k) != v},
+                f"only_{lo}": {k: v for k, v in sig0.items() if sig1.get(k) != v},
+                f"only_{hi}": {k: v for k, v in sig1.items() if sig0.get(k) != v},
             }
     samples = timed(spark, _slots(spark, HEADLINERS, scale_dir), reps)
     timings = {name: round(min(s), 3) for name, s in samples.items()}
     out = {
-        "sf": 1.0,
+        "sf": sf_of(scale_dir),
         "dir": scale_dir,
         "value": round(sum(timings.values()), 3),
         "queries": timings,
-        "growth_vs_sf0.1": {
+        f"growth_vs_{lo}": {
             k: round(v / base_timings[k], 2) for k, v in timings.items() if base_timings.get(k)
         },
         "plans_stable": all(plan_stable.values()),
@@ -243,17 +259,12 @@ def main() -> None:
     timings = {name: round(min(s), 2) for name, s in samples.items()}
     spread = {name: [round(min(s), 3), round(max(s), 3)] for name, s in samples.items()}
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
     out = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_val,
+        "sf": sf_of(sf_dir),
         "gate_nonheadliner": gate_nonheadliner(spark, sf_dir),
     }
     aux = {

@@ -7,11 +7,10 @@ and simhashes are oracle-checkable in DuckDB).
 Scale design (100 TB of documents):
 - exact: one shuffle on a 128-bit content hash; group sizes are
   near-1 so no skew.
-- minhash_lsh: signatures are computed scan-side (JVM expressions,
-  no shuffle); banding turns O(n^2) similarity into an equi-join on
-  (band_id, band_hash) — each bucket is tiny, and the pair explosion
-  is bounded per-bucket. One shuffle for the bucket join, one for
-  pair dedup.
+- minhash: signatures are computed scan-side (JVM expressions,
+  no shuffle); banding turns O(n^2) similarity into (band, key)
+  bucket membership, which the bucket stats and the clusters read
+  with one groupBy or window each, never listing the pairs.
 - simhash: 64 scan-side expressions -> one 16/64-bit key; near-dup
   lookup joins on rotated key bands (hamming-ball blocking).
 - ngram_jaccard: exact verification on candidate pairs only (never
@@ -67,38 +66,6 @@ def minhash_signature(df: DataFrame, text_col: str, num_perms: int = 16) -> Data
     for i, (a, b) in enumerate(minhash_perms(num_perms)):
         out = out.withColumn(f"minhash_{i}", F.array_min(F.transform("_hs", _perm(a, b))))
     return out.drop("_hs")
-
-
-def minhash_lsh_candidates(
-    df: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    num_perms: int = 16,
-    bands: int = 4,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding: docs sharing any
-    band's full sub-signature become a pair. Returns (id_a, id_b,
-    n_shared_bands) with id_a < id_b.
-
-    The band join is an equi-join on (band, band_key) — shuffle both
-    sides once, never cross-join. Pass ``sig`` (a
-    :func:`minhash_signature` output, possibly checkpointed) to reuse
-    a signature scan another leg already paid for.
-    """
-    exploded = minhash_band_buckets(df, text_col, id_col, num_perms, bands, sig=sig)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc") < F.col("b.doc")),
-    )
-    return (
-        pairs.groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
 
 
 def minhash_band_buckets(
@@ -169,15 +136,13 @@ def minhash_candidate_counts(
     sharing 2 bands counts twice, exactly the comparisons an
     unsuppressed verifier performs).
 
-    This is the output-BOUNDED derivation of the candidate kernel in
-    :func:`minhash_lsh_candidates`: that function LISTS the pairs,
-    whose count is O(sum bucket^2) — corpus-quadratic on
-    template-heavy corpora (measured 62.4M -> 641M pairs for 10x docs
-    on the r9 sf10 probe) — while this one returns |docs| rows off the
-    same bucket structure via one groupBy + one equi-join, so it scales
-    to 100 TB no matter how skewed the buckets are. Use the pair lister
-    only when downstream verification needs the pairs themselves, and
-    prefer :func:`minhash_dedup_clusters` for dedup decisions."""
+    This is the output-BOUNDED form of the band self-join: listing the
+    pairs costs O(sum bucket^2) — corpus-quadratic on template-heavy
+    corpora (measured 62.4M -> 641M pairs for 10x docs on the r9 sf10
+    probe) — while this one returns |docs| rows off the same bucket
+    structure via one groupBy + one equi-join, so it scales no matter
+    how skewed the buckets are. Prefer :func:`minhash_dedup_clusters`
+    for dedup decisions."""
     if buckets is None:
         buckets = minhash_band_buckets(df, text_col, id_col, num_perms, bands, sig=sig)
     sizes = minhash_bucket_sizes(None, text_col, id_col, buckets=buckets)
@@ -199,7 +164,7 @@ def minhash_bucket_histogram(
 ) -> DataFrame:
     """(band, bsize, n_buckets) — the bucket-occupancy histogram per
     band, the skew diagnostic for LSH banding: a fat tail here is the
-    early warning that the pair lister's output would explode. Output
+    early warning that a band self-join's pair list would explode. Output
     is tiny (distinct occupancy levels per band); work is the same
     single partial-agg groupBy as :func:`minhash_bucket_sizes`."""
     sizes = minhash_bucket_sizes(
@@ -223,9 +188,8 @@ def minhash_dedup_clusters(
     band bucket" graph. Returns (doc, cluster) where cluster is the
     min doc id of the component; keep-set = rows with doc == cluster.
 
-    THE scale path for minhash dedup. ``minhash_lsh_candidates``
-    materializes every within-bucket pair — O(sum b_i^2), which
-    explodes on real corpora where template/boilerplate text forms
+    THE scale path for minhash dedup. Listing every within-bucket pair
+    costs O(sum b_i^2), which explodes on real corpora where template/boilerplate text forms
     thousand-doc buckets. Here a bucket of size n contributes n star
     edges (bucket min -> member, one window pass), which have the same
     components as the bucket hypergraph, and

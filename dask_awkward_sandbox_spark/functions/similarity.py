@@ -619,7 +619,6 @@ def embedding_neardup_clusters(
     round_digits: int = 6,
     stats: dict | None = None,
     n: int | None = None,
-    profile: dict | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate CLUSTERS — the collapse form that
     stays linear where a blocked pair lister is output-quadratic.
@@ -667,35 +666,17 @@ def embedding_neardup_clusters(
         n = df.count()
     if planes is None:
         planes = adaptive_planes(n, target_occupancy=8)
-    # ``profile`` (r11, verdict item 2): when a dict is passed, each
-    # stage is force-materialized and its wall recorded — bucketing
-    # (projection kernel + checkpoint), edge build, cosine verify,
-    # and the CC loop — so scale probes can attribute superlinearity
-    # to a stage instead of guessing. The barriers change the
-    # execution (extra counts), so profiled walls are for ATTRIBUTION;
-    # the unprofiled path is untouched.
-    import time as _time
-
-    def _mark(key, t0):
-        if profile is not None:
-            profile[key] = round(_time.perf_counter() - t0, 3)
-
-    if profile is not None:
-        profile["planes"] = planes
-        profile["n"] = n
-    _t = _time.perf_counter()
     # checkpoint the bucket table ONCE (r6 perf): the edge build reads
     # it on two branches and the candidate DAG otherwise re-evaluates
     # the interpreted-HOF hyperplane projections (tables x planes x
     # dim multiply-adds per row) once per branch — measured 3.9s ->
-    # ~1s for the sf0.1 edge phase. Lazy: materialized by the first
-    # job that reads it.
+    # ~1s for the sf0.1 edge phase. Lazy (eager=False, since PySpark
+    # defaults to eager): materialized by the first job that reads it.
     b = (
         with_lsh_buckets(df, id_col, vec_col, dim, planes, tables)
         .select(F.col(id_col).alias("m"), "t", "bucket")
-        .localCheckpoint(eager=profile is not None)
+        .localCheckpoint(eager=False)
     )
-    _mark("bucketing", _t)
     pair_cap = 64
     # ONE window pass computes bucket occupancy + representative (r8:
     # replaces a groupBy + join-back — one exchange instead of two and
@@ -743,12 +724,6 @@ def embedding_neardup_clusters(
     # cheap), where the distinct is a full |candidate| shuffle + stage
     # barrier; connected_components dedups its edge set anyway.
     edges = pair_edges.union(star_edges)
-    if profile is not None:
-        _t = _time.perf_counter()
-        edges = edges.localCheckpoint(eager=True)
-        profile["candidate_edges"] = edges.count()
-        _mark("edge_build", _t)
-        _t = _time.perf_counter()
     vt = df.select(
         F.col(id_col).alias("_vid"), as_double(F.col(vec_col)).alias("_v")
     ).withColumn("_n", norm(F.col("_v")))
@@ -774,18 +749,8 @@ def embedding_neardup_clusters(
         .filter(F.col("sim") >= threshold)
         .select("a", "b")
     )
-    if profile is not None:
-        verified = verified.localCheckpoint(eager=True)
-        profile["verified_edges"] = verified.count()
-        _mark("verify", _t)
-        _t = _time.perf_counter()
     ids = df.select(F.col(id_col).alias("id"))
-    out = connected_components(verified, ids, max_iter=max_iter, stats=stats)
-    if profile is not None:
-        out = out.localCheckpoint(eager=True)
-        out.count()
-        _mark("cc", _t)
-    return out
+    return connected_components(verified, ids, max_iter=max_iter, stats=stats)
 
 
 def _centroid_sims(

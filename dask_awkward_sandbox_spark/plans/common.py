@@ -106,63 +106,11 @@ def cents(col: Column) -> Column:
     return F.round(col * 100).cast("long")
 
 
-# Scope this conf around reads of a sorted bucketed table (see
-# sorted_lineitem) so the scan advertises the write-time sort as its
-# outputOrdering and Catalyst elides the downstream Sort. A sorted
-# bucketed scan cannot split files, so while it is set every bucketed
-# read runs at bucket-count parallelism: plan AND execute the reads
-# inside ``scoped_conf(spark, SORTED_SCAN_CONF, "true")``.
-SORTED_SCAN_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-
-
-def sorted_lineitem(spark: SparkSession, sf_dir: str, num_buckets: int = 32):
-    """Bucketed + SORTED lineitem table for the window-bound slots
-    (r13, verdict item 3): bucketBy(l_orderkey) + sortBy(l_orderkey,
-    *ORD) with one file per bucket, so FileSourceScanExec reports the
-    sort as its outputOrdering and Catalyst ELIDES the 7-column ORD
-    comparator Sort under the q_flatten_softmax / q_pad_fill_none
-    windows — the measured sf10 bottleneck (SCALE_SF10 stage_profile:
-    comparator CPU, not spill). This is SURVEY §4's "pay the sort once
-    at write" made real for the sort, not just the shuffle.
-
-    The Sort elision additionally needs :data:`SORTED_SCAN_CONF` set
-    AT READ TIME: wrap the reads in ``scoped_conf(spark,
-    SORTED_SCAN_CONF, "true")`` (scripts/scale_probe_sf10.py and
-    tests/test_plans.py do).
-    Builds once per (sf tag, num_buckets) and reuses the managed table
-    across calls."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-    table = f"lineitem_sorted_{tag}_{num_buckets}"
-    if not spark.catalog.tableExists(table):
-        from dask_awkward_sandbox_spark.io import to_bucketed_table
-
-        # the session catalog is in-memory: a managed-table LOCATION
-        # from an earlier session survives on disk with no catalog row
-        # (bucket/sort metadata lives in the catalog, so the files
-        # alone are useless) — clear the orphan and rebuild. r14
-        # (advice): delete via the Hadoop FileSystem of the warehouse
-        # URI, not shutil — a hdfs:// or s3a:// warehouse would have
-        # silently no-op'd under removeprefix("file:") + rmtree and
-        # the saveAsTable below would hit the leftover files.
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(wh + "/" + table)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p, True)  # recursive; False if absent — both fine
-        li = read(spark, sf_dir, "lineitem")
-        to_bucketed_table(
-            li, table, "l_orderkey", num_buckets=num_buckets,
-            sort_by=["l_orderkey", *ITEM_FIELDS],
-        )
-    return spark.table(table)
-
-
 def order_items(
     spark: SparkSession,
     sf_dir: str,
     fields: list[str] | None = None,
     where: Column | None = None,
-    base: DataFrame | None = None,
 ) -> DataFrame:
     """The awkward-style nested collection: one row per order with an
     ``items: array<struct>`` column, list-ordered by l_linenumber.
@@ -190,15 +138,10 @@ def order_items(
     gate slots run the retained HOF composition over a deterministic
     subsample so the driver hash executes the operator code paths at
     ~0.5% of the full-build cost.
-
-    ``base`` supplies the lineitem frame to build from instead of a
-    fresh parquet read, e.g. the sorted bucketed table from
-    :func:`sorted_lineitem`; ``fields`` must be a subset of its
-    columns.
     """
     fields = fields or ITEM_FIELDS
     assert fields[0] == "l_linenumber", "linenumber must lead for deterministic sort"
-    li = base if base is not None else read(spark, sf_dir, "lineitem")
+    li = read(spark, sf_dir, "lineitem")
     if where is not None:
         li = li.filter(where)
     return li.groupBy("l_orderkey").agg(

@@ -730,14 +730,11 @@ def q_dedup_minhash(spark, sf_dir):
     r10 (verdict item 1): the former 'pair' leg LISTED the candidate
     pairs — O(sum bucket^2) OUTPUT, measured 62.4M -> 641M pairs
     (24.96x wall) for 10x docs on this corpus's template groups — so
-    it was demoted to pytest (test_dedup_edges) + the sf10 probe's
-    minhash_pair_lister aux block, the same move as the r6 embedding
-    pair lister. 'cand'/'hist' derive from the SAME bucket structure
-    through one partial-agg groupBy + one equi-join, so every
-    registered leg's output is bounded by |docs| regardless of bucket
-    skew. Dedup decisions live in q_dedup_minhash_clusters; pair
-    listing stays available as dedup.minhash_lsh_candidates for
-    callers whose verify stage needs the pairs themselves."""
+    it was dropped, the same move as the r6 embedding pair lister.
+    'cand'/'hist' derive from the SAME bucket structure through one
+    partial-agg groupBy + one equi-join, so every registered leg's
+    output is bounded by |docs| regardless of bucket skew. Dedup
+    decisions live in q_dedup_minhash_clusters."""
     d = _docs(spark, sf_dir)
     # ONE 16-perm signature scan feeds ALL legs (r8): the perm
     # family is index-generated, so perms(8) == perms(16)[:8] — the

@@ -121,16 +121,9 @@ def _disc_c(items):
     from s left join r2 on r2.l_orderkey = s.l_orderkey and r2.idx = s.idx
     """,
 )
-def q_flatten_softmax(spark, sf_dir, base=None):
+def q_flatten_softmax(spark, sf_dir):
     """ak.local_index + ak.softmax (axis=1, numerically stable) +
     ak.run_lengths + flatten, per order.
-
-    ``base``: optional pre-read lineitem frame — the sorted-bucketed-
-    table path (r13, recorded in SCALE_SF10.json sorted_bucket_ab): a
-    table bucketed on l_orderkey and sortBy'd on the full ORD prefix
-    feeds the first window with its scan ordering, so the 7-column
-    comparator Sort (the measured sf10 bottleneck, SCALE_SF10
-    stage_profile) vanishes from the plan; both legs read it.
 
     r11 (verdict item 3 — the codegen template applied to the last
     full-HOF slots): the registered form runs FLAT — ONE exchange on
@@ -163,7 +156,7 @@ def q_flatten_softmax(spark, sf_dir, base=None):
         "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
         "l_tax", "l_returnflag", "l_linestatus",
     ]
-    li = base if base is not None else read(spark, sf_dir, "lineitem")
+    li = read(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_orderkey").orderBy(*ord_cols)
     wf = Window.partitionBy("l_orderkey").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -226,7 +219,7 @@ def q_flatten_softmax(spark, sf_dir, base=None):
         F.round(F.col("_ex") / F.col("_sm"), 6).alias("softmax"),
         "run_len",
     )
-    hof = q_flatten_softmax_hof(spark, sf_dir, where=_HOF_SAMPLE(), base=base)
+    hof = q_flatten_softmax_hof(spark, sf_dir, where=_HOF_SAMPLE())
     hof_legs = hof.select(
         "l_orderkey",
         "idx",
@@ -237,14 +230,14 @@ def q_flatten_softmax(spark, sf_dir, base=None):
     return flat.join(hof_legs, ["l_orderkey", "idx"], "left")
 
 
-def q_flatten_softmax_hof(spark, sf_dir, where=None, base=None):
+def q_flatten_softmax_hof(spark, sf_dir, where=None):
     """The nested-HOF composition of the q_flatten_softmax contract —
     build nested, ak.local_index + ak.softmax + ak.run_lengths via
     arrays_zip (whose null-padding IS the oracle's left join), then
     explode_flatten. Retained as the operator-exercising reference
     after the r11 flat-window rewrite of the registered slot; pinned
     row-identical in tests/test_nested_fast_forms.py."""
-    it = order_items(spark, sf_dir, where=where, base=base)
+    it = order_items(spark, sf_dir, where=where)
     z = F.arrays_zip(
         st.local_index(F.col("items")).alias("idx"),
         F.col("items").alias("item"),
@@ -435,7 +428,7 @@ def _sort_argsort_leg_exprs(items, q, is_r):
     }
 
 
-def q_sort_argsort_hof(spark, sf_dir, where=None, base=None):
+def q_sort_argsort_hof(spark, sf_dir, where=None):
     """The nested-HOF composition of the q_sort_argsort contract —
     ak.sort/argsort/num/firsts/mask/drop_none/where/is_none over ONE
     shared nested build, all JVM higher-order functions. Retained as
@@ -449,7 +442,7 @@ def q_sort_argsort_hof(spark, sf_dir, where=None, base=None):
     value-indistinguishable vs the oracle's full-struct order."""
     it = order_items(
         spark, sf_dir, fields=["l_linenumber", "l_quantity", "l_returnflag"],
-        where=where, base=base,
+        where=where,
     )
     # Materialize the shared arrays once (see q_reduce_order_count note:
     # Catalyst can't CSE across HOF lambdas, so _q/_isr would otherwise
@@ -579,7 +572,7 @@ def _cart_leg_exprs(cart, comb, dot, dpu):
     }
 
 
-def q_cartesian_combinations_hof(spark, sf_dir, where=None, base=None):
+def q_cartesian_combinations_hof(spark, sf_dir, where=None):
     """The nested-operator composition of the q_cartesian_combinations
     contract — ak.cartesian of (qty, discount) lists, ak.combinations
     (n=2 unordered pairs i<j), ak.zip + ak.unzip + elementwise product
@@ -590,7 +583,7 @@ def q_cartesian_combinations_hof(spark, sf_dir, where=None, base=None):
     it = order_items(
         spark, sf_dir,
         fields=["l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-        where=where, base=base,
+        where=where,
     )
     # materialize the four folded/pair arrays ONCE (each feeds two
     # consumers, and unzip re-derives z per extracted leg; see
@@ -643,15 +636,10 @@ def q_cartesian_combinations_hof(spark, sf_dir, where=None, base=None):
     join b on b.l_orderkey = g.l_orderkey
     """,
 )
-def q_pad_fill_none(spark, sf_dir, base=None):
+def q_pad_fill_none(spark, sf_dir):
     """ak.pad_none(target=4, clip=True) / ak.fill_none exploded side
     by side, plus the elementwise like/close/nan_to_num/ufunc family
     as per-order legs.
-
-    ``base``: optional pre-read lineitem frame (sorted-bucketed-table
-    path, r13 — see q_flatten_softmax): the rank window's
-    (l_linenumber, l_quantity) ordering is a PREFIX of the table's
-    sortBy, so the Sort elides the same way.
 
     r11 (verdict item 3): the registered form runs FLAT — the padded
     view is a (idx -> qty) map collected per order off ONE window
@@ -671,7 +659,7 @@ def q_pad_fill_none(spark, sf_dir, base=None):
     reverted — q_flatten_softmax note)."""
     from pyspark.sql import Window
 
-    li = base if base is not None else read(spark, sf_dir, "lineitem")
+    li = read(spark, sf_dir, "lineitem")
     # rank by the PRUNED (l_linenumber, l_quantity) prefix, not the
     # full 7-column ORD: rows tying on the prefix share l_quantity, so
     # the exposed qty at every idx is identical under any tie
@@ -724,7 +712,7 @@ def q_pad_fill_none(spark, sf_dir, base=None):
     # form was measured and reverted — SCALE_SF10 hof_form_ab); its
     # per-(order, idx) rows left-join onto the flat explode without a
     # broadcast hint
-    hof = q_pad_fill_none_hof(spark, sf_dir, where=_HOF_SAMPLE(), base=base)
+    hof = q_pad_fill_none_hof(spark, sf_dir, where=_HOF_SAMPLE())
     hof_legs = hof.select(
         "l_orderkey",
         "idx",
@@ -741,7 +729,7 @@ def q_pad_fill_none(spark, sf_dir, base=None):
     return flat.join(hof_legs, ["l_orderkey", "idx"], "left")
 
 
-def q_pad_fill_none_hof(spark, sf_dir, where=None, base=None):
+def q_pad_fill_none_hof(spark, sf_dir, where=None):
     """The nested-HOF composition of the q_pad_fill_none contract —
     ak.pad_none/fill_none via arrays_zip + posexplode, the
     like/close/nan_to_num/ufunc legs as per-order JVM folds. Retained
@@ -751,7 +739,6 @@ def q_pad_fill_none_hof(spark, sf_dir, where=None, base=None):
 
     it = order_items(
         spark, sf_dir, fields=["l_linenumber", "l_quantity"], where=where,
-        base=base,
     )
     q = _qty_c(F.col("items"))
     qd = F.transform(q, lambda x: x.cast("double"))
@@ -915,7 +902,7 @@ def q_concatenate(spark, sf_dir):
     return conc.crossJoin(F.broadcast(axis_none)).crossJoin(F.broadcast(hof))
 
 
-def q_concatenate_axis_none_hof(spark, sf_dir, where=None, base=None):
+def q_concatenate_axis_none_hof(spark, sf_dir, where=None):
     """The nested-HOF form of q_concatenate's axis=None legs —
     ak.sum/count/min/max/mean(axis=None) as per-list JVM folds
     map-side (one partial per order row, never per element) plus the
@@ -927,7 +914,6 @@ def q_concatenate_axis_none_hof(spark, sf_dir, where=None, base=None):
 
     it = order_items(
         spark, sf_dir, fields=["l_linenumber", "l_quantity"], where=where,
-        base=base,
     )
     q = _qty_c(F.col("items"))
     hist = hg.histogram_axis1(q, _HIST_BINS, _HIST_LO, _HIST_HI)
@@ -1326,7 +1312,7 @@ def _reduce_leg_exprs(a):
     }
 
 
-def q_reduce_order_count_hof(spark, sf_dir, where=None, base=None):
+def q_reduce_order_count_hof(spark, sf_dir, where=None):
     """The nested single-pass struct-accumulator form of
     q_reduce_order_count (see :func:`_reduce_acc_expr` /
     :func:`_reduce_leg_exprs` — the shared expression builders).
@@ -1343,7 +1329,7 @@ def q_reduce_order_count_hof(spark, sf_dir, where=None, base=None):
     it = order_items(
         spark, sf_dir,
         fields=["l_linenumber", "l_quantity", "l_extendedprice", "l_discount"],
-        where=where, base=base,
+        where=where,
     )
     pre = it.select("l_orderkey", _reduce_acc_expr(F.col("items")).alias("_a"))
     legs = _reduce_leg_exprs(F.col("_a"))

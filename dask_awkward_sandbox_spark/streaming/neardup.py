@@ -1,7 +1,7 @@
 """Streaming NEAR-duplicate dedup: MinHash-LSH against a growing
 bucket store — the production shape for "drop documents similar to
 anything already ingested" on a continuous feed (the streaming face
-of ``functions.dedup.minhash_lsh_candidates``; the exact-dup analogue
+of ``functions.dedup.minhash_band_buckets``; the exact-dup analogue
 is ``streaming.events.stream_dedup_exact``).
 
 Per micro-batch:

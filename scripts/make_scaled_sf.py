@@ -44,28 +44,42 @@ OFF = 10_000_000  # > every key in sf0.1 (max observed: 149_999)
 EMB_DIM = 64
 
 
-def scale(
-    src: str,
-    dst: str,
-    copies: int,
-    spark=None,
-    off: int = OFF,
-    file_factor: int | None = None,
-) -> None:
-    """``off`` must exceed every key in ``src`` — deriving sf100 FROM
-    sf10 (keys up to ~1e9 after the first-level shift) needs
-    off=1_000_000_000. ``file_factor`` scales output file counts
-    relative to the sf0.1 base (defaults to copies//10, correct when
-    src IS sf0.1; deriving sfN from an already-derived source must
-    pass the CUMULATIVE factor, e.g. 100 for sf10->sf100)."""
+# every key column each table's copies shift by OFF
+KEYS = {
+    "customer": ("c_custkey",),
+    "supplier": ("s_suppkey",),
+    "part": ("p_partkey",),
+    "orders": ("o_orderkey", "o_custkey"),
+    "lineitem": ("l_orderkey", "l_partkey", "l_suppkey"),
+    "events": ("event_id", "user_id"),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
+}
+
+
+def scale(src: str, dst: str, copies: int) -> None:
+    """Write ``copies`` decorrelated copies of ``src`` to ``dst``.
+    Raises ValueError, naming the key, when a key of ``src`` reaches
+    OFF: copy i shifts keys by i*OFF, so such a source would build
+    copies whose keys collide."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    own_session = spark is None
-    if own_session:
-        from dask_awkward_sandbox_spark.session import get_spark
+    from dask_awkward_sandbox_spark.session import get_spark
 
-        spark = get_spark("make-scaled-sf")
-        spark.sparkContext.setLogLevel("ERROR")
+    for t, cols in KEYS.items():
+        keys = pq.read_table(f"{src}/{t}.parquet", columns=list(cols))
+        for c in cols:
+            top = pc.max(keys[c]).as_py()
+            if top is not None and top >= OFF:
+                raise ValueError(
+                    f"{src}: {t}.{c} reaches {top}, not below the key offset "
+                    f"OFF={OFF}; the {copies} copies' keys would collide"
+                )
+
+    spark = get_spark("make-scaled-sf")
+    spark.sparkContext.setLogLevel("ERROR")
 
     def read(t):
         return spark.read.parquet(f"{src}/{t}.parquet")
@@ -76,7 +90,7 @@ def scale(
     # sf1's parallelism no matter the data size (measured: documents
     # as 4 single-row-group files starved q_text_metrics to 4 of 32
     # cores at sf10, reading as fake 15.7x growth).
-    file_factor = max(1, copies // 10) if file_factor is None else file_factor
+    file_factor = max(1, copies // 10)
 
     def write(df, t, nfiles):
         df.repartition(nfiles * file_factor).write.mode("overwrite").parquet(
@@ -88,46 +102,25 @@ def scale(
         return df.withColumn("_c", F.explode(F.sequence(F.lit(0), F.lit(copies - 1))))
 
     def shift(col, copy_col="_c"):
-        return (F.col(col) + F.col(copy_col).cast("long") * off).alias(col)
+        return (F.col(col) + F.col(copy_col).cast("long") * OFF).alias(col)
 
     # fixed dims: identical at every SF (TPC-H semantics)
     for t in ("region", "nation"):
         write(read(t), t, 1)
 
-    c = fan(read("customer"))
-    write(
-        c.select(shift("c_custkey"), "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
-        "customer", 4,
-    )
-    s = fan(read("supplier"))
-    write(s.select(shift("s_suppkey"), "s_name", "s_nationkey", "s_acctbal"), "supplier", 2)
-    p = fan(read("part"))
-    write(
-        p.select(shift("p_partkey"), "p_name", "p_brand", "p_type", "p_size", "p_retailprice"),
-        "part", 4,
-    )
-    o = fan(read("orders"))
-    write(
-        o.select(
-            shift("o_orderkey"), shift("o_custkey"),
-            "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
-        ),
-        "orders", 8,
-    )
-    li = fan(read("lineitem"))
-    write(
-        li.select(
-            shift("l_orderkey"), shift("l_partkey"), shift("l_suppkey"),
-            "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-            "l_returnflag", "l_linestatus", "l_shipdate",
-        ),
-        "lineitem", 16,
-    )
-    e = fan(read("events"))
-    write(
-        e.select(shift("event_id"), "ts", shift("user_id"), "event_type", "value", "props"),
-        "events", 8,
-    )
+    for t, nfiles, cols in (
+        ("customer", 4, ("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")),
+        ("supplier", 2, ("s_suppkey", "s_name", "s_nationkey", "s_acctbal")),
+        ("part", 4, ("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")),
+        ("orders", 8, ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+                       "o_orderdate", "o_orderpriority")),
+        ("lineitem", 16, ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+                          "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+                          "l_returnflag", "l_linestatus", "l_shipdate")),
+        ("events", 8, ("event_id", "ts", "user_id", "event_type", "value", "props")),
+    ):
+        rows = fan(read(t)).select(*[shift(c) if c in KEYS[t] else c for c in cols])
+        write(rows, t, nfiles)
 
     # documents: vocabulary-bijective token suffix per copy (see module doc)
     d = fan(read("documents"))
@@ -165,7 +158,7 @@ def scale(
                 ]
             )
             out = emb.select(
-                (F.col("vec_id") + i * off).alias("vec_id"),
+                (F.col("vec_id") + i * OFF).alias("vec_id"),
                 new.alias("embedding"),
                 "label",
             )
@@ -180,7 +173,7 @@ def scale(
             {
                 "src": src,
                 "copies": copies,
-                "key_offset": off,
+                "key_offset": OFF,
                 "decorrelation": {
                     "documents": "token suffix ~<copy> (vocab bijection)",
                     "embeddings": "seeded dim permutation + sign flips (orthogonal)",
@@ -189,8 +182,7 @@ def scale(
             f,
             indent=2,
         )
-    if own_session:
-        spark.stop()
+    spark.stop()
 
 
 def main() -> None:

@@ -2,7 +2,8 @@
 every headliner must be a registered query (a rename that misses
 bench.py would crash the bench run), the final line must fit the
 driver's tail capture, the one timer must interleave and clear the
-cache, and every script must still import what it uses from bench."""
+cache, the scale probe must label what it ran, and every script must
+import cleanly."""
 
 from __future__ import annotations
 
@@ -117,9 +118,47 @@ def test_script_imports(name):
     importlib.import_module(f"scripts.{name}")
 
 
-def test_sf10_probe_slots_resolve():
-    from dask_awkward_sandbox_spark.plans import QUERIES
-    from scripts.scale_probe_sf10 import REGISTERED
 
-    missing = [n for n in REGISTERED if n not in QUERIES]
-    assert not missing, missing
+def test_scale_probe_labels_name_both_dirs(tmp_path, monkeypatch):
+    """scale_probe labels its block with the scale factors of the two
+    dirs it compared, parsed the way main() parses the bench SF, not
+    with the default sf0.1 -> sf1 step. No Spark: the plan, timing and
+    skew calls are stubbed."""
+    import bench
+    from dask_awkward_sandbox_spark.plans import QUERIES
+
+    assert bench.sf_of("/data/sf0.01/") == 0.01
+    assert bench.sf_of("/data/sf10") == 10.0
+    assert bench.sf_of("/data/tiny") == "/data/tiny"
+
+    scale_dir = tmp_path / "sf10"
+    (scale_dir / "lineitem.parquet").mkdir(parents=True)
+    monkeypatch.delenv("SPARK_GRAFT_SKIP_SCALE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_SCALE_DIR", str(scale_dir))
+    for name in bench.HEADLINERS:
+        monkeypatch.setitem(QUERIES, name, lambda spark, d: d)
+    monkeypatch.setattr(bench, "_plan_signature", lambda d: {"Sort": 2 if d == str(scale_dir) else 1})
+    monkeypatch.setattr(bench, "_slots", lambda spark, names, d: dict.fromkeys(names))
+    monkeypatch.setattr(bench, "timed", lambda spark, slots, reps: {n: [3.0, 2.0] for n in slots})
+    monkeypatch.setattr(bench, "skew_demo", lambda spark, d, reps: {"dir": d})
+
+    out = bench.scale_probe(None, "/data/sf0.01", dict.fromkeys(bench.HEADLINERS, 1.0), 1)
+    assert out["sf"] == 10.0 and out["dir"] == str(scale_dir)
+    assert out["growth_vs_sf0.01"] == dict.fromkeys(bench.HEADLINERS, 2.0)
+    assert "growth_vs_sf0.1" not in out
+    assert out["plan_delta"] == dict.fromkeys(
+        bench.HEADLINERS, {"only_sf0.01": {"Sort": 1}, "only_sf10": {"Sort": 2}}
+    )
+    assert out["skew_demo"] == {"dir": str(scale_dir)}
+
+
+def test_make_scaled_sf_refuses_keys_at_offset(sf, tmp_path, monkeypatch):
+    """Copy i shifts every key by i*OFF, so a source whose largest key
+    reaches OFF would build colliding copies: scale() must refuse it,
+    naming the key, before it writes anything."""
+    from scripts import make_scaled_sf
+
+    monkeypatch.setattr(make_scaled_sf, "OFF", 1000)  # sf0.001 orders reach 1499
+    with pytest.raises(ValueError, match=r"orders\.o_orderkey reaches 1499"):
+        make_scaled_sf.scale(sf, str(tmp_path), 2)
+    assert not list(tmp_path.iterdir())

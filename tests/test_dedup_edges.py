@@ -197,11 +197,13 @@ def test_paragraph_dedup_properties(spark):
 
 
 def test_minhash_pair_lister_and_bounded_stats(spark):
-    """The demoted pair lister (r10: out of the gate slot — its output
-    is O(sum bucket^2)) stays contract-locked here: pairs must match a
-    Python brute-force rebuild of the banding, and the registered
-    output-bounded derivations (candidate counts + bucket histogram)
-    must be arithmetically consistent with the listed pairs:
+    """The pair list a band self-join would return (out of the gate
+    slot since r10, and out of the package since: its output is
+    O(sum bucket^2)) is rebuilt here by a Python brute force over the
+    banding. The package's bucket membership must group docs exactly
+    as that reference does, and the registered output-bounded
+    derivations (candidate counts + bucket histogram) must be
+    arithmetically consistent with the reference pairs:
     sum(n_candidates) == 2 * sum(n_shared_bands) and
     sum over the histogram of n_buckets * bsize * (bsize - 1)."""
     from collections import defaultdict
@@ -239,13 +241,16 @@ def test_minhash_pair_lister_and_bounded_stats(spark):
             for b in sorted(docs)[i + 1 :]:
                 want_pairs[(a, b)] += 1
 
-    got_pairs = {
-        (r["id_a"], r["id_b"]): r["n_shared_bands"]
-        for r in dedup.minhash_lsh_candidates(
-            df, "text", "doc_id", num_perms=perms, bands=bands
-        ).collect()
-    }
-    assert got_pairs == dict(want_pairs)
+    got_buckets = defaultdict(set)  # (band, md5 key) -> {doc}
+    for r in dedup.minhash_band_buckets(
+        df, "text", "doc_id", num_perms=perms, bands=bands
+    ).collect():
+        got_buckets[(r["band"], r["key"])].add(r["doc"])
+    assert sorted((b, sorted(d)) for (b, _k), d in got_buckets.items()) == sorted(
+        (b, sorted(d)) for (b, _k), d in band_of.items()
+    )
+
+    got_pairs = dict(want_pairs)
     assert (0, 1) in got_pairs and got_pairs[(0, 1)] == bands  # exact dups share all bands
     assert all(6 not in p for p in got_pairs)  # token-less excluded
 

@@ -653,49 +653,6 @@ def test_hof_slots_scan_shape_no_forced_broadcast(spark):
             assert n_cache == n_caches, (name, n_cache, n_caches)
 
 
-def test_sorted_bucket_table_elides_window_sort(spark):
-    """The r13 fix for the window-sort-bound slots (SCALE_SF10
-    stage_profile: the 7-column ORD comparator Sort is the sf10
-    bottleneck): over plans.common.sorted_lineitem (bucketed +
-    sortBy'd, one file per bucket, legacy bucketed-scan-ordering conf)
-    the ORD Sort must VANISH from q_flatten_softmax's executed plan
-    (only cheap numeric idx/_run_id sorts remain) and q_pad_fill_none
-    must plan with NO Sort at all — while both stay row-identical to
-    the plain-parquet forms."""
-    import re
-
-    from dask_awkward_sandbox_spark.plans.common import sorted_lineitem
-    from dask_awkward_sandbox_spark.plans.nested import (
-        q_flatten_softmax,
-        q_pad_fill_none,
-    )
-
-    from dask_awkward_sandbox_spark.plans.common import SORTED_SCAN_CONF
-    from dask_awkward_sandbox_spark.session import scoped_conf
-
-    with scoped_conf(spark, SORTED_SCAN_CONF, "true"):
-        t = sorted_lineitem(spark, SF, num_buckets=8)
-        flat = q_flatten_softmax(spark, SF, base=t)
-        plan = flat._jdf.queryExecution().executedPlan().toString()
-        ord_sorts = [
-            ln for ln in plan.splitlines()
-            if re.search(r"\bSort \[", ln) and "l_linestatus" in ln
-        ]
-        assert not ord_sorts, ord_sorts
-        assert sorted(map(tuple, flat.collect())) == sorted(
-            map(tuple, q_flatten_softmax(spark, SF).collect())
-        )
-
-        pad = q_pad_fill_none(spark, SF, base=t)
-        plan2 = pad._jdf.queryExecution().executedPlan().toString()
-        assert not re.search(r"\bSort \[", plan2), plan2
-        assert sorted(map(tuple, pad.collect())) == sorted(
-            map(tuple, q_pad_fill_none(spark, SF).collect())
-        )
-    # the conf is scoped — assert it did not leak into the session
-    assert spark.conf.get(SORTED_SCAN_CONF, None) in (None, "false")
-
-
 def test_plans_broadcast_hint_sites_inventoried():
     """Authorship-time sweep of the whole plans/ package: every
     ``F.broadcast`` call must sit in an inventoried function whose
@@ -705,7 +662,7 @@ def test_plans_broadcast_hint_sites_inventoried():
     where the hazard is introduced.
 
     Boundedness notes for the inventory:
-    - tpch/tpch_full dim-side hints: ONLY nation (25 rows at every SF)
+    - tpch dim-side hints: ONLY nation (25 rows at every SF)
       and region (5 rows) carry hints. customer/supplier/part scale
       linearly with SF and are deliberately UNHINTED (r13): an
       explicit ``F.broadcast`` hint BYPASSES
@@ -713,7 +670,7 @@ def test_plans_broadcast_hint_sites_inventoried():
       hint, so a hinted SF-scaling side OOMs every executor at 100 TB;
       unhinted, AQE picks BHJ while the side fits and SMJ beyond.
     - crossJoin attaches (q_small_sources root/text/lake stats,
-      q17-style avg thresholds, q_concatenate axis=None legs, the
+      q_concatenate axis=None legs, the
       events.py stream-input max-timestamp anchors): 1-row global
       aggregates.
     - llm.py mixture join: per-language plan frame, bounded by the
@@ -757,13 +714,6 @@ def test_plans_broadcast_hint_sites_inventoried():
         ("tpch.py", "q5_local_supplier"): 2,
         ("tpch.py", "q10_returned_items"): 1,
         ("tpch.py", "q7_volume_shipping"): 2,
-        ("tpch_full.py", "q2_min_cost_supplier"): 1,
-        ("tpch_full.py", "q8_market_share"): 3,
-        ("tpch_full.py", "q9_product_type_profit"): 1,
-        ("tpch_full.py", "q11_important_stock"): 2,
-        ("tpch_full.py", "q15_top_supplier"): 1,
-        ("tpch_full.py", "q20_potential_promotion"): 1,
-        ("tpch_full.py", "q22_sales_opportunity"): 1,
     }
     assert found == expected, {
         "new_or_moved": {k: v for k, v in found.items() if expected.get(k) != v},

@@ -9,11 +9,15 @@ The roots are every name mentioned outside top-level defs in the package
 excluded). A name counts when it appears as an ``ast.Name``, an
 attribute, an import alias or a string constant that is exactly an
 identifier. A def decorated by a call (``@query(...)``) registers itself
-on import and is a root. From the roots, a def is reached when its name
-is mentioned by a root or by a reached def; a def mentioned only in its
-own body, in tests or in other unreached defs is dead. Matching is by
-bare name, so the rule can only miss dead code, never flag live code
-that is called by name.
+on import and is a root, but only in a module that runs: one the
+surface files import, or one a module that runs imports (its parent
+packages included; an import anywhere in a file counts, and so does a
+string naming the module, as ``spark.python.daemon.module`` does). A
+module nothing imports adds no roots at all. From the roots, a def is
+reached when its name is mentioned by a root or by a reached def; a
+def mentioned only in its own body, in tests or in other unreached
+defs is dead. Matching is by bare name, so the rule can only miss dead
+code, never flag live code that is called by name.
 
 A new def must be reached from a slot, bench.py, a script or a
 reference-namespace name; a def reached only in ways the scan cannot
@@ -72,29 +76,77 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _imports(tree: ast.AST, module: str, is_pkg: bool) -> set[str]:
+    """Dotted names of every module an import or a package-module
+    string in ``tree`` loads (parent packages included); ``module``
+    resolves relative imports."""
+    out: set[str] = set()
+
+    def add(dotted: str) -> None:
+        parts = dotted.split(".")
+        out.update(".".join(parts[: i + 1]) for i in range(len(parts)))
+
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                add(a.name)
+        elif isinstance(n, ast.ImportFrom):
+            base = n.module or ""
+            if n.level:
+                pkg = module.split(".")
+                pkg = pkg[: len(pkg) - (n.level - is_pkg)]
+                base = ".".join(pkg + ([base] if base else []))
+            for a in n.names:
+                add(f"{base}.{a.name}")
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.startswith(PKG.name + "."):
+                add(n.value)
+    return out
+
+
 def unreached(root: Path = ROOT) -> dict[str, int]:
     """``{"<module path>:<def>": n_lines}`` for every top-level package
     def the roots do not reach."""
     pkg = root / PKG.name
-    roots: set[str] = set()
-    defs = []  # (key, name, n_lines, names mentioned in the def)
+    trees = {}  # dotted module name -> (path, tree)
     for path in sorted(pkg.rglob("*.py")):
-        for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                roots |= _names(node)
-                continue
-            for dec in node.decorator_list:
-                roots |= _names(dec)
-                if isinstance(dec, ast.Call):
-                    roots.add(node.name)
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            key = f"{path.relative_to(pkg).as_posix()}:{node.name}"
-            defs.append((key, node.name, node.end_lineno - start + 1, _names(node)))
+        parts = path.relative_to(root).with_suffix("").parts
+        module = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        trees[module] = (path, ast.parse(path.read_text()))
+
+    roots: set[str] = set()
+    imported: set[str] = set()
     surface = [root / "bench.py", root / "__spark_entry__.py",
                *(root / "scripts").glob("*.py"), *(root / "perfbench").glob("*.py")]
     for path in surface:
         if path.exists() and not path.name.startswith("test_"):
-            roots |= _names(ast.parse(path.read_text()))
+            tree = ast.parse(path.read_text())
+            roots |= _names(tree)
+            imported |= _imports(tree, "", False)
+    todo = imported & set(trees)
+    while todo:
+        module = todo.pop()
+        path, tree = trees[module]
+        new = _imports(tree, module, path.name == "__init__.py") - imported
+        imported |= new
+        todo |= new & set(trees)
+
+    defs = []  # (key, name, n_lines, names mentioned in the def)
+    for module, (path, tree) in trees.items():
+        runs = module in imported
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if runs:
+                    roots |= _names(node)
+                continue
+            if runs:
+                for dec in node.decorator_list:
+                    roots |= _names(dec)
+                    if isinstance(dec, ast.Call):
+                        roots.add(node.name)
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            key = f"{path.relative_to(pkg).as_posix()}:{node.name}"
+            defs.append((key, node.name, node.end_lineno - start + 1, _names(node)))
 
     live, reached = set(roots), set()
     grew = True
