@@ -19,7 +19,7 @@ Scale design (100 TB of documents):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions.similarity import connected_components
@@ -68,6 +68,23 @@ def minhash_signature(df: DataFrame, text_col: str, num_perms: int = 16) -> Data
     return out.drop("_hs")
 
 
+def minhash_band_keys(num_perms: int, bands: int) -> Column:
+    """The LSH band keys of a row of :func:`minhash_signature` columns:
+    ``array<struct<band int, key string>>``, one entry per band, where
+    ``key`` is the md5 of the band's ``minhash_*`` values joined by
+    ``_``. Two docs share a bucket iff they agree on a band's key."""
+    rows = num_perms // bands
+    return F.array(*[
+        F.struct(
+            F.lit(bi).alias("band"),
+            F.md5(F.concat_ws(
+                "_", *[F.col(f"minhash_{bi * rows + r}") for r in range(rows)]
+            )).alias("key"),
+        )
+        for bi in range(bands)
+    ])
+
+
 def minhash_band_buckets(
     df: DataFrame | None,
     text_col: str,
@@ -83,7 +100,6 @@ def minhash_band_buckets(
     unnest, so exclusion is also what the oracle computes). ``sig``
     (a precomputed :func:`minhash_signature` output with at least
     ``num_perms`` columns) skips the signature scan."""
-    rows = num_perms // bands
     if sig is None:
         if df is None:
             raise ValueError(
@@ -92,14 +108,9 @@ def minhash_band_buckets(
             )
         sig = minhash_signature(df, text_col, num_perms)
     sig = sig.filter(F.col("minhash_0").isNotNull())
-    band_cols = []
-    for bi in range(bands):
-        parts = [F.col(f"minhash_{bi * rows + r}") for r in range(rows)]
-        band_cols.append(
-            F.struct(F.lit(bi).alias("band"), F.md5(F.concat_ws("_", *parts)).alias("key"))
-        )
     return sig.select(
-        F.col(id_col).alias("doc"), F.explode(F.array(*band_cols)).alias("bk")
+        F.col(id_col).alias("doc"),
+        F.explode(minhash_band_keys(num_perms, bands)).alias("bk"),
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 

@@ -167,57 +167,68 @@ def fld_map(arr: Column, name: str, f) -> Column:
     return F.transform(arr.getField(name), f)
 
 
-def staged_stream_dir(path: str, key: str, build) -> None:
-    """Build a DETERMINISTIC stream-input directory once and reuse it
-    across invocations (r14, verdict item 2): the streaming gate slots
-    used to re-write their json input files (a full events/documents
-    table, repartition(1)) on EVERY call — pure fixed cost, since the
-    staged bytes are a function of the source table alone. ``key``
-    must encode everything the staging depends on (a format-version
-    tag + the source identity, e.g. its footer row count); a sibling
-    marker file records the key, and any mismatch — new staging code,
-    different dataset under the same path — rebuilds from scratch.
-    The marker lives NEXT TO the dir, never inside it: the json file
-    source reads every file in its directory regardless of extension,
-    and a stray marker would parse as a corrupt-record row.
+def stage_replay(path: str, key: str, frames) -> None:
+    """Stage a two-file json replay input at ``path`` once and reuse it
+    across calls. ``frames()`` returns the (first, second) frames; each
+    is written as ONE file, and the first file is backdated so the file
+    stream source, which orders files by mtime, delivers the second
+    file in a strictly later micro-batch (with ``maxFilesPerTrigger=1``)
+    without a wall-clock sleep. Timestamps are written with
+    ``JSON_TS_FORMAT`` (micros-preserving; a no-op on frames without
+    timestamps).
+
+    ``key`` must encode everything the staged bytes depend on (a
+    format-version tag plus the source identity, e.g. its footer row
+    count). A sibling marker file records it, and any mismatch rebuilds
+    the dir from scratch. A matching marker returns without calling
+    ``frames``, so a warm call plans nothing. The marker lives NEXT TO
+    the dir, never inside it: the json file source reads every file in
+    its directory regardless of extension, and a stray marker would
+    parse as a corrupt-record row.
 
     Reuse is sound for the replay contracts because each run still
     starts its stream from a FRESH checkpoint (the slots rmtree their
-    checkpoint/store dirs per call); only the input bytes — and their
-    backdated mtime ordering, which persists on disk — are shared."""
+    checkpoint/sink dirs per call); only the input bytes, and their
+    backdated mtime order, are shared."""
+    import glob
     import hashlib
-    import os
     import shutil
+    import time
 
-    marker = path.rstrip("/") + ".staged_" + hashlib.md5(
-        key.encode()
-    ).hexdigest()[:16]
+    from dask_awkward_sandbox_spark.streaming.events import JSON_TS_FORMAT
+
+    stem = path.rstrip("/")
+    marker = stem + ".staged_" + hashlib.md5(key.encode()).hexdigest()[:16]
     if os.path.isfile(marker) and os.path.isdir(path):
         return
-    # drop stale markers for this path (old keys) before rebuilding
-    import glob
-
-    for m in glob.glob(path.rstrip("/") + ".staged_*"):
+    for m in glob.glob(stem + ".staged_*"):  # markers of older keys
         os.unlink(m)
     shutil.rmtree(path, ignore_errors=True)
-    build()
+
+    def write(df: DataFrame, mode: str) -> None:
+        df.repartition(1).write.mode(mode).option(
+            "timestampFormat", JSON_TS_FORMAT
+        ).json(path)
+
+    first, second = frames()
+    write(first, "overwrite")
+    past = time.time() - 30.0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            os.utime(os.path.join(root, f), (past, past))
+    write(second, "append")
     with open(marker, "w") as f:
         f.write(key)
 
 
-def backdate_files(path: str, seconds: float = 30.0) -> None:
-    """Push every file currently under ``path`` ``seconds`` into the
-    past (os.utime). The file stream source orders files by mtime, so
-    a later append lands in a strictly later micro-batch WITHOUT the
-    wall-clock sleep the gate slots used to pay (late r11 — three
-    1.2s sleeps per q_stream_dedup run, one per q_ann_ivf_assign):
-    backdating what's already on disk is deterministic regardless of
-    how fast the second write follows."""
-    import os
-    import time
-
-    past = time.time() - seconds
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            os.utime(p, (past, past))
+def replay_poison(spark: SparkSession, run, path: str) -> int:
+    """The exactly-once check of an idempotent batch_id-partitioned
+    sink at ``path``: ``run(ckpt)`` drives the stream into it from the
+    checkpoint dir named ``ckpt``. Runs from ``"ckpt"``, then replays
+    every batch from a fresh ``"ckpt_replay"``. Returns 0 when the
+    replay left the sink's row count unchanged, else 10**9, which the
+    caller adds to a hashed output column so the oracle fails."""
+    run("ckpt")
+    n_first = spark.read.parquet(path).count()
+    run("ckpt_replay")
+    return 0 if spark.read.parquet(path).count() == n_first else 10**9

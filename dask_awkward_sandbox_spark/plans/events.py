@@ -13,14 +13,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.plans.common import (
-    backdate_files,
     cents,
     parquet_row_count,
     read,
-    staged_stream_dir,
+    replay_poison,
+    stage_replay,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
-from dask_awkward_sandbox_spark.session import SCRATCH, scoped_conf
+from dask_awkward_sandbox_spark.session import scoped_conf, scratch_path
 
 SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds — exact integer compare
 
@@ -233,18 +233,15 @@ def q_stream_sessionize(spark, sf_dir):
     itself exercises the late-merge path, and the final emitted set is
     unchanged because emission is watermark-final."""
     with stream_state_scope(spark):
-        import os
-
         from dask_awkward_sandbox_spark.streaming import sessionize_stateful
         from dask_awkward_sandbox_spark.streaming.events import (
-            JSON_TS_FORMAT,
+            run_stream_to_memory,
             stream_events_from_dir,
         )
 
-        tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        path = os.path.join(SCRATCH, tag, "stream_sessionize_json")
+        path = scratch_path(sf_dir, "stream_sessionize_json")
 
-        def _stage() -> None:
+        def frames():
             e = read(spark, sf_dir, "events")
             tus = F.unix_micros(F.col("ts"))
             # the scalar max rides the plan as a 1-row broadcast
@@ -259,36 +256,24 @@ def q_stream_sessionize(spark, sf_dir):
             lo = F.col("_max_us") - F.lit(WATERMARK_US - 600_000_000)
             hi = F.col("_max_us") - F.lit(60_000_000)
             deferred = (tus >= lo) & (tus <= hi) & (F.col("event_id") % 7 == 0)
-            ex.filter(~deferred).drop("_max_us").repartition(1).write.mode(
-                "overwrite"
-            ).option("timestampFormat", JSON_TS_FORMAT).json(path)
-            backdate_files(path)  # file source orders by mtime: late file second
-            ex.filter(deferred).drop("_max_us").repartition(1).write.mode(
-                "append"
-            ).option("timestampFormat", JSON_TS_FORMAT).json(path)
+            return (
+                ex.filter(~deferred).drop("_max_us"),
+                ex.filter(deferred).drop("_max_us"),  # the late file
+            )
 
-        # r14 (verdict item 2): the staged two-file replay is a pure
-        # function of the events table — build it once, reuse across
-        # invocations (the stream itself still runs from a fresh
-        # ephemeral checkpoint every call)
-        staged_stream_dir(
+        # the staged two-file replay is a pure function of the events
+        # table: built once, reused across invocations (the stream
+        # itself still runs from a fresh ephemeral checkpoint every call)
+        stage_replay(
             path,
             f"sessionize-v1:{sf_dir}:{parquet_row_count(sf_dir, 'events')}",
-            _stage,
+            frames,
         )
 
         out = sessionize_stateful(
             stream_events_from_dir(spark, path, max_files_per_trigger=1)
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("q_stream_sessionize_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table("q_stream_sessionize_sink").select(
+        return run_stream_to_memory(out, "q_stream_sessionize_sink").select(
             "user_id", "session_start_us", "n_events"
         )
 
@@ -417,18 +402,19 @@ def q_stream_dedup(spark, sf_dir):
         import os
         import shutil
 
-        from dask_awkward_sandbox_spark.streaming import stream_neardup_dedup
+        from dask_awkward_sandbox_spark.streaming import (
+            stream_curation_scores,
+            stream_neardup_dedup,
+        )
         from dask_awkward_sandbox_spark.streaming.events import (
-            JSON_TS_FORMAT,
+            run_stream_to_memory,
             stream_dedup_exact,
             stream_events_from_dir,
         )
 
-        tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        path = os.path.join(SCRATCH, tag, "stream_dedup_json")
-        n_events = parquet_row_count(sf_dir, "events")
+        path = scratch_path(sf_dir, "stream_dedup_json")
 
-        def _stage_events() -> None:
+        def frames():
             e = read(spark, sf_dir, "events")
             tus = F.unix_micros(F.col("ts"))
             # scalar max as a 1-row broadcast (q11/q15 pattern), not a
@@ -436,37 +422,22 @@ def q_stream_dedup(spark, sf_dir):
             mx = e.agg(F.max(tus).alias("_max_us"))
             # last 30 min re-emitted as the duplicate file
             dup_window = tus >= F.col("_max_us") - F.lit(1_800_000_000)
-            e.repartition(1).write.mode("overwrite").option(
-                "timestampFormat", JSON_TS_FORMAT
-            ).json(path)
-            backdate_files(path)  # file source orders by mtime: dup file second
-            e.crossJoin(F.broadcast(mx)).filter(dup_window).drop(
-                "_max_us"
-            ).repartition(1).write.mode("append").option(
-                "timestampFormat", JSON_TS_FORMAT
-            ).json(path)
+            return e, e.crossJoin(F.broadcast(mx)).filter(dup_window).drop("_max_us")
 
-        # r14 (verdict item 2): stage once per source table — the
-        # replay files are a pure function of events.parquet, and
-        # re-writing them per call was fixed cost (the dedup stream
-        # itself still runs from a fresh ephemeral checkpoint)
-        staged_stream_dir(path, f"dedup-v1:{sf_dir}:{n_events}", _stage_events)
+        # staged once per source table: the replay files are a pure
+        # function of events.parquet (the dedup stream itself still runs
+        # from a fresh ephemeral checkpoint)
+        stage_replay(
+            path, f"dedup-v1:{sf_dir}:{parquet_row_count(sf_dir, 'events')}", frames
+        )
 
         deduped = stream_dedup_exact(
             stream_events_from_dir(spark, path, max_files_per_trigger=1),
             keys=["event_id"],
             watermark="1 hour",
         )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("q_stream_dedup_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         exact_leg = (
-            spark.table("q_stream_dedup_sink")
+            run_stream_to_memory(deduped, "q_stream_dedup_sink")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -484,31 +455,38 @@ def q_stream_dedup(spark, sf_dir):
         )
 
         # neardup leg: the two-batch INPUT is a pure function of the
-        # documents table — staged once OUTSIDE nd_base (r14); the
+        # documents table — staged once OUTSIDE nd_base; the
         # store/out/checkpoint dirs under nd_base rebuild from scratch
         # each call so the replay (and its store) stays deterministic
-        nd_base = os.path.join(SCRATCH, tag, "stream_neardup")
-        in_path = os.path.join(SCRATCH, tag, "stream_neardup_in")
-        n_docs = parquet_row_count(sf_dir, "documents")
+        nd_base = scratch_path(sf_dir, "stream_neardup")
+        in_path = scratch_path(sf_dir, "stream_neardup_in")
 
-        def _stage_docs() -> None:
+        def doc_frames():
             d = read(spark, sf_dir, "documents").select("doc_id", "text")
-            b1 = d.filter(F.col("doc_id") % 2 == 0)
-            b2 = d.filter(F.col("doc_id") % 2 == 1).unionByName(
-                d.filter(F.col("doc_id") % 10 == 0).select(
-                    (F.col("doc_id") + F.lit(_ND_OFF)).alias("doc_id"), "text"
+            return d.filter(F.col("doc_id") % 2 == 0), (
+                d.filter(F.col("doc_id") % 2 == 1).unionByName(
+                    d.filter(F.col("doc_id") % 10 == 0).select(
+                        (F.col("doc_id") + F.lit(_ND_OFF)).alias("doc_id"), "text"
+                    )
                 )
             )
-            b1.repartition(1).write.mode("overwrite").json(in_path)
-            backdate_files(in_path)  # file source: batch 2 second
-            b2.repartition(1).write.mode("append").json(in_path)
 
-        staged_stream_dir(in_path, f"neardup-v1:{sf_dir}:{n_docs}", _stage_docs)
+        stage_replay(
+            in_path,
+            f"neardup-v1:{sf_dir}:{parquet_row_count(sf_dir, 'documents')}",
+            doc_frames,
+        )
+
+        def docs_stream():
+            return (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .json(in_path)
+            )
+
         shutil.rmtree(nd_base, ignore_errors=True)
         stream_neardup_dedup(
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .json(in_path),
+            docs_stream(),
             store_path=os.path.join(nd_base, "store"),
             out_path=os.path.join(nd_base, "out"),
             checkpoint=os.path.join(nd_base, "ckpt"),
@@ -528,33 +506,23 @@ def q_stream_dedup(spark, sf_dir):
             F.lit(None).cast("double").alias("score"),
         )
 
-        # curation leg (late r11): the SAME two-batch document stream
-        # through stream_curation_scores — stateless scan-side scoring
-        # with the idempotent batch_id-partitioned sink, REPLAYED from a
-        # fresh checkpoint (both batches re-delivered): dynamic partition
+        # curation leg: the SAME two-batch document stream through
+        # stream_curation_scores — stateless scan-side scoring with the
+        # idempotent batch_id-partitioned sink, REPLAYED from a fresh
+        # checkpoint (both batches re-delivered): dynamic partition
         # overwrite must leave the sink row count unchanged or the poison
         # breaks every curation row's hash. Scores (whitespace tokens,
         # lang-id, quality double, position-weighted fingerprint) are the
         # exact batch expressions, replayed by the oracle per document.
-        from dask_awkward_sandbox_spark.streaming import stream_curation_scores
-
         cur_base = os.path.join(nd_base, "curation")
         cur_out = os.path.join(cur_base, "out")
-
-        def _run_curation(ckpt: str) -> None:
-            stream_curation_scores(
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1)
-                .json(in_path),
-                out_path=cur_out,
-                checkpoint=os.path.join(cur_base, ckpt),
-            )
-
-        _run_curation("ckpt")
-        n_first = spark.read.parquet(cur_out).count()
-        _run_curation("ckpt_replay")  # fresh checkpoint: both batches again
-        n_replayed = spark.read.parquet(cur_out).count()
-        poison = 0 if n_first == n_replayed else 10**9
+        poison = replay_poison(
+            spark,
+            lambda ckpt: stream_curation_scores(
+                docs_stream(), out_path=cur_out, checkpoint=os.path.join(cur_base, ckpt)
+            ),
+            cur_out,
+        )
         cur_leg = spark.read.parquet(cur_out).select(
             F.lit("curation").alias("leg"),
             F.col("doc_id").cast("string").alias("key"),

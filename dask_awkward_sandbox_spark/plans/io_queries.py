@@ -51,7 +51,9 @@ from dask_awkward_sandbox_spark.plans.nested import (
     q_sort_argsort_hof,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
-from dask_awkward_sandbox_spark.session import SCRATCH, scoped_conf
+# SCRATCH stays importable here: perfbench/run.py's redirect_scratch
+# reads the scratch root from this module
+from dask_awkward_sandbox_spark.session import SCRATCH, scoped_conf, scratch_path  # noqa: F401
 
 # at most one resident roundtrip cache per session (r13 advice: the
 # persist previously outlived the query with no unpersist)
@@ -62,11 +64,6 @@ import threading
 # source files, so the old frame was already invalid)
 _ROUNDTRIP_CACHE: dict = {}
 _ROUNDTRIP_LOCK = threading.Lock()
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(SCRATCH, tag, name)
 
 
 @query(
@@ -240,7 +237,7 @@ def q_parquet_roundtrip(spark, sf_dir):
     filter sits BEFORE mapInArrow so it reaches the parquet scan and
     the Python workers only ever see the sample."""
     it = order_items(spark, sf_dir, fields=["l_linenumber", "l_quantity"])
-    path = _scratch(sf_dir, "nested_items")
+    path = scratch_path(sf_dir, "nested_items")
     to_parquet(it, path, max_records_per_file=100_000)
     # r12 (verdict items 1+5): the read-back frame feeds FIVE branches
     # (nested_side, to_dataframe explode, enforce_type explode, and
@@ -571,7 +568,7 @@ def q_small_sources(spark, sf_dir):
     e = read(spark, sf_dir, "events").select(
         "event_id", "event_type", cents(F.col("value")).alias("value_c"), "props"
     )
-    path = _scratch(sf_dir, "events_json")
+    path = scratch_path(sf_dir, "events_json")
     to_json(e, path)
     back = from_json(
         spark, path, schema="event_id long, event_type string, value_c long, props string"
@@ -591,7 +588,7 @@ def q_small_sources(spark, sf_dir):
 
     # from_text line stats (1 row)
     d = read(spark, sf_dir, "documents")
-    tpath = _scratch(sf_dir, "docs_text")
+    tpath = scratch_path(sf_dir, "docs_text")
     to_text(d, "text", tpath)
     lines = from_text(spark, tpath)
     text_stats = lines.agg(
@@ -625,123 +622,65 @@ def q_small_sources(spark, sf_dir):
     from dask_awkward_sandbox_spark.io.root import RawRootBackend, from_root
     from dask_awkward_sandbox_spark.io.rootfile import write_root_flat
 
-    rpath = os.path.join(_scratch(sf_dir, "root_gate"), "events.root")
-    os.makedirs(os.path.dirname(rpath), exist_ok=True)
     i = np.arange(_ROOT_N, dtype=np.int64)
     nmu = (i % 4).astype(np.int32)
     pts = [
         [((int(ii) * 7 + j * 3) % 500) / 10.0 + 0.5 for j in range(int(c))]
         for ii, c in zip(i, nmu)
     ]
-    write_root_flat(
-        rpath,
-        "Events",
-        {
-            "event": ("L", 1_000_000 + i),
-            "nMuon": ("I", nmu),
-            "Muon_pt": ("[nMuon]D", pts),
-        },
-        basket_entries=_ROOT_N // 4,
-        compress=True,
-    )
-    rdf = from_root(spark, rpath, tree="Events", step_size=_ROOT_N // 3,
-                    backend=RawRootBackend())
     pt_c = F.aggregate(
         F.col("Muon_pt"),
         F.lit(0).cast("long"),
         lambda a, x: a + F.round(x * 100).cast("long"),
     )
-    root_stats = rdf.select(
-        "event", pt_c.alias("pt_c"), F.size("Muon_pt").alias("npt")
-    ).agg(
-        F.count(F.lit(1)).alias("root_n"),
-        F.sum("event").alias("root_sum_event"),
-        F.sum("npt").cast("long").alias("root_total_pt"),
-        F.sum("pt_c").alias("root_sum_pt_c"),
-        F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias("root_dot"),
-    )
-    # root_lz4_* legs (r10): the SAME data written with L4 baskets
-    # (XXH64 + LZ4 block framing — ROOT's default algo since 6.14,
-    # decoded by the bundled liblz4) must decode to the same closed-form
-    # values through its own file and reader pass; the nMuon (0..3
-    # repeating) and event (arithmetic int64) baskets always shrink,
-    # so the L4 decode path genuinely executes under the gate
-    rpath4 = os.path.join(_scratch(sf_dir, "root_gate"), "events_lz4.root")
-    write_root_flat(
-        rpath4,
-        "Events",
-        {
-            "event": ("L", 1_000_000 + i),
-            "nMuon": ("I", nmu),
-            "Muon_pt": ("[nMuon]D", pts),
-        },
-        basket_entries=_ROOT_N // 4,
-        compress="lz4",
-    )
-    rdf4 = from_root(spark, rpath4, tree="Events", step_size=_ROOT_N // 3,
-                     backend=RawRootBackend())
-    root_lz4_stats = rdf4.select(
-        "event", pt_c.alias("pt_c")
-    ).agg(
-        F.sum("pt_c").alias("root_lz4_sum_pt_c"),
-        F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias(
-            "root_lz4_dot"
-        ),
-    )
-    root_stats = root_stats.crossJoin(F.broadcast(root_lz4_stats))
-    # root_zstd_* legs (r11): the SAME data with ZS baskets (one
-    # RFC 8878 frame per block, encoded and decoded by pyarrow's
-    # bundled libzstd), so the gate hash covers the ZS framing read
-    rpathz = os.path.join(_scratch(sf_dir, "root_gate"), "events_zstd.root")
-    write_root_flat(
-        rpathz,
-        "Events",
-        {
-            "event": ("L", 1_000_000 + i),
-            "nMuon": ("I", nmu),
-            "Muon_pt": ("[nMuon]D", pts),
-        },
-        basket_entries=_ROOT_N // 4,
-        compress="zstd",
-    )
-    rdfz = from_root(spark, rpathz, tree="Events", step_size=_ROOT_N // 3,
-                     backend=RawRootBackend())
-    root_zstd_stats = rdfz.select(
-        "event", pt_c.alias("pt_c")
-    ).agg(
-        F.sum("pt_c").alias("root_zstd_sum_pt_c"),
-        F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias(
-            "root_zstd_dot"
-        ),
-    )
-    root_stats = root_stats.crossJoin(F.broadcast(root_zstd_stats))
-    # root_lzma_* legs (r11): the SAME data with XZ baskets — ROOT's
-    # kLZMA envelope is a standard .xz container stream; both sides
-    # ride the stdlib lzma module (liblzma itself), closing the last
-    # ROOT compression gate under the driver hash
-    rpathx = os.path.join(_scratch(sf_dir, "root_gate"), "events_lzma.root")
-    write_root_flat(
-        rpathx,
-        "Events",
-        {
-            "event": ("L", 1_000_000 + i),
-            "nMuon": ("I", nmu),
-            "Muon_pt": ("[nMuon]D", pts),
-        },
-        basket_entries=_ROOT_N // 4,
-        compress="lzma",
-    )
-    rdfx = from_root(spark, rpathx, tree="Events", step_size=_ROOT_N // 3,
-                     backend=RawRootBackend())
-    root_lzma_stats = rdfx.select(
-        "event", pt_c.alias("pt_c")
-    ).agg(
-        F.sum("pt_c").alias("root_lzma_sum_pt_c"),
-        F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias(
-            "root_lzma_dot"
-        ),
-    )
-    root_stats = root_stats.crossJoin(F.broadcast(root_lzma_stats))
+    # the SAME data under every basket framing, one file and reader pass
+    # each: ZL (zlib), L4 (XXH64 + LZ4 block, ROOT's default since 6.14,
+    # decoded by the bundled liblz4), ZS (one RFC 8878 frame per block,
+    # pyarrow's bundled libzstd) and XZ (ROOT's kLZMA envelope, a
+    # standard .xz stream through the stdlib lzma module). The nMuon
+    # (0..3 repeating) and event (arithmetic int64) baskets always
+    # shrink, so each decode path genuinely executes under the gate.
+    # The zlib leg also carries the entry/event/jagged-length totals.
+    legs = []
+    for compress, prefix, fname in (
+        (True, "root", "events.root"),
+        ("lz4", "root_lz4", "events_lz4.root"),
+        ("zstd", "root_zstd", "events_zstd.root"),
+        ("lzma", "root_lzma", "events_lzma.root"),
+    ):
+        rpath = scratch_path(sf_dir, "root_gate", fname)
+        os.makedirs(os.path.dirname(rpath), exist_ok=True)
+        write_root_flat(
+            rpath,
+            "Events",
+            {
+                "event": ("L", 1_000_000 + i),
+                "nMuon": ("I", nmu),
+                "Muon_pt": ("[nMuon]D", pts),
+            },
+            basket_entries=_ROOT_N // 4,
+            compress=compress,
+        )
+        rdf = from_root(spark, rpath, tree="Events", step_size=_ROOT_N // 3,
+                        backend=RawRootBackend())
+        cols, totals = ["event", pt_c.alias("pt_c")], []
+        if prefix == "root":
+            cols.append(F.size("Muon_pt").alias("npt"))
+            totals = [
+                F.count(F.lit(1)).alias("root_n"),
+                F.sum("event").alias("root_sum_event"),
+                F.sum("npt").cast("long").alias("root_total_pt"),
+            ]
+        legs.append(rdf.select(*cols).agg(
+            *totals,
+            F.sum("pt_c").alias(f"{prefix}_sum_pt_c"),
+            F.sum(((F.col("event") - 1_000_000) % 97) * F.col("pt_c")).alias(
+                f"{prefix}_dot"
+            ),
+        ))
+    root_stats = legs[0]
+    for leg in legs[1:]:
+        root_stats = root_stats.crossJoin(F.broadcast(leg))
     # root_obj_* legs (r12): user-class branches via streamer-info —
     # an unsplit object branch (meta: one struct per entry) and a
     # TClonesArray branch (hits: member-wise stream, array<struct>),
@@ -751,7 +690,7 @@ def q_small_sources(spark, sf_dir):
     # boundary-sensitive (entry index times per-entry member sums), so
     # values credited to the wrong entry break the hash even when
     # totals survive.
-    rpatho = os.path.join(_scratch(sf_dir, "root_gate"), "events_obj.root")
+    rpatho = scratch_path(sf_dir, "root_gate", "events_obj.root")
     hits = [
         [(int(ii) * 10 + j, ((int(ii) + 2 * j) % 31) / 2.0)
          for j in range((int(ii) * 3 + 1) % 5)]
@@ -824,7 +763,7 @@ def q_small_sources(spark, sf_dir):
 
     from dask_awkward_sandbox_spark.io import lakehouse as lh
 
-    lpath = _scratch(sf_dir, "lake_gate")
+    lpath = scratch_path(sf_dir, "lake_gate")
     shutil.rmtree(lpath, ignore_errors=True)
     ev = read(spark, sf_dir, "events").select(
         "event_id", "event_type", cents(F.col("value")).alias("value_c")

@@ -22,13 +22,13 @@ from dask_awkward_sandbox_spark.functions import (
 )
 from dask_awkward_sandbox_spark.io.io import from_lists
 from dask_awkward_sandbox_spark.plans.common import (
-    backdate_files,
     parquet_row_count,
     read,
-    staged_stream_dir,
+    replay_poison,
+    stage_replay,
 )
 from dask_awkward_sandbox_spark.plans.registry import query
-from dask_awkward_sandbox_spark.session import SCRATCH
+from dask_awkward_sandbox_spark.session import scratch_path
 
 # DuckDB fragments mirroring text_analysis definitions exactly.
 def _tokens_sql(col: str) -> str:
@@ -1097,10 +1097,8 @@ def q_ann_ivf_assign(spark, sf_dir):
     every round in that slot while this baseline-mapped headliner
     stops paying a duplicated Python-worker cogroup the r01 slot
     never ran."""
-    from dask_awkward_sandbox_spark.plans.io_queries import _scratch
-
     e = _emb(spark, sf_dir)
-    path = _scratch(sf_dir, "ivf_index")
+    path = scratch_path(sf_dir, "ivf_index")
     X = similarity._sample_matrix(e, "embedding", "vec_id", 4096)
     similarity.ivf_write_index(
         e, path, id_col="vec_id", vec_col="embedding", nlist=16, iters=0,
@@ -1493,32 +1491,28 @@ def q_knn_join(spark, sf_dir):
     c16 = similarity.kmeans_train(
         e, "embedding", "vec_id", nlist=16, iters=0, X=X
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    sbase = os.path.join(SCRATCH, tag, "stream_ivf")
-    # r14: the two-batch vector stream input is a pure function of the
+    sbase = scratch_path(sf_dir, "stream_ivf")
+    # the two-batch vector stream input is a pure function of the
     # embeddings table — staged once OUTSIDE the per-call-rebuilt sbase
     # (the q_stream_dedup treatment); index/checkpoints stay fresh
-    in_path = os.path.join(SCRATCH, tag, "stream_ivf_in")
+    in_path = scratch_path(sf_dir, "stream_ivf_in")
     shutil.rmtree(sbase, ignore_errors=True)
     spath = os.path.join(sbase, "index")
 
-    def _stage_vecs() -> None:
+    def frames():
         samp = e.filter(F.col("vec_id") % 50 == 0).select("vec_id", "embedding")
-        samp.filter(F.col("vec_id") % 100 == 0).repartition(1).write.mode(
-            "overwrite"
-        ).json(in_path)
-        backdate_files(in_path)  # file source orders by mtime: batch 2 second
-        samp.filter(F.col("vec_id") % 100 != 0).repartition(1).write.mode(
-            "append"
-        ).json(in_path)
+        return (
+            samp.filter(F.col("vec_id") % 100 == 0),
+            samp.filter(F.col("vec_id") % 100 != 0),
+        )
 
-    staged_stream_dir(
+    stage_replay(
         in_path,
         f"ivf-v1:{sf_dir}:{parquet_row_count(sf_dir, 'embeddings')}",
-        _stage_vecs,
+        frames,
     )
 
-    def _run(ckpt: str) -> None:
+    def run(ckpt: str) -> None:
         stream_ivf_append(
             spark.readStream.schema("vec_id long, embedding array<double>")
             .option("maxFilesPerTrigger", 1)
@@ -1531,11 +1525,7 @@ def q_knn_join(spark, sf_dir):
             round_digits=6,
         )
 
-    _run("ckpt")
-    n_first = spark.read.parquet(spath).count()
-    _run("ckpt_replay")  # fresh checkpoint: every batch re-delivered
-    n_replayed = spark.read.parquet(spath).count()
-    poison = 0 if n_first == n_replayed else 10**9
+    poison = replay_poison(spark, run, spath)
     stream_leg = spark.read.parquet(spath).select(
         F.col("nb_id").alias("vec_id"),
         (F.col("list_id").cast("long") + F.lit(poison)).alias(

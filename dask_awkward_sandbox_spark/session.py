@@ -51,7 +51,22 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRATCH = os.path.join(ROOT, ".scratch")
 
 
+def scratch_path(sf_dir: str, *parts: str) -> str:
+    """``SCRATCH/<name of sf_dir>/<parts...>``: the one layout for a
+    slot's per-dataset scratch files (staged stream inputs, stream
+    checkpoints and sinks, lake tables, roundtrip files)."""
+    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    return os.path.join(SCRATCH, tag, *parts)
+
+
 def get_spark(app_name: str = "dask-awkward-sandbox-spark") -> SparkSession:
+    """The process's session: the running one, untouched, when there is
+    one (``getOrCreate`` would re-apply every builder conf to it and
+    silently undo confs set since), else a new one built with the
+    confs below."""
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -22,12 +22,14 @@ uses, so batch and stream can never drift.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_awkward_sandbox_spark.functions import text_analysis as ta
+from dask_awkward_sandbox_spark.streaming.events import (
+    drive_batches,
+    write_batch_partition,
+)
 
 
 def stream_curation_scores(
@@ -64,19 +66,7 @@ def stream_curation_scores(
                 "quality"
             ),
             ta.fingerprint_tokens(F.col("_toks")).alias("fp"),
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            scored.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
         )
+        write_batch_partition(scored, batch_id, out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .queryName(f"stream_curation_scores_{os.path.basename(os.path.normpath(checkpoint))}")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drive_batches(stream, write_batch, "stream_curation_scores", checkpoint)

@@ -122,22 +122,14 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     return stream.join(F.broadcast(dim), on)
 
 
-def run_stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
-    """Drive a stream into parquet via foreachBatch with a checkpoint.
-
-    Exactly-once comes from idempotent replay: each batch overwrites
-    its own ``batch_id=N`` subdirectory, so a batch re-run after a
-    crash-before-checkpoint-commit replaces its earlier partial output
-    instead of appending duplicates. Readers of ``path`` see batch_id
-    as an extra partition column. Processes everything currently
-    available, then stops."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int):
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
+def drive_batches(stream: DataFrame, process, name: str, checkpoint: str) -> None:
+    """Run ``process(batch_df, batch_id)`` over every micro-batch the
+    source has now (Trigger.AvailableNow), then stop; call again as
+    data lands. The stream is named ``<name>_<checkpoint dir name>`` so
+    a per-stream profile can tell concurrent or successive runs apart."""
     q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .queryName(f"run_stream_to_parquet_{os.path.basename(os.path.normpath(checkpoint))}")
+        stream.writeStream.foreachBatch(process)
+        .queryName(f"{name}_{os.path.basename(os.path.normpath(checkpoint))}")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -145,3 +137,46 @@ def run_stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
     q.awaitTermination()
 
 
+def write_batch_partition(df: DataFrame, batch_id: int, path: str, *cols: str) -> None:
+    """Write one micro-batch's rows under ``path/batch_id=N[/col=v...]``
+    with DYNAMIC partition overwrite: a batch replayed after a
+    crash-before-checkpoint-commit replaces its own earlier output
+    instead of appending duplicates, and leaves other batches alone.
+    This is the exactly-once contract of every foreachBatch sink here;
+    readers of ``path`` see batch_id (and ``cols``) as partition
+    columns."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", *cols)
+        .parquet(path)
+    )
+
+
+def run_stream_to_memory(stream: DataFrame, name: str) -> DataFrame:
+    """Drive an append-mode stream into the memory table ``name`` until
+    every available input is consumed (Trigger.AvailableNow), and
+    return that table as a batch frame."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(name)
+
+
+def run_stream_to_parquet(stream_df: DataFrame, path: str, checkpoint: str):
+    """Drive a stream into parquet with a checkpoint, one
+    ``batch_id=N`` partition per micro-batch
+    (:func:`write_batch_partition`). Processes everything currently
+    available, then stops."""
+    drive_batches(
+        stream_df,
+        lambda batch_df, batch_id: write_batch_partition(batch_df, batch_id, path),
+        "run_stream_to_parquet",
+        checkpoint,
+    )

@@ -40,7 +40,14 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dask_awkward_sandbox_spark.functions.dedup import minhash_signature
+from dask_awkward_sandbox_spark.functions.dedup import (
+    minhash_band_keys,
+    minhash_signature,
+)
+from dask_awkward_sandbox_spark.streaming.events import (
+    drive_batches,
+    write_batch_partition,
+)
 
 
 def _batch_state(batch_df: DataFrame, text_col: str, id_col: str,
@@ -69,18 +76,11 @@ def _batch_state(batch_df: DataFrame, text_col: str, id_col: str,
     if spread:
         batch_df = batch_df.repartition(spread)
     sigf = minhash_signature(batch_df.select(id_col, text_col), text_col, num_perms)
-    rows = num_perms // bands
-    band_cols = []
-    for bi in range(bands):
-        parts = [F.col(f"minhash_{bi * rows + r}") for r in range(rows)]
-        band_cols.append(
-            F.struct(F.lit(bi).alias("band"), F.md5(F.concat_ws("_", *parts)).alias("key"))
-        )
     empty = F.expr("array()").cast("array<struct<band:int,key:string>>")
     return sigf.select(
         F.col(id_col).alias("doc"),
         F.array(*[f"minhash_{i}" for i in range(num_perms)]).alias("sig"),
-        F.when(F.col("minhash_0").isNotNull(), F.array(*band_cols))
+        F.when(F.col("minhash_0").isNotNull(), minhash_band_keys(num_perms, bands))
         .otherwise(empty)
         .alias("bks"),
     )
@@ -201,39 +201,18 @@ def stream_neardup_dedup(
             )
             decisions.persist()
             try:
-                (
-                    decisions.select("doc", "is_dup", "dup_of")
-                    # long to match the declared read schema above —
-                    # partition values are re-parsed from directory
-                    # names, but the stamped type should agree anyway
-                    .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_path)
+                write_batch_partition(
+                    decisions.select("doc", "is_dup", "dup_of"), batch_id, out_path
                 )
                 kept_bkts = (
                     decisions.filter(~F.col("is_dup"))
                     .select("doc", "sig", F.explode("bks").alias("bk"))
                     .select("doc", "sig", "bk.band", "bk.key")
-                    .withColumn("batch_id", F.lit(batch_id).cast("long"))
                 )
-                (
-                    kept_bkts.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(store_path)
-                )
+                write_batch_partition(kept_bkts, batch_id, store_path)
             finally:
                 decisions.unpersist()
         finally:
             st.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .queryName(f"stream_neardup_dedup_{os.path.basename(os.path.normpath(checkpoint))}")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drive_batches(stream, process, "stream_neardup_dedup", checkpoint)

@@ -7,8 +7,8 @@ continuous-ingest face of the ANN serving path.
 Exactly-once: each micro-batch writes under its own ``batch_id=N``
 partition with DYNAMIC partition overwrite, so a batch replayed after
 a crash-before-checkpoint-commit replaces its earlier partial output
-instead of double-appending (the same idempotent-replay contract as
-``streaming.events.run_stream_to_parquet``). Probes read the whole
+instead of double-appending (``streaming.events.write_batch_partition``,
+the idempotent-replay contract of every foreachBatch sink). Probes read the whole
 directory and partition-prune on ``list_id`` exactly as against the
 batch-built index — ``batch_id`` is just one more partition level.
 
@@ -20,8 +20,6 @@ production pattern is periodic batch re-trains that rewrite the index
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,6 +27,10 @@ from dask_awkward_sandbox_spark.functions.similarity import (
     as_double,
     assign_nearest_centroid,
     norm,
+)
+from dask_awkward_sandbox_spark.streaming.events import (
+    drive_batches,
+    write_batch_partition,
 )
 
 
@@ -57,20 +59,7 @@ def stream_ivf_append(
                 assign_nearest_centroid(F.col("nb_vec"), centroids, round_digits),
             )
             .withColumn("nb_norm", norm(F.col("nb_vec")))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            idx.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(path)
-        )
+        write_batch_partition(idx, batch_id, path, "list_id")
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .queryName(f"stream_ivf_append_{os.path.basename(os.path.normpath(checkpoint))}")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drive_batches(stream, write_batch, "stream_ivf_append", checkpoint)

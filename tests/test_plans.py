@@ -701,14 +701,14 @@ def test_plans_broadcast_hint_sites_inventoried():
     expected = {
         ("events.py", "q_stream_sessionize"): 1,
         ("events.py", "q_stream_dedup"): 1,
-        # r14: the stream-input staging moved into nested _stage*
-        # builders (staged_stream_dir); the hint sites are the SAME
-        # 1-row max-timestamp crossJoin anchors as their hosts above —
-        # ast.walk counts them once under the host and once under the
-        # nested def
-        ("events.py", "_stage"): 1,
-        ("events.py", "_stage_events"): 1,
-        ("io_queries.py", "q_small_sources"): 10,
+        # the stream-input frames are built in nested ``frames``
+        # callables handed to plans.common.stage_replay; the hint sites
+        # are the SAME 1-row max-timestamp crossJoin anchors as their
+        # hosts above — ast.walk counts them once under the host and
+        # once under the nested def
+        ("events.py", "frames"): 1,
+        # one site crosses the four ROOT codec legs in their loop
+        ("io_queries.py", "q_small_sources"): 8,
         ("llm.py", "q_data_mixture"): 1,
         ("nested.py", "q_concatenate"): 2,
         ("tpch.py", "q5_local_supplier"): 2,

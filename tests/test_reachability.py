@@ -174,3 +174,45 @@ def test_every_package_def_is_reached():
 def test_allowlist_entries_are_needed():
     stale = sorted(set(ALLOWLIST) - set(unreached()))
     assert not stale, f"allowlisted defs that are gone or now reached: {stale}"
+
+
+# Each streaming-leg decision is spelled in one module: starting a
+# stream (the AvailableNow foreachBatch driver and the memory-sink run),
+# laying out a slot's scratch paths, and staging a backdated replay
+# input.
+HOMES = {
+    "writeStream": "streaming/events.py",
+    "os.path.join(SCRATCH, ...)": "session.py",
+    "backdate/stage": "plans/common.py",
+}
+_STAGE_NAME = re.compile(r"(^|_)(backdate|stage)")
+
+
+def misplaced(root: Path = ROOT) -> dict[str, list[str]]:
+    """``{decision: ["<module path>:<line>", ...]}`` for every spelling
+    of a HOMES decision outside its home module."""
+    pkg = root / PKG.name
+    out: dict[str, list[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for n in ast.walk(ast.parse(path.read_text())):
+            hit = None
+            if isinstance(n, ast.Attribute) and n.attr == "writeStream":
+                hit = "writeStream"
+            elif isinstance(n, ast.Call):
+                func = ast.unparse(n.func)
+                if func == "os.path.join" and n.args and ast.unparse(n.args[0]) == "SCRATCH":
+                    hit = "os.path.join(SCRATCH, ...)"
+                elif func in ("os.utime", "utime"):
+                    hit = "backdate/stage"
+            elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if _STAGE_NAME.search(n.name):
+                    hit = "backdate/stage"
+            if hit and HOMES[hit] != rel:
+                out.setdefault(hit, []).append(f"{rel}:{n.lineno}")
+    return out
+
+
+def test_streaming_decisions_have_one_home():
+    bad = misplaced()
+    assert not bad, f"spelled outside their home module ({HOMES}): {bad}"

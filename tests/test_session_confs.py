@@ -29,3 +29,19 @@ def test_codegen_cache_holds_interleaved_working_set(spark, sf):
     compiles: dict[str, int] = {}
     bench.timed(spark, slots, 1, compiles)
     assert compiles == {name: 0 for name in names}
+
+
+def test_get_spark_returns_running_session_untouched(spark):
+    """A second ``get_spark`` in the process returns the live session
+    as it is: ``getOrCreate`` would re-apply the builder's shuffle
+    partitions (2x cores) over the value set since."""
+    from dask_awkward_sandbox_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert get_spark("other") is spark
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
