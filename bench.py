@@ -16,7 +16,9 @@ queries, sf, gate_nonheadliner}: per-headliner min-of-reps, their sum,
 and one-rep walls of every other registered slot. The line before it
 is the aux record: per-headliner min/max, the generated classes the
 timed reps still compiled (``codegen_compiles``, total and per
-headliner), the salted-join skew demo, the local dirs in effect, and
+headliner), the py4j commands they sent (``py4j_calls``, total and
+per headliner: a build-layer regression shows here), the salted-join
+skew demo, the local dirs in effect, and
 the scale probe (headliners + skew demo at SPARK_GRAFT_SCALE_DIR,
 by default sf1 = 10x from scripts/make_scaled_sf.py under
 .scaledata/).
@@ -33,6 +35,7 @@ import os
 import sys
 import time
 from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 
 from dask_awkward_sandbox_spark.session import DEFAULT_SF_DIR
 
@@ -63,8 +66,32 @@ def compile_count(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+@contextmanager
+def py4j_calls():
+    """Count the py4j commands the process sends to the JVM inside the
+    block, from every thread; yields a one-item list holding the count."""
+    from py4j.clientserver import ClientServerConnection
+
+    n = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        n[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield n
+    finally:
+        ClientServerConnection.send_command = send
+
+
 def timed(
-    spark, thunks: dict[str, Callable], reps: int, compiles: dict[str, int] | None = None
+    spark,
+    thunks: dict[str, Callable],
+    reps: int,
+    compiles: dict[str, int] | None = None,
+    calls: dict[str, int] | None = None,
 ) -> dict[str, list[float]]:
     """Wall seconds of each named thunk, ``reps`` samples per name.
 
@@ -76,17 +103,21 @@ def timed(
     pays that scan in every sample. With ``compiles``, each name's
     :func:`compile_count` delta over its samples (read outside the
     timed span) is added to it, so a wall that swings can be checked
-    against code generation."""
+    against code generation. With ``calls``, each name's py4j commands
+    over its samples (:func:`py4j_calls`) are added to it the same way."""
     samples: dict[str, list[float]] = {name: [] for name in thunks}
     for _ in range(reps):
         for name, thunk in thunks.items():
             spark.catalog.clearCache()
             c0 = compile_count(spark) if compiles is not None else 0
-            t0 = time.perf_counter()
-            noop(thunk())
-            samples[name].append(time.perf_counter() - t0)
+            with py4j_calls() if calls is not None else nullcontext([0]) as n:
+                t0 = time.perf_counter()
+                noop(thunk())
+                samples[name].append(time.perf_counter() - t0)
             if compiles is not None:
                 compiles[name] = compiles.get(name, 0) + compile_count(spark) - c0
+            if calls is not None:
+                calls[name] = calls.get(name, 0) + n[0]
     return samples
 
 
@@ -253,7 +284,8 @@ def main() -> None:
     # size-independent generated classes in the codegen cache
     timed(spark, _slots(spark, HEADLINERS, DEFAULT_SF_DIR), 1)
     compiles: dict[str, int] = {}
-    samples = timed(spark, _slots(spark, HEADLINERS, sf_dir), reps, compiles)
+    calls: dict[str, int] = {}
+    samples = timed(spark, _slots(spark, HEADLINERS, sf_dir), reps, compiles, calls)
     # 2dp keeps the final line inside the driver's ~2000-char tail
     # capture (tests/test_bench_contract.py pins the worst-case width)
     timings = {name: round(min(s), 2) for name, s in samples.items()}
@@ -271,6 +303,7 @@ def main() -> None:
         "metric": "bench_aux",
         "spread_min_max": spread,
         "codegen_compiles": {"total": sum(compiles.values()), "queries": compiles},
+        "py4j_calls": {"total": sum(calls.values()), "queries": calls},
         "skew_demo": skew_demo(spark, sf_dir, reps),
         "spark.local.dir": local_dirs(spark),
     }

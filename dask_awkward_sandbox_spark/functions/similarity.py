@@ -1269,13 +1269,16 @@ def kmeans_train_distributed(
     with numpy's first-max tie rule, empty cells keep their centroid.
 
     Per iteration: ONE corpus scan — a mapInArrow GEMM assignment
-    (batch x nlist matmul, centroids ride in the task closure) into a
-    map-side-combined groupBy over ``nlist`` keys collecting per-dim
-    means; only nlist x dim doubles ever reach the driver (that IS
-    the model, so it must fit regardless). With more than one
-    iteration the source projection is cached across them. This is
-    the shape MLlib's KMeans runs — re-derived here so the quantizer stack stays dependency-free and
-    its tie/init rules stay oracle-replayable.
+    (batch x nlist matmul, centroids ride in the task closure) that
+    keeps per-cell sums and counts in numpy across its partition's
+    batches and emits them in long form, (cell, d, n, s) — the
+    per-partition partial sums MLlib's KMeans combines. One JVM
+    ``groupBy(cell, d)`` adds the partials and divides, so the driver
+    collects at most nlist x dim rows at any corpus size (that IS the
+    model, so it must fit regardless). With more than one iteration
+    the source projection is cached across them. Re-derived here so
+    the quantizer stack stays dependency-free and its tie/init rules
+    stay oracle-replayable.
     """
     import numpy as np
     import pyarrow as pa
@@ -1285,7 +1288,7 @@ def kmeans_train_distributed(
     )
     seed = src.orderBy("_id").limit(nlist).collect()  # TakeOrdered
     C = np.array([r["_v"] for r in seed], dtype=np.float64)
-    dim = C.shape[1]
+    k, dim = C.shape
     src = src.select("_v")
     if iters > 1:
         src = src.persist()
@@ -1294,11 +1297,12 @@ def kmeans_train_distributed(
             Cit = C.copy()
 
             def assign(it, _C=Cit):
+                sums = np.zeros((k, dim))
+                counts = np.zeros(k, dtype=np.int64)
                 for b in it:
                     if b.num_rows == 0:
                         continue
-                    vecs = b.column(0)
-                    V = _dense_rows(vecs, dim, "kmeans_train_distributed")
+                    V = _dense_rows(b.column(0), dim, "kmeans_train_distributed")
                     S = V @ _C.T
                     if round_digits is not None:
                         # round-before-argmax makes the assignment a
@@ -1307,22 +1311,29 @@ def kmeans_train_distributed(
                         # lowest cell id among ties); default None
                         # keeps the kmeans_train-pinned contract
                         S = _round_half_away(S, round_digits)
-                    cells = np.argmax(S, axis=1).astype(np.int32)
+                    cells = np.argmax(S, axis=1)
+                    np.add.at(sums, cells, V)
+                    counts += np.bincount(cells, minlength=k)
+                hit = np.flatnonzero(counts)
+                if len(hit):
                     yield pa.record_batch(
-                        [pa.array(cells), vecs], names=["_cell", "_v"]
+                        [
+                            pa.array(np.repeat(hit, dim).astype(np.int32)),
+                            pa.array(np.tile(np.arange(dim, dtype=np.int32), len(hit))),
+                            pa.array(np.repeat(counts[hit], dim)),
+                            pa.array(sums[hit].ravel()),
+                        ],
+                        names=["_cell", "_d", "_n", "_s"],
                     )
 
-            stats = (
-                src.mapInArrow(assign, "_cell int, _v array<double>")
-                .groupBy("_cell")
-                .agg(*[
-                    F.avg(F.element_at("_v", d + 1)).alias(f"_m{d}")
-                    for d in range(dim)
-                ])
+            means = (
+                src.mapInArrow(assign, "_cell int, _d int, _n long, _s double")
+                .groupBy("_cell", "_d")
+                .agg((F.sum("_s") / F.sum("_n")).alias("_m"))
                 .collect()
             )
-            for r in stats:
-                C[r["_cell"]] = [r[f"_m{d}"] for d in range(dim)]
+            for r in means:
+                C[r["_cell"], r["_d"]] = r["_m"]
     finally:
         if iters > 1:
             src.unpersist()

@@ -124,6 +124,16 @@ def to_parquet(
     ``max_records_per_file`` bounds file size at scale (the
     reference's rows-per-partition); ``partition_by`` creates the
     directory layout that future scans partition-prune on.
+
+    A local, unpartitioned overwrite leaves exactly the files this
+    write made, all in the written schema. So such a write hands that
+    schema to :func:`from_parquet`'s memo, stamped with the files as
+    written, and a read-back plans without a schema-inference job.
+    Spark's file source makes a given read schema all-nullable, as its
+    inference does for files Spark wrote, so the read-back schema is
+    the inferred one. Appends and partitioned writes leave the memo
+    alone: the directory then holds other files, or typed partition
+    columns.
     """
     w = df.write.mode(mode)
     if max_records_per_file:
@@ -131,6 +141,14 @@ def to_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    if partition_by or mode != "overwrite":
+        return
+    sig = _disk_signature(path)
+    if sig is not None:
+        spark = df.sparkSession
+        stamp = (sig, tuple(_raw_conf_get(spark, k) for k in _SCHEMA_CONFS))
+        with _SCHEMAS_LOCK:
+            _SCHEMAS.setdefault(spark, {})[path] = (stamp, df.schema)
 
 
 def to_bucketed_table(

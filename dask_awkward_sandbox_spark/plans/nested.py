@@ -319,7 +319,8 @@ def q_sort_argsort(spark, sf_dir):
     (ln, qc) as position-0 of the (ln, qty, rf)-sorted list under the
     same tie-indistinguishability argument the pruned nested build
     used. The HOF composition itself stays in
-    :func:`q_sort_argsort_hof`, pinned row-identical to this form in
+    :func:`_sort_argsort_leg_exprs`; its full-build twin
+    (tests/nested_twins.py) is pinned row-identical to this form in
     tests/test_nested_fast_forms.py (the test_dedup_edges simhash-pin
     move).
 
@@ -394,9 +395,9 @@ def _sort_argsort_leg_exprs(items, q, is_r):
     """The q_sort_argsort HOF composition — ak.sort/argsort/num/firsts/
     mask/drop_none/where/is_none — as column expressions over a bound
     (items, qty-cents array, is-returnflag array) triple. The SINGLE
-    source of truth executed by both :func:`q_sort_argsort_hof` (full
-    build, pinned row-identical to the flat form) and the registered
-    slot's sampled per-order hof_* legs (r11 gate re-coupling)."""
+    source of truth executed by both the full-build twin
+    (tests/nested_twins.py, pinned row-identical to the flat form) and
+    q_parquet_roundtrip's sampled per-order hof_sort_* legs."""
     top2 = F.slice(st.sort(q, ascending=False), 1, 2)
     idx = st.argsort(q)
     first_item = F.get(items, F.get(idx, 0).cast("int"))
@@ -428,35 +429,15 @@ def _sort_argsort_leg_exprs(items, q, is_r):
     }
 
 
-def q_sort_argsort_hof(spark, sf_dir, where=None):
-    """The nested-HOF composition of the q_sort_argsort contract —
-    ak.sort/argsort/num/firsts/mask/drop_none/where/is_none over ONE
-    shared nested build, all JVM higher-order functions. Retained as
-    the operator-exercising reference form after the r10 codegen
-    rewrite of the registered slot; tests/test_nested_fast_forms.py
-    pins both forms row-identical (so gate authority transfers).
-
-    Pruned to the three touched leaves: sorted VALUES are
-    order-insensitive, and the argmin/firsts items only expose
-    (ln, qty), so items tying on the pruned (ln, qty, rf) prefix are
-    value-indistinguishable vs the oracle's full-struct order."""
-    it = order_items(
-        spark, sf_dir, fields=["l_linenumber", "l_quantity", "l_returnflag"],
-        where=where,
-    )
-    # Materialize the shared arrays once (see q_reduce_order_count note:
-    # Catalyst can't CSE across HOF lambdas, so _q/_isr would otherwise
-    # be re-derived by each consumer).
-    pre = it.select(
-        "l_orderkey",
-        F.col("items"),
-        _qty_c(F.col("items")).alias("_q"),
-        F.transform(F.col("items").getField("l_returnflag"), lambda r: r == "R").alias("_isr"),
-    )
-    legs = _sort_argsort_leg_exprs(F.col("items"), F.col("_q"), F.col("_isr"))
-    return pre.select(
-        "l_orderkey", *[legs[k].alias(k) for k in legs]
-    )
+def _sort_pre_exprs(items):
+    """The arrays :func:`_sort_argsort_leg_exprs` reads more than once
+    (qty cents, is-returnflag), to bind in a select before the legs:
+    Catalyst cannot CSE across HOF lambdas, so each consumer would
+    otherwise re-derive them (see the q_reduce_order_count note)."""
+    return {
+        "_q": _qty_c(items),
+        "_isr": F.transform(items.getField("l_returnflag"), lambda r: r == "R"),
+    }
 
 
 @query(
@@ -491,7 +472,8 @@ def q_cartesian_combinations(spark, sf_dir):
     materialization (which is also the only 100 TB-sane plan: the
     explicit pair arrays grow quadratically in list length). The
     operator compositions themselves stay exercised in
-    :func:`q_cartesian_combinations_hof`, pinned row-identical in
+    q_parquet_roundtrip's hof_cart_* legs and in a full-build twin
+    (tests/nested_twins.py) pinned row-identical in
     tests/test_nested_fast_forms.py, plus their own unit tests. sf10
     growth was 7.18x on the nested form (interpretation-bound).
 
@@ -536,8 +518,8 @@ def _cart_pre_exprs(items):
     ak.combinations, ak.zip + ak.unzip + elementwise product, and
     ak.with_field/ak.without_field — bound once per row (each feeds
     two consumers, and Catalyst cannot CSE across HOF lambdas).
-    Shared by :func:`q_cartesian_combinations_hof` and the registered
-    slot's sampled hof_* legs (r11)."""
+    Shared by the full-build twin (tests/nested_twins.py) and
+    q_parquet_roundtrip's sampled hof_cart_* legs."""
     z = st.zip({"q": _qty_c(items), "p": _price_c(items)})
     qs, ps = st.unzip(z, ["q", "p"])
     dot = F.zip_with(qs, ps, lambda a, b: a * b)
@@ -570,32 +552,6 @@ def _cart_leg_exprs(cart, comb, dot, dpu):
         "dot_c": red.sum(dot).cast("long"),
         "sum_disc_price_u": red.sum(dpu).cast("long"),
     }
-
-
-def q_cartesian_combinations_hof(spark, sf_dir, where=None):
-    """The nested-operator composition of the q_cartesian_combinations
-    contract — ak.cartesian of (qty, discount) lists, ak.combinations
-    (n=2 unordered pairs i<j), ak.zip + ak.unzip + elementwise product
-    reduce (list dot product) and ak.with_field / ak.without_field,
-    off ONE shared nested build. Retained as the operator-exercising
-    reference after the r10 closed-form rewrite of the registered
-    slot; pinned row-identical in tests/test_nested_fast_forms.py."""
-    it = order_items(
-        spark, sf_dir,
-        fields=["l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-        where=where,
-    )
-    # materialize the four folded/pair arrays ONCE (each feeds two
-    # consumers, and unzip re-derives z per extracted leg; see
-    # q_reduce_order_count note on HOF lambda CSE)
-    pre = it.select(
-        "l_orderkey",
-        *[v.alias(k) for k, v in _cart_pre_exprs(F.col("items")).items()],
-    )
-    legs = _cart_leg_exprs(
-        F.col("_cart"), F.col("_comb"), F.col("_dot"), F.col("_dpu")
-    )
-    return pre.select("l_orderkey", *[legs[k].alias(k) for k in legs])
 
 
 @query(
@@ -1036,9 +992,10 @@ def q_reduce_order_count(spark, sf_dir):
     build's collect_list + array_sort, and the 24-field interpreted
     struct fold disappears entirely. Fit legs replicate the oracle's
     formula text from the flat sums (identical doubles). The fused
-    struct-accumulator HOF composition stays as
-    :func:`q_reduce_order_count_hof`, pinned row-identical in
-    tests/test_nested_fast_forms.py. r12: leg join unhinted (the
+    struct-accumulator HOF composition stays in
+    :func:`_reduce_acc_expr` (q_parquet_roundtrip's hof_red_* legs);
+    its full-build twin (tests/nested_twins.py) is pinned
+    row-identical in tests/test_nested_fast_forms.py. r12: leg join unhinted (the
     q_sort_argsort note); twin keeps its own scan (cache form
     measured and reverted — q_flatten_softmax note)."""
     from pyspark.sql import Window
@@ -1159,9 +1116,9 @@ def _reduce_acc_expr(items):
     accumulator is a single pass — the plan you'd want at 100 TB.
     Inputs are exact non-null cents (longs), so the NaN/option
     handling the generic reducers carry is vacuous here;
-    `least`/`greatest` seed from null for min/max. Shared by
-    :func:`q_reduce_order_count_hof` and the registered slot's sampled
-    hof_* legs (r11)."""
+    `least`/`greatest` seed from null for min/max. Shared by the
+    full-build twin (tests/nested_twins.py) and q_parquet_roundtrip's
+    sampled hof_red_* legs."""
     z = F.transform(
         items,
         lambda s, i: F.struct(
@@ -1310,30 +1267,6 @@ def _reduce_leg_exprs(a):
         "wcovar_qp": leg(wsxy / sw - (wsx / sw) * (wsy / sw)),
         "wcorr_qp": leg((wsxy / sw - (wsx / sw) * (wsy / sw)) / F.sqrt(wvar_xy)),
     }
-
-
-def q_reduce_order_count_hof(spark, sf_dir, where=None):
-    """The nested single-pass struct-accumulator form of
-    q_reduce_order_count (see :func:`_reduce_acc_expr` /
-    :func:`_reduce_leg_exprs` — the shared expression builders).
-    Retained as the operator-exercising reference after the r10
-    flat-codegen rewrite of the registered slot; pinned row-identical
-    in tests/test_nested_fast_forms.py.
-
-    Fields are pruned to the four touched leaves. l_linenumber DOES
-    repeat within an order, but items tying on the whole pruned
-    prefix share l_quantity, so a tie permutation moves only
-    equal-qc items between equal positions — argmin/argmax return
-    the same index either way, and every other reducer is
-    order-insensitive (exact integer sums)."""
-    it = order_items(
-        spark, sf_dir,
-        fields=["l_linenumber", "l_quantity", "l_extendedprice", "l_discount"],
-        where=where,
-    )
-    pre = it.select("l_orderkey", _reduce_acc_expr(F.col("items")).alias("_a"))
-    legs = _reduce_leg_exprs(F.col("_a"))
-    return pre.select("l_orderkey", *[legs[k].alias(k) for k in legs])
 
 
 _HIST_BINS, _HIST_LO, _HIST_HI = 8, 0.0, 5120.0  # qty cents 100..5000, width 640

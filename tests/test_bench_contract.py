@@ -111,6 +111,21 @@ def test_timed_interleaves_and_clears_cache(spark, sf, monkeypatch):
     assert all(s > 0 for v in samples.values() for s in v)
 
 
+def test_timed_counts_py4j_calls(spark, sf):
+    """With ``calls``, bench.timed adds up each name's py4j commands
+    over its samples, and puts py4j's own sender back afterwards."""
+    from py4j.clientserver import ClientServerConnection
+
+    import bench
+    from dask_awkward_sandbox_spark.plans.common import read
+
+    send = ClientServerConnection.send_command
+    calls: dict[str, int] = {}
+    bench.timed(spark, {"region": lambda: read(spark, sf, "region")}, 2, calls=calls)
+    assert ClientServerConnection.send_command is send
+    assert calls["region"] > 0
+
+
 @pytest.mark.parametrize("name", SCRIPTS)
 def test_script_imports(name):
     """Every script imports cleanly (all run under a ``__main__``

@@ -47,10 +47,8 @@ def _check_hof_legs(rows, pairs, mod=None):
 
 
 def test_sort_argsort_forms_agree(spark):
-    from dask_awkward_sandbox_spark.plans.nested import (
-        q_sort_argsort,
-        q_sort_argsort_hof,
-    )
+    from dask_awkward_sandbox_spark.plans.nested import q_sort_argsort
+    from nested_twins import q_sort_argsort_hof
 
     fast_full = _rows(q_sort_argsort(spark, SF), key="l_orderkey")
     hof = _rows(q_sort_argsort_hof(spark, SF), key="l_orderkey")
@@ -88,10 +86,8 @@ def test_concatenate_axis_none_forms_agree(spark):
 
 
 def test_reduce_order_count_forms_agree(spark):
-    from dask_awkward_sandbox_spark.plans.nested import (
-        q_reduce_order_count,
-        q_reduce_order_count_hof,
-    )
+    from dask_awkward_sandbox_spark.plans.nested import q_reduce_order_count
+    from nested_twins import q_reduce_order_count_hof
 
     fast_full = _rows(q_reduce_order_count(spark, SF), key="l_orderkey")
     hof = _rows(q_reduce_order_count_hof(spark, SF), key="l_orderkey")
@@ -102,10 +98,8 @@ def test_reduce_order_count_forms_agree(spark):
 
 
 def test_cartesian_combinations_forms_agree(spark):
-    from dask_awkward_sandbox_spark.plans.nested import (
-        q_cartesian_combinations,
-        q_cartesian_combinations_hof,
-    )
+    from dask_awkward_sandbox_spark.plans.nested import q_cartesian_combinations
+    from nested_twins import q_cartesian_combinations_hof
 
     fast_full = _rows(q_cartesian_combinations(spark, SF), key="l_orderkey")
     hof = _rows(q_cartesian_combinations_hof(spark, SF), key="l_orderkey")

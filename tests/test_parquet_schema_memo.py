@@ -119,3 +119,53 @@ def test_only_local_paths_are_memoized(tmp_path, path, local):
     pq.write_table(pa.table({"a": [1]}), tmp_path / "t.parquet")
     sig = pqio._disk_signature(path.format(tmp=tmp_path))
     assert (sig is not None) == local
+
+
+def test_overwrite_write_seeds_the_read_back_schema(spark, tmp_path):
+    """to_parquet hands the schema it wrote to the memo: reading the
+    files back launches no job and gives the schema Spark's own
+    inference gives (all-nullable), also for nested and non-nullable
+    parts of the written frame."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(5).select(
+        F.col("id").alias("k"),
+        F.array(
+            F.struct(F.col("id").cast("int").alias("a"), F.lit("x").alias("b"))
+        ).alias("items"),
+        F.create_map(F.lit("m"), F.array(F.col("id").cast("int"))).alias("m"),
+    )
+    assert df.schema.simpleString() == (
+        "struct<k:bigint,items:array<struct<a:int,b:string>>,m:map<string,array<int>>>"
+    )
+    assert not df.schema["k"].nullable
+    assert not df.schema["items"].dataType.containsNull
+    assert not df.schema["m"].dataType.valueType.containsNull
+    path = str(tmp_path / "out")
+    pqio.to_parquet(df, path)
+    back, n = _jobs(spark, lambda: pqio.from_parquet(spark, path))
+    assert n == 0
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_partitioned_and_append_writes_do_not_seed(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    df = spark.range(4).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+    part = str(tmp_path / "part")
+    pqio.to_parquet(df, part, partition_by=["p"])
+    app = str(tmp_path / "app")
+    pqio.to_parquet(df, app, mode="append")
+    for path in (part, app):
+        assert path not in pqio._SCHEMAS.get(spark, {})
+        back, n = _jobs(spark, lambda: pqio.from_parquet(spark, path))
+        assert n >= 1  # schema inference
+        assert back.schema == spark.read.parquet(path).schema
+    # an append after a seeding overwrite adds files: the seed's stamp
+    # no longer matches, so the read infers again
+    pqio.to_parquet(df, app)
+    pqio.to_parquet(df, app, mode="append")
+    back, n = _jobs(spark, lambda: pqio.from_parquet(spark, app))
+    assert n >= 1
+    assert back.count() == 8

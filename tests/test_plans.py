@@ -607,13 +607,14 @@ def test_reduce_order_count_plan_is_join_free(spark):
 # four for q_concatenate (its ak.concatenate leg IS a union of two
 # filtered scans, plus the global-agg and hof legs);
 # q_parquet_roundtrip keeps its
-# ORDER-grained roundtrip-frame persist (five consumers), so there
+# ORDER-grained roundtrip-frame persist (three consumers), so there
 # every roundtrip scan sits under the cache plus one naked lineitem
 # scan for the mapInArrow legs.
 # r13 (verdict item 7): the sort/reduce/cart twins moved into
-# q_parquet_roundtrip, so their donors drop to ONE scan and the
-# roundtrip slot carries the mp leg scan + three twin scans on top of
-# its cached roundtrip branches (scans == caches + 4).
+# q_parquet_roundtrip, so their donors drop to ONE scan. The three
+# twins share one sampled nested build, so the roundtrip slot carries
+# the mp leg scan + ONE twin scan on top of its cached roundtrip
+# branches (scans == caches + 2).
 _HOF_SLOT_PLAN_BUDGET = {
     "q_flatten_softmax": (0, 2, 0),
     "q_sort_argsort": (0, 1, 0),
@@ -621,7 +622,7 @@ _HOF_SLOT_PLAN_BUDGET = {
     "q_pad_fill_none": (0, 2, 0),
     "q_reduce_order_count": (0, 1, 0),
     "q_concatenate": (2, 4, 0),
-    "q_parquet_roundtrip": (0, None, None),  # scans == caches + 4
+    "q_parquet_roundtrip": (0, None, None),  # scans == caches + 2
 }
 
 
@@ -642,15 +643,38 @@ def test_hof_slots_scan_shape_no_forced_broadcast(spark):
         n_cache = phys.count("InMemoryRelation")
         if n_scans is None:  # q_parquet_roundtrip
             assert n_cache >= 1, (name, "expected the roundtrip persist")
-            assert n_scan == n_cache + 4, (
+            assert n_scan == n_cache + 2, (
                 name, n_scan, n_cache,
                 "a roundtrip branch escaped the cache (or lineitem "
-                "scanned other than the mapInArrow leg + the three "
-                "relocated twins)",
+                "scanned other than the mapInArrow leg + the one "
+                "sampled build of the relocated twins)",
             )
         else:
             assert n_scan == n_scans, (name, n_scan, n_scans)
             assert n_cache == n_caches, (name, n_cache, n_caches)
+
+
+def test_parquet_roundtrip_warm_job_counts(spark):
+    """A warm q_parquet_roundtrip build runs 2 jobs, the nested
+    parquet write's shuffle and write stages: the read-back plans from
+    the schema the write seeded, with no inference job. The executed
+    frame then runs at most 12 jobs: the three HOF twins share one
+    sampled build, and the row-wise legs share one projection, with
+    no join of their own."""
+    from test_parquet_schema_memo import _jobs
+
+    from dask_awkward_sandbox_spark.plans import QUERIES
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    noop(QUERIES["q_parquet_roundtrip"](spark, SF))
+    spark.catalog.clearCache()
+    df, build_jobs = _jobs(spark, lambda: QUERIES["q_parquet_roundtrip"](spark, SF))
+    _, exec_jobs = _jobs(spark, lambda: noop(df))
+    spark.catalog.clearCache()
+    assert build_jobs == 2, build_jobs
+    assert exec_jobs <= 12, exec_jobs
 
 
 def test_plans_broadcast_hint_sites_inventoried():

@@ -14,19 +14,16 @@ SF = "/root/testdata/sf0.001"
 SCRATCH = os.path.join(session.SCRATCH, "streamtest")
 
 
-def run_stream_to_memory(stream_df, name: str, output_mode: str = "complete"):
-    """Drive a streaming DF to a memory sink until all input is
-    consumed; returns the in-memory table name.
-
-    Uses Trigger.AvailableNow: the query processes everything the
-    source currently has and then terminates itself. This matters for
-    stateful operators with ProcessingTimeTimeout, where the default
-    trigger schedules empty micro-batches forever to poll for timed-out
-    state, so ``processAllAvailable()`` never observes an idle query."""
+def run_complete_to_memory(stream_df, name: str):
+    """Drive a streaming aggregation to a complete-mode memory sink
+    until all input is consumed (Trigger.AvailableNow); returns the
+    in-memory table name. The package drives append-mode memory sinks
+    only (``streaming.events.run_stream_to_memory``), so this one mode
+    keeps a test-side driver."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
+        .outputMode("complete")
         .trigger(availableNow=True)
         .start()
     )
@@ -60,7 +57,7 @@ def test_windowed_counts_stream_equals_batch(spark):
     path = _write_stream_input(spark)
     stream = stream_events_from_dir(spark, path)
     assert stream.isStreaming
-    name = run_stream_to_memory(windowed_counts(stream), "win_counts")
+    name = run_complete_to_memory(windowed_counts(stream), "win_counts")
     got = {
         (r["event_type"], r["bucket_start"]): (r["n"], r["sum_value_c"])
         for r in spark.table(name).collect()
@@ -127,19 +124,12 @@ def _batch_sessions(spark, df):
 
 def _run_sessionizer(spark, stream, name):
     from dask_awkward_sandbox_spark.streaming import sessionize_stateful
+    from dask_awkward_sandbox_spark.streaming.events import run_stream_to_memory
 
-    out = sessionize_stateful(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = run_stream_to_memory(sessionize_stateful(stream), name)
     return {
         (r["user_id"], r["session_start_us"]): r["n_events"]
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
 
 
@@ -265,6 +255,7 @@ def test_stream_dedup_exact(spark):
     from dask_awkward_sandbox_spark.streaming import stream_dedup_exact
     from dask_awkward_sandbox_spark.streaming.events import (
         JSON_TS_FORMAT,
+        run_stream_to_memory,
         stream_events_from_dir,
     )
 
@@ -276,10 +267,9 @@ def test_stream_dedup_exact(spark):
     ).json(path)
 
     stream = stream_events_from_dir(spark, path)
-    name = run_stream_to_memory(
-        stream_dedup_exact(stream, ["event_id"]), "dedup_events", output_mode="append"
-    )
-    got = spark.table(name).count()
+    got = run_stream_to_memory(
+        stream_dedup_exact(stream, ["event_id"]), "dedup_events"
+    ).count()
     want = e.select("event_id").distinct().count()
     assert got == want
 
@@ -355,6 +345,7 @@ def test_streaming_curation_filters(spark):
     from dask_awkward_sandbox_spark.functions import quality_filters as qf
     from dask_awkward_sandbox_spark.functions import text_analysis as ta
     from dask_awkward_sandbox_spark.plans.common import read
+    from dask_awkward_sandbox_spark.streaming.events import run_stream_to_memory
 
     path = os.path.join(SCRATCH, "docs_json")
     read(spark, SF, "documents").select("doc_id", "text").repartition(1).write.mode(
@@ -372,16 +363,9 @@ def test_streaming_curation_filters(spark):
         )
 
     stream = spark.readStream.schema("doc_id long, text string").json(path)
-    q = (
-        curate(stream)
-        .writeStream.format("memory")
-        .queryName("curated_docs")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
-        r["doc_id"]: r for r in spark.sql("select * from curated_docs").collect()
+        r["doc_id"]: r
+        for r in run_stream_to_memory(curate(stream), "curated_docs").collect()
     }
     exp = {
         r["doc_id"]: r
@@ -537,6 +521,7 @@ def test_streaming_lm_scoring(spark):
     same corpus row-for-row."""
     from dask_awkward_sandbox_spark.functions import lm
     from dask_awkward_sandbox_spark.plans.common import read
+    from dask_awkward_sandbox_spark.streaming.events import drive_batches
 
     import shutil
 
@@ -554,13 +539,7 @@ def test_streaming_lm_scoring(spark):
     def score_batch(batch_df, batch_id):
         lm.lm_score(batch_df, model).write.mode("append").parquet(sink)
 
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    drive_batches(stream, score_batch, "lm_scoring", ckpt)
     got = {tuple(r) for r in spark.read.parquet(sink).collect()}
     exp = {
         tuple(r)
